@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Shuffle partitions default to core count (right for the sf0.1 driver
     // map), overridable for scale legs: SCALE_TUNING's rule is partitions ≈
     // shuffledBytes/200 MB, and AQE only COALESCES below this number, never
@@ -12,7 +11,7 @@ object Bench {
     // fourth-decade finding: agg_product/join_multiway). The driver's runs
     // leave this unset — behavior there is unchanged.
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+      sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").fold(cpus)(_.toInt)
     // r14: the r13 bench-only minPartitionSize=128k conf is REVERTED to the
     // Spark default (r13 VERDICT #2/#3: it shipped citing a measurement that
     // was never written). The A/B is now written down (OPTIMIZATION_r14.md
@@ -22,23 +21,7 @@ object Bench {
     // default (filter_outlier_mad 5.25→3.71: the smaller floor fragmented
     // their many small post-shuffle stages into task-scheduling overhead).
     // No bench-only perf conf remains.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Session-wide so a future timestamp[ns] regeneration reads as LONG
-      // instead of failing the scan (set here, not per table read — a conf
-      // mutation inside a getter is a hidden global, r6 advice).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Execution-memory headroom (SCALE_TUNING.md r8 rule): the suite's
-      // memo checkpoints are MEMORY_AND_DISK and spill safely, so shrink
-      // the eviction-protected storage share from 0.5 — 32 concurrent
-      // tasks' join/agg buffers get first claim and the sf1 full-suite
-      // UNABLE_TO_ACQUIRE_MEMORY (graph_pagerank_fixed) cannot recur.
-      .config("spark.memory.storageFraction", "0.3")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus, shufflePartitions)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/codegen/parquet-reader init lands here, not on
     // whichever query happens to run first.

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of named declared ops.
   * Usage: runMain graft.Explain <sfDir> <opKey>[,<opKey>...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, keys) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     keys.split(",").foreach { k =>
       println(s"==== $k ====")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev instrument (round 13): per-JOB wall-clock and task-time breakdown of
@@ -17,16 +16,8 @@ object ProfileOp {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val keys = args(1).split(",")
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.memory.storageFraction", "0.3")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = if (args.length > 2) args(2).toInt else 32
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // jobId -> (submitted ns, description)

@@ -11,18 +11,6 @@ import org.apache.spark.sql.Column
   * checkpoint cadence) are centralized in SCALE_TUNING.md.
   */
 object Scale {
-  /** Marker alias every size-gate helper (Joins.dimBroadcast,
-    * LlmExtras.nodeBroadcast / benchGramBroadcast) wraps its build side in
-    * BEFORE the broadcast hint. The SubqueryAlias survives ANALYSIS — where
-    * PlanAuditSuite's broadcast-hint doctrine sweep inspects ResolvedHint
-    * nodes — and is erased by the optimizer (EliminateSubqueryAliases), so
-    * it has zero runtime effect. It exists so CI can mechanically tell "this
-    * hint flowed through a size gate and drops above the gate's measured
-    * cap" from "someone wrote an unconditional broadcast() on an SF-growing
-    * frame" — the latent-outage class found once per round in r10/r12/r13.
-    * Do NOT apply this alias by hand; route the hint through a gate. */
-  val BroadcastGateTag = "graft_size_gated"
-
   /** Equi-join with the large side salted to defeat key skew.
     *
     * Each large-side row gets a deterministic, row-content-derived salt in
@@ -138,6 +126,24 @@ object Scale {
     * listing. Reads back with `spark.read.parquet(path)`. */
   def writePartitioned(df: DataFrame, path: String, partCols: String*): Unit =
     df.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
+
+  /** Run `tasks` on threads of their own and return once EVERY task has
+    * finished. The first failure is thrown only then (the others ride along
+    * as suppressed), so no task outlives its caller's failure path. */
+  def runAll(tasks: (() => Unit)*): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    try {
+      val running = tasks.map(t => pool.submit(new Callable[Unit] { def call(): Unit = t() }))
+      val failures = running.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+  }
 
   /** Persist `df` bucketed by `key` so equi-joins and aggregations on `key`
     * between co-bucketed tables plan with zero Exchange.

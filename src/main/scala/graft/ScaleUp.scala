@@ -35,14 +35,7 @@ object ScaleUp {
     val src    = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out    = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.sparkContext.setLogLevel("WARN")
     ScaleUpCore.run(spark, src, out, copies)
     spark.stop()

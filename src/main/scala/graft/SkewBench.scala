@@ -7,19 +7,14 @@ import org.apache.spark.sql.functions._
   * lineitem⋈supplier dim join + census on a Zipf-keyed tile under five
   * strategies, printing wall seconds + the max shuffle-read task rows
   * proxy (the hot-reducer signature). Not a declared op — a doctrine
-  * instrument like ProfileSink/ProfilePairs.
+  * instrument.
   *
   * Usage: runMain graft.SkewBench <tileDir>
   */
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val s = SparkSession.builder().master("local[24]")
-      .config("spark.sql.shuffle.partitions", "96")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(24, 96)
     s.sparkContext.setLogLevel("ERROR")
 
     def census(j: DataFrame): Long =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew-decade tool (r12 verdict #8): re-keys the sf10 tile's lineitem
@@ -21,12 +20,7 @@ import org.apache.spark.sql.functions._
 object SkewTile {
   def main(args: Array[String]): Unit = {
     val Array(src, out) = args
-    val s = SparkSession.builder().master("local[24]")
-      .config("spark.sql.shuffle.partitions", "24")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(24)
     s.sparkContext.setLogLevel("WARN")
     val li = s.read.parquet(s"$src/lineitem.parquet")
     val n = s.read.parquet(s"$src/supplier.parquet").count()

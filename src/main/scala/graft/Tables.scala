@@ -78,110 +78,10 @@ object Tables {
     df
   }
 
-  // spark.sql.legacy.parquet.nanosAsLong (future-ns-regeneration guard) is
-  // pinned at SparkSession build in the three entrypoints (Bench, Verify,
-  // TestSpark) alongside the timeZone pin — NOT mutated here per read: a
-  // conf.set inside a getter is a global side effect racing Verify's
-  // 4-thread pool (r6 advice #4).
+  // `nanosAsLong` and the UTC time zone are session confs (GraftSession),
+  // never set per read.
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     validate(name, spark.read.parquet(s"$dir/$name.parquet"))
-
-  /** (bytes, fileCount) of a table's parquet path — one filesystem METADATA
-    * stat, cached per (dir, table) for the process (stat-cache = metadata,
-    * not query results; the inputs are immutable fixture trees). */
-  private val contentCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]
-  private def contentStat(s: SparkSession, d: String, name: String): (Long, Long) =
-    contentCache.computeIfAbsent(s"$d/$name.parquet", p => {
-      val path = new org.apache.hadoop.fs.Path(p)
-      val cs = path.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(path)
-      (cs.getLength, cs.getFileCount)
-    })
-
-  /** Round-13 scan-parallelism rebalance (opt guide §2.5 "input skew: one
-    * huge unsplittable file … repartition immediately after the read").
-    *
-    * The driver fixtures ship each table as ONE parquet file with ONE row
-    * group, and parquet splits cannot cross row groups — so stage 1 of
-    * every op (decode + the per-row projection/tokenize/partial-agg work)
-    * runs as a SINGLE task regardless of core count: the dominant cost of
-    * the heavy sf0.1 ops and the reason their times barely move between
-    * local[8] and local[32]. A deterministic hash repartition on the
-    * table's unique key right after the scan spreads that per-row work
-    * across cores. Hash-on-unique-key, not round-robin: placement is
-    * deterministic under task retries (no sortBeforeRepartition pre-sort,
-    * no SPARK-38388 class risk) and the key is unique so the spread is
-    * even (guide §2.5: high-distinct key).
-    *
-    * OPT-IN PER OPERATOR (`par = true` on the loader), never blanket: the
-    * exchange costs a flat ~0.1–0.3 s (AQE stage barrier + one corpus
-    * shuffle write from the single scan task), so it pays only where the
-    * post-scan stage-1 work it parallelizes is larger than that — measured
-    * per op in the r13 A/B (winners up to −1.6 s, cheap-op losers −0.1 to
-    * −0.5 s; OPTIMIZATION_r13.md "Scan rebalance").
-    *
-    * Scale-adaptive gate, derived from input size (never a constant tuned
-    * for one tier):
-    *  - fileCount >= cores/2 → no-op (real multi-file datasets — the sf10+
-    *    tiles, any production table — already scan with >= cores tasks);
-    *  - bytes > cap (default 256 MiB, SPARK_GRAFT_REBALANCE_CAP_MB) →
-    *    no-op (big single files from any real writer carry many row groups
-    *    and split natively; shuffling a corpus to fix decode parallelism
-    *    would invert the cost at scale);
-    *  - bytes < 64 KiB → no-op (region/nation-sized frames: the exchange
-    *    costs more than the serial work it spreads).
-    * SPARK_GRAFT_REBALANCE=0 disables outright (A/B lever; the default ON
-    * path is what the driver benches). */
-  private val rebalanceOn = !sys.env.get("SPARK_GRAFT_REBALANCE").contains("0")
-  // Malformed env values fail HERE with the variable named, not as an
-  // ExceptionInInitializerError at first Tables access (r13 advice).
-  private def envLong(name: String, dflt: Long): Long =
-    sys.env.get(name).map { v =>
-      try v.toLong catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(s"$name must be a long, got '$v'")
-      }
-    }.getOrElse(dflt)
-  private val rebalanceCapBytes = envLong("SPARK_GRAFT_REBALANCE_CAP_MB", 256L) << 20
-  // Floor override (r13 advice): sf0.01 documents.parquet sits just under
-  // the 64 KiB floor, so the DuckDB parity leg never exercised the
-  // rebalanced documents plans — lowering the floor for one parity run
-  // closes that oracle-coverage gap without changing bench behavior.
-  private val rebalanceFloorBytes = envLong("SPARK_GRAFT_REBALANCE_FLOOR_KB", 64L) << 10
-  private def rebalance(s: SparkSession, d: String, name: String,
-                        df: DataFrame, keys: Seq[String]): DataFrame = {
-    if (!rebalanceOn) return df
-    val cores = s.sparkContext.defaultParallelism
-    val (bytes, files) = contentStat(s, d, name)
-    if (files >= cores / 2 || bytes > rebalanceCapBytes || bytes < rebalanceFloorBytes) df
-    else df.repartition(cores, keys.map(col): _*)
-  }
-
-  /** Parquet size of `<dir>/<table>.parquet` in bytes — a filesystem
-    * METADATA stat (no scan), the same primitive as
-    * `LlmExtras.docsBytes` but for any table. Used by the broadcast-hint
-    * size gates: an SF-growing dimension (supplier, part, customer at
-    * TPC-H ratios) may only carry an explicit `broadcast()` hint when its
-    * on-disk footprint is measured under the gate's cap, because an
-    * UNCONDITIONAL hint converts over-budget corpora from slow-but-correct
-    * shuffle joins into hard driver failures (maxResultSize / the 8 GB
-    * broadcast cap) — the r10 node-frame and r12 gram-frame findings. */
-  /** Gated repartition by CALLER-chosen keys (r14): same scale-adaptive
-    * gate as the loader rebalance, but the caller picks the keys of the
-    * NEXT operator (e.g. a histogram's group columns) so ONE narrow
-    * exchange both spreads the single-row-group scan's CPU-dense stage-1
-    * AND satisfies the downstream aggregation's required distribution —
-    * where the unique-key rebalance would pay a wide exchange plus the
-    * aggregation's own ENSURE_REQUIREMENTS exchange. Apply AFTER the
-    * narrow projection. Where the gate no-ops (multi-file tiles,
-    * production tables) the plain plan keeps its map-side partial
-    * aggregation before the one exchange — the right shape at scale. */
-  def spreadBy(s: SparkSession, d: String, name: String, df: DataFrame,
-               keys: Seq[String]): DataFrame = rebalance(s, d, name, df, keys)
-
-  def tableBytes(s: SparkSession, d: String, name: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
-  }
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")
@@ -190,11 +90,11 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = t(s, d, "part")
   def orders(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val df = t(s, d, "orders")
-    if (par) rebalance(s, d, "orders", df, Seq("o_orderkey")) else df
+    if (par) Gates.rebalance(s, d, "orders", df, Seq("o_orderkey")) else df
   }
   def lineitem(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val df = t(s, d, "lineitem")
-    if (par) rebalance(s, d, "lineitem", df, Seq("l_orderkey", "l_linenumber")) else df
+    if (par) Gates.rebalance(s, d, "lineitem", df, Seq("l_orderkey", "l_linenumber")) else df
   }
   /** `events.ts` has shipped as parquet `timestamp[ns]` (which Spark 4 only
     * reads via `nanosAsLong`) in some data generations and `timestamp[us]`
@@ -205,9 +105,8 @@ object Tables {
     *                       double division loses precision at ~1.7e18 ns).
     *  - TimestampNTZType → already the canonical type; pass through.
     *  - TimestampType    → isAdjustedToUTC=true data; cast to NTZ. The cast
-    *                       reads the instant in the session time zone, so
-    *                       every entrypoint (Verify, Bench, tests) pins
-    *                       spark.sql.session.timeZone=UTC to keep it
+    *                       reads the instant in the session time zone,
+    *                       which GraftSession pins to UTC to keep it
     *                       deterministic and DuckDB-consistent.
     * All ts-derived query output still goes through `date_trunc('second',…)`
     * on both Spark and DuckDB sides (SURVEY §1.4), so sub-second precision
@@ -215,7 +114,7 @@ object Tables {
     */
   def events(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val raw0 = t(s, d, "events")
-    val raw = if (par) rebalance(s, d, "events", raw0, Seq("event_id")) else raw0
+    val raw = if (par) Gates.rebalance(s, d, "events", raw0, Seq("event_id")) else raw0
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn(
@@ -226,10 +125,10 @@ object Tables {
   }
   def documents(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val df = t(s, d, "documents")
-    if (par) rebalance(s, d, "documents", df, Seq("doc_id")) else df
+    if (par) Gates.rebalance(s, d, "documents", df, Seq("doc_id")) else df
   }
   def embeddings(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val df = t(s, d, "embeddings")
-    if (par) rebalance(s, d, "embeddings", df, Seq("vec_id")) else df
+    if (par) Gates.rebalance(s, d, "embeddings", df, Seq("vec_id")) else df
   }
 }

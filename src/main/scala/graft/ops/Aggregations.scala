@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
+import graft.Gates
 
 /** SURVEY.md §2.D — aggregations.
   *
@@ -177,8 +178,8 @@ object Aggregations {
     // sorted, or windowed.
     "agg_hhi" -> ((s, d) =>
       orders(s, d)
-        .join(Joins.dimBroadcast(customer(s, d).select("c_custkey", "c_mktsegment"),
-          tableBytes(s, d, "customer")),
+        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
+          Gates.bytes(s, d, "customer"), Gates.DimCap),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("seg"), col("o_custkey"))
         .agg(moneySum(col("o_totalprice")).as("r"))
@@ -203,8 +204,8 @@ object Aggregations {
     // one final partial-aggregatable seg rollup.
     "agg_theil" -> ((s, d) => {
       val rev = orders(s, d)
-        .join(Joins.dimBroadcast(customer(s, d).select("c_custkey", "c_mktsegment"),
-          tableBytes(s, d, "customer")),
+        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
+          Gates.bytes(s, d, "customer"), Gates.DimCap),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("seg"), col("o_custkey"))
         .agg(moneySum(col("o_totalprice")).as("r"))
@@ -282,7 +283,7 @@ object Aggregations {
       // groupBy's distribution (was: 4-column unique-key rebalance + the
       // aggregation's own exchange). Gate no-ops at scale (filter_top_decile
       // note).
-      val hist = graft.Tables.spreadBy(s, d, "lineitem",
+      val hist = Gates.spreadBy(s, d, "lineitem",
           lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
           Seq("l_returnflag", "cents"))
         .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
@@ -308,7 +309,7 @@ object Aggregations {
       // the corpus-sized vals checkpoint + second pass disappear (guide
       // §2.3; one corpus scan, plan diff in plans/r14).
       // r14 second sitting: gated spread by the histogram key (agg_iqr note).
-      val hist = graft.Tables.spreadBy(s, d, "lineitem",
+      val hist = Gates.spreadBy(s, d, "lineitem",
           lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
           Seq("l_returnflag", "cents"))
         .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
@@ -717,7 +718,7 @@ object Aggregations {
       // read the same value-bounded histogram; without it each broadcast
       // subtree recompiles the corpus collapse (see agg_gini note).
       // r14 second sitting: gated spread by the histogram key (agg_iqr note).
-      val hist = graft.Tables.spreadBy(s, d, "lineitem",
+      val hist = Gates.spreadBy(s, d, "lineitem",
           lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
           Seq("l_returnflag", "cents"))
         .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
@@ -913,7 +914,7 @@ object Aggregations {
       // broadcast subtree AND the probe side (see agg_gini note on why
       // ReuseExchange can't dedupe the recompute).
       // r14 second sitting: gated spread by the histogram key (agg_iqr note).
-      val wByPrice = graft.Tables.spreadBy(s, d, "lineitem",
+      val wByPrice = Gates.spreadBy(s, d, "lineitem",
           lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents"),
             col("l_quantity").cast("long").as("w")),
           Seq("l_returnflag", "cents"))

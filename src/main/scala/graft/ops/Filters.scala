@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
+import graft.Gates
 
 /** SURVEY.md §2.B — projection / filter / predicates. */
 object Filters {
@@ -67,8 +68,8 @@ object Filters {
     // right one only where the join side is the dominant term).
     "filter_above_group_mean" -> ((s, d) => {
       val o = orders(s, d, par = true)
-        .join(Joins.dimBroadcast(customer(s, d).select("c_custkey", "c_mktsegment"),
-          tableBytes(s, d, "customer")),
+        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
+          Gates.bytes(s, d, "customer"), Gates.DimCap),
           col("o_custkey") === col("c_custkey"))
         .select(col("c_mktsegment").as("seg"), money(col("o_totalprice")).as("cents"))
       val stats = o.groupBy("seg")
@@ -102,7 +103,7 @@ object Filters {
       // HISTOGRAM key after the narrow projection makes one 2-column
       // exchange serve both purposes (same gate — no-ops at scale where
       // map-side combine before the exchange is the right shape).
-      val hist = graft.Tables.spreadBy(s, d, "lineitem",
+      val hist = Gates.spreadBy(s, d, "lineitem",
           lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
           Seq("l_returnflag", "cents"))
         .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
@@ -148,7 +149,7 @@ object Filters {
       // r14 second sitting: the histogram builds from its OWN narrow
       // spread-by-histogram-key scan (agg_iqr note) — the 4-column
       // unique-key rebalance now pays only for the probe pass below.
-      val hist = graft.Tables.spreadBy(s, d, "lineitem",
+      val hist = Gates.spreadBy(s, d, "lineitem",
           lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
           Seq("l_returnflag", "cents"))
         .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Norm._
 import graft.Tables._
+import graft.Gates
 
 /** SURVEY.md §2.C — joins.
   *
@@ -16,26 +17,6 @@ import graft.Tables._
   * as-of matching (no per-row range probe, no O(n²) candidate space).
   */
 object Joins {
-  /** SF-growing-dimension broadcast-hint gate (r12 verdict, sf100 decade):
-    * supplier/part/customer grow linearly with scale factor, so an
-    * unconditional `broadcast()` on them is a latent driver outage one or
-    * two decades past wherever it was last measured — the identical class
-    * as the r10 node-frame and r12 gram-frame findings, with the identical
-    * remedy. The cap is 256 MiB of measured parquet bytes: decompressed
-    * row data inflates ~4×, leaving a ~1 GiB exchange — an order of
-    * magnitude under Spark's 8 GB broadcast hard cap and comfortably under
-    * driver maxResultSize, while still hinting every dimension a 100 TB
-    * fact table would actually want hash-probed (supplier at sf100 is
-    * ~12 MB of parquet). Above the cap the frame goes UNHINTED and the
-    * key-partitioned shuffle join engages automatically — slower,
-    * identical semantics. Fixed-cardinality dims (region 5 / nation 25
-    * rows) don't need the gate. */
-  private val DimBroadcastCapBytes = 256L << 20
-  private[graft] def dimBroadcast(df: org.apache.spark.sql.DataFrame, tableBytes: Long)
-      : org.apache.spark.sql.DataFrame =
-    if (tableBytes < DimBroadcastCapBytes) broadcast(df.alias(graft.Scale.BroadcastGateTag))
-    else df
-
   /** The engineered-skew join shared by `join_skew_aqe`'s declared op and
     * its Round10Suite strategy-twin check: 75% of lineitem on hot_key 0,
     * 97-key generated dimension. Returns the joined frame BEFORE the
@@ -205,7 +186,7 @@ object Joins {
 
     "join_theta" -> ((s, d) =>
       lineitem(s, d)
-        .join(dimBroadcast(part(s, d), tableBytes(s, d, "part")),
+        .join(Gates.broadcastUnder(part(s, d), Gates.bytes(s, d, "part"), Gates.DimCap),
           col("l_partkey") === col("p_partkey") && col("l_quantity") > col("p_size"))
         .groupBy("p_brand")
         .agg(count(lit(1)).as("n"))
@@ -350,7 +331,8 @@ object Joins {
         money(col("o_totalprice")).as("cents"))
       val dim = customer(s, d).select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"))
       val matched = fact.filter(col("k").isNotNull)
-        .join(dimBroadcast(dim, tableBytes(s, d, "customer")), Seq("k"), "left")
+        .join(Gates.broadcastUnder(dim, Gates.bytes(s, d, "customer"), Gates.DimCap),
+          Seq("k"), "left")
       val routed = fact.filter(col("k").isNull)
         .withColumn("seg", lit(null).cast("string"))
       matched.select("seg", "cents").unionByName(routed.select("seg", "cents"))
@@ -376,11 +358,11 @@ object Joins {
       lineitem(s, d, par = true)
         .join(orders(s, d).select("o_orderkey", "o_custkey"),
           col("l_orderkey") === col("o_orderkey"))
-        .join(dimBroadcast(customer(s, d).select("c_custkey", "c_nationkey"),
-            tableBytes(s, d, "customer")),
+        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_nationkey"),
+            Gates.bytes(s, d, "customer"), Gates.DimCap),
           col("o_custkey") === col("c_custkey"))
-        .join(dimBroadcast(supplier(s, d).select("s_suppkey", "s_nationkey"),
-            tableBytes(s, d, "supplier")),
+        .join(Gates.broadcastUnder(supplier(s, d).select("s_suppkey", "s_nationkey"),
+            Gates.bytes(s, d, "supplier"), Gates.DimCap),
           col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(cn), col("c_nationkey") === col("c_nk"))
         .join(broadcast(sn), col("s_nationkey") === col("s_nk"))
@@ -394,7 +376,7 @@ object Joins {
     // TPC-H Q5-shaped 6-way join. Two scale lessons are baked into the plan
     // (r12 sf100 decade: 56.4× unadjudicated → fixed here):
     //  1. `broadcast(supplier)` is GATED by measured parquet bytes
-    //     (`dimBroadcast`): supplier grows with SF (10 rows at sf0.01,
+    //     (`Gates.DimCap`): supplier grows with SF (10 rows at sf0.01,
     //     100k at sf100, ~1e9 at 100 TB) — the same latent-outage class as
     //     the r12 gram-frame finding. Above the cap the hint drops and the
     //     l_suppkey-keyed shuffle join engages; nation/region stay
@@ -425,7 +407,7 @@ object Joins {
                     col("o_orderdate") <  lit("1997-01-01").cast("timestamp_ntz")),
           col("c_custkey") === col("o_custkey"))
         .join(lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-        .join(dimBroadcast(supp, tableBytes(s, d, "supplier")),
+        .join(Gates.broadcastUnder(supp, Gates.bytes(s, d, "supplier"), Gates.DimCap),
           col("l_suppkey") === col("s_suppkey") && col("s_nationkey") === col("c_nationkey"))
         .groupBy("n_name")
         .agg(moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
@@ -525,26 +507,19 @@ object Joins {
       // rebalance spreads it; each task writes its own per-bucket files
       // (bucketed tables allow >1 file per bucket) so the join still plans
       // with zero Exchange (PlanAuditSuite keeps asserting that).
-      // r14 (guide §2.6): the two table writes are independent jobs over
-      // disjoint table dirs/catalog names — submit them concurrently so the
-      // second write's tasks back-fill the first's sort/encode tail
-      // (ProfileOp: 0.3 s + 0.6 s sequential write jobs). Catalog DDL
-      // concurrency is already exercised by Verify's 4-thread op pool.
-      locally {
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val writes = Seq(
-          Future(graft.Scale.writeBucketed(
-            orders(s, d, par = true).select("o_orderkey", "o_orderstatus"),
-            ot, "o_orderkey", 8)),
-          Future(graft.Scale.writeBucketed(
-            lineitem(s, d, par = true).select("l_orderkey", "l_extendedprice", "l_discount"),
-            lt, "l_orderkey", 8)))
-        try Await.result(Future.sequence(writes), Duration.Inf)
-        finally pool.shutdown()
-      }
+      // The two table writes are independent jobs over disjoint table
+      // dirs and catalog names, so they run concurrently and the second
+      // write's tasks back-fill the first's sort/encode tail (ProfileOp:
+      // 0.3 s + 0.6 s sequential write jobs). writeBucketed's drop, delete
+      // and saveAsTable are safe side by side only under the default
+      // in-memory catalog, not an embedded Derby metastore.
+      graft.Scale.runAll(
+        () => graft.Scale.writeBucketed(
+          orders(s, d, par = true).select("o_orderkey", "o_orderstatus"),
+          ot, "o_orderkey", 8),
+        () => graft.Scale.writeBucketed(
+          lineitem(s, d, par = true).select("l_orderkey", "l_extendedprice", "l_discount"),
+          lt, "l_orderkey", 8))
       s.table(ot).join(s.table(lt), col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Gates
 
 /** SURVEY.md §2.O — training-data curation (round-5 continuation): the four
   * corpus-preparation stages a pre-training pipeline runs after dedup —
@@ -383,8 +384,8 @@ object LlmCuration {
       // hint on a corpus-scaling gram frame is a latent outage; above the
       // gate the join degrades to the gram-keyed shuffle, one pass).
       corpus.join(
-          LlmExtras.benchGramBroadcast(bench.withColumn("hit", lit(1L)),
-            LlmExtras.docsBytes(s, d) / 20), Seq("g"), "left")
+          Gates.broadcastUnder(bench.withColumn("hit", lit(1L)),
+            Gates.bytes(s, d, "documents") / 20, Gates.GramCap), Seq("g"), "left")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_grams"),
           sum(coalesce(col("hit"), lit(0L))).as("n_shared"))
@@ -1299,8 +1300,8 @@ object LlmCuration {
         // Same size-gated hint as llm_contamination (r12): three gram
         // widths ⇒ three bench frames, each corpus/20-scaling.
         corpus.join(
-            LlmExtras.benchGramBroadcast(bench.withColumn("hit", lit(1L)),
-              LlmExtras.docsBytes(s, d) / 20), Seq("g"), "left")
+            Gates.broadcastUnder(bench.withColumn("hit", lit(1L)),
+              Gates.bytes(s, d, "documents") / 20, Gates.GramCap), Seq("g"), "left")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_grams"),
             sum(coalesce(col("hit"), lit(0L))).as("n_shared"))

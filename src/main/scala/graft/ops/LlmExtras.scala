@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
+import graft.Gates
 
 /** Training-data-pipeline operators beyond SURVEY §2.J's core eight:
   * SimHash fingerprints, char-n-gram Jaccard dedup, IVF-style ANN,
@@ -29,65 +30,6 @@ object LlmExtras {
   // results, but a primitive loop inside whole-stage codegen. The normed
   // frame is memoized + checkpointed once per (app, sfDir) in [[Shared]].
   private def vecs(s: SparkSession, d: String): DataFrame = Shared.vecs(s, d)
-
-  /** Corpus size of documents.parquet in bytes — a filesystem METADATA stat
-    * (no scan), shared by the pagerank checkpoint-storage gate and the
-    * node-frame broadcast gate below. */
-  private[ops] def docsBytes(s: SparkSession, d: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
-  }
-
-  /** Node-frame broadcast-hint cap (r10 ADVICE, low): the graph ops hint
-    * node-sized frames (degree map, per-iteration rank) into broadcast
-    * joins because checkpoint-derived size estimates stop auto-broadcasting
-    * them at sf10 and every edge⋈node join flips to a full edge-frame
-    * sort-merge join (the measured 29.5×/62.4× cliffs). But an
-    * UNCONDITIONAL hint converts over-budget corpora from slow-but-correct
-    * shuffle joins into hard failures at Spark's 512M-row/8 GB broadcast
-    * caps. The gate reads the same documents.parquet byte stat as the
-    * checkpoint gate: node-frame rows ≈ doc count, and the fixtures carry
-    * ~1 KB/doc in parquet, so 16 GiB of corpus ≈ 16M node rows ≈ a
-    * few-hundred-MB exchange — ~30× under both caps. Above it the frame
-    * goes UNHINTED and the src/dst-keyed shuffle join engages
-    * automatically (edge-linear either way; the hint only picks hash-probe
-    * over edge-sort). */
-  private val NodeBroadcastCapBytes = 16L << 30
-  private[ops] def nodeBroadcast(df: DataFrame, corpusBytes: Long): DataFrame =
-    if (corpusBytes < NodeBroadcastCapBytes)
-      broadcast(df.alias(graft.Scale.BroadcastGateTag))
-    else df
-
-  /** Benchmark-GRAM broadcast-hint gate (r12, sf100 decade finding): a
-    * gram/shingle frame explodes its documents ~8× in memory (one ~8-token
-    * string per token position) on top of parquet decompression, so the
-    * node-frame cap above is two orders too generous for it.
-    * `llm_decontaminate`'s corpus-sized eval shingle frame crossed
-    * spark.driver.maxResultSize at sf100 (1288 MiB of serialized build-side
-    * results from an 834 MB documents.parquet) while the sf10 58 MB point
-    * was measured safe — the cap sits between the decades, nearer the
-    * measured-good one. Callers pass the PARQUET BYTES OF THE SLICE the
-    * gram frame derives from (full corpus, corpus/20, …); above the cap
-    * the hint drops and the join degrades to the gram-keyed shuffle —
-    * one pass, identical semantics, exactly the degradation the op docs
-    * promised.
-    *
-    * Headroom note (r12 advice): the byte stat is a proxy — the actual
-    * build side is the DISTINCT-gram frame, whose in-memory size varies
-    * with gram width (the contamination sweep hints 3/5/8-gram frames
-    * through this same gate) and inflates under tag-suffix tiling. The
-    * cap was calibrated on the 5-gram decontaminate shingle frame
-    * (sf10 58 MB safe / sf100 834 MB fatal — an order of magnitude on
-    * each side); the widest sweep frame (8-gram, ≈1.6× the 5-gram
-    * frame's per-doc gram bytes) still clears the fatal point by >5×
-    * at the cap, and the full 3/5/8 sweep ran the sf100 leg without
-    * error. If a future caller hints a frame whose per-doc explosion
-    * exceeds ~8×, derive the cap from THAT frame's width instead. */
-  private val BenchGramBroadcastCapBytes = 128L << 20
-  private[graft] def benchGramBroadcast(df: DataFrame, sliceBytes: Long): DataFrame =
-    if (sliceBytes < BenchGramBroadcastCapBytes)
-      broadcast(df.alias(graft.Scale.BroadcastGateTag))
-    else df
 
   private val dotExpr = "graft_dot(va, vb)"
 
@@ -332,21 +274,22 @@ object LlmExtras {
       // the NODE frame alone; only sxy needs edge context, via ONE
       // explicitly-broadcast deg join + a src-keyed partial agg
       // (t(v) = Σ_{u∈N(v)} deg(u)), then a node⋈node join. The hints are
-      // SIZE-GATED (nodeBroadcast, r10 ADVICE): at corpora whose node
-      // frame outgrows the broadcast budget they drop automatically and
-      // the single dst-keyed shuffle join is the scale path, still one
-      // edge-sized join instead of two.
+      // gated by Gates.NodeCap: above it the single dst-keyed shuffle
+      // join is the scale path, still one edge-sized join instead of two.
       // n = Σdeg as coalesce(·, 0): on an EMPTY pair graph sum() is NULL
       // but the oracle's count(*) over the directed edge frame is 0 — the
       // s1/s2/sxy sums stay NULL on both engines (r10 ADVICE parity).
-      val cb = docsBytes(s, d)
+      val cb = Gates.bytes(s, d, "documents")
       val moms = deg.agg(coalesce(sum("dg"), lit(0L)).as("n"),
         sum(expr("CAST(dg AS DECIMAL(38,0)) * dg")).cast("decimal(38,0)").as("s1d"),
         sum(expr("CAST(dg AS DECIMAL(38,0)) * dg * dg")).cast("decimal(38,0)").as("s2d"))
       val tsum = dir
-        .join(nodeBroadcast(deg.select(col("v").as("dst"), col("dg").as("dy")), cb), "dst")
+        .join(Gates.broadcastUnder(deg.select(col("v").as("dst"), col("dg").as("dy")),
+          cb, Gates.NodeCap), "dst")
         .groupBy("src").agg(sum("dy").as("t"))
-      val sxyF = tsum.join(nodeBroadcast(deg.select(col("v").as("src"), col("dg").as("dx")), cb), "src")
+      val sxyF = tsum
+        .join(Gates.broadcastUnder(deg.select(col("v").as("src"), col("dg").as("dx")),
+          cb, Gates.NodeCap), "src")
         .agg(sum(expr("CAST(dx AS DECIMAL(38,0)) * t")).cast("decimal(38,0)").as("sxyd"))
       moms.join(sxyF, lit(true))
         .select(col("n"), col("s1d").cast("long").as("s1"),
@@ -862,51 +805,28 @@ object LlmExtras {
       // nests iteration k−1 inside k — measured 3.5 s with the tree
       // recomputed 3×, the top bench line; 3 edge-scans collapse to 1).
       // Same per-iteration lineage truncation as Scale.connectedComponents.
-      // Storage level is SIZE-GATED (r9 verdict #5): the edge frame is the
-      // op's one corpus-scale cached block (2.97M rows at sf0.1, ~30M at
-      // sf1) read once per iteration. At sf1+ holding it in the unified
-      // pool starved 32 concurrent tasks of execution memory in the r8
-      // full-suite run (UNABLE_TO_ACQUIRE_MEMORY with the suite's memos
-      // resident; SCALE_TUNING.md headroom rule) → DISK_ONLY. At sf0.1 and
-      // below the frame is small next to the pool and DISK_ONLY was pure
-      // tax (+0.6–2 s, the #1 r9 bench line) → MEMORY_AND_DISK. The gate
-      // reads the INPUT corpus bytes (documents.parquet — a metadata stat,
-      // edge count scales with it): ≥2 MB ≈ sf1-and-up territory between
-      // the 595 KB sf0.1 and ~6 MB sf1 fixtures.
-      val cb = docsBytes(s, d)
-      val edgeLevel = if (cb >= (2L << 20))
-        org.apache.spark.storage.StorageLevel.DISK_ONLY
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // Node-sized frames (degree map, per-iteration rank) carry EXPLICIT
-      // broadcast hints (r10, sf10 finding): checkpoint-derived size
-      // estimates stop auto-broadcasting them at sf10 and every edge⋈node
-      // join flips to a full edge-frame sort-merge join — the measured
-      // 29.5× (for 10× data) cliff. The hints are SIZE-GATED
-      // (nodeBroadcast, r10 ADVICE): at corpora whose node frame outgrows
-      // the broadcast budget they drop automatically and the src-keyed
-      // shuffle join is the scale path (edge-linear either way; the hint
-      // only picks hash-probe over edge-sort).
-      // r14: the pair memo now checkpoints with defaultParallelism
-      // partitions; the union doubles that, and 3 iterations × several
-      // jobs of 64 near-empty tasks cost more than they spread at the
-      // small tier. Below the same 2 MB gate as edgeLevel, coalesce
-      // (narrow, no exchange) the edge frame back to a handful of
-      // partitions — the iteration probes measured fastest at low task
-      // counts here (sitting-1 A/B: an explicit 32-way exchange was 3.53 s
-      // vs 2.31 s without). Above the gate the frame keeps its natural
-      // partitioning.
-      val smallTier = cb < (2L << 20)
+      // Gates.smallCorpus picks the edge block's storage level and
+      // whether the edge frame coalesces to a handful of partitions.
+      // Node-sized frames (degree map, per-iteration rank) carry broadcast
+      // hints gated by Gates.NodeCap.
+      val cb = Gates.bytes(s, d, "documents")
+      val smallTier = Gates.smallCorpus(s, d)
+      val edgeLevel = if (smallTier)
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      else org.apache.spark.storage.StorageLevel.DISK_ONLY
       val wedges = (if (smallTier)
           edges.coalesce(math.max(2, s.sparkContext.defaultParallelism / 8))
         else edges).join(
-        nodeBroadcast(edges.groupBy("src").agg(count(lit(1)).as("deg")), cb), "src")
+        Gates.broadcastUnder(edges.groupBy("src").agg(count(lit(1)).as("deg")),
+          cb, Gates.NodeCap), "src")
         .localCheckpoint(true, edgeLevel)
       val deg = wedges.select("src", "deg").distinct()
       val nodes = documents(s, d).select(col("doc_id"))
       var r = nodes.withColumn("r", lit(1000000L))
       for (_ <- 1 to 3) {
         val contrib = wedges
-          .join(nodeBroadcast(r.select(col("doc_id").as("src"), col("r")), cb), "src")
+          .join(Gates.broadcastUnder(r.select(col("doc_id").as("src"), col("r")),
+            cb, Gates.NodeCap), "src")
           .select(col("dst"), expr("r div deg").as("c"))
         val sums = contrib.groupBy("dst").agg(sum("c").as("insum"))
         r = nodes.join(sums, nodes("doc_id") === sums("dst"), "left")
@@ -1609,10 +1529,11 @@ object LlmExtras {
       // eagerly checkpointed (~55 driver-bound jobs of 3–110 ms,
       // ProfileOp; the frames were ≤12·|Q| rows throughout). Arithmetic
       // is replicated operation-for-operation: candidate-pair cosine is
-      // graft_dot's index-order fold over min(|a|,|b|) dims divided by
-      // na·nb, the combine is 0.7·sim − 0.3·pen in the same IEEE order,
-      // argmax ties break by candidate id — so the greedy trajectory and
-      // every emitted double are bit-identical to the unrolled form
+      // graft_dot's index-order fold (SimKernel.dot, which rejects
+      // unequal lengths where graft_dot returns NULL) divided by na·nb,
+      // the combine is 0.7·sim − 0.3·pen in the same IEEE order, argmax
+      // ties break by candidate id — so the greedy trajectory and every
+      // emitted double are bit-identical to the unrolled form
       // (NaN-free by the same nonzero-norm contract as topKPerKey).
       val cand = SimKernel.topKPerKey(s,
           SimKernel.scoreAgainstQueries(s, all, qv), "qid", "vid", "cos", 12)
@@ -1626,12 +1547,6 @@ object LlmExtras {
         val cs = it.toArray.sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 && a._2 < b._2))
         val n = cs.length
         val kMax = math.min(5, n)
-        def dot(a: Array[Double], b: Array[Double]): Double = {
-          val m = math.min(a.length, b.length)
-          var i = 0; var acc = 0.0
-          while (i < m) { acc += a(i) * b(i); i += 1 }
-          acc
-        }
         val selIdx = new Array[Int](kMax)
         val selected = new Array[Boolean](n)
         selIdx(0) = 0; selected(0) = true
@@ -1645,7 +1560,7 @@ object LlmExtras {
               var j = 0
               while (j < k) {
                 val sj = cs(selIdx(j))
-                val c = dot(cs(i)._4, sj._4) / (cs(i)._5 * sj._5)
+                val c = SimKernel.dot(cs(i)._4, sj._4) / (cs(i)._5 * sj._5)
                 if (c > pen) pen = c
                 j += 1
               }

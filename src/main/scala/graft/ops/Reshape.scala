@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
+import graft.Gates
 
 /** Reshaping / format-conversion ETL family: pivot, unpivot, calendar
   * gap-fill, date formatting, schema'd JSON parsing, base64/hex codecs.
@@ -306,8 +307,8 @@ object Reshape {
     "ts_mom_growth" -> ((s, d) => {
       val bySeg = Window.partitionBy("seg").orderBy("mo")
       orders(s, d)
-        .join(Joins.dimBroadcast(customer(s, d).select("c_custkey", "c_mktsegment"),
-          tableBytes(s, d, "customer")),
+        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
+          Gates.bytes(s, d, "customer"), Gates.DimCap),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("seg"),
           expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') div 30 AS BIGINT)")
@@ -335,8 +336,8 @@ object Reshape {
     // costs one scan at 100 TB exactly like at sf0.01.
     "ts_trend_mann_kendall" -> ((s, d) => {
       val g = orders(s, d)
-        .join(Joins.dimBroadcast(customer(s, d).select("c_custkey", "c_mktsegment"),
-          tableBytes(s, d, "customer")),
+        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
+          Gates.bytes(s, d, "customer"), Gates.DimCap),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("seg"),
           expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') div 30 AS BIGINT)")
@@ -373,8 +374,8 @@ object Reshape {
     // window runs on those ~3.2k pairs per segment. Constant in corpus.
     "ts_theilsen_slope" -> ((s, d) => {
       val g = orders(s, d)
-        .join(Joins.dimBroadcast(customer(s, d).select("c_custkey", "c_mktsegment"),
-          tableBytes(s, d, "customer")),
+        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
+          Gates.bytes(s, d, "customer"), Gates.DimCap),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("seg"),
           expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') div 30 AS BIGINT)")

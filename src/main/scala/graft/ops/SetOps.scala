@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
+import graft.Gates
 
 /** SURVEY.md §2.G — set operations + deduplication.
   *
@@ -215,7 +216,7 @@ object SetOps {
       // checkpoint + occupancy re-pass disappear (guide §2.3; one corpus
       // scan, plan diff in plans/r14).
       // r14 second sitting: gated spread by the histogram key (agg_iqr note).
-      val hist = graft.Tables.spreadBy(s, d, "orders",
+      val hist = Gates.spreadBy(s, d, "orders",
           orders(s, d).select(lit(1L).as("g"), money(col("o_totalprice")).as("cents")),
           Seq("g", "cents"))
         .groupBy("g", "cents").agg(count(lit(1)).as("w"))
@@ -423,8 +424,8 @@ object SetOps {
     "util_fk_orphans" -> ((s, d) => {
       // parentBytes: None = fact-sized parent, no hint (shuffle anti join);
       // Some(0) = fixed-cardinality dim (region/nation), always hinted;
-      // Some(b) = SF-growing dim, hint size-gated through Joins.dimBroadcast
-      // (the r13 broadcast-hint doctrine — see PlanAuditSuite's sweep).
+      // Some(b) = SF-growing dim, hint gated by Gates.DimCap (see
+      // PlanAuditSuite's broadcast sweep).
       // r14: census and orphan probe fused into ONE pass per relationship —
       // the child collapses to per-key multiplicities FIRST (one
       // partial-aggregatable shuffle, guide §2.3 "aggregate before you
@@ -439,7 +440,7 @@ object SetOps {
               parent: DataFrame, pk: String, parentBytes: Option[Long]): DataFrame = {
         val par = parent.select(col(pk))
         child.select(col(ck)).groupBy(ck).agg(count(lit(1)).as("__rows"))
-          .join(parentBytes.fold(par)(b => Joins.dimBroadcast(par, b)),
+          .join(parentBytes.fold(par)(b => Gates.broadcastUnder(par, b, Gates.DimCap)),
             col(ck) === col(pk), "left")
           .agg(coalesce(sum("__rows"), lit(0L)).as("n_child"),
             count(lit(1)).as("n_keys"),
@@ -454,13 +455,13 @@ object SetOps {
         .unionAll(rel("lineitem.l_orderkey->orders", lineitem(s, d), "l_orderkey",
           orders(s, d), "o_orderkey", None))
         .unionAll(rel("lineitem.l_partkey->part", lineitem(s, d), "l_partkey",
-          part(s, d), "p_partkey", Some(tableBytes(s, d, "part"))))
+          part(s, d), "p_partkey", Some(Gates.bytes(s, d, "part"))))
         .unionAll(rel("lineitem.l_suppkey->supplier", lineitem(s, d), "l_suppkey",
-          supplier(s, d), "s_suppkey", Some(tableBytes(s, d, "supplier"))))
+          supplier(s, d), "s_suppkey", Some(Gates.bytes(s, d, "supplier"))))
         .unionAll(rel("nation.n_regionkey->region", nation(s, d), "n_regionkey",
           region(s, d), "r_regionkey", Some(0L)))
         .unionAll(rel("orders.o_custkey->customer", orders(s, d), "o_custkey",
-          customer(s, d), "c_custkey", Some(tableBytes(s, d, "customer"))))
+          customer(s, d), "c_custkey", Some(Gates.bytes(s, d, "customer"))))
         .unionAll(rel("supplier.s_nationkey->nation", supplier(s, d), "s_nationkey",
           nation(s, d), "n_nationkey", Some(0L)))
         .orderBy("relationship")

@@ -243,6 +243,15 @@ object SimKernel {
     * same op order as the declared fold (and as `graft_dot`'s codegen
     * loop), so a fold split at any cut point is bit-identical to the
     * unsplit fold. */
+  /** Full dot product in `graft_dot`'s index order. Vectors of unequal
+    * length fail loudly: `graft_dot` returns NULL for them, so a silent
+    * fold over the shorter prefix would be a wrong answer, not a NULL. */
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    require(a.length == b.length,
+      s"dot: vectors of unequal length ${a.length} and ${b.length}")
+    dotRange(a, b, 0, a.length, 0.0)
+  }
+
   private def dotRange(a: Array[Double], b: Array[Double], from: Int,
                        until: Int, acc0: Double): Double = {
     var i = from; var acc = acc0

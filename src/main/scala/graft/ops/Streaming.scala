@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 import graft.Norm._
 import graft.Tables._
+import graft.Gates
 
 /** SURVEY.md §2.I — streaming semantics, declared as batch-equivalent queries
   * over `events` (the same final results a Structured Streaming job emits
@@ -171,8 +172,8 @@ object Streaming {
     "stream_static_enrich" -> ((s, d) =>
       events(s, d)
         .select(col("user_id"), tsec(col("ts")).as("ts_s"), col("value"))
-        .join(Joins.dimBroadcast(customer(s, d).select(col("c_custkey"), col("c_mktsegment")),
-            tableBytes(s, d, "customer")),
+        .join(Gates.broadcastUnder(customer(s, d).select(col("c_custkey"), col("c_mktsegment")),
+            Gates.bytes(s, d, "customer"), Gates.DimCap),
           col("user_id") === col("c_custkey"))
         .groupBy(window(col("ts_s"), "1 day").as("w"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"), moneySum(col("value")).as("sum_value"))
@@ -496,7 +497,7 @@ object Streaming {
       // every SF); what grew super-linearly was per-epoch parallelism
       // starvation: 4 fixed shards ⇒ ≤2 json-read/staging tasks per
       // epoch regardless of corpus size.
-      val shards = math.max(4L, math.min(64L, tableBytes(s, d, "events") >> 24)).toInt
+      val shards = math.max(4L, math.min(64L, Gates.bytes(s, d, "events") >> 24)).toInt
       events(s, d)
         .select(col("event_id"), col("event_type"), money(col("value")).as("cents"))
         .repartition(shards, col("event_id"))

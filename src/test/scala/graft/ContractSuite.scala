@@ -43,6 +43,23 @@ class ContractSuite extends AnyFunSuite {
       s"SURVEY declares ${totalLine.group(1)} op keys but SparkEntry.queries has ${q.size}")
   }
 
+  test("src/main has one session builder, one table-size stat and one broadcast gate") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sources = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => root.relativize(f).toString -> java.nio.file.Files.readString(f)).toSeq
+    def filesUsing(token: String): Seq[String] = sources.flatMap { case (f, src) =>
+      Seq.fill(java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).size)(f)
+    }.sorted
+    assert(filesUsing("SparkSession.builder") == Seq("graft/GraftSession.scala"),
+      "build sessions through GraftSession.local")
+    assert(filesUsing("getContentSummary") == Seq("graft/Gates.scala"),
+      "read table sizes through Gates.bytes")
+    assert(filesUsing("BroadcastGateTag").distinct == Seq("graft/Gates.scala"),
+      "hint size-gated frames through Gates.broadcastUnder")
+  }
+
   test("no output schema has duplicate, empty, or nested-unhashable columns") {
     val allowedNested = Set.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -37,6 +37,14 @@ class DotProductSuite extends AnyFunSuite {
     assert(r.isNullAt(0), "length mismatch must be NULL like the zip_with fold")
   }
 
+  test("SimKernel.dot fails loudly on unequal lengths (where graft_dot returns null)") {
+    assert(graft.ops.SimKernel.dot(Array(1.0, 2.0), Array(3.0, 4.0)) == 11.0)
+    val e = intercept[IllegalArgumentException] {
+      graft.ops.SimKernel.dot(Array(1.0, 2.0), Array(1.0))
+    }
+    assert(e.getMessage.contains("unequal length"), e.getMessage)
+  }
+
   test("graft_rolling_hash == declarative HOF fold, including multi-byte text") {
     val sp = s; import sp.implicits._
     val docs = Tables.documents(s, TestSpark.sf).select(col("text"))

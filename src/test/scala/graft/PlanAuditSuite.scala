@@ -583,11 +583,10 @@ class PlanAuditSuite extends AnyFunSuite {
   // wherever it was last measured. This sweep makes the doctrine CI: a
   // broadcast hint is legal iff its build side is metadata-sized BY
   // CONSTRUCTION (an Aggregate/Limit/Deduplicate collapse, a local/range
-  // relation) or scans only fixed-cardinality dims (region/nation), or is
-  // individually reviewed below as flowing through one of the size-gate
-  // helpers (Joins.dimBroadcast, LlmExtras.nodeBroadcast/
-  // benchGramBroadcast) or bounded by a literal key cut the static
-  // detector can't prove.
+  // relation) or scans only fixed-cardinality dims (region/nation), or
+  // flows through the one size gate (Gates.broadcastUnder), or is
+  // individually reviewed below as bounded by a literal key cut the
+  // static detector can't prove.
   // ---------------------------------------------------------------------
 
   /** Tables whose row count grows with scale factor; region/nation are
@@ -615,7 +614,7 @@ class PlanAuditSuite extends AnyFunSuite {
   /** Broadcast hints over SF-growing, uncollapsed, UN-GATED subtrees in
     * `df`'s analyzed plan (subqueries included), as "leafA,leafB"
     * signatures. Gate-produced hints are recognized by the
-    * `Scale.BroadcastGateTag` SubqueryAlias every size-gate helper wraps
+    * `Gates.BroadcastGateTag` SubqueryAlias `Gates.broadcastUnder` wraps
     * its build side in (analysis keeps the alias; the optimizer erases
     * it) — so "flows through a size gate" is machine-checked, not
     * allowlisted. */
@@ -627,7 +626,7 @@ class PlanAuditSuite extends AnyFunSuite {
       case _ => false
     }
     def gated(p: LogicalPlan): Boolean = p match {
-      case SubqueryAlias(id, _) => id.name == graft.Scale.BroadcastGateTag
+      case SubqueryAlias(id, _) => id.name == graft.Gates.BroadcastGateTag
       case _ => false
     }
     df.queryExecution.analyzed.collectWithSubqueries {
@@ -660,8 +659,8 @@ class PlanAuditSuite extends AnyFunSuite {
         .map(sig => s"$name: broadcast hint over uncollapsed SF-growing leaves [$sig]")
     }
     assert(offenders.isEmpty,
-      s"unconditional broadcast() on SF-growing frames (gate them — Joins.dimBroadcast / " +
-        s"LlmExtras.nodeBroadcast / benchGramBroadcast — or review them in " +
+      s"unconditional broadcast() on SF-growing frames (route them through " +
+        s"Gates.broadcastUnder with a named cap, or review them in " +
         s"broadcastHintReviewed with a boundedness argument):\n${offenders.mkString("\n")}")
   }
 
@@ -681,14 +680,32 @@ class PlanAuditSuite extends AnyFunSuite {
       .join(broadcast(Tables.nation(s, d)), col("l_suppkey") === col("n_nationkey"))
     assert(ungatedBroadcastHints(fixedDimOk).isEmpty,
       "fixed-cardinality nation must pass")
-    // the same SF-growing frame routed through the gate passes — the gate
-    // tag, not an allowlist, is what proves gate-flow
-    val gatedOk = Tables.lineitem(s, d)
-      .join(graft.ops.Joins.dimBroadcast(Tables.supplier(s, d),
-          Tables.tableBytes(s, d, "supplier")),
-        col("l_suppkey") === col("s_suppkey"))
-    assert(ungatedBroadcastHints(gatedOk).isEmpty,
-      "a dimBroadcast-gated supplier hint must pass via the gate tag")
+  }
+
+  test("Gates.broadcastUnder: under each cap a tagged hint the sweep accepts, over it none") {
+    import org.apache.spark.sql.catalyst.plans.logical.{ResolvedHint, SubqueryAlias}
+    import org.apache.spark.sql.functions._
+    val supplier = Tables.supplier(s, d)
+    def gated(df: org.apache.spark.sql.DataFrame): Seq[Boolean] =
+      df.queryExecution.analyzed.collect {
+        case ResolvedHint(SubqueryAlias(id, _), _) => id.name == Gates.BroadcastGateTag
+        case _: ResolvedHint => false
+      }
+    Seq("dim" -> Gates.DimCap, "node" -> Gates.NodeCap, "gram" -> Gates.GramCap).foreach {
+      case (name, cap) =>
+        val under = Gates.broadcastUnder(supplier, cap - 1, cap)
+        assert(gated(under) == Seq(true), s"$name: a frame just under the cap must carry one tagged hint")
+        // the same SF-growing frame routed through the gate passes the
+        // sweep: the gate tag, not an allowlist, proves gate-flow
+        val joined = Tables.lineitem(s, d).join(under, col("l_suppkey") === col("s_suppkey"))
+        assert(ungatedBroadcastHints(joined).isEmpty, s"$name: the gated hint must pass the sweep")
+        assert(gated(Gates.broadcastUnder(supplier, cap, cap)).isEmpty,
+          s"$name: a frame at the cap must go unhinted (the shuffle join is the safe path)")
+    }
+    // and a gram-capped caller still broadcasts at fixture scale
+    val p = SparkEntry.queries("llm_contamination")(s, d).queryExecution.executedPlan.toString()
+    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
+      "llm_contamination should broadcast its bench frame at fixture scale")
   }
 
   test("agg_weighted_median: corpus collapses in a partial-aggregated shuffle before any window") {

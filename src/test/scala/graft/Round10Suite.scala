@@ -151,10 +151,8 @@ class Round10Suite extends AnyFunSuite {
     // result must be identical either way (it is a storage level, not a
     // semantics knob) — the oracle parity run is the semantic check, here
     // we pin the gate's small-side decision and that the op still runs.
-    val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
-    assert(bytes < (2L << 20), s"sf0.01 fixture unexpectedly large: $bytes")
+    assert(Gates.smallCorpus(s, d),
+      s"test fixture unexpectedly large: ${Gates.bytes(s, d, "documents")} bytes")
     val rows = SparkEntry.queries("graph_pagerank_fixed")(s, d).collect()
     assert(rows.nonEmpty)
   }

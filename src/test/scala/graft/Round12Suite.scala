@@ -379,12 +379,13 @@ class Round12Suite extends AnyFunSuite {
   }
 
   test("benchGramBroadcast gates the contamination bench hint by slice bytes") {
-    // Below the cap the hint engages (the oracle-tier fixtures are tiny);
-    // the gate itself is pure arithmetic on the slice size, so the
-    // above-cap branch is checked directly on the returned plan's hints.
+    // The contamination bench frame is hinted through Gates.broadcastUnder
+    // with the gram cap. Below the cap the hint engages (the oracle-tier
+    // fixtures are tiny); the gate itself is pure arithmetic on the slice
+    // size, so the above-cap branch is checked directly on the plan's hints.
     val docs = sp.read.parquet(s"$sf/documents.parquet").limit(10)
-    val hinted = graft.ops.LlmExtras.benchGramBroadcast(docs, 1L << 20)
-    val unhinted = graft.ops.LlmExtras.benchGramBroadcast(docs, 1L << 40)
+    val hinted = Gates.broadcastUnder(docs, 1L << 20, Gates.GramCap)
+    val unhinted = Gates.broadcastUnder(docs, 1L << 40, Gates.GramCap)
     def hasHint(df: org.apache.spark.sql.DataFrame): Boolean =
       df.queryExecution.logical.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.UnresolvedHint => h

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 surface: the agg_product bounded-domain rewrite, the
   * join_multiway ASIA pushdown + gated supplier broadcast, the
-  * dimBroadcast size gate, and the interned-gram LSH verify
+  * dimension-table size gate, and the interned-gram LSH verify
   * (IntersectSizeLong). */
 class Round13Suite extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -53,7 +53,7 @@ class Round13Suite extends AnyFunSuite {
     // and the supplier leg's broadcast hint flows through the size gate
     import org.apache.spark.sql.catalyst.plans.logical.{ResolvedHint, SubqueryAlias}
     val gatedHints = qe.analyzed.collect {
-      case ResolvedHint(SubqueryAlias(id, _), _) if id.name == graft.Scale.BroadcastGateTag => 1
+      case ResolvedHint(SubqueryAlias(id, _), _) if id.name == graft.Gates.BroadcastGateTag => 1
     }
     assert(gatedHints.nonEmpty, "supplier broadcast must carry the gate tag")
   }
@@ -61,12 +61,13 @@ class Round13Suite extends AnyFunSuite {
   // ------------------------------------------------------ dimBroadcast
 
   test("dimBroadcast: hints under the cap (tagged), drops the hint above it") {
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    import org.apache.spark.sql.catalyst.plans.logical.{ResolvedHint, SubqueryAlias}
     val dim = Tables.supplier(s, d)
-    val under = graft.ops.Joins.dimBroadcast(dim, 1L << 20)
-    assert(under.queryExecution.analyzed.collect { case h: ResolvedHint => h }.nonEmpty,
-      "a 1 MiB dim must be hinted")
-    val over = graft.ops.Joins.dimBroadcast(dim, 1L << 40)
+    val under = Gates.broadcastUnder(dim, 1L << 20, Gates.DimCap)
+    assert(under.queryExecution.analyzed.collect {
+      case ResolvedHint(SubqueryAlias(id, _), _) if id.name == Gates.BroadcastGateTag => 1
+    }.nonEmpty, "a 1 MiB dim must be hinted, with the gate tag")
+    val over = Gates.broadcastUnder(dim, 1L << 40, Gates.DimCap)
     assert(over.queryExecution.analyzed.collect { case h: ResolvedHint => h }.isEmpty,
       "a 1 TiB dim must NOT be hinted — the shuffle join is the safe path")
   }

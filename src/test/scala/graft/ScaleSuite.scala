@@ -93,6 +93,17 @@ class ScaleSuite extends AnyFunSuite {
     }
   }
 
+  test("runAll surfaces a failure only after every sibling task has finished") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Scale.runAll(
+        () => throw new IllegalStateException("first task fails at once"),
+        () => { Thread.sleep(500); siblingDone.set(true) })
+    }
+    assert(e.getMessage == "first task fails at once")
+    assert(siblingDone.get, "the sibling task outlived the failure it ran beside")
+  }
+
   test("connectedComponents labels chains, cliques, and isolated nodes with the component min") {
     import s.implicits._
     // chain 0-1-2-...-11 (phase-1 star can't merge a long chain in one step,

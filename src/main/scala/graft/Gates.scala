@@ -10,14 +10,26 @@ object Gates {
 
   // ---------------------------------------------------------------- stat
 
+  /** Identity of the fixture file `<dir>/<table>.parquet` for the
+    * process-wide metadata memos (this stat, the schema in [[Tables]]):
+    * its path plus the modification time from one `getFileStatus`.
+    * Rewriting a table while the process runs moves its mtime, so a memo
+    * never serves the old file's metadata. */
+  private[graft] final case class FileId(path: String, mtime: Long)
+  private[graft] def fileId(s: SparkSession, d: String, table: String): FileId = {
+    val p = s"$d/$table.parquet"
+    val path = new org.apache.hadoop.fs.Path(p)
+    FileId(p, path.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(path).getModificationTime)
+  }
+
   /** (bytes, fileCount) of `<dir>/<table>.parquet`: one filesystem
-    * METADATA stat (no scan), cached per path for the process. The cache
-    * holds metadata, never query results, and the fixture trees are
-    * immutable while a process runs. */
-  private val stats = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]
+    * METADATA stat (no scan), cached per [[FileId]]. The cache holds
+    * metadata, never query results. */
+  private val stats = new java.util.concurrent.ConcurrentHashMap[FileId, (Long, Long)]
   private def stat(s: SparkSession, d: String, table: String): (Long, Long) =
-    stats.computeIfAbsent(s"$d/$table.parquet", p => {
-      val path = new org.apache.hadoop.fs.Path(p)
+    stats.computeIfAbsent(fileId(s, d, table), id => {
+      val path = new org.apache.hadoop.fs.Path(id.path)
       val cs = path.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(path)
       (cs.getLength, cs.getFileCount)
     })

@@ -5,8 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Typed loaders for the driver-generated parquet tables at
   * `<sfDir>/<table>.parquet` (TESTDATA.md:13-15; schemas in FIXTURES.md).
-  * One parquet file per table; Spark reads the footer schema directly, so no
-  * inference step is needed.
+  *
+  * Schema memo: inferring a parquet schema runs one Spark job per load
+  * (62-92 ms a table on a 4-vCPU host), so [[t]] infers and validates
+  * each fixture file once and later loads declare the memoised schema.
+  * The memo is keyed by [[Gates.FileId]] (path and mtime), so a table
+  * rewritten in-process is inferred and validated afresh; a load that
+  * fails validation is not memoised. It holds metadata only: every call
+  * still builds a new relation with fresh expression ids, lists the files
+  * and scans the parquet.
   *
   * Scale note: each loader is a plain parquet scan, so on a real cluster the
   * same code picks up splittable multi-file datasets, partition pruning, and
@@ -78,10 +85,21 @@ object Tables {
     df
   }
 
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[Gates.FileId, StructType]
+
   // `nanosAsLong` and the UTC time zone are session confs (GraftSession),
-  // never set per read.
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    validate(name, spark.read.parquet(s"$dir/$name.parquet"))
+  // never set per read. Inference runs outside the map's lock: concurrent
+  // first loads may both infer, and the first to finish is kept.
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val id = Gates.fileId(spark, dir, name)
+    val known = schemas.get(id)
+    if (known != null) spark.read.schema(known).parquet(id.path)
+    else {
+      val df = validate(name, spark.read.parquet(id.path))
+      schemas.putIfAbsent(id, df.schema)
+      df
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

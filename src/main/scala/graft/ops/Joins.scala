@@ -391,6 +391,13 @@ object Joins {
     //     ASIA nation-key set semi-filters customer and supplier FIRST —
     //     the classic Q5 plan a cost-based optimizer with constraint
     //     propagation would pick.
+    //  3. lineitem is the STREAMED side. Spark's static estimate for the
+    //     4-column lineitem projection falls under the 10 MB broadcast
+    //     threshold while customer⋈orders gets a product-sized estimate,
+    //     so left to itself Spark built a hash table over all of lineitem
+    //     on the driver in every run (600k rows, 34.7 MB, 0.33 s build on
+    //     the 5-copy sf0.1 tile). `co` (ASIA customers ⋈ 1996 orders) is
+    //     the build side instead, through the orders-bytes gate.
     "join_multiway" -> ((s, d) => {
       val asia = nation(s, d)
         .join(broadcast(region(s, d).filter(col("r_name") === "ASIA")),
@@ -401,12 +408,19 @@ object Joins {
           col("c_nationkey") === col("ank"), "left_semi")
       val supp = supplier(s, d)
         .join(broadcast(asia), col("s_nationkey") === col("n_nationkey"))
-      cust
+      val co = cust
         .join(orders(s, d)
             .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
                     col("o_orderdate") <  lit("1997-01-01").cast("timestamp_ntz")),
           col("c_custkey") === col("o_custkey"))
-        .join(lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
+        .select("o_orderkey", "c_nationkey")
+      // `co` holds about 1/35 of the orders rows (one year of seven, one
+      // region of five) in 2 columns: 4,135 rows, 1.3 MB on the tile, and
+      // ~400k rows (~7 MB) when orders reach DimCap (~sf10). Above the cap
+      // the hint drops and Spark picks the join from its own estimates.
+      lineitem(s, d)
+        .join(Gates.broadcastUnder(co, Gates.bytes(s, d, "orders"), Gates.DimCap),
+          col("l_orderkey") === col("o_orderkey"))
         .join(Gates.broadcastUnder(supp, Gates.bytes(s, d, "supplier"), Gates.DimCap),
           col("l_suppkey") === col("s_suppkey") && col("s_nationkey") === col("c_nationkey"))
         .groupBy("n_name")

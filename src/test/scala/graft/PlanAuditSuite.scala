@@ -92,11 +92,6 @@ class PlanAuditSuite extends AnyFunSuite {
       s"fact scan not dynamically pruned:\n${p.linesIterator.filter(_.contains("PartitionFilters")).mkString("\n")}")
   }
 
-  test("join_multiway broadcasts the dimension legs") {
-    val p = plan("join_multiway")
-    assert(p.contains("BroadcastHashJoin"), "dimension joins should broadcast")
-  }
-
   test("filter_conjunctive pushes all three predicates to the scan") {
     val p = plan("filter_conjunctive")
     // (the PushedFilters list is truncated in toString — assert on its prefix)
@@ -406,7 +401,7 @@ class PlanAuditSuite extends AnyFunSuite {
     "join_cross", "llm_semdedup", "llm_cluster_purity",
     "llm_sim_ann_ivf", "llm_sim_ann_lsh", "llm_kmeans_step")
 
-  /** Built once, shared by the three sweep tests (QueryExecution caches
+  /** Built once, shared by the sweep tests (QueryExecution caches
     * optimizedPlan/executedPlan, so each op is planned a single time). */
   private lazy val allPlans: Seq[(String, org.apache.spark.sql.DataFrame)] =
     SparkEntry.queries.keys.toSeq.sorted.map(n => n -> SparkEntry.queries(n)(s, d))
@@ -706,6 +701,49 @@ class PlanAuditSuite extends AnyFunSuite {
     val p = SparkEntry.queries("llm_contamination")(s, d).queryExecution.executedPlan.toString()
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
       "llm_contamination should broadcast its bench frame at fixture scale")
+  }
+
+  /** Fixture tables that each BroadcastHashJoin build side in `df`'s
+    * initial physical plan (the AQE `inputPlan`, subqueries included)
+    * reaches as a raw scan, with no aggregate between the join and the
+    * scan: the tables whose rows the driver hashes in full. */
+  private def rawScanBuilds(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    def rawScans(p: SparkPlan): Seq[String] = p match {
+      case _: BaseAggregateExec => Nil
+      case a: AdaptiveSparkPlanExec => rawScans(a.inputPlan)
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName.stripSuffix(".parquet"))
+      case other => other.children.flatMap(rawScans)
+    }
+    def builds(p: SparkPlan): Seq[String] = p.collectWithSubqueries {
+      case a: AdaptiveSparkPlanExec => builds(a.inputPlan)
+      case j: BroadcastHashJoinExec => rawScans(if (j.buildSide == BuildLeft) j.left else j.right)
+    }.flatten
+    builds(df.queryExecution.executedPlan).distinct.sorted
+  }
+
+  /** Reviewed ops whose broadcast build side is still a raw lineitem scan.
+    * `sub_exists` and `sub_exists_or` plan their EXISTS over lineitem as a
+    * semi join that builds on the filtered lineitem; no benchmark workload
+    * measures them yet (open item in ROADMAP.md direction B). */
+  private val lineitemBuildReviewed = Set("sub_exists", "sub_exists_or")
+
+  test("sweep: no broadcast hash join builds on an unaggregated lineitem scan") {
+    val builders = allPlans.collect {
+      case (name, df) if rawScanBuilds(df).contains("lineitem") => name
+    }.toSet
+    assert((builders -- lineitemBuildReviewed).isEmpty,
+      s"the driver would hash raw lineitem rows in: ${(builders -- lineitemBuildReviewed).mkString(", ")}")
+    assert((lineitemBuildReviewed -- builders).isEmpty,
+      s"stale review entries, drop them: ${(lineitemBuildReviewed -- builders).mkString(", ")}")
+    // join_multiway streams lineitem and broadcasts its dimension legs
+    val multiway = allPlans.toMap.apply("join_multiway")
+    assert(rawScanBuilds(multiway).nonEmpty && !rawScanBuilds(multiway).contains("lineitem"),
+      s"join_multiway should broadcast its dimension legs: ${rawScanBuilds(multiway)}")
   }
 
   test("agg_weighted_median: corpus collapses in a partial-aggregated shuffle before any window") {

@@ -52,30 +52,21 @@ object Gates {
     * rebalance" and OPTIMIZATION_r14.md). It is a no-op when
     *  - fileCount >= cores/2: a multi-file dataset already scans with
     *    enough tasks;
-    *  - bytes > cap (256 MiB, SPARK_GRAFT_REBALANCE_CAP_MB): large files
-    *    from a real writer carry many row groups and split natively;
-    *  - bytes < floor (64 KiB, SPARK_GRAFT_REBALANCE_FLOOR_KB): the
-    *    exchange costs more than the serial work it spreads. Lowering the
-    *    floor lets an sf0.01 parity run reach the rebalanced plans.
+    *  - bytes > 256 MiB: large files from a real writer carry many row
+    *    groups and split natively;
+    *  - bytes < 64 KiB: the exchange costs more than the serial work it
+    *    spreads.
     * SPARK_GRAFT_REBALANCE=0 turns it off (forced-off A/B lever). */
   private val rebalanceOn = !sys.env.get("SPARK_GRAFT_REBALANCE").contains("0")
-  // A malformed value fails here with the variable named, not as an
-  // ExceptionInInitializerError at first use.
-  private def envLong(name: String, dflt: Long): Long =
-    sys.env.get(name).map { v =>
-      try v.toLong catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(s"$name must be a long, got '$v'")
-      }
-    }.getOrElse(dflt)
-  private val rebalanceCapBytes = envLong("SPARK_GRAFT_REBALANCE_CAP_MB", 256L) << 20
-  private val rebalanceFloorBytes = envLong("SPARK_GRAFT_REBALANCE_FLOOR_KB", 64L) << 10
+  private val RebalanceCap: Long = 256L << 20
+  private val RebalanceFloor: Long = 64L << 10
 
   private[graft] def rebalance(s: SparkSession, d: String, table: String,
                                df: DataFrame, keys: Seq[String]): DataFrame = {
     if (!rebalanceOn) return df
     val cores = s.sparkContext.defaultParallelism
     val (bytes, files) = stat(s, d, table)
-    if (files >= cores / 2 || bytes > rebalanceCapBytes || bytes < rebalanceFloorBytes) df
+    if (files >= cores / 2 || bytes > RebalanceCap || bytes < RebalanceFloor) df
     else df.repartition(cores, keys.map(col): _*)
   }
 

@@ -278,16 +278,7 @@ object Aggregations {
     // value→count map of Spark's exact percentile (the agg_percentile_disc
     // rework rationale, applied as a first-class multi-quantile op).
     "agg_iqr" -> ((s, d) => {
-      // r14 second sitting: spread by the HISTOGRAM key after the narrow
-      // projection — one 2-column exchange serves scan-spread AND the
-      // groupBy's distribution (was: 4-column unique-key rebalance + the
-      // aggregation's own exchange). Gate no-ops at scale (filter_top_decile
-      // note).
-      val hist = Gates.spreadBy(s, d, "lineitem",
-          lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
-          Seq("l_returnflag", "cents"))
-        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
-        .localCheckpoint(false)
+      val hist = Shared.centsHist(s, d)
       Shared.bucketedPdiscMulti(hist, "l_returnflag", "cents", "w",
           Seq((1, 4, "p25"), (1, 2, "p50"), (3, 4, "p75")))
         .select(col("l_returnflag"), col("p25"), col("p50"), col("p75"),
@@ -303,17 +294,10 @@ object Aggregations {
     // The robust-location stat an outlier policy reports next to
     // filter_outlier_mad's flag column.
     "agg_trimmed_mean" -> ((s, d) => {
-      // r14: the trim census depends only on (flag, cents), so it derives
-      // from the SAME value-bounded histogram the cutpoints ride —
-      // n_kept = Σw, sum_kept = Σ cents·w over the [p10, p90] band — and
-      // the corpus-sized vals checkpoint + second pass disappear (guide
-      // §2.3; one corpus scan, plan diff in plans/r14).
-      // r14 second sitting: gated spread by the histogram key (agg_iqr note).
-      val hist = Gates.spreadBy(s, d, "lineitem",
-          lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
-          Seq("l_returnflag", "cents"))
-        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
-        .localCheckpoint(false)
+      // The trim census depends only on (flag, cents), so it derives from
+      // the same histogram as the cutpoints: n_kept = Σw, sum_kept =
+      // Σ cents·w over the [p10, p90] band.
+      val hist = Shared.centsHist(s, d)
       val cp = Shared.bucketedPdiscMulti(hist, "l_returnflag", "cents", "w",
         Seq((1, 10, "p10"), (9, 10, "p90")))
       hist.join(broadcast(cp), "l_returnflag")
@@ -714,15 +698,7 @@ object Aggregations {
     // reuse the SAME histogram exchange. cume_dist ≥ p is tested in
     // cross-multiplied integers (2·cum ≥ tot, 10·cum ≥ 9·tot — no float).
     "agg_percentile_disc" -> ((s, d) => {
-      // Lazy localCheckpoint: both percentile resolutions and the count
-      // read the same value-bounded histogram; without it each broadcast
-      // subtree recompiles the corpus collapse (see agg_gini note).
-      // r14 second sitting: gated spread by the histogram key (agg_iqr note).
-      val hist = Gates.spreadBy(s, d, "lineitem",
-          lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
-          Seq("l_returnflag", "cents"))
-        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
-        .localCheckpoint(false)
+      val hist = Shared.centsHist(s, d)
       val ps = Shared.bucketedPdiscMulti(hist, "l_returnflag", "cents", "w",
         Seq((1, 2, "p50_cents"), (9, 10, "p90_cents")))
       val n = hist.groupBy("l_returnflag").agg(sum("w").as("n"))

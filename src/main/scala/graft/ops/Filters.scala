@@ -90,25 +90,11 @@ object Filters {
     // declared result is the kept census so the corpus-sized kept frame
     // itself never hashes.
     "filter_top_decile" -> ((s, d) => {
-      // r14: the kept census depends only on (flag, cents), so it derives
-      // from the SAME value-bounded histogram the cutoff rides — n_kept =
-      // Σw, kept_cents = Σ cents·w over values ≥ p90 — and the second
-      // corpus scan + corpus-sized broadcast join disappear (guide §2.3;
-      // one scan instead of two, plan diff in plans/r14). The histogram is
-      // checkpointed once for its three consumers (the two bucketedPdisc
-      // phases and the census).
-      // r14 second sitting: the unique-key rebalance exchanged 4 columns
-      // and the groupBy then paid its own ENSURE_REQUIREMENTS exchange
-      // (ProfileOp: 17.2 s taskSum on the build job). Spreading by the
-      // HISTOGRAM key after the narrow projection makes one 2-column
-      // exchange serve both purposes (same gate — no-ops at scale where
-      // map-side combine before the exchange is the right shape).
-      val hist = Gates.spreadBy(s, d, "lineitem",
-          lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
-          Seq("l_returnflag", "cents"))
-        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
-        .localCheckpoint(false)
-      val cut = graft.ops.Shared.bucketedPdisc(hist, "l_returnflag", "cents", "w", 9, 10, "p90")
+      // The kept census depends only on (flag, cents), so it derives from
+      // the same histogram as the cutoff: n_kept = Σw, kept_cents =
+      // Σ cents·w over values ≥ p90.
+      val hist = Shared.centsHist(s, d)
+      val cut = Shared.bucketedPdisc(hist, "l_returnflag", "cents", "w", 9, 10, "p90")
       hist.join(broadcast(cut), "l_returnflag")
         .filter(col("cents") >= col("p90"))
         .groupBy("l_returnflag")
@@ -142,23 +128,15 @@ object Filters {
       // minPartitionSize floor (5.25 → 3.71 on the full map).
       val li = lineitem(s, d, par = true).select(col("l_orderkey"), col("l_linenumber"),
         col("l_returnflag"), money(col("l_extendedprice")).as("cents"))
-      // Lazy localCheckpoint: the histogram feeds med's two subtrees, the
-      // ad-histogram derivation, and mad's two subtrees — without it each
-      // broadcast job recompiles the corpus collapse from the scan
-      // (measured 5× recompute; see agg_gini note).
-      // r14 second sitting: the histogram builds from its OWN narrow
-      // spread-by-histogram-key scan (agg_iqr note) — the 4-column
-      // unique-key rebalance now pays only for the probe pass below.
-      val hist = Gates.spreadBy(s, d, "lineitem",
-          lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
-          Seq("l_returnflag", "cents"))
-        .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
-        .localCheckpoint(false)
-      val med = graft.ops.Shared.bucketedPdisc(hist, "l_returnflag", "cents", "w", 1, 2, "med")
+      // The histogram feeds med's two subtrees, the ad-histogram
+      // derivation and mad's two subtrees; the unique-key rebalance of
+      // `li` pays only for the probe pass below.
+      val hist = Shared.centsHist(s, d)
+      val med = Shared.bucketedPdisc(hist, "l_returnflag", "cents", "w", 1, 2, "med")
       val adHist = hist.join(broadcast(med), "l_returnflag")
         .select(col("l_returnflag"), abs(col("cents") - col("med")).as("ad"), col("w"))
         .groupBy("l_returnflag", "ad").agg(sum("w").as("w"))
-      val mad = graft.ops.Shared.bucketedPdisc(adHist, "l_returnflag", "ad", "w", 1, 2, "mad")
+      val mad = Shared.bucketedPdisc(adHist, "l_returnflag", "ad", "w", 1, 2, "mad")
       val stats = med.join(broadcast(mad), "l_returnflag")
       li.join(broadcast(stats), "l_returnflag")
         .filter(abs(col("cents") - col("med")) > lit(2L) * col("mad"))

@@ -425,7 +425,7 @@ object LlmCuration {
           length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("np"),
           length(col("text")).cast("long").as("len"))
         .withColumn("quality_bp", expr(
-          "(100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) div (n * len)"))
+          Shared.qualityBp("div")))
         .localCheckpoint(false)
       val byQ = scored.groupBy("lang", "quality_bp")
         .agg(count(lit(1)).as("nd"), sum("n").as("nt"))
@@ -492,7 +492,7 @@ object LlmCuration {
           length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("np"),
           length(col("text")).cast("long").as("len"))
         .withColumn("quality_bp", expr(
-          "(100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) div (n * len)"))
+          Shared.qualityBp("div")))
         .withColumn("kept", expr(
           "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 10000")
           < col("quality_bp"))
@@ -1138,7 +1138,7 @@ object LlmCuration {
           length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("np"),
           length(col("text")).cast("long").as("len"))
         .select(col("doc_id"), col("n").as("n_toks"),
-          expr("(100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) div (n * len)")
+          expr(Shared.qualityBp("div"))
             .as("quality_bp"))
       val buckets = q.groupBy("quality_bp")
         .agg(sum("n_toks").as("bt"), count(lit(1)).as("bc"))
@@ -1536,14 +1536,14 @@ object LlmCuration {
                 ok_words * ok_wordlen * ok_symbol * ok_dup * ok_stop AS pass
          FROM b ORDER BY doc_id""",
     "llm_token_budget" ->
-      """WITH b AS (SELECT doc_id, lang,
+      s"""WITH b AS (SELECT doc_id, lang,
                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                 CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT) AS st,
                 CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
                 CAST(length(text) AS BIGINT) AS len
                FROM documents),
               q AS (SELECT doc_id, lang, n,
-                (100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) // (n * len) AS quality_bp
+                ${Shared.qualityBp("//")} AS quality_bp
                FROM b),
               c AS (SELECT lang, n,
                 sum(n) OVER (PARTITION BY lang ORDER BY quality_bp DESC, doc_id
@@ -1564,14 +1564,14 @@ object LlmCuration {
                   // (count(*) * max(n)) AS pad_waste_bp
          FROM b GROUP BY 1 ORDER BY bucket""",
     "llm_importance_resample" ->
-      """WITH b AS (SELECT doc_id, lang,
+      s"""WITH b AS (SELECT doc_id, lang,
                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                 CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT) AS st,
                 CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
                 CAST(length(text) AS BIGINT) AS len
                FROM documents),
               q AS (SELECT doc_id, lang,
-                (100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) // (n * len) AS quality_bp
+                ${Shared.qualityBp("//")} AS quality_bp
                FROM b),
               k AS (SELECT lang, quality_bp,
                 CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000 < quality_bp
@@ -1744,10 +1744,9 @@ object LlmCuration {
                   // count(*) AS novelty_bp
          FROM grams JOIN f USING (g)
          GROUP BY doc_id ORDER BY doc_id""",
-    // Quality formula mirrored from the llm_text_quality oracle.
     "llm_data_card" ->
-      """WITH q AS (SELECT doc_id, source, lang, text,
-                           (100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) // (n * len) AS quality_bp
+      s"""WITH q AS (SELECT doc_id, source, lang, text,
+                           ${Shared.qualityBp("//")} AS quality_bp
                     FROM (SELECT doc_id, source, lang, text,
                                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                                  CAST(len(list_filter(string_split(text, ' '), tk -> tk IN ('the', 'a'))) AS BIGINT) AS st,
@@ -1870,9 +1869,9 @@ object LlmCuration {
     // curriculum order (the Spark side's two-phase bucket decomposition
     // must agree exactly).
     "llm_curriculum_order" ->
-      """WITH q AS (SELECT doc_id,
+      s"""WITH q AS (SELECT doc_id,
                            n AS n_toks,
-                           (100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) // (n * len) AS quality_bp
+                           ${Shared.qualityBp("//")} AS quality_bp
                     FROM (SELECT doc_id,
                                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                                  CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT) AS st,

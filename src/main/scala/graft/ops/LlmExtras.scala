@@ -33,11 +33,6 @@ object LlmExtras {
 
   private val dotExpr = "graft_dot(va, vb)"
 
-  private def cosSql(a: String, b: String): String =
-    s"""list_sum(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-           * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
-
   /** DuckDB twin of llm_sim_mmr's greedy loop: iterations 2..5 unrolled to
     * pK (scores vs selK−1) / kK (argmax pick) / selK (accumulated) CTEs —
     * the graph_pagerank_fixed unrolling pattern applied to MMR. */
@@ -186,16 +181,14 @@ object LlmExtras {
       }.toDF("doc_id", "simhash")
   }
 
-  /** Co-supply graph + 2-round LPA labels, shared by
-    * `graph_label_propagation` (which emits the labels) and
-    * `graph_modularity` (which scores the partition they induce). Returns
-    * (edges, labels): edges is the directed-symmetric top-tier co-supply
-    * graph, labels is (v, lbl) after 2 neighbor-majority rounds under the
-    * engine-stable (count desc, label asc) argmax. Both frames are lazily
-    * checkpointed (graph_*_fixed lineage rule); per round one edge-keyed
-    * join + one (node, label) partial-agg + a per-node window over ≤5
-    * label rows — edge-bound shuffles, node-sized state. */
-  private def coSupplyLpa(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+  /** The top-tier co-supply graph as (inc, edges): `inc` holds the
+    * distinct (p = part, v = supplier) pairs of lineitem rows with
+    * l_quantity ≥ 50, `edges` the directed-symmetric (src, dst) supplier
+    * pairs that share a part, without self loops. Both are lazily
+    * checkpointed and blocking-bounded, far below corpus size: `edges` sits
+    * under every round of the fixed-round graph ops, `inc` under both
+    * self-join sides and the node set. */
+  private def coSupply(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val inc = lineitem(s, d).filter(col("l_quantity") >= 50)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("v")).distinct()
       .localCheckpoint(false)
@@ -203,6 +196,22 @@ object LlmExtras {
       .filter(col("a.v") =!= col("b.v"))
       .select(col("a.v").as("src"), col("b.v").as("dst")).distinct()
       .localCheckpoint(false)
+    (inc, edges)
+  }
+
+  /** DuckDB twin of [[coSupply]]: the CTEs `inc` and `e`. */
+  private val coSupplySql: String =
+    """inc AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS v
+               FROM lineitem WHERE l_quantity >= 50),
+       e AS (SELECT DISTINCT a.v AS src, b.v AS dst
+             FROM inc a JOIN inc b ON a.p = b.p AND a.v <> b.v)"""
+
+  /** [[coSupply]] edges and (v, lbl) labels after 2 neighbor-majority
+    * rounds under the engine-stable (count desc, label asc) argmax, shared
+    * by `graph_label_propagation` and `graph_modularity`. Each round's
+    * labels are lazily checkpointed. */
+  private def coSupplyLpa(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val (inc, edges) = coSupply(s, d)
     val l0 = inc.select("v").distinct().withColumn("lbl", col("v") % 5)
     val l2 = (1 to 2).foldLeft(l0) { (l, _) =>
       val votes = edges.join(l.select(col("v").as("src"), col("lbl")), "src")
@@ -221,11 +230,8 @@ object LlmExtras {
   /** The LPA rounds as a DuckDB WITH-body (through `l2`), shared by the
     * graph_label_propagation and graph_modularity oracles — the CTE twin
     * of [[coSupplyLpa]]. */
-  private def lpaCte: String =
-    """inc AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS v
-               FROM lineitem WHERE l_quantity >= 50),
-       e AS (SELECT DISTINCT a.v AS src, b.v AS dst
-             FROM inc a JOIN inc b ON a.p = b.p AND a.v <> b.v),
+  private val lpaCte: String =
+    s"""$coSupplySql,
        l0 AS (SELECT v, v % 5 AS lbl FROM (SELECT DISTINCT v FROM inc)),
        v1 AS (SELECT e.dst AS v, l0.lbl, count(*) AS c
               FROM e JOIN l0 ON e.src = l0.v GROUP BY 1, 2),
@@ -990,13 +996,7 @@ object LlmExtras {
     // (supplier dim) so both marginal joins broadcast; the wedge join keys
     // on the shared neighbor — never node×node.
     "graph_jaccard_neighbors" -> ((s, d) => {
-      val inc = lineitem(s, d).filter(col("l_quantity") >= 50)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("v")).distinct()
-        .localCheckpoint(false)
-      val edges = inc.as("a").join(inc.as("b"), col("a.p") === col("b.p"))
-        .filter(col("a.v") =!= col("b.v"))
-        .select(col("a.v").as("src"), col("b.v").as("dst")).distinct()
-        .localCheckpoint(false)
+      val (_, edges) = coSupply(s, d)
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       val wedge = edges.select(col("src").as("a"), col("dst").as("c"))
         .join(edges.select(col("src").as("b"), col("dst").as("c")), "c")
@@ -1022,13 +1022,7 @@ object LlmExtras {
     // blocking-bounded frames, checkpointed per round — the graph_*_fixed
     // lineage rule); declared result is round-indexed, convergence-free.
     "graph_bfs_layers" -> ((s, d) => {
-      val inc = lineitem(s, d).filter(col("l_quantity") >= 50)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("v")).distinct()
-        .localCheckpoint(false)
-      val edges = inc.as("a").join(inc.as("b"), col("a.p") === col("b.p"))
-        .filter(col("a.v") =!= col("b.v"))
-        .select(col("a.v").as("src"), col("b.v").as("dst")).distinct()
-        .localCheckpoint(false)
+      val (inc, edges) = coSupply(s, d)
       val nodes = inc.select("v").distinct().localCheckpoint(false)
       var reached = nodes.filter(col("v") % 100 === 0).withColumn("dist", lit(0L))
         .localCheckpoint(false)
@@ -1058,13 +1052,7 @@ object LlmExtras {
     // edge-keyed join + (seed, v) distinct + anti-join, checkpointed (the
     // pagerank iteration rule), edge-bound like every graph op here.
     "graph_closeness_fixed" -> ((s, d) => {
-      val inc = lineitem(s, d).filter(col("l_quantity") >= 50)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("v")).distinct()
-        .localCheckpoint(false)
-      val edges = inc.as("a").join(inc.as("b"), col("a.p") === col("b.p"))
-        .filter(col("a.v") =!= col("b.v"))
-        .select(col("a.v").as("src"), col("b.v").as("dst")).distinct()
-        .localCheckpoint(false)
+      val (inc, edges) = coSupply(s, d)
       val seeds = inc.select("v").distinct().filter(col("v") % 50 === 0)
         .select(col("v").as("seed"))
       var reached = seeds
@@ -1099,13 +1087,7 @@ object LlmExtras {
     // restriction, and the lazy fold would otherwise re-derive every prior
     // round per consumer. All frames blocking-bounded, never corpus-sized.
     "graph_kcore_fixed" -> ((s, d) => {
-      val inc = lineitem(s, d).filter(col("l_quantity") >= 50)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("v")).distinct()
-        .localCheckpoint(false)
-      val e0 = inc.as("a").join(inc.as("b"), col("a.p") === col("b.p"))
-        .filter(col("a.v") =!= col("b.v"))
-        .select(col("a.v").as("src"), col("b.v").as("dst")).distinct()
-        .localCheckpoint(false)
+      val (_, e0) = coSupply(s, d)
       val e3 = (1 to 3).foldLeft(e0) { (e, _) =>
         val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= 2).select("src")
@@ -1120,18 +1102,7 @@ object LlmExtras {
     }),
 
     "graph_cc_fixed" -> ((s, d) => {
-      // Lazy checkpoints: `edges` sits under all 3 unrolled iterations (the
-      // lazy fold would re-derive the lineitem scan + self-join per round —
-      // the graph_pagerank_fixed lineage-truncation rule), and `inc` feeds
-      // both self-join sides plus l0. Both frames are blocking-bounded
-      // (distinct top-tier (part, supplier) pairs), far below corpus size.
-      val inc = lineitem(s, d).filter(col("l_quantity") >= 50)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("v")).distinct()
-        .localCheckpoint(false)
-      val edges = inc.as("a").join(inc.as("b"), col("a.p") === col("b.p"))
-        .filter(col("a.v") =!= col("b.v"))
-        .select(col("a.v").as("src"), col("b.v").as("dst")).distinct()
-        .localCheckpoint(false)
+      val (inc, edges) = coSupply(s, d)
       val l0 = inc.select("v").distinct().withColumn("lbl", col("v"))
       val l3 = (1 to 3).foldLeft(l0) { (l, _) =>
         l.join(edges, l("v") === edges("src"))
@@ -1303,8 +1274,7 @@ object LlmExtras {
           expr("(chars * 10000) div n").as("avg_tok_len_bp"),
           expr("(st * 10000) div n").as("stopword_bp"),
           expr("(np * 10000) div len").as("nonalpha_bp"),
-          // 0.5*min(n/50,1) + 0.3*(1 - st/n) + 0.2*(1 - np/len), exactly:
-          expr("(100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) div (n * len)")
+          expr(Shared.qualityBp("div"))
             .as("quality_bp"))
         .orderBy("doc_id")),
 
@@ -1725,20 +1695,9 @@ object LlmExtras {
   )
 
   val oracle: Map[String, String] = Map(
-    // Same directed-endpoint Pearson in HUGEINT; the pairs CTE is the
-    // degree-histogram word-Jaccard edge set verbatim.
+    // Same directed-endpoint Pearson in HUGEINT.
     "graph_assortativity" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               pairs AS (SELECT doc_a, doc_b FROM v WHERE inter * 5 >= (stot - inter) * 4),
+      s"""WITH ${Shared.wordPairsSql("pairs")},
                dirs AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
                         UNION ALL SELECT doc_b, doc_a FROM pairs),
                deg AS (SELECT src AS vv, count(*) AS dg FROM dirs GROUP BY src),
@@ -1777,8 +1736,8 @@ object LlmExtras {
          GROUP BY label ORDER BY label"""
     },
     "llm_quality_length_matrix" ->
-      """WITH q AS (SELECT n_chars,
-                           (100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) // (n * len) AS quality_bp
+      s"""WITH q AS (SELECT n_chars,
+                           ${Shared.qualityBp("//")} AS quality_bp
                     FROM (SELECT n_chars,
                                  CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                                  CAST(len(list_filter(string_split(text, ' '), tk -> tk IN ('the', 'a'))) AS BIGINT) AS st,
@@ -1818,10 +1777,7 @@ object LlmExtras {
                 10000 * (count(*) - count(DISTINCT k)) // count(*) AS dup_bp
          FROM k GROUP BY source ORDER BY source""",
     "graph_jaccard_neighbors" ->
-      """WITH inc AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS v
-                      FROM lineitem WHERE l_quantity >= 50),
-              e AS (SELECT DISTINCT a.v AS src, b.v AS dst
-                    FROM inc a JOIN inc b ON a.p = b.p AND a.v <> b.v),
+      s"""WITH $coSupplySql,
               deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
               w AS (SELECT e1.src AS a, e2.src AS b, count(*) AS common
                     FROM e e1 JOIN e e2 ON e1.dst = e2.dst AND e1.src < e2.src
@@ -1836,10 +1792,7 @@ object LlmExtras {
          JOIN deg db ON db.src = b
          ORDER BY a, b""",
     "graph_bfs_layers" ->
-      """WITH inc AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS v
-                      FROM lineitem WHERE l_quantity >= 50),
-              e AS (SELECT DISTINCT a.v AS src, b.v AS dst
-                    FROM inc a JOIN inc b ON a.p = b.p AND a.v <> b.v),
+      s"""WITH $coSupplySql,
               nodes AS (SELECT DISTINCT v FROM inc),
               l0 AS (SELECT v FROM nodes WHERE v % 100 = 0),
               l1 AS (SELECT DISTINCT e.dst AS v FROM e JOIN l0 ON e.src = l0.v
@@ -1864,10 +1817,7 @@ object LlmExtras {
     // Per-seed unrolled 3-round BFS: the bfs_layers CTE pattern carrying
     // (seed, v); harmonic as exact Σ 12/d.
     "graph_closeness_fixed" ->
-      """WITH inc AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS v
-                      FROM lineitem WHERE l_quantity >= 50),
-              e AS (SELECT DISTINCT a.v AS src, b.v AS dst
-                    FROM inc a JOIN inc b ON a.p = b.p AND a.v <> b.v),
+      s"""WITH $coSupplySql,
               seeds AS (SELECT DISTINCT v AS seed FROM inc WHERE v % 50 = 0),
               l0 AS (SELECT seed, seed AS v, 0 AS dist FROM seeds),
               l1 AS (SELECT DISTINCT l0.seed, e.dst AS v, 1 AS dist
@@ -1896,14 +1846,11 @@ object LlmExtras {
          FROM seeds s LEFT JOIN per p ON p.seed = s.seed
          ORDER BY s.seed""",
     "graph_kcore_fixed" ->
-      """WITH inc AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS v
-                      FROM lineitem WHERE l_quantity >= 50),
-              e0 AS (SELECT DISTINCT a.v AS src, b.v AS dst
-                     FROM inc a JOIN inc b ON a.p = b.p AND a.v <> b.v),
-              k1 AS (SELECT src FROM (SELECT src, count(*) AS deg FROM e0 GROUP BY 1)
+      s"""WITH $coSupplySql,
+              k1 AS (SELECT src FROM (SELECT src, count(*) AS deg FROM e GROUP BY 1)
                      WHERE deg >= 2),
-              e1 AS (SELECT e0.src, e0.dst FROM e0
-                     JOIN k1 a ON e0.src = a.src JOIN k1 b ON e0.dst = b.src),
+              e1 AS (SELECT e.src, e.dst FROM e
+                     JOIN k1 a ON e.src = a.src JOIN k1 b ON e.dst = b.src),
               k2 AS (SELECT src FROM (SELECT src, count(*) AS deg FROM e1 GROUP BY 1)
                      WHERE deg >= 2),
               e2 AS (SELECT e1.src, e1.dst FROM e1
@@ -1938,10 +1885,7 @@ object LlmExtras {
          FROM ds LEFT JOIN ew ON ds.community = ew.community CROSS JOIN et
          ORDER BY community""",
     "graph_cc_fixed" ->
-      """WITH inc AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS v
-                      FROM lineitem WHERE l_quantity >= 50),
-              e AS (SELECT DISTINCT a.v AS src, b.v AS dst
-                    FROM inc a JOIN inc b ON a.p = b.p AND a.v <> b.v),
+      s"""WITH $coSupplySql,
               l0 AS (SELECT v, v AS lbl FROM (SELECT DISTINCT v FROM inc)),
               l1 AS (SELECT s.v, min(s.lbl) AS lbl FROM (
                        SELECT v, lbl FROM l0
@@ -2008,65 +1952,20 @@ object LlmExtras {
     "llm_dedup_ngram_jaccard" ->
       s"""WITH g AS (SELECT doc_id,
                             list_distinct(list_transform(range(1, length(text) - 1),
-                                                         i -> substring(text, i, 3))) AS gr
+                                                         i -> substring(text, i, 3))) AS toks
                      FROM documents
                      WHERE length(text) >= 3),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.gr AS ga, b.gr AS gb
-                        FROM g a JOIN g b ON a.doc_id < b.doc_id
-                         AND len(a.gr) * 10 >= len(b.gr) * 7
-                         AND len(b.gr) * 10 >= len(a.gr) * 7),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ga, gb)) AS inter,
-                            len(ga) + len(gb) AS stot
-                     FROM cand)
-          SELECT doc_a, doc_b,
-                 (CAST(inter AS BIGINT) * 10000) // (stot - inter) AS jaccard_bp
-          FROM v WHERE inter * 10 >= (stot - inter) * 7
-          ORDER BY doc_a, doc_b""",
-    // Exact all-pairs over the slice; the size-ratio prefilter (J >= 0.9
-    // forces 10·min >= 9·max) is semantics-preserving pruning. The Spark
-    // side's rarest-first prefix join is invisible here by design — a
-    // candidate pruner must never change the declared result.
+               ${Shared.jaccardPairsSql("pairs", "g", 7, 10)}
+          SELECT doc_a, doc_b, jaccard_bp FROM pairs ORDER BY doc_a, doc_b""",
+    // Exact all-pairs over the slice. The Spark side's rarest-first prefix
+    // join is invisible here by design: a candidate pruner must never
+    // change the declared result.
     "llm_dedup_prefix_jaccard" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents WHERE doc_id < 500),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 10 >= len(b.toks) * 9
-                         AND len(b.toks) * 10 >= len(a.toks) * 9),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand)
-          SELECT doc_a, doc_b,
-                 (CAST(inter AS BIGINT) * 10000) // (stot - inter) AS jaccard_bp
-          FROM v WHERE inter * 10 >= (stot - inter) * 9
-          ORDER BY doc_a, doc_b""",
-    // Connected components in SQL: propagate every label r along edges, but
-    // only onto nodes with a larger id (monotone pruning — the component
-    // minimum still reaches every member); min(r) per node = its component
-    // representative.
+      s"""WITH ${Shared.wordPairsSql("pairs", 9, 10, "documents WHERE doc_id < 500")}
+          SELECT doc_a, doc_b, jaccard_bp FROM pairs ORDER BY doc_a, doc_b""",
     "llm_split_cluster_safe" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                               FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               pairs AS (SELECT doc_a, doc_b FROM v WHERE inter * 5 >= (stot - inter) * 4),
-               e AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                     UNION ALL SELECT doc_b, doc_a FROM pairs),
-               reach(id, r) AS (
-                 SELECT doc_id, doc_id FROM documents
-                 UNION
-                 SELECT e.a, reach.r FROM reach JOIN e ON e.b = reach.id
-                 WHERE reach.r < e.a),
-               labels AS (SELECT id AS doc_id, min(r) AS cluster_rep
-                          FROM reach GROUP BY id),
+      s"""WITH RECURSIVE ${Shared.wordPairsSql("pairs")},
+               ${Shared.ccLabelsSql("labels", "pairs")},
                naive AS (SELECT CAST(sum(CASE WHEN nf >= 2 THEN 1 ELSE 0 END) AS BIGINT)
                                   AS naive_straddle_clusters
                          FROM (SELECT cluster_rep,
@@ -2080,26 +1979,9 @@ object LlmExtras {
          FROM labels CROSS JOIN naive
          GROUP BY 1, naive_straddle_clusters ORDER BY fold""",
     "llm_dedup_clusters" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                               FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               pairs AS (SELECT doc_a, doc_b FROM v WHERE inter * 5 >= (stot - inter) * 4),
-               e AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                     UNION ALL SELECT doc_b, doc_a FROM pairs),
-               reach(id, r) AS (
-                 SELECT doc_id, doc_id FROM documents
-                 UNION
-                 SELECT e.a, reach.r FROM reach JOIN e ON e.b = reach.id
-                 WHERE reach.r < e.a)
-          SELECT id AS doc_id, min(r) AS cluster_rep
-          FROM reach GROUP BY id ORDER BY doc_id""",
+      s"""WITH RECURSIVE ${Shared.wordPairsSql("pairs")},
+               ${Shared.ccLabelsSql("labels", "pairs")}
+          SELECT doc_id, cluster_rep FROM labels ORDER BY doc_id""",
     // Same 8-token shingling (DuckDB list slices are end-inclusive:
     // toks[i:i+7] = 8 tokens; Spark's slice(toks, i+1, 8) matches).
     "llm_decontaminate" ->
@@ -2160,7 +2042,7 @@ object LlmExtras {
                assign AS (SELECT vec_id, cluster, label FROM (
                    SELECT v.vec_id, cent.cid AS cluster, v.label,
                           row_number() OVER (PARTITION BY v.vec_id
-                                             ORDER BY ${cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
+                                             ORDER BY ${Shared.cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
                    FROM v CROSS JOIN cent) WHERE rn = 1),
                cl AS (SELECT cluster, label, count(*) AS c
                       FROM assign GROUP BY 1, 2),
@@ -2185,13 +2067,13 @@ object LlmExtras {
                assign AS (SELECT vec_id, cluster FROM (
                    SELECT v.vec_id, cent.cid AS cluster,
                           row_number() OVER (PARTITION BY v.vec_id
-                                             ORDER BY ${cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
+                                             ORDER BY ${Shared.cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
                    FROM v CROSS JOIN cent) WHERE rn = 1),
                dropped AS (SELECT DISTINCT b.vec_id FROM assign a
                    JOIN assign b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
                    JOIN v va ON va.vec_id = a.vec_id
                    JOIN v vb ON vb.vec_id = b.vec_id
-                   WHERE ${cosSql("va.embedding", "vb.embedding")} >= 0.3)
+                   WHERE ${Shared.cosSql("va.embedding", "vb.embedding")} >= 0.3)
           SELECT a.vec_id, a.cluster,
                  CAST(CASE WHEN dr.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
           FROM assign a LEFT JOIN dropped dr ON dr.vec_id = a.vec_id
@@ -2202,18 +2084,18 @@ object LlmExtras {
                assign AS (SELECT vec_id AS vid, cid FROM (
                    SELECT v.vec_id, cent.cid,
                           row_number() OVER (PARTITION BY v.vec_id
-                                             ORDER BY ${cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
+                                             ORDER BY ${Shared.cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
                    FROM v CROSS JOIN cent) WHERE rn = 1),
                probes AS (SELECT qid, cid FROM (
                    SELECT q.vec_id AS qid, cent.cid,
                           row_number() OVER (PARTITION BY q.vec_id
-                                             ORDER BY ${cosSql("q.embedding", "cent.cv")} DESC, cent.cid) AS rn
+                                             ORDER BY ${Shared.cosSql("q.embedding", "cent.cv")} DESC, cent.cid) AS rn
                    FROM v q CROSS JOIN cent WHERE q.vec_id < 10) WHERE rn <= 2)
           SELECT qid, vid, cosine, rank FROM (
             SELECT p.qid, a.vid,
-                   ${d4Sql(cosSql("q.embedding", "t.embedding"))} AS cosine,
+                   ${d4Sql(Shared.cosSql("q.embedding", "t.embedding"))} AS cosine,
                    row_number() OVER (PARTITION BY p.qid
-                                      ORDER BY ${cosSql("q.embedding", "t.embedding")} DESC, a.vid) AS rank
+                                      ORDER BY ${Shared.cosSql("q.embedding", "t.embedding")} DESC, a.vid) AS rank
             FROM probes p JOIN assign a ON p.cid = a.cid AND a.vid <> p.qid
             JOIN v q ON q.vec_id = p.qid JOIN v t ON t.vec_id = a.vid)
           WHERE rank <= 3 ORDER BY qid, rank""",
@@ -2235,36 +2117,18 @@ object LlmExtras {
                         WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id)
           SELECT qid, vid, cosine, rank FROM (
             SELECT cand.qid, cand.vid,
-                   ${d4Sql(cosSql("q.embedding", "t.embedding"))} AS cosine,
+                   ${d4Sql(Shared.cosSql("q.embedding", "t.embedding"))} AS cosine,
                    row_number() OVER (PARTITION BY cand.qid
-                                      ORDER BY ${cosSql("q.embedding", "t.embedding")} DESC, cand.vid) AS rank
+                                      ORDER BY ${Shared.cosSql("q.embedding", "t.embedding")} DESC, cand.vid) AS rank
             FROM cand JOIN v q ON q.vec_id = cand.qid JOIN v t ON t.vec_id = cand.vid)
           WHERE rank <= 3 ORDER BY qid, rank""",
-    // Same recursive-CTE labels as llm_dedup_clusters, joined to the
-    // llm_text_quality basis-point formula; best = row_number pick.
+    // Cluster labels joined to the llm_text_quality score; best =
+    // row_number pick.
     "llm_dedup_keep_best" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                               FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               pairs AS (SELECT doc_a, doc_b FROM v WHERE inter * 5 >= (stot - inter) * 4),
-               e AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                     UNION ALL SELECT doc_b, doc_a FROM pairs),
-               reach(id, r) AS (
-                 SELECT doc_id, doc_id FROM documents
-                 UNION
-                 SELECT e.a, reach.r FROM reach JOIN e ON e.b = reach.id
-                 WHERE reach.r < e.a),
-               labels AS (SELECT id AS doc_id, min(r) AS cluster_rep
-                          FROM reach GROUP BY id),
+      s"""WITH RECURSIVE ${Shared.wordPairsSql("pairs")},
+               ${Shared.ccLabelsSql("labels", "pairs")},
                q AS (SELECT doc_id,
-                            (100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) // (n * len) AS quality_bp
+                            ${Shared.qualityBp("//")} AS quality_bp
                      FROM (SELECT doc_id,
                             CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                             CAST(len(list_filter(string_split(text, ' '), tk -> tk IN ('the', 'a'))) AS BIGINT) AS st,
@@ -2278,31 +2142,13 @@ object LlmExtras {
                      FROM labels l JOIN q USING (doc_id))
           SELECT cluster_rep, doc_id AS kept_doc, n_members, quality_bp AS best_quality_bp
           FROM j WHERE rn = 1 ORDER BY cluster_rep""",
-    // Same labels + quality CTEs; chosen/rejected via the two mirrored
+    // Cluster labels and quality; chosen/rejected via the two mirrored
     // row_number orders (ties: lower id wins best, higher id wins worst).
     "llm_rl_pref_pairs" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                               FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               pairs AS (SELECT doc_a, doc_b FROM v WHERE inter * 5 >= (stot - inter) * 4),
-               e AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                     UNION ALL SELECT doc_b, doc_a FROM pairs),
-               reach(id, r) AS (
-                 SELECT doc_id, doc_id FROM documents
-                 UNION
-                 SELECT e.a, reach.r FROM reach JOIN e ON e.b = reach.id
-                 WHERE reach.r < e.a),
-               labels AS (SELECT id AS doc_id, min(r) AS cluster_rep
-                          FROM reach GROUP BY id),
+      s"""WITH RECURSIVE ${Shared.wordPairsSql("pairs")},
+               ${Shared.ccLabelsSql("labels", "pairs")},
                q AS (SELECT doc_id,
-                            (100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) // (n * len) AS quality_bp
+                            ${Shared.qualityBp("//")} AS quality_bp
                      FROM (SELECT doc_id,
                             CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                             CAST(len(list_filter(string_split(text, ' '), tk -> tk IN ('the', 'a'))) AS BIGINT) AS st,
@@ -2325,34 +2171,24 @@ object LlmExtras {
     "llm_sim_knn" ->
       s"""SELECT src, dst, cosine, rank FROM (
             SELECT a.vec_id AS src, b.vec_id AS dst,
-                   ${d4Sql(cosSql("a.embedding", "b.embedding"))} AS cosine,
+                   ${d4Sql(Shared.cosSql("a.embedding", "b.embedding"))} AS cosine,
                    row_number() OVER (PARTITION BY a.vec_id
-                                      ORDER BY ${cosSql("a.embedding", "b.embedding")} DESC, b.vec_id) AS rank
+                                      ORDER BY ${Shared.cosSql("a.embedding", "b.embedding")} DESC, b.vec_id) AS rank
             FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id)
           WHERE rank <= 3 ORDER BY src, rank""",
     "llm_dedup_embed" ->
       s"""WITH losers AS (
             SELECT DISTINCT b.vec_id AS vec_id
             FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.55)
+            WHERE ${Shared.cosSql("a.embedding", "b.embedding")} >= 0.55)
           SELECT label, count(*) AS n_kept, min(vec_id) AS min_vec
           FROM embeddings WHERE vec_id NOT IN (SELECT vec_id FROM losers)
           GROUP BY label ORDER BY label""",
-    // Same pair CTEs as llm_dedup_near; the 3 iterations unroll to s1/r1 …
+    // The 3 iterations unroll to s1/r1 …
     // s3/r3 with the identical integer expressions (sum(BIGINT) is HUGEINT
     // in DuckDB — the final CAST per iteration restores BIGINT).
     "graph_pagerank_fixed" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               pairs AS (SELECT doc_a, doc_b FROM v WHERE inter * 5 >= (stot - inter) * 4),
+      s"""WITH ${Shared.wordPairsSql("pairs")},
                e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
                      UNION ALL SELECT doc_b, doc_a FROM pairs),
                deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
@@ -2379,17 +2215,7 @@ object LlmExtras {
           FROM r3 LEFT JOIN deg ON deg.src = r3.doc_id
           ORDER BY r3.doc_id""",
     "graph_triangles" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               pairs AS (SELECT doc_a, doc_b FROM v WHERE inter * 5 >= (stot - inter) * 4),
+      s"""WITH ${Shared.wordPairsSql("pairs")},
                deg AS (SELECT vv, count(*) AS deg
                        FROM (SELECT doc_a AS vv FROM pairs UNION ALL SELECT doc_b FROM pairs)
                        GROUP BY vv),
@@ -2402,17 +2228,7 @@ object LlmExtras {
                                  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b)
           SELECT (SELECT count(*) FROM e) AS n_edges_kept, tri.n_triangles FROM tri""",
     "graph_degree_histogram" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               pairs AS (SELECT doc_a, doc_b FROM v WHERE inter * 5 >= (stot - inter) * 4),
+      s"""WITH ${Shared.wordPairsSql("pairs")},
                deg AS (SELECT vv, count(*) AS deg
                        FROM (SELECT doc_a AS vv FROM pairs UNION ALL SELECT doc_b FROM pairs)
                        GROUP BY vv),
@@ -2469,11 +2285,11 @@ object LlmExtras {
                FROM documents)
          ORDER BY doc_id""",
     "llm_text_quality" ->
-      """SELECT doc_id, n AS n_toks,
+      s"""SELECT doc_id, n AS n_toks,
                 (chars * 10000) // n AS avg_tok_len_bp,
                 (st * 10000) // n AS stopword_bp,
                 (np * 10000) // len AS nonalpha_bp,
-                (100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) // (n * len) AS quality_bp
+                ${Shared.qualityBp("//")} AS quality_bp
          FROM (SELECT doc_id,
                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                 CAST(length(replace(text, ' ', '')) AS BIGINT) AS chars,
@@ -2574,28 +2390,17 @@ object LlmExtras {
     "llm_pipeline_e2e" ->
       s"""WITH q AS (
             SELECT doc_id, text, lang, n_chars,
-                   len(string_split(text, ' ')) AS q_n,
-                   len(list_filter(string_split(text, ' '), t -> t = 'the' OR t = 'a')) AS q_st,
-                   length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS q_np,
-                   length(text) AS q_len
+                   len(string_split(text, ' ')) AS n,
+                   len(list_filter(string_split(text, ' '), t -> t = 'the' OR t = 'a')) AS st,
+                   length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS np,
+                   length(text) AS len
             FROM documents),
           f AS (
             SELECT doc_id, text, lang, n_chars FROM q
-            WHERE (100 * (least(q_n, 50) * q_n * q_len + 30 * (q_n - q_st) * q_len
-                          + 20 * (q_len - q_np) * q_n)) // (q_n * q_len) >= 9000),
-          t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM f),
-          v AS (
-            SELECT a.doc_id AS da, b.doc_id AS db,
-                   len(list_intersect(a.toks, b.toks)) AS inter,
-                   len(a.toks) + len(b.toks) AS stot
-            FROM t a JOIN t b ON a.doc_id < b.doc_id
-             AND len(a.toks) * 5 >= len(b.toks) * 4
-             AND len(b.toks) * 5 >= len(a.toks) * 4),
-          losers AS (
-            SELECT DISTINCT db AS doc_id FROM v
-            WHERE inter * 5 >= (stot - inter) * 4),
+            WHERE ${Shared.qualityBp("//")} >= 9000),
+          ${Shared.wordPairsSql("pairs", docs = "f")},
           kept AS (
-            SELECT * FROM f WHERE doc_id NOT IN (SELECT doc_id FROM losers))
+            SELECT * FROM f WHERE doc_id NOT IN (SELECT doc_b FROM pairs))
           SELECT lang, count(*) AS n_docs,
                  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
                  ${moneySumSql("CAST(n_chars AS DOUBLE)")} AS total_chars
@@ -2604,15 +2409,15 @@ object LlmExtras {
       s"""WITH params AS (SELECT greatest(100, count(*) // 200) AS qstep FROM embeddings),
            cand AS (SELECT qid, cid, sim FROM (
                SELECT q.vec_id AS qid, c.vec_id AS cid,
-                      ${cosSql("q.embedding", "c.embedding")} AS sim,
+                      ${Shared.cosSql("q.embedding", "c.embedding")} AS sim,
                       row_number() OVER (PARTITION BY q.vec_id
-                                         ORDER BY ${cosSql("q.embedding", "c.embedding")} DESC,
+                                         ORDER BY ${Shared.cosSql("q.embedding", "c.embedding")} DESC,
                                                   c.vec_id) AS rn
                FROM embeddings q JOIN embeddings c
                  ON q.vec_id % (SELECT qstep FROM params) = 7 AND q.vec_id <> c.vec_id)
              WHERE rn <= 12),
            cp AS (SELECT a.qid, a.cid AS ca, b.cid AS cb,
-                         ${cosSql("ea.embedding", "eb.embedding")} AS csim
+                         ${Shared.cosSql("ea.embedding", "eb.embedding")} AS csim
                   FROM cand a JOIN cand b ON a.qid = b.qid AND a.cid <> b.cid
                   JOIN embeddings ea ON ea.vec_id = a.cid
                   JOIN embeddings eb ON eb.vec_id = b.cid),
@@ -2690,7 +2495,7 @@ object LlmExtras {
                assign AS (SELECT vec_id, cluster FROM (
                    SELECT v.vec_id, cent.cid AS cluster,
                           row_number() OVER (PARTITION BY v.vec_id
-                                             ORDER BY ${cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
+                                             ORDER BY ${Shared.cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
                    FROM v CROSS JOIN cent) WHERE rn = 1),
                pts AS (SELECT a.cluster, e.pos - 1 AS dim, e.x
                        FROM (SELECT vec_id,

@@ -305,12 +305,6 @@ object LlmPipeline {
     verifyPairs(cand, tokens, num, den)
   }
 
-  /** DuckDB twin of the double-precision cosine, operation-for-operation. */
-  private def cosSql(a: String, b: String): String =
-    s"""list_sum(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-           * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
-
   val ops: Map[String, Q] = Map(
     "llm_dedup_exact" -> ((s, d) =>
       documents(s, d)
@@ -1073,9 +1067,8 @@ object LlmPipeline {
                  CAST(max(sz) AS BIGINT) AS max_bucket,
                  CAST(sum(sz * (sz - 1) // 2) AS BIGINT) AS candidate_pairs
           FROM bk GROUP BY band ORDER BY band""",
-    // Truth pairs = the llm_dedup_near all-pairs CTE (same documented
-    // slow-at-sf0.1 oracle class — gate at sf0.01); detection/cost per
-    // banding config over the shared sig CTE.
+    // Truth pairs = the word-pair twin; detection/cost per banding config
+    // over the shared sig CTE.
     "llm_lsh_band_recall" -> {
       val configs = Seq((8, 1), (4, 2), (2, 4), (1, 8))
       def detSql(bn: Int, r: Int): String = (0 until bn).map { bi =>
@@ -1095,18 +1088,7 @@ object LlmPipeline {
         s"SELECT $bn AS bands, $r AS rows_per_band, n_true, det_$bn AS n_detected FROM flags"
       }.mkString(" UNION ALL ")
       s"""WITH $sigCte,
-              tt AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents),
-              tcand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM tt a JOIN tt b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-              tv AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM tcand),
-              tp AS (SELECT doc_a, doc_b FROM tv
-                     WHERE inter * 5 >= (stot - inter) * 4),
+              ${Shared.wordPairsSql("tp")},
               flags AS (SELECT count(*) AS n_true,
                                ${configs.map { case (bn, r) =>
                                  s"COALESCE(sum(CASE WHEN ${detSql(bn, r)} THEN 1 ELSE 0 END), 0) AS det_$bn"
@@ -1124,25 +1106,12 @@ object LlmPipeline {
           FROM rec r JOIN cd c ON c.bands = r.bands AND c.rows_per_band = r.rows_per_band
           ORDER BY r.bands DESC"""
     },
-    // Truth pairs = the llm_dedup_near all-pairs CTE (slow-at-sf0.1 oracle
-    // class — gate at sf0.01); estimator = 8-hash agreement over sig.
+    // Truth pairs = the word-pair twin; estimator = 8-hash agreement over sig.
     "llm_minhash_accuracy" -> {
       val agree = (0 until 8).map(k =>
         s"CASE WHEN a.mh$k = b.mh$k THEN 1 ELSE 0 END").mkString(" + ")
       s"""WITH $sigCte,
-              tt AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents),
-              tcand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM tt a JOIN tt b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-              tv AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM tcand),
-              tp AS (SELECT doc_a, doc_b,
-                            (CAST(inter AS BIGINT) * 10000) // (stot - inter) AS jaccard_bp
-                     FROM tv WHERE inter * 5 >= (stot - inter) * 4),
+              ${Shared.wordPairsSql("tp")},
               pe AS (SELECT tp.jaccard_bp,
                             CAST(($agree) * 1250 AS BIGINT) AS est_bp
                      FROM tp JOIN sig a ON a.doc_id = tp.doc_a
@@ -1166,41 +1135,12 @@ object LlmPipeline {
          WHERE p.doc_id % 2 = 1
            AND EXISTS (SELECT 1 FROM f r WHERE r.doc_id % 2 = 0 AND r.h = p.h)
          ORDER BY p.doc_id""",
-    // Exact all-pairs Jaccard — no sketch — over the FULL corpus; the
-    // size-ratio prefilter (J >= 4/5 forces 5·min(|A|,|B|) >= 4·max) is
-    // semantics-preserving pruning, and integer cross-multiplication keeps
-    // the threshold float-free.
+    // Exact all-pairs Jaccard over the full corpus: no sketch.
     "llm_dedup_near" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand)
-          SELECT doc_a, doc_b,
-                 (CAST(inter AS BIGINT) * 10000) // (stot - inter) AS jaccard_bp
-          FROM v WHERE inter * 5 >= (stot - inter) * 4
-          ORDER BY doc_a, doc_b""",
-    // Same all-pairs CTE as llm_dedup_near (the documented slow-at-sf0.1
-    // oracle class — gate at sf0.01), then the 5-threshold report.
+      s"""WITH ${Shared.wordPairsSql("pairs")}
+          SELECT doc_a, doc_b, jaccard_bp FROM pairs ORDER BY doc_a, doc_b""",
     "llm_dedup_threshold_sweep" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
-                     FROM documents),
-               cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                               a.toks AS ta, b.toks AS tb
-                        FROM t a JOIN t b ON a.doc_id < b.doc_id
-                         AND len(a.toks) * 5 >= len(b.toks) * 4
-                         AND len(b.toks) * 5 >= len(a.toks) * 4),
-               v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
-                            len(ta) + len(tb) AS stot
-                     FROM cand),
-               p AS (SELECT doc_a, doc_b,
-                            (CAST(inter AS BIGINT) * 10000) // (stot - inter) AS jaccard_bp
-                     FROM v WHERE inter * 5 >= (stot - inter) * 4),
+      s"""WITH ${Shared.wordPairsSql("p")},
                th AS (SELECT unnest([8000, 8500, 9000, 9500, 10000]) AS threshold_bp),
                e AS (SELECT th.threshold_bp, p.doc_a AS doc FROM p, th
                      WHERE p.jaccard_bp >= th.threshold_bp
@@ -1212,16 +1152,16 @@ object LlmPipeline {
           FROM e GROUP BY threshold_bp ORDER BY threshold_bp""",
     "llm_sim_cosine_pairs" ->
       s"""SELECT a.vec_id AS vid_a, b.vec_id AS vid_b,
-          ${d4Sql(cosSql("a.embedding", "b.embedding"))} AS cosine
+          ${d4Sql(Shared.cosSql("a.embedding", "b.embedding"))} AS cosine
           FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.5
+          WHERE ${Shared.cosSql("a.embedding", "b.embedding")} >= 0.5
           ORDER BY vid_a, vid_b""",
     "llm_sim_topk" ->
       s"""SELECT qid, vid, cosine, rank FROM (
             SELECT q.vec_id AS qid, c.vec_id AS vid,
-                   ${d4Sql(cosSql("q.embedding", "c.embedding"))} AS cosine,
+                   ${d4Sql(Shared.cosSql("q.embedding", "c.embedding"))} AS cosine,
                    row_number() OVER (PARTITION BY q.vec_id
-                                      ORDER BY ${cosSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS rank
+                                      ORDER BY ${Shared.cosSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS rank
             FROM embeddings q JOIN embeddings c ON q.vec_id < 10 AND q.vec_id <> c.vec_id)
           WHERE rank <= 5 ORDER BY qid, rank""",
     "llm_sample_stratified" ->

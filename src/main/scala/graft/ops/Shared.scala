@@ -4,34 +4,10 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Gates
+import graft.Norm.money
 import graft.Tables._
 
-/** Process-lifetime memos of the expensive frames SHARED by several declared
-  * ops: the exact word-Jaccard near-dup pair set (`llm_dedup_near`,
-  * `llm_dedup_clusters`, `llm_dedup_keep_best`), its connected-component
-  * labels (`llm_dedup_clusters`, `llm_dedup_keep_best`), and the normed
-  * double-vector frame (every `llm_sim_*` / `llm_dedup_embed` op).
-  *
-  * Each value is an EAGER `localCheckpoint`: computed once per
-  * (SparkContext, sfDir), held as materialized executor blocks, and every
-  * consumer plan starts from the scan-free checkpoint. Before this memo the
-  * clusters/keep_best/near trio re-derived the same quadratic-output pair
-  * computation three times per process (~11.5 s of the r4 bench), and the
-  * ANN ops rebuilt the vector subtree 4× inside one plan.
-  *
-  * At 100 TB this is exactly the "stage result reuse" a production pipeline
-  * gets from persisting the dedup pair table once and feeding all downstream
-  * consumers from it — the memo makes the declared ops behave like that
-  * pipeline while each op stays individually callable (SCALE_TUNING.md,
-  * "Shared memo checkpoints").
-  *
-  * Thread safety: `Verify` dumps queries from a 4-thread pool, so memos use
-  * `ConcurrentHashMap.computeIfAbsent` (exactly-once evaluation). One map
-  * per kind keeps the nested lookup (labels → pairs) out of same-map
-  * reentrancy. Results are unchanged by construction — the memo only
-  * replaces recomputation of a deterministic frame with its materialized
-  * blocks.
-  */
 /** Parking lot for DataFrames an op must `persist()` but cannot itself
   * release (the returned plan stays a cache consumer until the entrypoint's
   * action runs). Entrypoints call `release()` in teardown so the cached
@@ -48,6 +24,8 @@ private[graft] object CacheReuse {
   }
 }
 
+/** Derivations shared by several declared ops: one Spark builder each,
+  * with its DuckDB twin for the oracles beside it. */
 private[graft] object Shared {
   import org.apache.spark.sql.expressions.Window
 
@@ -136,6 +114,53 @@ private[graft] object Shared {
       }: _*)
   }
 
+  /** (l_returnflag, cents, w = row count) histogram of lineitem prices,
+    * the value-bounded input of the percentile and census ops. Spread by
+    * the histogram key after the narrow projection, so where
+    * [[Gates.spreadBy]] fires one 2-column exchange serves both the scan
+    * spread and the groupBy. Every call returns a fresh lazy
+    * localCheckpoint: each consumer plan reads its collapse once however
+    * many subtrees use it. */
+  def centsHist(s: SparkSession, d: String): DataFrame =
+    Gates.spreadBy(s, d, "lineitem",
+        lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents")),
+        Seq("l_returnflag", "cents"))
+      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
+      .localCheckpoint(false)
+
+  /** The `llm_text_quality` composite 0.5·min(n/50, 1) + 0.3·(1 − st/n)
+    * + 0.2·(1 − np/len) in integer basis points, exactly, over the columns
+    * n (tokens), st (stopword tokens), np (non-alphanumeric chars) and len
+    * (chars); `divOp` is `div` (Spark) or `//` (DuckDB). */
+  def qualityBp(divOp: String): String =
+    s"(100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) $divOp (n * len)"
+
+  /** Process-lifetime memos of the expensive frames SHARED by several declared
+    * ops: the exact word-Jaccard near-dup pair set (`llm_dedup_near`,
+    * `llm_dedup_clusters`, `llm_dedup_keep_best`), its connected-component
+    * labels (`llm_dedup_clusters`, `llm_dedup_keep_best`), and the normed
+    * double-vector frame (every `llm_sim_*` / `llm_dedup_embed` op).
+    *
+    * Each value is an EAGER `localCheckpoint`: computed once per
+    * (SparkContext, sfDir), held as materialized executor blocks, and every
+    * consumer plan starts from the scan-free checkpoint. Before this memo the
+    * clusters/keep_best/near trio re-derived the same quadratic-output pair
+    * computation three times per process (~11.5 s of the r4 bench), and the
+    * ANN ops rebuilt the vector subtree 4× inside one plan.
+    *
+    * At 100 TB this is exactly the "stage result reuse" a production pipeline
+    * gets from persisting the dedup pair table once and feeding all downstream
+    * consumers from it — the memo makes the declared ops behave like that
+    * pipeline while each op stays individually callable (SCALE_TUNING.md,
+    * "Shared memo checkpoints").
+    *
+    * Thread safety: `Verify` dumps queries from a 4-thread pool, so memos use
+    * `ConcurrentHashMap.computeIfAbsent` (exactly-once evaluation). One map
+    * per kind keeps the nested lookup (labels → pairs) out of same-map
+    * reentrancy. Results are unchanged by construction — the memo only
+    * replaces recomputation of a deterministic frame with its materialized
+    * blocks.
+    */
   private val pairsCache  = new ConcurrentHashMap[String, DataFrame]
   private val labelsCache = new ConcurrentHashMap[String, DataFrame]
   private val vecsCache   = new ConcurrentHashMap[String, DataFrame]
@@ -154,14 +179,10 @@ private[graft] object Shared {
     * frame (a sort of the pair set, paid only where declared). */
   def wordPairs(s: SparkSession, d: String): DataFrame =
     pairsCache.computeIfAbsent(key(s, d), _ =>
-      // r14: AQE coalesced the kernel's last shuffle to ONE partition
-      // (byte-based — the pair set is small on disk but row-heavy), so
-      // every consumer's first stage over the checkpoint ran serial
-      // (llm_dedup_near's sort sampling+map: 1.07 s single-task;
-      // llm_minhash_accuracy's pair-side join: 0.64 s). A deterministic
-      // doc_a hash repartition before the checkpoint spreads consumer
-      // stages and pre-clusters the key most consumers join/sort on; the
-      // one extra exchange lands in the UNTIMED memo build.
+      // AQE coalesces by bytes and the pair set is byte-light but
+      // row-heavy, so without the doc_a hash repartition every consumer's
+      // first stage over the checkpoint runs as one task; doc_a is also
+      // the key most consumers join or sort on.
       LlmPipeline.nearDupPairs(tokenSets(s, d), sorted = false)
         .repartition(s.sparkContext.defaultParallelism, col("doc_a"))
         .localCheckpoint(true))
@@ -176,6 +197,46 @@ private[graft] object Shared {
         .localCheckpoint(true))
   }
 
+  /** DuckDB twin of [[LlmPipeline.nearDupPairs]]: CTE definitions ending
+    * in `out`(doc_a, doc_b, jaccard_bp), the pairs of `src`(doc_id, toks:
+    * distinct tokens) with exact Jaccard ≥ num/den. The threshold is tested
+    * as den·|A∩B| ≥ num·|A∪B| and the size-ratio join condition (J ≥ num/den
+    * forces den·min ≥ num·max) only prunes. Helper CTEs are named `out_*`,
+    * so they cannot clash with the caller's. */
+  def jaccardPairsSql(out: String, src: String, num: Int, den: Int): String =
+    s"""${out}_cand AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.toks AS ta, b.toks AS tb
+                        FROM $src a JOIN $src b ON a.doc_id < b.doc_id
+                         AND len(a.toks) * $den >= len(b.toks) * $num
+                         AND len(b.toks) * $den >= len(a.toks) * $num),
+        ${out}_v AS (SELECT doc_a, doc_b, len(list_intersect(ta, tb)) AS inter,
+                            len(ta) + len(tb) AS stot
+                     FROM ${out}_cand),
+        $out AS (SELECT doc_a, doc_b, (CAST(inter AS BIGINT) * 10000) // (stot - inter) AS jaccard_bp
+                 FROM ${out}_v WHERE inter * $den >= (stot - inter) * $num)"""
+
+  /** DuckDB twin of [[wordPairs]] (and, with other thresholds or a
+    * document slice `docs`, of [[LlmPipeline.nearDupPairs]] over
+    * [[tokenSets]]): the word-token sets as `out_t`, then their
+    * [[jaccardPairsSql]] pairs as `out`. */
+  def wordPairsSql(out: String, num: Int = 4, den: Int = 5, docs: String = "documents"): String =
+    s"""${out}_t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM $docs),
+        ${jaccardPairsSql(out, s"${out}_t", num, den)}"""
+
+  /** DuckDB twin of [[ccLabels]]: CTE definitions ending in
+    * `out`(doc_id, cluster_rep) for every document, over the (doc_a, doc_b)
+    * relation `pairs`. Each label r propagates along edges only onto larger
+    * ids (the component minimum still reaches every member), and min(r)
+    * per node is its representative. The caller's WITH must be RECURSIVE. */
+  def ccLabelsSql(out: String, pairs: String): String =
+    s"""${out}_e AS (SELECT doc_a AS a, doc_b AS b FROM $pairs
+                     UNION ALL SELECT doc_b, doc_a FROM $pairs),
+        ${out}_reach(id, r) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.a, reach.r FROM ${out}_reach reach JOIN ${out}_e e ON e.b = reach.id
+          WHERE reach.r < e.a),
+        $out AS (SELECT id AS doc_id, min(r) AS cluster_rep FROM ${out}_reach GROUP BY id)"""
+
   /** Embeddings as (vec_id, v: array<double>, nrm) with the norm through the
     * codegen `graft_dot` (index-order accumulation, bit-identical to the
     * declarative `aggregate` fold the oracle mirrors). */
@@ -185,6 +246,14 @@ private[graft] object Shared {
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
         .localCheckpoint(true))
+
+  /** DuckDB twin of the cosine over [[vecs]], operation for operation in
+    * double precision (DuckDB's own list_cosine_similarity accumulates in
+    * float and drifts ~1e-7). */
+  def cosSql(a: String, b: String): String =
+    s"""list_sum(list_transform(list_zip($a, $b), p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+        / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+           * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"""
 
   /** Memo-honest bench accounting (r9 VERDICT #2): every process-lifetime
     * memo, forced DETERMINISTICALLY in one place with its build time

@@ -43,21 +43,48 @@ class ContractSuite extends AnyFunSuite {
       s"SURVEY declares ${totalLine.group(1)} op keys but SparkEntry.queries has ${q.size}")
   }
 
-  test("src/main has one session builder, one table-size stat and one broadcast gate") {
+  /** (path under src/main/scala, text) of every main source file. */
+  private lazy val mainSources: Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
-    val sources = java.nio.file.Files.walk(root).iterator.asScala
+    java.nio.file.Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .map(f => root.relativize(f).toString -> java.nio.file.Files.readString(f)).toSeq
-    def filesUsing(token: String): Seq[String] = sources.flatMap { case (f, src) =>
-      Seq.fill(java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).size)(f)
-    }.sorted
+  }
+  /** One entry per match of `regex` in src/main, naming its file. */
+  private def filesMatching(regex: String): Seq[String] = mainSources.flatMap { case (f, src) =>
+    Seq.fill(regex.r.findAllMatchIn(src).size)(f)
+  }.sorted
+  private def filesUsing(token: String): Seq[String] =
+    filesMatching(java.util.regex.Pattern.quote(token))
+
+  test("src/main has one session builder, one table-size stat and one broadcast gate") {
     assert(filesUsing("SparkSession.builder") == Seq("graft/GraftSession.scala"),
       "build sessions through GraftSession.local")
     assert(filesUsing("getContentSummary") == Seq("graft/Gates.scala"),
       "read table sizes through Gates.bytes")
     assert(filesUsing("BroadcastGateTag").distinct == Seq("graft/Gates.scala"),
       "hint size-gated frames through Gates.broadcastUnder")
+  }
+
+  test("src/main defines each shared derivation once, on each side of the parity check") {
+    import java.util.regex.Pattern.quote
+    val once = Seq(
+      // Spark builders
+      quote("col(\"a.p\") === col(\"b.p\")") -> "graft/ops/LlmExtras.scala",
+      quote("spreadBy(s, d, \"lineitem\",") + "\\s*" +
+        quote("lineitem(s, d).select(col(\"l_returnflag\"), money(col(\"l_extendedprice\")).as(\"cents\"))")
+        -> "graft/ops/Shared.scala",
+      // DuckDB twins
+      quote("a.p = b.p AND a.v <> b.v") -> "graft/ops/LlmExtras.scala",
+      quote("len(list_intersect(ta, tb))") -> "graft/ops/Shared.scala",
+      quote("reach(id, r)") -> "graft/ops/Shared.scala",
+      quote("def cosSql") -> "graft/ops/Shared.scala",
+      // both sides, keyed on the division operator
+      quote("least(n, 50)") -> "graft/ops/Shared.scala")
+    once.foreach { case (regex, file) =>
+      assert(filesMatching(regex) == Seq(file), s"one definition of /$regex/, in $file")
+    }
   }
 
   test("no output schema has duplicate, empty, or nested-unhashable columns") {

@@ -26,13 +26,15 @@ object Gates {
   /** (bytes, fileCount) of `<dir>/<table>.parquet`: one filesystem
     * METADATA stat (no scan), cached per [[FileId]]. The cache holds
     * metadata, never query results. */
-  private val stats = new java.util.concurrent.ConcurrentHashMap[FileId, (Long, Long)]
-  private def stat(s: SparkSession, d: String, table: String): (Long, Long) =
-    stats.computeIfAbsent(fileId(s, d, table), id => {
+  private val stats = new Memo[FileId, (Long, Long)]
+  private def stat(s: SparkSession, d: String, table: String): (Long, Long) = {
+    val id = fileId(s, d, table)
+    stats(id) {
       val path = new org.apache.hadoop.fs.Path(id.path)
       val cs = path.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(path)
       (cs.getLength, cs.getFileCount)
-    })
+    }
+  }
 
   /** Parquet bytes of `<dir>/<table>.parquet`. */
   def bytes(s: SparkSession, d: String, table: String): Long = stat(s, d, table)._1

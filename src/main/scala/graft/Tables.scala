@@ -85,20 +85,14 @@ object Tables {
     df
   }
 
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[Gates.FileId, StructType]
+  private val schemas = new Memo[Gates.FileId, StructType]
 
   // `nanosAsLong` and the UTC time zone are session confs (GraftSession),
-  // never set per read. Inference runs outside the map's lock: concurrent
-  // first loads may both infer, and the first to finish is kept.
+  // never set per read.
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val id = Gates.fileId(spark, dir, name)
-    val known = schemas.get(id)
-    if (known != null) spark.read.schema(known).parquet(id.path)
-    else {
-      val df = validate(name, spark.read.parquet(id.path))
-      schemas.putIfAbsent(id, df.schema)
-      df
-    }
+    spark.read.schema(schemas(id)(validate(name, spark.read.parquet(id.path)).schema))
+      .parquet(id.path)
   }
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")

@@ -126,8 +126,7 @@ object LlmCuration {
   private def bpeBest(counts: DataFrame): DataFrame =
     counts.orderBy(col("n").desc, col("pair")).limit(1)
 
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]
+  private val bpeMemo = new graft.Memo[(String, String), (DataFrame, DataFrame)]
 
   /** Memoized 4-round BPE training artifacts: (merge table, final symbol
     * stream) — the Shared-memo convention (one checkpoint per process per
@@ -138,7 +137,7 @@ object LlmCuration {
     * pair asc) argmax → corpus-wide single-pass merge, words frame
     * localCheckpoint'd per round (pagerank iteration rule). */
   private def bpeTrained(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    bpeMergeCache.computeIfAbsent(s.sparkContext.applicationId + "|" + d, _ => {
+    bpeMemo(Shared.memoKey(s, d)) {
       var words = bpeInitialWords(s, d)
       val merges = (1 to 4).map { k =>
         val best = bpeBest(bpePairCounts(words))
@@ -149,7 +148,7 @@ object LlmCuration {
           col("best_pair"), col("n").as("n_merged"))
       }.reduce(_ unionAll _).localCheckpoint(true)
       (merges, words)
-    })
+    }
 
   private def bpeMerges(s: SparkSession, d: String): DataFrame =
     bpeTrained(s, d)._1

@@ -1456,11 +1456,7 @@ object LlmExtras {
     // the sink. Every stage is an already-declared operator, so the
     // composition inherits their scale shapes (narrow quality projection,
     // adaptive exact dedup, partial-aggregated stats, pruned layout).
-    "llm_pipeline_e2e" -> ((s, d) => {
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_pipe_${d.hashCode & 0x7fffffff}").getAbsolutePath
-      graft.Pipeline.run(s, d, out)
-    }),
+    "llm_pipeline_e2e" -> ((s, d) => graft.Pipeline.run(s, d, scratchDir(d, "pipe"))),
 
     // MMR diversified top-k (the retrieval re-ranker that trades relevance
     // against redundancy — the diversity-aware sibling of llm_sim_topk):

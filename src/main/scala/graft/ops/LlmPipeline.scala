@@ -207,7 +207,7 @@ object LlmPipeline {
     //    the bitmap kernel's per-pair cost (SCALE_TUNING, "the LSH
     //    fallback's candidate cost"). Interning each gram to a LONG first
     //    shrinks every shuffled element to 8 flat bytes and turns the
-    //    intersect merge into primitive compares (IntersectSizeLong). The
+    //    intersect merge into primitive compares (intersect_size_long). The
     //    id map is deterministic WITHOUT a global sort: ids are (rank
     //    within a 1024-way hash bucket) · 1024 + bucket — injective, built
     //    by one vocab-sized window, stable across task retries (unlike

@@ -13,9 +13,6 @@ import graft.Tables._
   * whether a 100 TB scan reads 100 TB or only the bytes it needs.
   */
 object Scans {
-  private def tmpDir(d: String, fmt: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$fmt${Math.abs(d.hashCode)}"
-
   /** The shared MERGE-INTO changelog contract for BOTH row-level
     * strategies (one definition, so a one-sided edit cannot silently
     * break the cross-strategy parity): a GraftMemCatalog target built
@@ -352,7 +349,7 @@ object Scans {
     // read back with an explicit schema; the oracle queries the original
     // parquet directly, so a hash match proves the roundtrip is lossless.
     "scan_csv_roundtrip" -> ((s, d) => {
-      val path = tmpDir(d, "csv")
+      val path = scratchDir(d, "csv")
       documents(s, d).select("doc_id", "lang", "n_chars")
         .write.mode("overwrite").option("header", "true").csv(path)
       s.read.option("header", "true")
@@ -374,7 +371,7 @@ object Scans {
     // repartition) or convert to parquet at the edge; the default
     // line-split reader cannot parse them correctly at any parallelism.
     "scan_csv_multiline" -> ((s, d) => {
-      val path = tmpDir(d, "csvml")
+      val path = scratchDir(d, "csvml")
       documents(s, d)
         .select(col("doc_id"), col("lang"),
           regexp_replace(col("text"), " ", "\n").as("text"))
@@ -392,7 +389,7 @@ object Scans {
 
     // ORC sink + source (the other first-class columnar format).
     "scan_orc_roundtrip" -> ((s, d) => {
-      val path = tmpDir(d, "orc")
+      val path = scratchDir(d, "orc")
       supplier(s, d).write.mode("overwrite").orc(path)
       s.read.orc(path)
         .groupBy("s_nationkey")
@@ -406,7 +403,7 @@ object Scans {
     // tokenizes the same normalization) — without this, a single multi-line
     // document would silently split into several rows on read-back.
     "scan_text_roundtrip" -> ((s, d) => {
-      val path = tmpDir(d, "txt")
+      val path = scratchDir(d, "txt")
       documents(s, d).select(regexp_replace(col("text"), "[\\r\\n]", " ").as("text"))
         .write.mode("overwrite").text(path)
       s.read.text(path)
@@ -419,7 +416,7 @@ object Scans {
     // back with a partition predicate — the scan must prune to one directory
     // (asserted in ScaleSuite) and still agree with the unpartitioned oracle.
     "scan_partitioned_roundtrip" -> ((s, d) => {
-      val path = tmpDir(d, "part")
+      val path = scratchDir(d, "part")
       events(s, d).select("event_id", "user_id", "event_type")
         .write.mode("overwrite").partitionBy("event_type").parquet(path)
       s.read.parquet(path)
@@ -431,7 +428,7 @@ object Scans {
 
     // JSON-lines sink + source, same oracle-equivalence trick.
     "scan_json_roundtrip" -> ((s, d) => {
-      val path = tmpDir(d, "json")
+      val path = scratchDir(d, "json")
       events(s, d).select("event_id", "user_id", "event_type")
         .write.mode("overwrite").json(path)
       s.read.schema("event_id LONG, user_id LONG, event_type STRING").json(path)
@@ -444,7 +441,7 @@ object Scans {
     // Compression is storage-layout only, so the oracle queries the
     // original snappy parquet — a hash match proves losslessness.
     "scan_zstd_roundtrip" -> ((s, d) => {
-      val path = tmpDir(d, "zstd")
+      val path = scratchDir(d, "zstd")
       orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
         .write.mode("overwrite").option("compression", "zstd").parquet(path)
       s.read.parquet(path)
@@ -466,7 +463,7 @@ object Scans {
     // ships with (scan_csv_malformed's JSON sibling). The census proves
     // exactly the planted lines quarantined and every healthy line parsed.
     "scan_json_corrupt_records" -> ((s, d) => {
-      val path = tmpDir(d, "jsoncorrupt")
+      val path = scratchDir(d, "jsoncorrupt")
       events(s, d).select("event_id", "user_id", "event_type")
         .select(when(col("event_id") % 7 === 0,
             concat(lit("{\"event_id\": "), col("event_id"), lit(", \"user_id\": TRUNC")))
@@ -495,7 +492,7 @@ object Scans {
     // is NOT the unbounded-group hazard; sort_array makes the array
     // content deterministic.
     "sink_nested_parquet" -> ((s, d) => {
-      val path = tmpDir(d, "nestedsink")
+      val path = scratchDir(d, "nestedsink")
       orders(s, d)
         .select(col("o_custkey"),
           struct(col("o_orderkey"), money(col("o_totalprice")).as("cents")).as("o"))
@@ -518,7 +515,7 @@ object Scans {
     // encoding roundtrips exactly. (Output stays BIGINT — the engine-wide
     // no-DECIMAL-in-results rule is about hashing, not storage.)
     "sink_decimal_roundtrip" -> ((s, d) => {
-      val path = tmpDir(d, "decsink")
+      val path = scratchDir(d, "decsink")
       orders(s, d)
         .select(col("o_orderkey"),
           expr("CAST(ROUND(CAST(o_totalprice AS DECIMAL(28,10)), 4) AS DECIMAL(18,4))").as("dec"))
@@ -538,7 +535,7 @@ object Scans {
     // bloom-written file is lossless and the probe path returns exactly
     // the base-table rows.
     "sink_parquet_bloom" -> ((s, d) => {
-      val path = tmpDir(d, "bloomsink")
+      val path = scratchDir(d, "bloomsink")
       orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), money(col("o_totalprice")).as("cents"))
         .write.mode("overwrite")
@@ -559,8 +556,8 @@ object Scans {
     }),
 
     "sink_compacted" -> ((s, d) => {
-      val small = tmpDir(d, "smallfiles")
-      val packed = tmpDir(d, "compacted")
+      val small = scratchDir(d, "smallfiles")
+      val packed = scratchDir(d, "compacted")
       val ev = events(s, d).select("event_id", "user_id", "event_type", "value")
       ev.repartition(64, col("user_id")).write.mode("overwrite").parquet(small)
       s.read.parquet(small).repartition(4).write.mode("overwrite").parquet(packed)
@@ -578,15 +575,14 @@ object Scans {
     // and the oracle (which keeps them) would hash-mismatch. At 100 TB this
     // is how a daily re-statement touches one day, not the table.
     "sink_dynamic_overwrite" -> ((s, d) => {
-      val dir = tmpDir(d, "dynover")
+      val dir = scratchDir(d, "dynover")
       val ev = events(s, d)
         .select(col("event_id"), col("event_type"), money(col("value")).as("cents"))
       ev.write.mode("overwrite").partitionBy("event_type").parquet(dir)
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try ev.filter(col("event_type") === "click")
+      ev.filter(col("event_type") === "click")
         .withColumn("cents", col("cents") * 2)
-        .write.mode("overwrite").partitionBy("event_type").parquet(dir)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type").parquet(dir)
       s.read.parquet(dir)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"))
@@ -598,7 +594,7 @@ object Scans {
     // for the new column. At scale this is the append-only ingestion reality
     // (old partitions never rewritten when the schema grows a field).
     "scan_schema_evolution" -> ((s, d) => {
-      val path = tmpDir(d, "evo")
+      val path = scratchDir(d, "evo")
       supplier(s, d).filter(col("s_suppkey") % 2 === 0)
         .select("s_suppkey", "s_nationkey")
         .write.mode("overwrite").parquet(s"$path/gen1")
@@ -625,7 +621,7 @@ object Scans {
     // keyspace at EVERY scale (a "+1e6" offset would collide with real
     // custkeys once the table passes 1M rows and silently double-count).
     "sink_upsert" -> ((s, d) => {
-      val path = tmpDir(d, "upsert")
+      val path = scratchDir(d, "upsert")
       val b = customer(s, d)
         .select(col("c_custkey").as("b_k"), money(col("c_acctbal")).as("b_bal"))
       val u = customer(s, d).filter(col("c_custkey") % 10 === 0)
@@ -658,7 +654,7 @@ object Scans {
     // compaction job of a CDC ingest (changelog-sized shuffle, one window
     // pass, partitioned write).
     "sink_cdc_apply" -> ((s, d) => {
-      val path = tmpDir(d, "cdc")
+      val path = scratchDir(d, "cdc")
       val base = customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
           money(col("c_acctbal")).as("bal"))
@@ -692,7 +688,7 @@ object Scans {
     // at 100 TB this is the difference between scanning 2/5 of the
     // partitions and all of them. Plan-audited in PlanAuditSuite.
     "scan_dynamic_pruning" -> ((s, d) => {
-      val path = tmpDir(d, "dpp")
+      val path = scratchDir(d, "dpp")
       val ev = events(s, d).select("event_id", "user_id", "event_type", "value")
       ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
       val dim = ev.groupBy(col("event_type").as("et")).agg(count(lit(1)).as("cnt"))
@@ -714,7 +710,7 @@ object Scans {
     // straight from parquet — a hash match proves the nested roundtrip
     // (schema'd array-of-struct parse + explode) is lossless.
     "scan_json_nested" -> ((s, d) => {
-      val path = tmpDir(d, "jnest")
+      val path = scratchDir(d, "jnest")
       lineitem(s, d).filter(col("l_orderkey") % 100 === 0)
         .groupBy("l_orderkey")
         .agg(sort_array(collect_list(struct(
@@ -739,7 +735,7 @@ object Scans {
     // bytes a time-ranged query reads. File-range disjointness is asserted
     // in Round6Suite via _metadata; the oracle proves the rewrite lossless.
     "sink_sorted_layout" -> ((s, d) => {
-      val path = tmpDir(d, "sorted")
+      val path = scratchDir(d, "sorted")
       lineitem(s, d).select("l_orderkey", "l_shipdate", "l_quantity")
         .repartitionByRange(8, col("l_shipdate"))
         .sortWithinPartitions("l_shipdate")
@@ -767,7 +763,7 @@ object Scans {
     // Round9Suite via _metadata. At 100 TB the layout decides the bytes
     // read; z-order is the right default when TWO filter dims matter.
     "sink_zorder_layout" -> ((s, d) => {
-      val path = tmpDir(d, "zorder")
+      val path = scratchDir(d, "zorder")
       def morton(di: String) = (0 until 8).map { b =>
         s"((xb $di ${1L << b}) % 2) * ${1L << (2 * b)} + ((yb $di ${1L << b}) % 2) * ${1L << (2 * b + 1)}"
       }.mkString(" + ")
@@ -795,7 +791,7 @@ object Scans {
     // good/bad split from the clean parquet — checking both the quarantine
     // count and that no good row was lost or mangled.
     "scan_csv_malformed" -> ((s, d) => {
-      val path = tmpDir(d, "dirty")
+      val path = scratchDir(d, "dirty")
       events(s, d).select(
         when(col("event_id") % 50 === 0,
           concat(col("event_id"), lit(","), col("user_id"), lit(",oops")))
@@ -824,7 +820,7 @@ object Scans {
     // per file; at 100 TB the parallelism unit is the blob, which is
     // exactly right for per-file decode stages.
     "scan_binary_files" -> ((s, d) => {
-      val dir = tmpDir(d, "bin")
+      val dir = scratchDir(d, "bin")
       new java.io.File(dir).mkdirs()
       documents(s, d).filter(col("doc_id") < 25).select("doc_id", "text")
         .collect().foreach { r =>
@@ -851,7 +847,7 @@ object Scans {
     // aggregates the whole source table: a hash match proves the good files
     // survived completely and only the garbage was dropped.
     "scan_ignore_corrupt_files" -> ((s, d) => {
-      val path = tmpDir(d, "corruptfile")
+      val path = scratchDir(d, "corruptfile")
       nation(s, d).filter(col("n_nationkey") % 2 === 0)
         .write.mode("overwrite").parquet(path)
       nation(s, d).filter(col("n_nationkey") % 2 === 1)
@@ -880,7 +876,7 @@ object Scans {
     // nondeterministic — part-file UUIDs — so the partition-value route is
     // the one that stays reproducible.) Map-side only + one partial-agg.
     "scan_metadata_cols" -> ((s, d) => {
-      val path = tmpDir(d, "meta")
+      val path = scratchDir(d, "meta")
       customer(s, d)
         .select(col("c_custkey"), col("c_acctbal"), (col("c_custkey") % 4).as("bucket"))
         .write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -923,7 +919,7 @@ object Scans {
     // not in dir names. Scale: glob/listing cost is proportional to the
     // selected subtree only.
     "scan_recursive_glob" -> ((s, d) => {
-      val root = tmpDir(d, "nested")
+      val root = scratchDir(d, "nested")
       val base = documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           (col("doc_id") % 3).as("bucket"))

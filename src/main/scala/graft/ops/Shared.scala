@@ -153,20 +153,12 @@ private[graft] object Shared {
     * consumers from it — the memo makes the declared ops behave like that
     * pipeline while each op stays individually callable (SCALE_TUNING.md,
     * "Shared memo checkpoints").
-    *
-    * Thread safety: `Verify` dumps queries from a 4-thread pool, so memos use
-    * `ConcurrentHashMap.computeIfAbsent` (exactly-once evaluation). One map
-    * per kind keeps the nested lookup (labels → pairs) out of same-map
-    * reentrancy. Results are unchanged by construction — the memo only
-    * replaces recomputation of a deterministic frame with its materialized
-    * blocks.
     */
-  private val pairsCache  = new ConcurrentHashMap[String, DataFrame]
-  private val labelsCache = new ConcurrentHashMap[String, DataFrame]
-  private val vecsCache   = new ConcurrentHashMap[String, DataFrame]
+  private val pairsMemo, labelsMemo, vecsMemo = new graft.Memo[(String, String), DataFrame]
 
-  private def key(s: SparkSession, d: String): String =
-    s.sparkContext.applicationId + "|" + d
+  /** The (applicationId, sfDir) key of the frame memos. */
+  private[ops] def memoKey(s: SparkSession, d: String): (String, String) =
+    (s.sparkContext.applicationId, d)
 
   /** Distinct word-token sets per document, sorted so exact verification
     * hits IntersectSize's O(n+m) two-pointer path (cheap; not memoized). */
@@ -178,24 +170,24 @@ private[graft] object Shared {
     * UNORDERED — consumers that need the total order sort the checkpointed
     * frame (a sort of the pair set, paid only where declared). */
   def wordPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.computeIfAbsent(key(s, d), _ =>
+    pairsMemo(memoKey(s, d)) {
       // AQE coalesces by bytes and the pair set is byte-light but
       // row-heavy, so without the doc_a hash repartition every consumer's
       // first stage over the checkpoint runs as one task; doc_a is also
       // the key most consumers join or sort on.
       LlmPipeline.nearDupPairs(tokenSets(s, d), sorted = false)
         .repartition(s.sparkContext.defaultParallelism, col("doc_a"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
+    }
 
   /** (doc_id, cluster_rep) connected-component labels of the word near-dup
     * pair graph, for every document. */
-  def ccLabels(s: SparkSession, d: String): DataFrame = {
-    val pairs = wordPairs(s, d) // resolve before entering the labels memo
-    labelsCache.computeIfAbsent(key(s, d), _ =>
+  def ccLabels(s: SparkSession, d: String): DataFrame =
+    labelsMemo(memoKey(s, d)) {
       graft.Scale.connectedComponents(
-        documents(s, d).select("doc_id"), pairs.select("doc_a", "doc_b"))
-        .localCheckpoint(true))
-  }
+        documents(s, d).select("doc_id"), wordPairs(s, d).select("doc_a", "doc_b"))
+        .localCheckpoint(true)
+    }
 
   /** DuckDB twin of [[LlmPipeline.nearDupPairs]]: CTE definitions ending
     * in `out`(doc_a, doc_b, jaccard_bp), the pairs of `src`(doc_id, toks:
@@ -241,11 +233,12 @@ private[graft] object Shared {
     * codegen `graft_dot` (index-order accumulation, bit-identical to the
     * declarative `aggregate` fold the oracle mirrors). */
   def vecs(s: SparkSession, d: String): DataFrame =
-    vecsCache.computeIfAbsent(key(s, d), _ =>
+    vecsMemo(memoKey(s, d)) {
       embeddings(s, d).select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
+    }
 
   /** DuckDB twin of the cosine over [[vecs]], operation for operation in
     * double precision (DuckDB's own list_cosine_similarity accumulates in
@@ -261,9 +254,8 @@ private[graft] object Shared {
     * because scheduling made that op the first consumer. `Bench` calls
     * this before its warmup pass and emits each build as a separate
     * `memo:<name>` timing in BENCH_FULL_latest.json — the per-op lines are
-    * then pure plan cost and reproducible run over run. (Each builder is
-    * an eager localCheckpoint behind computeIfAbsent, so calling the
-    * getter IS the force; a second call is a cache hit.) */
+    * then pure plan cost and reproducible run over run. Calling a getter
+    * builds its memo; a second call is a hit. */
   def forceMemos(s: SparkSession, d: String): Seq[(String, Double)] = {
     val builders: Seq[(String, () => Unit)] = Seq(
       "shared.word_pairs" -> (() => { wordPairs(s, d); () }),

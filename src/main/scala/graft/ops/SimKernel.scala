@@ -56,20 +56,21 @@ object SimKernel {
   private val prefixDims = 32
   private val pruneMargin = 1e-6
 
-  /** Block-partitioned all-pairs scaffolding, shared by the cosine kernels
-    * here and the bitmap-Jaccard kernel in LlmPipeline. Each element with
+  /** Block-partitioned all-pairs scaffold, under the cosine kernels here
+    * and the bitmap-Jaccard kernel in LlmPipeline. Each element with
     * id-derived block b is the A-side of block-pair keys (b, j >= b) and the
     * B-side of keys (i <= b, b), so every unordered element pair meets in
     * EXACTLY one cogroup: cross-block pairs in their (minBlock, maxBlock)
-    * key; same-block pairs deduped by the id order guard. `pairFn` sees
-    * (a, b) exactly once per unordered pair (canonicalize ids inside it).
-    * Ids may be any Long — the block is floorMod-derived, so negative ids
-    * land in [0, blocks) like everyone else (r8 advice: `%` would strand
-    * them in an empty key range and silently drop their pairs).
+    * key; same-block pairs deduped by the id order guard.
+    * `perBlockPair(as, partners)` gets one block pair: its A-side elements
+    * and, for each a, the B-side elements b that pair with it, so every
+    * unordered pair (a, b) is visited once (canonicalize ids inside it),
+    * without a tuple per pair. Ids may be any Long: the block is
+    * floorMod-derived, so negative ids land in [0, blocks) too.
     * Per-task memory is two blocks; total shuffle is n·(blocks+1) rows —
     * sizing rule for `blocks` in SCALE_TUNING.md. */
-  def blockAllPairs[T, R](ds: Dataset[T], blocks: Int)(idOf: T => Long)(
-      pairFn: (T, T) => Option[R])(
+  private def blockPairs[T, R](ds: Dataset[T], blocks: Int)(idOf: T => Long)(
+      perBlockPair: (Iterator[T], T => Iterator[T]) => Iterator[R])(
       implicit keyedEnc: Encoder[(Int, T)], rEnc: Encoder[R],
       ct: scala.reflect.ClassTag[T]): Dataset[R] = {
     val aSide = ds.flatMap { t =>
@@ -84,14 +85,20 @@ object SimKernel {
       .cogroup(bSide.groupByKey(_._1)(Encoders.scalaInt)) { (key, as, bs) =>
         val same = (key / blocks) == (key % blocks)
         val bArr = bs.map(_._2).toArray // one block — bounded by construction
-        as.flatMap { a =>
-          val av = a._2
-          bArr.iterator.flatMap { bv =>
-            if (same && idOf(bv) <= idOf(av)) None else pairFn(av, bv)
-          }
-        }
+        perBlockPair(as.map(_._2),
+          a => bArr.iterator.filterNot(b => same && idOf(b) <= idOf(a)))
       }
   }
+
+  /** [[blockPairs]] with a per-pair kernel: `pairFn` sees (a, b) exactly
+    * once per unordered pair. */
+  def blockAllPairs[T, R](ds: Dataset[T], blocks: Int)(idOf: T => Long)(
+      pairFn: (T, T) => Option[R])(
+      implicit keyedEnc: Encoder[(Int, T)], rEnc: Encoder[R],
+      ct: scala.reflect.ClassTag[T]): Dataset[R] =
+    blockPairs(ds, blocks)(idOf) { (as, partners) =>
+      as.flatMap(a => partners(a).flatMap(b => pairFn(a, b)))
+    }
 
   /** All pairs (vid_a < vid_b) with cosine >= threshold, block-partitioned,
     * with the exact prefix + Cauchy–Schwarz early exit: after folding the
@@ -191,58 +198,33 @@ object SimKernel {
     import s.implicits._
     val localRows = s.sparkContext.longAccumulator("graft.knn.localTopKRows")
     val ds = vecs.selectExpr("vec_id", "v", "nrm").as[(Long, Array[Double], Double)]
-    val aSide = ds.flatMap { t =>
-      val b = Math.floorMod(t._1, blocks.toLong).toInt
-      (b until blocks).map(j => (b * blocks + j, t))
-    }
-    val bSide = ds.flatMap { t =>
-      val b = Math.floorMod(t._1, blocks.toLong).toInt
-      (0 to b).map(i => (i * blocks + b, t))
-    }
-    val local = aSide.groupByKey(_._1)(Encoders.scalaInt)
-      .cogroup(bSide.groupByKey(_._1)(Encoders.scalaInt)) { (key, as, bs) =>
-        val same = (key / blocks) == (key % blocks)
-        val aArr = as.map(_._2).toArray
-        val bArr = bs.map(_._2).toArray
-        // one heap per element of the two blocks (same map for both so the
-        // same-block case keys each element once) — O((|A|+|B|)·k) state
-        val heaps = new java.util.HashMap[Long, TopKBuf]
-        def heapOf(id: Long): TopKBuf = {
-          var h = heaps.get(id)
-          if (h == null) { h = new TopKBuf(k); heaps.put(id, h) }
-          h
-        }
-        var ai = 0
-        while (ai < aArr.length) {
-          val (ida, va, na) = aArr(ai)
-          var bi = 0
-          while (bi < bArr.length) {
-            val (idb, vb, nb) = bArr(bi)
-            // same guard as blockAllPairs: each unordered pair exactly once
-            if (!(same && idb <= ida)) {
-              val cos = dotRange(va, vb, 0, math.min(va.length, vb.length), 0.0) / (na * nb)
-              heapOf(ida).insert(cos, idb)
-              heapOf(idb).insert(cos, ida)
-            }
-            bi += 1
-          }
-          ai += 1
-        }
-        import scala.jdk.CollectionConverters._
-        heaps.entrySet().iterator().asScala.flatMap { e =>
-          val id = e.getKey; val h = e.getValue
-          h.toPairs.iterator.map { case (cos, dst) =>
-            localRows.add(1); (id, dst, cos)
-          }
+    val local = blockPairs(ds, blocks)(_._1) { (as, partners) =>
+      // one heap per element of the two blocks (same map for both so the
+      // same-block case keys each element once) — O((|A|+|B|)·k) state
+      val heaps = new java.util.HashMap[Long, TopKBuf]
+      def heapOf(id: Long): TopKBuf = {
+        var h = heaps.get(id)
+        if (h == null) { h = new TopKBuf(k); heaps.put(id, h) }
+        h
+      }
+      as.foreach { case a @ (ida, va, na) =>
+        partners(a).foreach { case (idb, vb, nb) =>
+          val cos = dotRange(va, vb, 0, math.min(va.length, vb.length), 0.0) / (na * nb)
+          heapOf(ida).insert(cos, idb)
+          heapOf(idb).insert(cos, ida)
         }
       }
+      import scala.jdk.CollectionConverters._
+      heaps.entrySet().iterator().asScala.flatMap { e =>
+        val id = e.getKey; val h = e.getValue
+        h.toPairs.iterator.map { case (cos, dst) =>
+          localRows.add(1); (id, dst, cos)
+        }
+      }
+    }
     (topKTyped(s, local, k).toDF("src", "dst", "cos", "rank"), localRows)
   }
 
-  /** Sequential dot product over [from, until) continued from `acc` — the
-    * same op order as the declared fold (and as `graft_dot`'s codegen
-    * loop), so a fold split at any cut point is bit-identical to the
-    * unsplit fold. */
   /** Full dot product in `graft_dot`'s index order. Vectors of unequal
     * length fail loudly: `graft_dot` returns NULL for them, so a silent
     * fold over the shorter prefix would be a wrong answer, not a NULL. */
@@ -252,6 +234,10 @@ object SimKernel {
     dotRange(a, b, 0, a.length, 0.0)
   }
 
+  /** Sequential dot product over [from, until) continued from `acc` — the
+    * same op order as the declared fold (and as `graft_dot`'s codegen
+    * loop), so a fold split at any cut point is bit-identical to the
+    * unsplit fold. */
   private def dotRange(a: Array[Double], b: Array[Double], from: Int,
                        until: Int, acc0: Double): Double = {
     var i = from; var acc = acc0

@@ -53,9 +53,6 @@ object Streaming {
     }
   }
 
-  private def tmpDir(d: String, tag: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_$tag${Math.abs(d.hashCode)}"
-
   /** Exactly-once foreachBatch parquet commit protocol: batch data lands in
     * `dir/batch_<id>`, then the zero-byte marker `dir/_commits/<id>` is
     * created LAST — the atomic commit point. A REPLAYED batch id (restart
@@ -102,7 +99,7 @@ object Streaming {
     // Scale: the JSON scan is file-parallel, the window agg is
     // partial-aggregatable with state bounded by (windows × types).
     "stream_file_source" -> ((s, d) => {
-      val path = tmpDir(d, "filesrc_op")
+      val path = scratchDir(d, "filesrc_op")
       events(s, d)
         .select(col("event_id"),
           expr("unix_timestamp(CAST(date_trunc('second', ts) AS TIMESTAMP))").as("epoch_s"),
@@ -124,12 +121,13 @@ object Streaming {
     // The Spark 4 transformWithState state API as a DECLARED operator:
     // per-user MapState keyed by event type; the batch form's single input
     // batch makes the emitted map the final per-(user, type) counts.
-    "stream_transform_state" -> ((s, d) => {
-      val sp = s; import sp.implicits._
+    "stream_transform_state" -> ((s0, d) => {
       // transformWithState requires the RocksDB state store provider even
-      // for its batch execution (same-value set — idempotent across calls),
-      // and the driver StateStoreCoordinator endpoint that only streaming
-      // queries normally bootstrap (see GraftStateStoreBoot).
+      // for its batch execution, and the driver StateStoreCoordinator
+      // endpoint that only streaming queries normally bootstrap (see
+      // GraftStateStoreBoot). The provider is set on a forked session, so
+      // the caller's session keeps its own.
+      val s = s0.newSession(); import s.implicits._
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       org.apache.spark.sql.execution.streaming.state.GraftStateStoreBoot.ensureCoordinator(s)
@@ -442,7 +440,7 @@ object Streaming {
     // mid-stream with the checkpoint commit deleted so Spark genuinely
     // replays the batch id — is in StreamingSuite.
     "stream_idempotent_sink" -> ((s, d) => {
-      val sink = tmpDir(d, "idem_sink")
+      val sink = scratchDir(d, "idem_sink")
       val fs = new Path(sink).getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(sink), true)
       val agg = events(s, d)
@@ -482,8 +480,8 @@ object Streaming {
       val s = s0.newSession()
       s.conf.set("spark.sql.catalog.graftmem", "graft.sources.GraftMemCatalog")
       val tag = Math.abs(d.hashCode).toString
-      val src = tmpDir(d, "dsv2stream_src")
-      val ckpt = tmpDir(d, "dsv2stream_ck")
+      val src = scratchDir(d, "dsv2stream_src")
+      val ckpt = scratchDir(d, "dsv2stream_ck")
       val fs = new Path(ckpt).getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(ckpt), true)
       s.sql(s"DROP TABLE IF EXISTS graftmem.evt_$tag")
@@ -533,7 +531,7 @@ object Streaming {
       val s = s0.newSession()
       s.conf.set("spark.sql.catalog.graftmem", "graft.sources.GraftMemCatalog")
       val tag = Math.abs(d.hashCode).toString
-      val ckpt = tmpDir(d, "dsv2src_ck")
+      val ckpt = scratchDir(d, "dsv2src_ck")
       val fs = new Path(ckpt).getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new Path(ckpt), true)
       s.sql(s"DROP TABLE IF EXISTS graftmem.rng_$tag")

@@ -87,10 +87,35 @@ class ContractSuite extends AnyFunSuite {
     }
   }
 
+  test("src/main has one intersect kernel, one block-pair cogroup and one memo") {
+    def in(token: String, file: String): Int = filesUsing(token).count(_ == file)
+    assert(in("nullSafeCodeGen", "graft/plans/IntersectSize.scala") == 1,
+      "one IntersectSize codegen template for every element type")
+    assert(in(".cogroup(", "graft/ops/SimKernel.scala") == 1,
+      "one SimKernel.blockPairs scaffold for every block-pair kernel")
+    val memoFiles = Set("graft/Memo.scala", "graft/plans/RangeJoin.scala", "graft/sources/MemSink.scala")
+    assert(filesUsing("computeIfAbsent").toSet.subsetOf(memoFiles),
+      s"memoise through graft.Memo: computeIfAbsent in ${filesUsing("computeIfAbsent").distinct}")
+  }
+
+  test("every scratchDir call site passes its own literal tag") {
+    val tags = mainSources.flatMap { case (_, src) =>
+      "scratchDir\\(d, \"([^\"]+)\"\\)".r.findAllMatchIn(src).map(_.group(1))
+    }
+    assert(tags.size == filesUsing("scratchDir(").size - 1, "every call passes a literal tag")
+    assert(tags.distinct == tags,
+      s"ops run concurrently; shared scratch tags: ${tags.diff(tags.distinct).distinct}")
+  }
+
   test("no output schema has duplicate, empty, or nested-unhashable columns") {
     val allowedNested = Set.empty[String]
+    val confChanges = Seq.newBuilder[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val before = s.conf.getAll
       val schema = fn(s, d).schema
+      val after = s.conf.getAll
+      val changed = ((before.toSet diff after.toSet) ++ (after.toSet diff before.toSet)).map(_._1)
+      if (changed.nonEmpty) confChanges += s"$name: ${changed.mkString(", ")}"
       val names = schema.fields.map(_.name).toSeq
       assert(names.distinct == names, s"$name: duplicate column names $names")
       assert(names.forall(_.nonEmpty), s"$name: empty column name")
@@ -100,6 +125,7 @@ class ContractSuite extends AnyFunSuite {
           s"$name.${f.name}: nested type $t would not hash-compare cleanly")
       }
     }
+    assert(confChanges.result().isEmpty, s"ops changed the caller's session conf: ${confChanges.result()}")
   }
 
   test("entry runs in a plain session-independent way (no extension functions)") {

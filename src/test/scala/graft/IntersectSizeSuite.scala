@@ -38,6 +38,13 @@ class IntersectSizeSuite extends AnyFunSuite {
     assert(mism.isEmpty, s"mismatches: ${mism.count()}")
   }
 
+  test("intersect_size handles duplicate left elements (distinct semantics)") {
+    val sp = s; import sp.implicits._
+    val df = Seq((Seq("a", "a", "b", "c"), Seq("a", "c", "d"))).toDF("x", "y")
+      .select(expr("size(array_intersect(x, y))").as("n"))
+    assert(df.collect().head.getInt(0) == 2)
+  }
+
   /** (case, left, right) over small ints; the string table maps n to the
     * letter 'a' + n, so both element types keep each case's order. */
   private val cases: Seq[(String, Seq[Int], Seq[Int])] = Seq(

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-13 surface: the agg_product bounded-domain rewrite, the
   * join_multiway ASIA pushdown + gated supplier broadcast, the
-  * dimension-table size gate, and the interned-gram LSH verify. */
+  * dimension-table size gate, and the interned-gram LSH verify
+  * (intersect_size_long). */
 class Round13Suite extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val d = TestSpark.sf
@@ -69,6 +70,33 @@ class Round13Suite extends AnyFunSuite {
     val over = Gates.broadcastUnder(dim, 1L << 40, Gates.DimCap)
     assert(over.queryExecution.analyzed.collect { case h: ResolvedHint => h }.isEmpty,
       "a 1 TiB dim must NOT be hinted — the shuffle join is the safe path")
+  }
+
+  // ------------------------------------------------ intersect_size_long
+
+  test("intersect_size_long: sorted merge, unsorted fallback, and dup semantics match size(array_intersect)") {
+    // built over a range() leaf (not VALUES) so ConvertToLocalRelation
+    // cannot fold the whole projection away before the rewrite is visible
+    val df = s.range(0, 5).select(col("id"),
+      expr("""CASE CAST(id AS INT)
+              WHEN 0 THEN array(1L, 3L, 5L, 9L)
+              WHEN 1 THEN array(5L, 1L, 3L)
+              WHEN 2 THEN array(2L, 2L, 4L)
+              WHEN 3 THEN slice(array(0L), 1, 0)
+              ELSE array(7L) END""").as("a"),
+      expr("""CASE CAST(id AS INT)
+              WHEN 0 THEN array(3L, 9L, 11L)
+              WHEN 1 THEN array(3L, 3L, 1L)
+              WHEN 2 THEN array(2L, 4L, 4L)
+              WHEN 3 THEN array(1L)
+              ELSE slice(array(0L), 1, 0) END""").as("b"))
+    val q = df.select(col("id"), size(array_intersect(col("a"), col("b"))).as("n"))
+    val got = q.orderBy("id").collect().map(_.getInt(1))
+    assert(got.toSeq == Seq(2, 2, 2, 0, 0))
+    // and the injected rule actually rewrote it (no ArrayIntersect survives)
+    val p = q.queryExecution.optimizedPlan.toString()
+    assert(p.contains("intersect_size_long"),
+      s"rule must fire on array<bigint>: $p")
   }
 
   // ----------------------------------------- sink_v2_distribution

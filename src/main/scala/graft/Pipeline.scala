@@ -18,14 +18,9 @@ import org.apache.spark.sql.functions._
 object Pipeline {
   /** Documents with integer-basis-point quality signals attached. */
   def withQuality(docs: DataFrame): DataFrame =
-    docs.select(col("*"),
-      size(split(col("text"), " ")).cast("long").as("q_n"),
-      expr("size(filter(split(text, ' '), t -> t IN ('the', 'a')))").cast("long").as("q_st"),
-      length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("q_np"),
-      length(col("text")).cast("long").as("q_len"))
-      .withColumn("quality_bp", expr(
-        "(100 * (least(q_n, 50) * q_n * q_len + 30 * (q_n - q_st) * q_len + 20 * (q_len - q_np) * q_n)) div (q_n * q_len)"))
-      .drop("q_n", "q_st", "q_np", "q_len")
+    docs.select(col("*") +: ops.Shared.qualityFeatures: _*)
+      .withColumn("quality_bp", expr(ops.Shared.qualityBp("div")))
+      .drop("n", "st", "np", "len")
 
   /** Keep the lowest-doc_id representative of every near-duplicate cluster:
     * drop any doc that appears as the larger id of a Jaccard>=0.8 pair.

@@ -272,11 +272,8 @@ object Aggregations {
 
     // Exact quartile band report (p25/p50/p75 + IQR) per return flag —
     // the spread profile an outlier policy is calibrated from. All three
-    // quartiles ride Shared.bucketedPdisc over ONE shared (flag, cents)
-    // histogram (checkpointed once — three consumers), so per-task state is
-    // one $1000-wide bucket of distinct values, never the corpus-growing
-    // value→count map of Spark's exact percentile (the agg_percentile_disc
-    // rework rationale, applied as a first-class multi-quantile op).
+    // quartiles resolve in one Shared.bucketedPdiscMulti pass over the
+    // shared (flag, cents) histogram.
     "agg_iqr" -> ((s, d) => {
       val hist = Shared.centsHist(s, d)
       Shared.bucketedPdiscMulti(hist, "l_returnflag", "cents", "w",
@@ -288,9 +285,9 @@ object Aggregations {
 
     // Exact trimmed mean per return flag: drop values outside [p10, p90]
     // (inclusive) and report the surviving census + integer-cent mean.
-    // Cutpoints ride the same bucketedPdisc shape as agg_iqr (no
-    // corpus-growing percentile state), broadcast back as per-group bounds;
-    // the trim itself is one conditional partial-aggregatable re-pass.
+    // Cutpoints come from Shared.bucketedPdiscMulti, broadcast back as
+    // per-group bounds; the trim itself is one conditional
+    // partial-aggregatable re-pass.
     // The robust-location stat an outlier policy reports next to
     // filter_outlier_mad's flag column.
     "agg_trimmed_mean" -> ((s, d) => {
@@ -422,18 +419,16 @@ object Aggregations {
     // ambiguous-self-join check).
     "agg_grouping_id" -> ((s, d) => {
       val src = orders(s, d).select("o_orderstatus", "o_orderpriority")
-      val vn = s"graft_gid_src_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      src.createOrReplaceTempView(vn)
-      val df = s.sql(
-        s"""SELECT o_orderstatus, o_orderpriority,
-                   CAST(GROUPING(o_orderstatus) AS BIGINT) AS g1,
-                   CAST(GROUPING(o_orderpriority) AS BIGINT) AS g2,
-                   count(*) AS n
-            FROM $vn
-            GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-            ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""")
-      s.catalog.dropTempView(vn)
-      df
+      withTempViews(s, "gid_src" -> src) { v =>
+        s.sql(
+          s"""SELECT o_orderstatus, o_orderpriority,
+                     CAST(GROUPING(o_orderstatus) AS BIGINT) AS g1,
+                     CAST(GROUPING(o_orderpriority) AS BIGINT) AS g2,
+                     count(*) AS n
+              FROM ${v("gid_src")}
+              GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
+              ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""")
+      }
     }),
 
     "agg_rollup" -> ((s, d) => {
@@ -441,18 +436,12 @@ object Aggregations {
         .join(nation(s, d), col("c_nationkey") === col("n_nationkey"))
         .join(region(s, d), col("n_regionkey") === col("r_regionkey"))
         .select("r_name", "n_name")
-      // per-invocation view name: Verify dumps queries from a thread pool,
-      // and a shared name would be a (today harmless, by-construction) race
-      val vn = s"graft_rollup_src_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      src.createOrReplaceTempView(vn)
-      // sql() analyzes eagerly (the view is bound into the plan), so the
-      // view can be dropped immediately — no catalog entry leaks per call
-      val df = s.sql(
-        s"""SELECT r_name, n_name, count(*) AS n_custs FROM $vn
-            GROUP BY ROLLUP (r_name, n_name)
-            ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""")
-      s.catalog.dropTempView(vn)
-      df
+      withTempViews(s, "rollup_src" -> src) { v =>
+        s.sql(
+          s"""SELECT r_name, n_name, count(*) AS n_custs FROM ${v("rollup_src")}
+              GROUP BY ROLLUP (r_name, n_name)
+              ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""")
+      }
     }),
 
     "agg_cube" -> ((s, d) =>
@@ -688,24 +677,14 @@ object Aggregations {
     // integer cents it is exact by construction: no interpolation, no float,
     // nothing to round. The continuous variant (agg_percentile) interpolates;
     // this is the one to use when the answer must be a real observation.
-    // Plan shape: NOT the builtin percentile_disc — that buffers a
-    // value→count map per group, and 3 groups × corpus-cardinality cents is
-    // per-task state growing with the corpus (r6 verdict #2; also the #2
-    // bench line). Instead the corpus collapses once to the value-bounded
-    // (flag, cents) histogram and each percentile resolves through the
-    // shared two-phase bucketed shape (Shared.bucketedPdisc — the
-    // agg_weighted_median machinery with weight ≡ 1); both percentiles
-    // reuse the SAME histogram exchange. cume_dist ≥ p is tested in
-    // cross-multiplied integers (2·cum ≥ tot, 10·cum ≥ 9·tot — no float).
-    "agg_percentile_disc" -> ((s, d) => {
-      val hist = Shared.centsHist(s, d)
-      val ps = Shared.bucketedPdiscMulti(hist, "l_returnflag", "cents", "w",
-        Seq((1, 2, "p50_cents"), (9, 10, "p90_cents")))
-      val n = hist.groupBy("l_returnflag").agg(sum("w").as("n"))
-      ps.join(broadcast(n), "l_returnflag")
-        .select("l_returnflag", "p50_cents", "p90_cents", "n")
-        .orderBy("l_returnflag")
-    }),
+    // Not the builtin percentile_disc, whose per-group value→count map
+    // grows with the corpus: the corpus collapses once to the (flag, cents)
+    // histogram, and both percentiles and the count n come from one
+    // Shared.bucketedPdiscMulti pass over it.
+    "agg_percentile_disc" -> ((s, d) =>
+      Shared.bucketedPdiscMulti(Shared.centsHist(s, d), "l_returnflag", "cents", "w",
+          Seq((1, 2, "p50_cents"), (9, 10, "p90_cents")), total = Some("n"))
+        .orderBy("l_returnflag")),
 
     // Gini coefficient per market segment (spend-inequality analytics),
     // exact: with x ascending and i = rank, G = (2Σi·x − (n+1)Σx)/(n·Σx) —
@@ -716,22 +695,14 @@ object Aggregations {
     // orders (CAST_OVERFLOW), and n·Σx grows as corpus²; the reduced bp is
     // ≤ 10000 at ANY corpus size while the wide math stays in the decimal
     // accumulators end to end.
-    // Plan shape: the naive form ranks the whole orders⋈customer frame in a
-    // 5-partition window (5 segments → 5 tasks each sorting 1/5 of the
-    // corpus — the few-group corpus-sized window sort the r6 verdict
-    // flagged). Instead the 2Σi·x moment decomposes over TIE GROUPS: rows
-    // with equal (seg, cents) occupy ranks below+1..below+c regardless of
-    // the o_orderkey tiebreak, so Σ 2i·x over the group = x·c·(2·below+c+1)
-    // — only the group's multiplicity c and its offset `below` (rows with
-    // smaller cents) are needed, never a per-row rank. So: one
-    // partial-aggregatable (seg, cents) collapse (value-bounded, ≪ rows at
-    // any scale), bucket offsets from $1000-wide bucket totals (a
-    // metadata-sized window), in-bucket running counts over partitions
-    // bounded by the 100k-cents bucket WIDTH (independent of corpus size —
-    // the win_percent/agg_weighted_median argument), and the moment sums in
-    // DECIMAL(38,0) (x·c·(2·below+c+1) ≈ 1e28 at 100 TB would ANSI-overflow
-    // BIGINT) before the single narrowing back. Identical to the ranked
-    // form by construction; the oracle keeps the row_number() definition.
+    // The 2Σi·x moment decomposes over TIE GROUPS: rows with equal
+    // (seg, cents) occupy ranks below+1..below+c regardless of the
+    // o_orderkey tiebreak, so Σ 2i·x over the group = x·c·(2·below+c+1) —
+    // only the multiplicity c and the count `below` of rows with smaller
+    // cents are needed, a Shared.bucketedPrefix over the (seg, cents)
+    // collapse. The moment sums run in DECIMAL(38,0) (x·c·(2·below+c+1)
+    // ≈ 1e28 at 100 TB would ANSI-overflow BIGINT) before the single
+    // narrowing back; the oracle keeps the row_number() definition.
     "agg_gini" -> ((s, d) => {
       val j = orders(s, d)
         .join(customer(s, d), col("o_custkey") === col("c_custkey"))
@@ -744,16 +715,9 @@ object Aggregations {
       // blocks are small at any corpus size; freed by the ContextCleaner
       // when the invocation's plan is dropped.
       val byVal = j.groupBy("seg", "cents").agg(count(lit(1)).as("c"))
-        .withColumn("bucket", expr("cents div 100000"))
         .localCheckpoint(false)
-      val offs = byVal.groupBy("seg", "bucket").agg(sum("c").as("bc"))
-        .withColumn("off", coalesce(sum("bc").over(
-          Window.partitionBy("seg").orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("seg", "bucket", "off")
-      val wIn = Window.partitionBy("seg", "bucket").orderBy("cents")
-      byVal.join(broadcast(offs), Seq("seg", "bucket"))
-        .withColumn("below", col("off") + sum("c").over(wIn) - col("c"))
+      Shared.bucketedPrefix(byVal, Seq("seg"), expr(Shared.valueBucket("cents")),
+          Seq(col("cents")), Seq(col("c") -> "below"))
         .groupBy("seg")
         .agg(sum("c").as("n"),
           expr("""sum(CAST(cents AS DECIMAL(38,0)) * c * (2 * below + c + 1))""")
@@ -869,54 +833,24 @@ object Aggregations {
     // can't express (each row counts with an integer weight): per return
     // flag, the smallest price (cents) whose cumulative quantity weight
     // reaches half the total, tested as 2·cum ≥ W in cross-multiplied
-    // integers — no division, no float. Plan shape: one
-    // partial-aggregatable (flag, cents) weight-sum shuffle collapses the
-    // corpus to the value-bounded distinct-cents frame (≪ rows at any
-    // scale), the running total rides a flag-partitioned window over THAT
-    // frame, and a min-agg picks the crossing point. Weights are integral
-    // by data contract (TPC-H quantity), so the BIGINT cast agrees across
-    // engines. Prices are high-cardinality, so the cents collapse is weak —
-    // a direct flag-partitioned window would carry |distinct cents per
-    // flag| rows in 3 giant partitions. Hence the TWO-PHASE exact shape:
-    // locate the crossing bucket from $1000-wide bucket totals (a
-    // metadata-sized frame — the only window whose partition count is the
-    // flag count runs over ~dozens of buckets), broadcast the 3-row
-    // crossing info back, and run the fine cumsum over ONLY the crossing
-    // bucket's values — O(values/buckets) per task at any scale. Same
-    // result as the single-window form by construction (the oracle keeps
-    // the simple form as the semantic definition).
+    // integers — no division, no float. One partial-aggregatable
+    // (flag, cents) weight-sum shuffle collapses the corpus to the
+    // distinct-cents frame, and Shared.bucketedPdisc resolves the median
+    // and the total weight over it. Weights are integral by data contract
+    // (TPC-H quantity), so the BIGINT cast agrees across engines; the
+    // oracle keeps the single-window form as the semantic definition.
     "agg_weighted_median" -> ((s, d) => {
       // Lazy localCheckpoint: the collapsed histogram feeds the crossing
       // broadcast subtree AND the probe side (see agg_gini note on why
       // ReuseExchange can't dedupe the recompute).
-      // r14 second sitting: gated spread by the histogram key (agg_iqr note).
       val wByPrice = Gates.spreadBy(s, d, "lineitem",
           lineitem(s, d).select(col("l_returnflag"), money(col("l_extendedprice")).as("cents"),
             col("l_quantity").cast("long").as("w")),
           Seq("l_returnflag", "cents"))
         .groupBy("l_returnflag", "cents").agg(sum("w").as("wc"))
         .localCheckpoint(false)
-      val byFlagBucket = wByPrice
-        .withColumn("bucket", expr("cents div 100000"))
-      val bucketTotals = byFlagBucket
-        .groupBy("l_returnflag", "bucket").agg(sum("wc").as("bw"))
-        .withColumn("cum",
-          sum("bw").over(Window.partitionBy("l_returnflag").orderBy("bucket")))
-        .withColumn("tot",
-          sum("bw").over(Window.partitionBy("l_returnflag")))
-      val crossing = bucketTotals
-        .filter(col("cum") * 2 >= col("tot"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("l_returnflag").orderBy("bucket")))
-        .filter(col("rk") === 1)
-        .select(col("l_returnflag"), col("bucket"),
-          (col("cum") - col("bw")).as("cum_before"), col("tot"))
-      byFlagBucket.join(broadcast(crossing), Seq("l_returnflag", "bucket"))
-        .withColumn("cum_in",
-          sum("wc").over(Window.partitionBy("l_returnflag").orderBy("cents")))
-        .filter((col("cum_before") + col("cum_in")) * 2 >= col("tot"))
-        .groupBy("l_returnflag")
-        .agg(min("cents").as("wmedian_cents"), max("tot").as("total_weight"))
+      Shared.bucketedPdiscMulti(wByPrice, "l_returnflag", "cents", "wc",
+          Seq((1, 2, "wmedian_cents")), total = Some("total_weight"))
         .orderBy("l_returnflag")
     }),
 

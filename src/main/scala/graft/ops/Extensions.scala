@@ -84,13 +84,14 @@ object Extensions {
     "catalog_v2_function" -> ((s0, _) => {
       val s = s0.newSession()
       s.conf.set("spark.sql.catalog.graftmem", "graft.sources.GraftMemCatalog")
-      s.read.format("graft.sources.GraftRangeSource")
+      val rng = s.read.format("graft.sources.GraftRangeSource")
         .option("rows", 50000L).option("slices", 8).load()
-        .createOrReplaceTempView("graft_rng_fn")
-      s.sql("""SELECT graftmem.graft_tag(id) AS tag2, count(*) AS n,
-                      graftmem.sum_sq(bucket) AS ssq
-               FROM graft_rng_fn WHERE id >= 1000 AND id < 41000
-               GROUP BY 1 ORDER BY 1""")
+      withTempViews(s, "rng_fn" -> rng) { v =>
+        s.sql(s"""SELECT graftmem.graft_tag(id) AS tag2, count(*) AS n,
+                         graftmem.sum_sq(bucket) AS ssq
+                  FROM ${v("rng_fn")} WHERE id >= 1000 AND id < 41000
+                  GROUP BY 1 ORDER BY 1""")
+      }
     }),
 
     "udf_scalar" -> ((s, d) => {

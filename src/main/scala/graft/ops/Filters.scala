@@ -85,10 +85,9 @@ object Filters {
 
     // Top-decile filter: keep line items at or above their return flag's
     // p90 cents cutoff (the "hot slice" a priority queue drains first).
-    // The cutoff rides the bucketed exact-percentile shape — per-task
-    // state one $1000 bucket — broadcast back onto the pruned scan; the
-    // declared result is the kept census so the corpus-sized kept frame
-    // itself never hashes.
+    // The cutoff (Shared.bucketedPdisc) broadcasts back onto the
+    // histogram; the declared result is the kept census so the
+    // corpus-sized kept frame itself never hashes.
     "filter_top_decile" -> ((s, d) => {
       // The kept census depends only on (flag, cents), so it derives from
       // the same histogram as the cutoff: n_kept = Σw, kept_cents =
@@ -106,13 +105,10 @@ object Filters {
     // Robust outlier filter (data-cleaning gate): flag rows farther than
     // 2·MAD from their group median. Both statistics are DISCRETE
     // percentiles over integer cents — actual data values, so the whole
-    // filter is exact integer arithmetic. Plan shape: NOT two builtin
-    // percentile_disc passes (each buffers a value→count map per group
-    // growing with distinct corpus cents — r6 verdict #3, and the #1 bench
-    // line). The corpus is scanned twice but percentile-aggregated never:
-    // one partial-aggregatable collapse to the value-bounded (flag, cents)
-    // histogram, the median via the shared two-phase bucketed shape
-    // (Shared.bucketedPdisc), and — the key reuse — the MAD's |cents−med|
+    // filter is exact integer arithmetic. The corpus is scanned twice but
+    // percentile-aggregated never: one partial-aggregatable collapse to the
+    // value-bounded (flag, cents) histogram, the median via
+    // Shared.bucketedPdisc, and — the key reuse — the MAD's |cents−med|
     // histogram DERIVED from the same cents histogram (sum of wc by ad, a
     // histogram-sized shuffle, no second corpus pass) before the same
     // bucketed resolution. The 3-row stats frame broadcasts back onto the

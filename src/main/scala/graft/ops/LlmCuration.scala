@@ -417,12 +417,7 @@ object LlmCuration {
     // (the oracle keeps the simple form as the semantic definition).
     "llm_token_budget" -> ((s, d) => {
       val scored = documents(s, d)
-        .select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ")).cast("long").as("n"),
-          expr("CAST(size(filter(split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT)")
-            .as("st"),
-          length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("np"),
-          length(col("text")).cast("long").as("len"))
+        .select(col("doc_id") +: col("lang") +: Shared.qualityFeatures: _*)
         .withColumn("quality_bp", expr(
           Shared.qualityBp("div")))
         .localCheckpoint(false)
@@ -484,12 +479,7 @@ object LlmCuration {
     // one lang-keyed agg; nothing corpus-sized shuffles.
     "llm_importance_resample" -> ((s, d) =>
       documents(s, d)
-        .select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ")).cast("long").as("n"),
-          expr("CAST(size(filter(split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT)")
-            .as("st"),
-          length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("np"),
-          length(col("text")).cast("long").as("len"))
+        .select(col("doc_id") +: col("lang") +: Shared.qualityFeatures: _*)
         .withColumn("quality_bp", expr(
           Shared.qualityBp("div")))
         .withColumn("kept", expr(
@@ -540,29 +530,15 @@ object LlmCuration {
 
     // Token-budget sequence packing: concatenate the corpus in doc_id order
     // and cut fixed 512-token training sequences; each doc reports the
-    // sequence span it lands in. The global running offset is computed in
-    // two phases so no stage ever sees a single-partition corpus-sized
-    // window: an in-bucket cumulative sum (window PARTITIONED by the
-    // doc_id div 100 bucket) plus bucket base offsets from a window over the
-    // ~n/100-row bucket-total frame — the only unpartitioned ordering is
-    // over bucket summaries, which stay driver-trivial at any corpus size.
+    // sequence span it lands in. The global token offset is a
+    // Shared.bucketedPrefix over doc_id div 100 buckets.
     "llm_pack_sequences" -> ((s, d) => {
       val L = 512
       val toks = documents(s, d).select(
         col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        expr("doc_id div 100").as("bkt"))
-      val inBkt = toks.withColumn("in_off",
-        coalesce(sum("n_tokens").over(
-          Window.partitionBy("bkt").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val bktOff = toks.groupBy("bkt").agg(sum("n_tokens").as("bkt_sum"))
-        .withColumn("bkt_off",
-          coalesce(sum("bkt_sum").over(
-            Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("bkt", "bkt_off")
-      inBkt.join(broadcast(bktOff), "bkt")
-        .withColumn("off", col("bkt_off") + col("in_off"))
+        size(split(col("text"), " ")).cast("long").as("n_tokens"))
+      Shared.bucketedPrefix(toks, Nil, expr("doc_id div 100"), Seq(col("doc_id")),
+          Seq(col("n_tokens") -> "off"))
         .select(col("doc_id"), col("n_tokens"),
           expr(s"off div $L").as("first_seq"),
           expr(s"(off + n_tokens - 1) div $L").as("last_seq"))
@@ -717,26 +693,14 @@ object LlmCuration {
 
     // Deterministic global training-order shuffle: every doc gets a unique
     // 1-based position in md5(doc_id) order — reproducible across engines,
-    // runs, and partitionings, with NO global single-partition window. Same
-    // two-phase construction as llm_pack_sequences, but bucketed BY THE HASH
-    // PREFIX itself (256 buckets): hex-prefix order equals hash order, so
-    // in-bucket row_number + bucket base offsets (a 256-row metadata frame)
-    // compose to exactly the global rank. At 100 TB: one 256-way hash
-    // shuffle + a broadcast of 256 offsets, vs the naive row_number() OVER
-    // (ORDER BY hash) that funnels the corpus through one partition.
+    // runs, and partitionings: one plus a Shared.bucketedPrefix count over
+    // the 256 hash-prefix buckets (hex-prefix order is hash order).
     "llm_global_shuffle" -> ((s, d) => {
       val h = documents(s, d)
         .select(col("doc_id"), md5(col("doc_id").cast("string")).as("h"))
-        .withColumn("bkt", expr("CAST(conv(substring(h, 1, 2), 16, 10) AS BIGINT)"))
-      val inBkt = h.withColumn("rn",
-        row_number().over(Window.partitionBy("bkt").orderBy("h", "doc_id")).cast("long"))
-      val bktOff = h.groupBy("bkt").agg(count(lit(1)).as("n"))
-        .withColumn("off",
-          coalesce(sum("n").over(
-            Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("bkt", "off")
-      inBkt.join(broadcast(bktOff), "bkt")
-        .select(col("doc_id"), (col("off") + col("rn")).as("pos"))
+      Shared.bucketedPrefix(h, Nil, expr("CAST(conv(substring(h, 1, 2), 16, 10) AS BIGINT)"),
+          Seq(col("h"), col("doc_id")), Seq(lit(1L) -> "before"))
+        .select(col("doc_id"), (col("before") + 1).as("pos"))
         .orderBy("doc_id")
     }),
 
@@ -1121,41 +1085,20 @@ object LlmCuration {
     // run consumes: every doc ranked in the global (quality_bp asc, doc_id)
     // curriculum order (lowest-quality data first, cleanest last — the
     // anneal-to-quality shape) and assigned the token-budget PHASE its
-    // first token falls in (4 equal token-mass phases). The interesting
-    // part is HOW a global rank/cumsum is computed at scale: never a
-    // single-partition corpus sort — quality_bp is value-bounded
-    // (0..10000 by construction), so phase 1 collapses the corpus to a
-    // ≤10001-row bucket frame (per-bucket token/doc totals + exclusive
-    // prefix sums on the METADATA-sized frame), and phase 2 broadcasts it
-    // back and resolves rank/cum only WITHIN each value bucket (fanout =
-    // distinct quality values — the llm_global_shuffle fixed-fanout trade,
-    // reviewed in PlanAuditSuite). All integer arithmetic.
+    // first token falls in (4 equal token-mass phases). Rank and token
+    // offset are one Shared.bucketedPrefix with the value-bounded
+    // quality_bp (0..10000 by construction) as the bucket. All integer
+    // arithmetic.
     "llm_curriculum_order" -> ((s, d) => {
-      val q = documents(s, d).select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n"),
-          expr("size(filter(split(text, ' '), t -> t IN ('the', 'a')))").cast("long").as("st"),
-          length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("np"),
-          length(col("text")).cast("long").as("len"))
+      val q = documents(s, d).select(col("doc_id") +: Shared.qualityFeatures: _*)
         .select(col("doc_id"), col("n").as("n_toks"),
           expr(Shared.qualityBp("div"))
             .as("quality_bp"))
-      val buckets = q.groupBy("quality_bp")
-        .agg(sum("n_toks").as("bt"), count(lit(1)).as("bc"))
-        .withColumn("bucket_tok_before", coalesce(sum("bt").over(
-          Window.orderBy("quality_bp").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("rank_before", coalesce(sum("bc").over(
-          Window.orderBy("quality_bp").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("total_toks", sum("bt").over())
-        .select("quality_bp", "bucket_tok_before", "rank_before", "total_toks")
-      q.withColumn("in_tok_before", coalesce(sum("n_toks").over(
-          Window.partitionBy("quality_bp").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("in_rank", row_number().over(
-          Window.partitionBy("quality_bp").orderBy("doc_id")))
-        .join(broadcast(buckets), Seq("quality_bp"))
+      Shared.bucketedPrefix(q, Nil, col("quality_bp"), Seq(col("quality_bp"), col("doc_id")),
+          Seq(col("n_toks") -> "tok_before", lit(1L) -> "rank_before"), total = Some("total_toks"))
         .select(col("doc_id"), col("quality_bp"), col("n_toks"),
-          (col("rank_before") + col("in_rank")).as("curriculum_rank"),
-          expr("(bucket_tok_before + in_tok_before) * 4 div total_toks + 1").as("phase"))
+          (col("rank_before") + 1).as("curriculum_rank"),
+          expr("tok_before * 4 div total_toks + 1").as("phase"))
         .orderBy("doc_id")
     }),
 
@@ -1536,10 +1479,7 @@ object LlmCuration {
          FROM b ORDER BY doc_id""",
     "llm_token_budget" ->
       s"""WITH b AS (SELECT doc_id, lang,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-                CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT) AS st,
-                CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
-                CAST(length(text) AS BIGINT) AS len
+                ${Shared.qualityFeaturesSql}
                FROM documents),
               q AS (SELECT doc_id, lang, n,
                 ${Shared.qualityBp("//")} AS quality_bp
@@ -1564,10 +1504,7 @@ object LlmCuration {
          FROM b GROUP BY 1 ORDER BY bucket""",
     "llm_importance_resample" ->
       s"""WITH b AS (SELECT doc_id, lang,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-                CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT) AS st,
-                CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
-                CAST(length(text) AS BIGINT) AS len
+                ${Shared.qualityFeaturesSql}
                FROM documents),
               q AS (SELECT doc_id, lang,
                 ${Shared.qualityBp("//")} AS quality_bp
@@ -1747,10 +1684,7 @@ object LlmCuration {
       s"""WITH q AS (SELECT doc_id, source, lang, text,
                            ${Shared.qualityBp("//")} AS quality_bp
                     FROM (SELECT doc_id, source, lang, text,
-                                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-                                 CAST(len(list_filter(string_split(text, ' '), tk -> tk IN ('the', 'a'))) AS BIGINT) AS st,
-                                 CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
-                                 CAST(length(text) AS BIGINT) AS len
+                                 ${Shared.qualityFeaturesSql}
                           FROM documents)),
               hc AS (SELECT md5(text) AS h, count(*) AS hc FROM documents GROUP BY 1)
          SELECT source, count(*) AS n_docs,
@@ -1872,10 +1806,7 @@ object LlmCuration {
                            n AS n_toks,
                            ${Shared.qualityBp("//")} AS quality_bp
                     FROM (SELECT doc_id,
-                                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-                                 CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT) AS st,
-                                 CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
-                                 CAST(length(text) AS BIGINT) AS len
+                                 ${Shared.qualityFeaturesSql}
                           FROM documents)),
               c AS (SELECT doc_id, quality_bp, n_toks,
                            COALESCE(sum(n_toks) OVER (ORDER BY quality_bp, doc_id

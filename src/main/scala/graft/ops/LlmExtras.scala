@@ -886,10 +886,10 @@ object LlmExtras {
     // set is blocking-bounded, nothing corpus².
     // Embedding-norm outlier audit — the vector-health gate before an
     // index build: L2 norms in exact d6 micro-units (codegen graft_dot),
-    // global median and MAD both via the bucketed exact-percentile shape
-    // (never a corpus-growing percentile map), outlier = dev > 3·1.4826·MAD
-    // tested by pure integer cross-multiply (dev·10000 > mad·44478 — no
-    // float boundary can disagree). Per-label census output; the norm
+    // global median and MAD both via Shared.bucketedPdisc, outlier =
+    // dev > 3·1.4826·MAD tested by pure integer cross-multiply
+    // (dev·10000 > mad·44478 — no float boundary can disagree).
+    // Per-label census output; the norm
     // frame is checkpointed once and both percentile passes and the final
     // census consume it.
     "llm_embed_outliers" -> ((s, d) => {
@@ -1264,12 +1264,9 @@ object LlmExtras {
     // points via floor division — exact and identical in both engines.
     "llm_text_quality" -> ((s, d) =>
       documents(s, d)
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n"),
-          length(regexp_replace(col("text"), " ", "")).cast("long").as("chars"),
-          expr("size(filter(split(text, ' '), t -> t IN ('the', 'a')))").cast("long").as("st"),
-          length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("np"),
-          length(col("text")).cast("long").as("len"))
+        .select(col("doc_id") +:
+          length(regexp_replace(col("text"), " ", "")).cast("long").as("chars") +:
+          Shared.qualityFeatures: _*)
         .select(col("doc_id"), col("n").as("n_toks"),
           expr("(chars * 10000) div n").as("avg_tok_len_bp"),
           expr("(st * 10000) div n").as("stopword_bp"),
@@ -1735,10 +1732,7 @@ object LlmExtras {
       s"""WITH q AS (SELECT n_chars,
                            ${Shared.qualityBp("//")} AS quality_bp
                     FROM (SELECT n_chars,
-                                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-                                 CAST(len(list_filter(string_split(text, ' '), tk -> tk IN ('the', 'a'))) AS BIGINT) AS st,
-                                 CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
-                                 CAST(length(text) AS BIGINT) AS len
+                                 ${Shared.qualityFeaturesSql}
                           FROM documents))
          SELECT quality_bp // 1000 AS q_decile,
                 CAST(n_chars AS BIGINT) // 200 AS len_bucket,
@@ -2126,10 +2120,7 @@ object LlmExtras {
                q AS (SELECT doc_id,
                             ${Shared.qualityBp("//")} AS quality_bp
                      FROM (SELECT doc_id,
-                            CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-                            CAST(len(list_filter(string_split(text, ' '), tk -> tk IN ('the', 'a'))) AS BIGINT) AS st,
-                            CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
-                            CAST(length(text) AS BIGINT) AS len
+                            ${Shared.qualityFeaturesSql}
                            FROM documents)),
                j AS (SELECT l.cluster_rep, l.doc_id, q.quality_bp,
                             row_number() OVER (PARTITION BY l.cluster_rep
@@ -2146,10 +2137,7 @@ object LlmExtras {
                q AS (SELECT doc_id,
                             ${Shared.qualityBp("//")} AS quality_bp
                      FROM (SELECT doc_id,
-                            CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
-                            CAST(len(list_filter(string_split(text, ' '), tk -> tk IN ('the', 'a'))) AS BIGINT) AS st,
-                            CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
-                            CAST(length(text) AS BIGINT) AS len
+                            ${Shared.qualityFeaturesSql}
                            FROM documents)),
                sized AS (SELECT l.cluster_rep, l.doc_id, q.quality_bp,
                                 CAST(count(*) OVER (PARTITION BY l.cluster_rep) AS BIGINT) AS n_members,
@@ -2287,11 +2275,8 @@ object LlmExtras {
                 (np * 10000) // len AS nonalpha_bp,
                 ${Shared.qualityBp("//")} AS quality_bp
          FROM (SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
                 CAST(length(replace(text, ' ', '')) AS BIGINT) AS chars,
-                CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT) AS st,
-                CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
-                CAST(length(text) AS BIGINT) AS len
+                ${Shared.qualityFeaturesSql}
                FROM documents)
          ORDER BY doc_id""",
     "llm_text_token_count" ->
@@ -2386,10 +2371,7 @@ object LlmExtras {
     "llm_pipeline_e2e" ->
       s"""WITH q AS (
             SELECT doc_id, text, lang, n_chars,
-                   len(string_split(text, ' ')) AS n,
-                   len(list_filter(string_split(text, ' '), t -> t = 'the' OR t = 'a')) AS st,
-                   length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS np,
-                   length(text) AS len
+                   ${Shared.qualityFeaturesSql}
             FROM documents),
           f AS (
             SELECT doc_id, text, lang, n_chars FROM q

@@ -328,21 +328,19 @@ object LlmPipeline {
       val docs = documents(s, d)
       // might_contain requires its bloom input be a scalar subquery (or
       // constant) — the audited scalar-subquery pattern, via a temp view.
-      val tag = (d.hashCode & 0x7fffffff).toString
-      val v = s"graft_bloom_ref_$tag"
       // key = the order-free content fingerprint (llm_fingerprint's set_md5):
       // bag-of-words-identical docs collide, so the incremental-ingest story
       // has real hits at every fixture scale (byte-exact dups don't exist at
       // sf0.01).
       val fp = md5(concat_ws(" ", array_sort(array_distinct(split(col("text"), " ")))))
-      docs.filter(col("doc_id") % 2 === 0).select(fp.as("h"))
-        .createOrReplaceTempView(v)
-      docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), fp.as("h"))
-        .filter(expr(s"graft_might_contain((SELECT graft_bloom_agg(h) FROM $v), h)"))
-        .join(s.table(v).distinct(), Seq("h"), "left_semi")
-        .select("doc_id", "h")
-        .orderBy("doc_id")
+      withTempViews(s, "bloom_ref" -> docs.filter(col("doc_id") % 2 === 0).select(fp.as("h"))) { v =>
+        docs.filter(col("doc_id") % 2 === 1)
+          .select(col("doc_id"), fp.as("h"))
+          .filter(expr(s"graft_might_contain((SELECT graft_bloom_agg(h) FROM ${v("bloom_ref")}), h)"))
+          .join(s.table(v("bloom_ref")).distinct(), Seq("h"), "left_semi")
+          .select("doc_id", "h")
+          .orderBy("doc_id")
+      }
     }),
 
     // The pair set itself comes from the Shared memo (one computation per
@@ -741,8 +739,7 @@ object LlmPipeline {
     // integral divide (both engines truncate toward zero — probed, DuckDB
     // `//` is trunc for integers), then the bottom quartile dropped at the
     // global p25 DISCRETE cutoff: an actual score value, resolved through
-    // the bucketed two-phase percentile (Shared.bucketedPdisc — no
-    // per-group value→count map growing with the corpus). Scale: scoring
+    // Shared.bucketedPdisc. Scale: scoring
     // is the unigram plan (vocab-bounded broadcasts, corpus side narrow
     // until the doc_id-keyed count); the cutoff is a 1-row broadcast back
     // onto the score frame; the report is one partial-aggregatable lang

@@ -145,10 +145,9 @@ object Reshape {
 
     // RFM (recency / frequency / monetary) customer quintile scores — the
     // segmentation a marketing pipeline materializes per customer. Each
-    // metric's four quintile cutpoints ride Shared.bucketedPdisc over a
-    // value-collapsed histogram (per-task state = one bucket of distinct
-    // values, never a corpus-growing percentile map), then broadcast as a
-    // 1-row frame; scores are pure integer comparisons
+    // metric's four quintile cutpoints come from Shared.bucketedPdiscMulti
+    // over a value-collapsed histogram, then broadcast as a 1-row frame;
+    // scores are pure integer comparisons
     // 1 + Σ(v > q_k) — no float anywhere. Recency is scored mechanically
     // on days-since-last-order (high score = stale). Scale: one
     // partial-aggregatable custkey groupBy, three dim-sized histograms,
@@ -166,14 +165,11 @@ object Reshape {
         .select(col("o_custkey"), (col("ref_day") - col("last_day")).as("rec"),
           col("freq"), col("mon"))
         .localCheckpoint(false)
-      // r14: ALL 12 cutpoints (3 metrics × 4 quintiles) resolve in ONE
-      // stacked multi-cut pass — the three metrics stack as the histogram's
-      // GROUP column ((metric, v, w) via a ×3 explode of the customer-grain
-      // frame), bucketedPdiscMulti already partitions every phase by group,
-      // and the 3-row result pivots to the single broadcast row the scorer
-      // reads. Replaces 3 sequential histogram+two-phase chains (and their
-      // broadcast crossJoins) with one (r13 did 12 chains → 3; plan diff in
-      // plans/r14).
+      // ALL 12 cutpoints (3 metrics × 4 quintiles) resolve in ONE stacked
+      // multi-cut pass: the three metrics stack as the histogram's GROUP
+      // column ((metric, v, w) via a ×3 explode of the customer-grain
+      // frame), and the 3-row result pivots to the single broadcast row
+      // the scorer reads.
       val hist3 = base.select(explode(array(
           struct(lit("rec").as("m"), col("rec").as("v")),
           struct(lit("freq").as("m"), col("freq").as("v")),

@@ -42,7 +42,7 @@ object Scans {
       .select(col("c_custkey").as("k"), money(col("c_acctbal")).as("bal"))
       .writeTo(s"graftmem.$t")
     (if (delta) w.tableProperty("rowlevel", "delta") else w).createOrReplace()
-    customer(s, d)
+    val src = customer(s, d)
       .filter(col("c_custkey") % 13 === 0 || col("c_custkey") % 10 === 0)
       .select(col("c_custkey").as("k"),
         when(col("c_custkey") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
@@ -50,11 +50,12 @@ object Scans {
       .unionAll(customer(s, d).filter(col("c_custkey") % 100 === 0)
         .select((-col("c_custkey") - 1L).as("k"), lit("I").as("op"),
           lit(0L).as("bal")))
-      .createOrReplaceTempView(s"graft_merge_${mode}_src")
-    s.sql(s"""MERGE INTO graftmem.$t t USING graft_merge_${mode}_src s ON t.k = s.k
-              WHEN MATCHED AND s.op = 'D' THEN DELETE
-              WHEN MATCHED THEN UPDATE SET bal = s.bal
-              WHEN NOT MATCHED THEN INSERT (k, bal) VALUES (s.k, s.bal)""")
+    withTempViews(s, s"merge_${mode}_src" -> src) { v =>
+      s.sql(s"""MERGE INTO graftmem.$t t USING ${v(s"merge_${mode}_src")} s ON t.k = s.k
+                WHEN MATCHED AND s.op = 'D' THEN DELETE
+                WHEN MATCHED THEN UPDATE SET bal = s.bal
+                WHEN NOT MATCHED THEN INSERT (k, bal) VALUES (s.k, s.bal)""")
+    }
     s.table(s"graftmem.$t")
       .agg(count(lit(1)).as("n_rows"), sum("bal").as("bal_cents_sum"),
         sum(when(col("k") < 0, 1L).otherwise(0L)).as("n_inserted"),

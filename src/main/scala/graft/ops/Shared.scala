@@ -2,7 +2,7 @@ package graft.ops
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gates
 import graft.Norm.money
@@ -29,90 +29,90 @@ private[graft] object CacheReuse {
 private[graft] object Shared {
   import org.apache.spark.sql.expressions.Window
 
-  /** Exact percentile_disc over a pre-collapsed (group, value, weight)
-    * histogram — the agg_weighted_median two-phase bucketed shape, shared
-    * by `agg_percentile_disc` and `filter_outlier_mad` (r6 verdict #2:
-    * Spark's exact percentile buffers a value→count map per group, so 3
-    * groups × corpus-cardinality cents is per-task state growing with the
-    * corpus; this shape never holds more than one $1000-wide bucket of
-    * DISTINCT values per task).
-    *
-    * percentile_disc(p) = smallest v with cume_dist(v) ≥ p, tested as
-    * den·cum ≥ num·tot in cross-multiplied integers (p = num/den — no
-    * float). Phase 1 locates the crossing bucket from bucket totals (a
-    * metadata-sized frame: |groups|×|value range|/1e5 rows — the only
-    * few-group window runs there); phase 2 broadcasts the |groups|-row
-    * crossing info back and runs the fine cumsum over ONLY the crossing
-    * bucket's distinct values — partitions bounded by the bucket WIDTH
-    * (100k distinct values), independent of corpus size.
-    *
-    * `hist` must have exactly the columns (grp, v: integral, w: count);
-    * returns one row per group: (grp, out = the percentile value).
-    * Negative values are fine: `div` truncates toward zero, which only
-    * makes bucket 0 span [−width+1, width−1] — bucket order stays monotone
-    * in v, so the crossing search and in-bucket cumsum are unaffected.
-    */
-  def bucketedPdisc(hist: DataFrame, grp: String, v: String, w: String,
-                    num: Int, den: Int, out: String): DataFrame = {
-    val byBucket = hist.select(col(grp), col(v), col(w))
-      .withColumn("__bkt", expr(s"$v div 100000"))
-    val totals = byBucket.groupBy(grp, "__bkt").agg(sum(w).as("__bw"))
-      .withColumn("__cum", sum("__bw").over(Window.partitionBy(grp).orderBy("__bkt")))
-      .withColumn("__tot", sum("__bw").over(Window.partitionBy(grp)))
-    val crossing = totals
-      .filter(col("__cum") * den >= col("__tot") * num)
-      .withColumn("__rk", row_number().over(Window.partitionBy(grp).orderBy("__bkt")))
-      .filter(col("__rk") === 1)
-      .select(col(grp), col("__bkt"), (col("__cum") - col("__bw")).as("__before"),
-        col("__tot"))
-    byBucket.join(broadcast(crossing), Seq(grp, "__bkt"))
-      .withColumn("__cin",
-        sum(w).over(Window.partitionBy(grp, "__bkt").orderBy(v)))
-      .filter((col("__before") + col("__cin")) * den >= col("__tot") * num)
-      .groupBy(grp)
-      .agg(min(v).as(out))
+  // The two-phase bucketed shape. A running sum along a corpus-sized order,
+  // or a percentile of a few groups, is naively one window partitioned by
+  // the group: a few-group window sorts the corpus on a few tasks. Instead
+  // each row gets a bucket that never decreases along the order. Phase 1
+  // ([[bucketSums]]) sums each (group, bucket) and runs the group's offsets
+  // over that |groups|×|buckets|-row frame, the only window whose
+  // partitions are the groups. The frame broadcasts back, and phase 2 is a
+  // window inside each (group, bucket), bounded by the bucket, not by the
+  // corpus. The order is unique within a group, so the in-bucket sums are
+  // deterministic.
+
+  /** The value bucket of integral `v`: at most 100,000 distinct values
+    * ($1000 of cents) per bucket. `div` truncates toward zero, so bucket 0
+    * spans (−100000, 100000) and the bucket still never decreases along v. */
+  def valueBucket(v: String): String = s"$v div 100000"
+
+  /** Phase 1 over `framed` (which carries `__bkt`): one row per (group,
+    * bucket) with the i-th value's bucket sum `__s<i>` and the sum `__b<i>`
+    * of the group's earlier buckets; with `total`, also the group total of
+    * the first value, `__tot`. */
+  private def bucketSums(framed: DataFrame, grp: Seq[String], vals: Seq[Column],
+                         total: Boolean): DataFrame = {
+    val group = Window.partitionBy(grp.map(col): _*)
+    val earlier = group.orderBy("__bkt").rowsBetween(Window.unboundedPreceding, -1)
+    val sums = vals.zipWithIndex.map { case (v, i) => sum(v).as(s"__s$i") }
+    val offs = framed.groupBy((grp :+ "__bkt").map(col): _*).agg(sums.head, sums.tail: _*)
+      .select(col("*") +: vals.indices.map(i =>
+        coalesce(sum(s"__s$i").over(earlier), lit(0L)).as(s"__b$i")): _*)
+    if (total) offs.withColumn("__tot", sum("__s0").over(group)) else offs
   }
 
-  /** Multi-cut [[bucketedPdisc]]: resolves SEVERAL percentiles of the same
-    * (grp, v, w) histogram in ONE two-phase pass instead of one chain per
-    * cut (agg_iqr went 3 chains → 1, ts_rfm_scores 12 → 3 — the bench
-    * motivation). Same algorithm; the cut list is exploded as a literal
-    * array so phase 1's bucket frame carries |cuts|× rows (still
-    * metadata-sized) and phase 2's in-bucket cumsum partitions by
-    * (grp, cut, bucket) — per-task state unchanged. Returns one row per
-    * group with one column per cut name. */
+  /** Exclusive running sums along `order` within each `grp` group of `df`:
+    * for each (value, name) of `sums`, column `name` is the sum of the value
+    * over the group's earlier rows. `bucket` never decreases along `order`,
+    * and `order` is unique within a group. With `total`, the group total of
+    * the first value is added under that name. Returns `df`'s columns, then
+    * the sums, then the total. */
+  def bucketedPrefix(df: DataFrame, grp: Seq[String], bucket: Column, order: Seq[Column],
+                     sums: Seq[(Column, String)], total: Option[String] = None): DataFrame = {
+    val framed = df.withColumn("__bkt", bucket)
+    val offs = bucketSums(framed, grp, sums.map(_._1), total.isDefined)
+    val earlier = Window.partitionBy((grp :+ "__bkt").map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val named = sums.zipWithIndex.map { case ((v, name), i) =>
+      (col(s"__b$i") + coalesce(sum(v).over(earlier), lit(0L))).as(name)
+    }
+    framed.join(broadcast(offs), grp :+ "__bkt")
+      .select(df.columns.toSeq.map(col) ++ named ++ total.map(col("__tot").as(_)): _*)
+  }
+
+  /** Exact percentile_disc of one or more cuts over a (grp, v: integral,
+    * w: non-negative weight) histogram: for cut (num, den, name), with
+    * 0 < num/den ≤ 1, the smallest v whose cumulative weight reaches
+    * num/den of the group total, tested as den·cum ≥ num·total in
+    * integers. Phase 1 finds each cut's crossing bucket, the first whose
+    * running sum reaches the cut; phase 2 sums weights inside the crossing
+    * buckets only, and one aggregation takes every cut's minimum. Returns
+    * one row per group: grp, one column per cut name, and with `total` the
+    * group's total weight under that name. */
   def bucketedPdiscMulti(hist: DataFrame, grp: String, v: String, w: String,
-                         cuts: Seq[(Int, Int, String)]): DataFrame = {
-    val byBucket = hist.select(col(grp), col(v), col(w))
-      .withColumn("__bkt", expr(s"$v div 100000"))
-    val totals = byBucket.groupBy(grp, "__bkt").agg(sum(w).as("__bw"))
-      .withColumn("__cum", sum("__bw").over(Window.partitionBy(grp).orderBy("__bkt")))
-      .withColumn("__tot", sum("__bw").over(Window.partitionBy(grp)))
-    val fracArr = array(cuts.map { case (n, dn, name) =>
+                         cuts: Seq[(Int, Int, String)], total: Option[String] = None): DataFrame = {
+    val framed = hist.select(col(grp), col(v), col(w)).withColumn("__bkt", expr(valueBucket(v)))
+    val fracs = array(cuts.map { case (n, dn, name) =>
       struct(lit(n).as("__num"), lit(dn).as("__den"), lit(name).as("__cut"))
     }: _*)
-    val crossing = totals.withColumn("__f", explode(fracArr))
-      .select(col(grp), col("__bkt"), col("__bw"), col("__cum"), col("__tot"),
-        col("__f.__num").as("__num"), col("__f.__den").as("__den"),
-        col("__f.__cut").as("__cut"))
-      .filter(col("__cum") * col("__den") >= col("__tot") * col("__num"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(grp, "__cut").orderBy("__bkt")))
-      .filter(col("__rk") === 1)
-      .select(col(grp), col("__cut"), col("__num"), col("__den"), col("__bkt"),
-        (col("__cum") - col("__bw")).as("__before"), col("__tot"))
-    byBucket.join(broadcast(crossing), Seq(grp, "__bkt"))
-      .withColumn("__cin",
-        sum(w).over(Window.partitionBy(grp, "__cut", "__bkt").orderBy(v)))
-      .filter((col("__before") + col("__cin")) * col("__den") >= col("__tot") * col("__num"))
-      .groupBy(col(grp), col("__cut")).agg(min(v).as("__val"))
+    def reached(cum: Column): Column = cum * col("__den") >= col("__tot") * col("__num")
+    val crossing = bucketSums(framed, Seq(grp), Seq(col(w)), total = true)
+      .withColumn("__f", explode(fracs))
+      .select(col(grp), col("__bkt"), col("__s0"), col("__b0"), col("__tot"), col("__f.*"))
+      .filter(reached(col("__b0") + col("__s0")) && !reached(col("__b0")))
+      .drop("__s0")
+    val picks = cuts.map { case (_, _, name) => min(when(col("__cut") === name, col(v))).as(name) } ++
+      total.map(max("__tot").as(_))
+    framed.join(broadcast(crossing), Seq(grp, "__bkt"))
+      .withColumn("__cin", sum(w).over(Window.partitionBy(grp, "__cut", "__bkt").orderBy(v)))
+      .filter(reached(col("__b0") + col("__cin")))
       .groupBy(grp)
-      .agg(cuts.head._3 match { case h =>
-        max(when(col("__cut") === h, col("__val"))).as(h)
-      }, cuts.tail.map { case (_, _, name) =>
-        max(when(col("__cut") === name, col("__val"))).as(name)
-      }: _*)
+      .agg(picks.head, picks.tail: _*)
   }
+
+  /** One-cut [[bucketedPdiscMulti]]: (grp, out = the num/den percentile). */
+  def bucketedPdisc(hist: DataFrame, grp: String, v: String, w: String,
+                    num: Int, den: Int, out: String): DataFrame =
+    bucketedPdiscMulti(hist, grp, v, w, Seq((num, den, out)))
 
   /** (l_returnflag, cents, w = row count) histogram of lineitem prices,
     * the value-bounded input of the percentile and census ops. Spread by
@@ -134,6 +134,20 @@ private[graft] object Shared {
     * (chars); `divOp` is `div` (Spark) or `//` (DuckDB). */
   def qualityBp(divOp: String): String =
     s"(100 * (least(n, 50) * n * len + 30 * (n - st) * len + 20 * (len - np) * n)) $divOp (n * len)"
+
+  /** The columns [[qualityBp]] reads, over a frame with `text`. */
+  def qualityFeatures: Seq[Column] = Seq(
+    size(split(col("text"), " ")).cast("long").as("n"),
+    expr("size(filter(split(text, ' '), t -> t IN ('the', 'a')))").cast("long").as("st"),
+    length(regexp_replace(col("text"), "[a-z0-9 ]", "")).cast("long").as("np"),
+    length(col("text")).cast("long").as("len"))
+
+  /** DuckDB twin of [[qualityFeatures]]: a select-list fragment over `text`. */
+  val qualityFeaturesSql: String =
+    """CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
+       CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a'))) AS BIGINT) AS st,
+       CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
+       CAST(length(text) AS BIGINT) AS len"""
 
   /** Process-lifetime memos of the expensive frames SHARED by several declared
     * ops: the exact word-Jaccard near-dup pair set (`llm_dedup_near`,

@@ -23,23 +23,13 @@ import graft.Norm._
   * `price_cents · n > total_cents` so no double division is compared.
   */
 object Subqueries {
-  /** Analyze `sql` with each `@tbl` marker bound to a fresh uniquely-named
-    * temp view of `<d>/<tbl>.parquet`. sql() analyzes eagerly (views are
-    * bound into the plan), so the views are dropped before returning. */
-  private def viaSql(s: SparkSession, d: String, sql: String, tables: String*): DataFrame = {
-    val views = tables.map { tbl =>
-      val vn = s"graft_sub_${tbl}_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.Tables.t(s, d, tbl).createOrReplaceTempView(vn)
-      tbl -> vn
+  /** Analyze `sql` with each `@tbl` marker bound to a temp view of
+    * `<d>/<tbl>.parquet`. Whole-marker replacement (word boundary), so one
+    * table name being a prefix of another can never corrupt the SQL. */
+  private def viaSql(s: SparkSession, d: String, sql: String, tables: String*): DataFrame =
+    withTempViews(s, tables.map(t => t -> graft.Tables.t(s, d, t)): _*) { views =>
+      s.sql(views.foldLeft(sql) { case (q, (t, vn)) => q.replaceAll(s"@$t\\b", vn) })
     }
-    // whole-marker replacement (word boundary) so one table name being a
-    // prefix of another can never corrupt the SQL; try/finally so an
-    // analysis error can't leak the catalog entries
-    try s.sql(views.foldLeft(sql) { case (q, (t, vn)) =>
-      q.replaceAll(s"@$t\\b", vn)
-    })
-    finally views.foreach { case (_, vn) => s.catalog.dropTempView(vn) }
-  }
 
   /** Oracle text = the same body with each whole `@table` marker stripped
     * to its bare name (a literal '@' elsewhere in the SQL is untouched). */
@@ -295,13 +285,11 @@ object Subqueries {
       viaSql(s, d, SUB_RECURSIVE_CTE, "customer")
     }),
     "sub_pipe_syntax" -> ((s, d) => viaSql(s, d, SUB_PIPE, "orders")),
-    "sub_param_sql" -> ((s, d) => {
-      val vn = s"graft_sub_orders_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.Tables.t(s, d, "orders").createOrReplaceTempView(vn)
-      try s.sql(SUB_PARAM.replaceAll("@orders\\b", vn),
-        Map("min_cents" -> 10000000L, "hot1" -> "1-URGENT", "hot2" -> "2-HIGH"))
-      finally s.catalog.dropTempView(vn): Unit
-    }),
+    "sub_param_sql" -> ((s, d) =>
+      withTempViews(s, "orders" -> graft.Tables.t(s, d, "orders")) { v =>
+        s.sql(SUB_PARAM.replaceAll("@orders\\b", v("orders")),
+          Map("min_cents" -> 10000000L, "hot1" -> "1-URGENT", "hot2" -> "2-HIGH"))
+      }),
     "sub_inline_values" -> ((s, d) => viaSql(s, d, SUB_VALUES, "orders")),
     "sub_exists_or"   -> ((s, d) => viaSql(s, d, SUB_EXISTS_OR, "orders", "lineitem")),
   )

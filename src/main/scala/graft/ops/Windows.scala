@@ -241,8 +241,8 @@ object Windows {
     // Global percent_rank/cume_dist WITHOUT a single-partition global
     // window: the two-pass bucketed rank. Values convert to exact integer
     // cents (money is monotone and injective on the 2-decimal price
-    // domain, so cent-ranks ARE price-ranks), buckets are `cents div
-    // 100000` ($1000 ranges — the Shared.bucketedPdisc convention), so a
+    // domain, so cent-ranks ARE price-ranks), buckets are
+    // Shared.valueBucket ($1000 ranges), so a
     // bucket holds AT MOST 100,000 distinct values BY CONSTRUCTION (r11
     // verdict #6: the old 64 equi-width buckets bounded per-task state
     // only by the price distribution; a hot bucket on a bell curve
@@ -263,7 +263,7 @@ object Windows {
       // and n_tot derives from the collected bucket totals instead of a
       // third corpus scan + crossJoin (guide §1.2).
       val bv = o.select(money(col("o_totalprice")).as("cents"))
-        .withColumn("bkt", expr("cents div 100000"))
+        .withColumn("bkt", expr(Shared.valueBucket("cents")))
         .groupBy("bkt", "cents").agg(count(lit(1)).as("c"))
         .localCheckpoint(false)
       // bucket totals: value-domain-bounded numbers to the driver

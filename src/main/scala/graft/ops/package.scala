@@ -11,4 +11,19 @@ package object ops {
     * call site passes its own literal tag. */
   def scratchDir(d: String, tag: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_$tag${Math.abs(d.hashCode)}"
+
+  /** Builds a frame over temp views of `s`: binds each (name, frame) as a
+    * view under a fresh unique name, calls `build` with name → view name,
+    * and drops the views when it returns or throws. `sql()` and `table()`
+    * analyze eagerly, so the built frame no longer needs its views. */
+  def withTempViews(s: SparkSession, frames: (String, DataFrame)*)(
+      build: Map[String, String] => DataFrame): DataFrame = {
+    val views = frames.map { case (name, df) =>
+      (name, df, s"graft_${name}_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+    }
+    try {
+      views.foreach { case (_, df, vn) => df.createOrReplaceTempView(vn) }
+      build(views.map { case (name, _, vn) => name -> vn }.toMap)
+    } finally views.foreach { case (_, _, vn) => s.catalog.dropTempView(vn) }
+  }
 }

@@ -276,7 +276,6 @@ object GraftMemStore {
     * check-then-mark pair cannot race itself. */
   def epochCommitted(key: String, epochToken: String): Boolean =
     Option(epochs.get(key)).exists(_.contains(epochToken))
-  def clearEpochs(key: String): Unit = epochs.remove(key)
 }
 
 class GraftMemTable(key: String) extends Table with SupportsRead with SupportsWrite

@@ -98,6 +98,16 @@ class ContractSuite extends AnyFunSuite {
       s"memoise through graft.Memo: computeIfAbsent in ${filesUsing("computeIfAbsent").distinct}")
   }
 
+  test("src/main has one value-bucket width, one stopword predicate and one temp-view binder") {
+    val width = filesMatching("div 100000\\b")
+    assert(width == Seq("graft/ops/Shared.scala"), s"bucket through Shared.valueBucket: $width")
+    val stop = filesMatching("\\('the', 'a'\\)|'the' OR")
+    assert(stop == Seq("graft/ops/Shared.scala", "graft/ops/Shared.scala"),
+      s"one quality-feature block per engine, Shared.qualityFeatures(Sql): $stop")
+    val views = filesUsing("createOrReplaceTempView")
+    assert(views == Seq("graft/ops/package.scala"), s"bind temp views through withTempViews: $views")
+  }
+
   test("every scratchDir call site passes its own literal tag") {
     val tags = mainSources.flatMap { case (_, src) =>
       "scratchDir\\(d, \"([^\"]+)\"\\)".r.findAllMatchIn(src).map(_.group(1))
@@ -110,12 +120,17 @@ class ContractSuite extends AnyFunSuite {
   test("no output schema has duplicate, empty, or nested-unhashable columns") {
     val allowedNested = Set.empty[String]
     val confChanges = Seq.newBuilder[String]
+    val viewLeaks = Seq.newBuilder[String]
+    def tempViews = s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val before = s.conf.getAll
+      val viewsBefore = tempViews
       val schema = fn(s, d).schema
       val after = s.conf.getAll
       val changed = ((before.toSet diff after.toSet) ++ (after.toSet diff before.toSet)).map(_._1)
       if (changed.nonEmpty) confChanges += s"$name: ${changed.mkString(", ")}"
+      val leaked = tempViews diff viewsBefore
+      if (leaked.nonEmpty) viewLeaks += s"$name: ${leaked.toSeq.sorted.mkString(", ")}"
       val names = schema.fields.map(_.name).toSeq
       assert(names.distinct == names, s"$name: duplicate column names $names")
       assert(names.forall(_.nonEmpty), s"$name: empty column name")
@@ -126,6 +141,7 @@ class ContractSuite extends AnyFunSuite {
       }
     }
     assert(confChanges.result().isEmpty, s"ops changed the caller's session conf: ${confChanges.result()}")
+    assert(viewLeaks.result().isEmpty, s"ops left temp views in the caller's session: ${viewLeaks.result()}")
   }
 
   test("entry runs in a plain session-independent way (no extension functions)") {

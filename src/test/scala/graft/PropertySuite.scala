@@ -543,4 +543,48 @@ class PropertySuite extends AnyFunSuite {
     assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastQueryStage"),
       s"build side not planned through BroadcastExchange:\n$plan")
   }
+
+  test("bucketedPrefix == the single-window exclusive running sum (groups, signed keys, one-row buckets, two values)") {
+    import org.apache.spark.sql.expressions.Window
+    val sp = s; import sp.implicits._
+    val rows = Gen.listOf(Gen.zip(Gen.chooseNum(0L, 2L), Gen.chooseNum(-40L, 40L),
+      Gen.chooseNum(0L, 9L), Gen.chooseNum(-5L, 5L)))
+    // width 1: one-row buckets; 7: `div` truncation puts -6..6 in bucket 0;
+    // 100: one bucket for everything
+    val widths = samples(Gen.oneOf(1L, 7L, 100L), 12)
+    for ((raw, width) <- samples(rows, 12).zip(widths); grp <- Seq(Nil, Seq("g"))) {
+      // the order key k is unique within a group
+      val df = raw.distinctBy(r => if (grp.isEmpty) r._2 else (r._1, r._2)).toDF("g", "k", "a", "b")
+      val got = graft.ops.Shared.bucketedPrefix(df, grp, expr(s"k div $width"), Seq(col("k")),
+          Seq(col("a") -> "a_before", col("b") -> "b_before"), total = Some("a_total"))
+        .select("g", "k", "a_before", "b_before", "a_total")
+      val group = Window.partitionBy(grp.map(col): _*)
+      val earlier = group.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
+      val want = df.select(col("g"), col("k"),
+        coalesce(sum("a").over(earlier), lit(0L)).as("a_before"),
+        coalesce(sum("b").over(earlier), lit(0L)).as("b_before"),
+        sum("a").over(group).as("a_total"))
+      val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), r.getLong(1))
+      assert(got.collect().sortBy(key).toSeq == want.collect().sortBy(key).toSeq,
+        s"width=$width grp=$grp rows=$raw")
+    }
+  }
+
+  test("bucketedPdiscMulti == percentile_disc when two cuts cross in the same bucket") {
+    val sp = s; import sp.implicits._
+    // values below 100000 share bucket 0 and carry almost all the weight;
+    // two light values in far buckets keep the cuts from reaching them
+    val hist = ((1 to 400).map(i => (s"g${i % 3}", (i * 37 % 211).toLong * 401L, (i % 5 + 1).toLong)) ++
+      Seq(("g0", 550000L, 1L), ("g1", -250000L, 1L), ("g2", 900000L, 2L))).toDF("g", "v", "w")
+    val got = graft.ops.Shared.bucketedPdiscMulti(hist, "g", "v", "w",
+      Seq((1, 4, "p25"), (1, 2, "p50")))
+    val want = hist.select(col("g"), col("v"), explode(expr("sequence(1, w)")))
+      .groupBy("g")
+      .agg(expr("CAST(percentile_disc(0.25) WITHIN GROUP (ORDER BY v) AS BIGINT)").as("p25"),
+        expr("CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY v) AS BIGINT)").as("p50"))
+    val rows = got.select("g", "p25", "p50").collect().sortBy(_.getString(0)).toSeq
+    assert(rows.size == 3 && rows.forall(r => r.getLong(1) / 100000 == 0 && r.getLong(2) / 100000 == 0),
+      s"both cuts must cross in bucket 0: $rows")
+    assert(rows == want.collect().sortBy(_.getString(0)).toSeq)
+  }
 }

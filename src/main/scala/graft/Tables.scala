@@ -139,8 +139,5 @@ object Tables {
     val df = t(s, d, "documents")
     if (par) Gates.rebalance(s, d, "documents", df, Seq("doc_id")) else df
   }
-  def embeddings(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
-    val df = t(s, d, "embeddings")
-    if (par) Gates.rebalance(s, d, "embeddings", df, Seq("vec_id")) else df
-  }
+  def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }

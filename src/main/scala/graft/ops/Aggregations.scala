@@ -177,12 +177,7 @@ object Aggregations {
     // customer dim broadcast onto orders; nothing corpus-sized is held,
     // sorted, or windowed.
     "agg_hhi" -> ((s, d) =>
-      orders(s, d)
-        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
-          Gates.bytes(s, d, "customer"), Gates.DimCap),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment").as("seg"), col("o_custkey"))
-        .agg(moneySum(col("o_totalprice")).as("r"))
+      Shared.segRevenue(s, d, col("o_custkey"), "r")
         .groupBy("seg")
         .agg(count(lit(1)).as("n_firms"),
           expr("CAST(sum(r) AS DECIMAL(38,0))").as("t"),
@@ -203,12 +198,7 @@ object Aggregations {
     // Scale: (seg, custkey) partial agg, |segs|-row stats broadcast back,
     // one final partial-aggregatable seg rollup.
     "agg_theil" -> ((s, d) => {
-      val rev = orders(s, d)
-        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
-          Gates.bytes(s, d, "customer"), Gates.DimCap),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment").as("seg"), col("o_custkey"))
-        .agg(moneySum(col("o_totalprice")).as("r"))
+      val rev = Shared.segRevenue(s, d, col("o_custkey"), "r")
       val stats = rev.groupBy("seg")
         .agg(count(lit(1)).as("n_firms"), sum("r").as("tot"))
       rev.join(broadcast(stats), Seq("seg"))
@@ -976,10 +966,7 @@ object Aggregations {
     // sum(BIGINT·BIGINT) runs in HUGEINT — DuckDB's DECIMAL(38,0)-width twin;
     // `//` truncates toward zero exactly like Spark's `div`.
     "agg_hhi" ->
-      s"""WITH rev AS (SELECT c_mktsegment AS seg, o_custkey,
-                              ${moneySumSql("o_totalprice")} AS r
-                       FROM orders JOIN customer ON o_custkey = c_custkey
-                       GROUP BY c_mktsegment, o_custkey),
+      s"""WITH rev AS (${Shared.segRevenueSql("o_custkey", "r")}),
               a AS (SELECT seg, count(*) AS n_firms,
                            CAST(sum(r) AS HUGEINT) AS t,
                            sum(CAST(r AS HUGEINT) * r) AS sq
@@ -989,10 +976,7 @@ object Aggregations {
     // Character-identical arithmetic text to the Spark side (same IEEE op
     // order) so the floored micro-nat terms agree exactly.
     "agg_theil" ->
-      s"""WITH rev AS (SELECT c_mktsegment AS seg, o_custkey,
-                              ${moneySumSql("o_totalprice")} AS r
-                       FROM orders JOIN customer ON o_custkey = c_custkey
-                       GROUP BY c_mktsegment, o_custkey),
+      s"""WITH rev AS (${Shared.segRevenueSql("o_custkey", "r")}),
               st AS (SELECT seg, count(*) AS n_firms, CAST(sum(r) AS BIGINT) AS tot
                      FROM rev GROUP BY seg)
          SELECT seg, CAST(max(n_firms) AS BIGINT) AS n_firms,

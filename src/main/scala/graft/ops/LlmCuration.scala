@@ -421,27 +421,31 @@ object LlmCuration {
         .withColumn("quality_bp", expr(
           Shared.qualityBp("div")))
         .localCheckpoint(false)
-      val byQ = scored.groupBy("lang", "quality_bp")
-        .agg(count(lit(1)).as("nd"), sum("n").as("nt"))
       val wDesc = Window.partitionBy("lang").orderBy(col("quality_bp").desc)
-      val cum = byQ
+      val cum = scored.groupBy("lang", "quality_bp")
+        .agg(count(lit(1)).as("nd"), sum("n").as("nt"))
         .withColumn("cum_before", coalesce(sum("nt").over(
           wDesc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
         .withColumn("cum_after", col("cum_before") + col("nt"))
-      val fullAgg = cum.filter(col("cum_after") <= 2000L)
-        .groupBy("lang").agg(sum("nd").as("kd"), sum("nt").as("kt"))
-      val crossing = cum
-        .filter(col("cum_before") < 2000L && col("cum_after") > 2000L)
-        .select(col("lang"), col("quality_bp"), col("cum_before"))
+        .localCheckpoint(false)
+      // One aggregation per lang over the checkpointed level frame: the
+      // totals, the whole levels that fit the budget, and the crossing
+      // level (at most one per lang, so a conditional max picks it).
+      val full = col("cum_after") <= 2000L
+      val crosses = col("cum_before") < 2000L && col("cum_after") > 2000L
+      val perLang = cum.groupBy("lang")
+        .agg(sum("nd").as("n_docs"), sum("nt").as("total_toks"),
+          sum(when(full, col("nd"))).as("kd"), sum(when(full, col("nt"))).as("kt"),
+          max(when(crosses, col("quality_bp"))).as("cross_bp"),
+          max(when(crosses, col("cum_before"))).as("cross_before"))
+      val crossing = perLang.filter(col("cross_bp").isNotNull)
+        .select(col("lang"), col("cross_bp").as("quality_bp"), col("cross_before").as("cum_before"))
       val partAgg = scored.join(broadcast(crossing), Seq("lang", "quality_bp"))
         .withColumn("cum", col("cum_before") +
           sum("n").over(Window.partitionBy("lang").orderBy("doc_id")))
         .filter(col("cum") <= 2000L)
         .groupBy("lang").agg(count(lit(1)).as("pd"), sum("n").as("pt"))
-      scored.groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n").as("total_toks"))
-        .join(broadcast(fullAgg), Seq("lang"), "left")
-        .join(broadcast(partAgg), Seq("lang"), "left")
+      perLang.join(broadcast(partAgg), Seq("lang"), "left")
         .select(col("lang"), col("n_docs"), col("total_toks"),
           (coalesce(col("kd"), lit(0L)) + coalesce(col("pd"), lit(0L))).as("n_kept"),
           (coalesce(col("kt"), lit(0L)) + coalesce(col("pt"), lit(0L))).as("kept_toks"))

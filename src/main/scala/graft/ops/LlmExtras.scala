@@ -199,6 +199,59 @@ object LlmExtras {
     (inc, edges)
   }
 
+  /** Nearest-centroid assignment: each point of `pts` (rows of [[vecs]])
+    * scored by cosine against the first `k` vectors as fixed centroids
+    * (`cid` = their vec_id), keeping the `top` nearest under the
+    * engine-stable (cosine desc, cid) order. Returns `pts`' own columns
+    * plus `cid`, one row per (point, kept centroid). */
+  private[graft] def nearestCentroids(s: SparkSession, d: String, pts: DataFrame,
+                               k: Long, top: Int): DataFrame = {
+    val cent = vecs(s, d).filter(col("vec_id") < k)
+      .select(col("vec_id").as("cid"), col("v").as("vb"), col("nrm").as("nb"))
+    pts.join(broadcast(cent), lit(true))
+      .withColumn("ccos", expr("graft_dot(v, vb)") / (col("nrm") * col("nb")))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))))
+      .filter(col("rn") <= top)
+      .select(pts.columns.toSeq.map(col) :+ col("cid"): _*)
+  }
+
+  /** DuckDB twin of [[nearestCentroids]]: the CTEs `out_cent` and `out`,
+    * where `out` is the columns of the embeddings relation `pts` plus `cid`,
+    * and `k` is an SQL expression. */
+  private def nearestCentroidsSql(out: String, pts: String, k: String, top: Int): String =
+    s"""${out}_cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < $k),
+        $out AS (SELECT * EXCLUDE (rn) FROM (
+          SELECT p.*, cent.cid,
+                 row_number() OVER (PARTITION BY p.vec_id
+                                    ORDER BY ${Shared.cosSql("p.embedding", "cent.cv")} DESC, cent.cid) AS rn
+          FROM $pts p CROSS JOIN ${out}_cent cent) WHERE rn <= $top)"""
+
+  /** Exact cosine rerank of (qid, vid) candidate pairs `cand`: each
+    * query's 3 nearest candidates by (cosine desc, vid), as (qid, vid,
+    * cosine in basis points, rank), ordered by (qid, rank). */
+  private def rerankTop3(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
+    val q = vecs(s, d).select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
+    val t = vecs(s, d).select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb"))
+    cand.join(q, "qid").join(t, "vid")
+      .withColumn("cos", expr(dotExpr) / (col("na") * col("nb")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("qid").orderBy(col("cos").desc, col("vid"))))
+      .filter(col("rank") <= 3)
+      .select(col("qid"), col("vid"), d4(col("cos")).as("cosine"), col("rank"))
+      .orderBy("qid", "rank")
+  }
+
+  /** DuckDB twin of [[rerankTop3]] over the (qid, vid) relation `cand`. */
+  private def rerankTop3Sql(cand: String): String =
+    s"""SELECT qid, vid, cosine, rank FROM (
+          SELECT c.qid, c.vid,
+                 ${d4Sql(Shared.cosSql("q.embedding", "t.embedding"))} AS cosine,
+                 row_number() OVER (PARTITION BY c.qid
+                                    ORDER BY ${Shared.cosSql("q.embedding", "t.embedding")} DESC, c.vid) AS rank
+          FROM $cand c JOIN embeddings q ON q.vec_id = c.qid JOIN embeddings t ON t.vec_id = c.vid)
+        WHERE rank <= 3 ORDER BY qid, rank"""
+
   /** DuckDB twin of [[coSupply]]: the CTEs `inc` and `e`. */
   private val coSupplySql: String =
     """inc AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS v
@@ -639,16 +692,8 @@ object LlmExtras {
     "llm_semdedup" -> ((s, d) => {
       val n = embeddings(s, d).count()
       val k = math.max(8L, math.ceil(math.sqrt(n / 64.0)).toLong)
-      val cent = vecs(s, d).filter(col("vec_id") < k)
-        .select(col("vec_id").as("cid"), col("v").as("vb"), col("nrm").as("nb"))
-      val assign = vecs(s, d)
-        .select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
-        .join(broadcast(cent), lit(true))
-        .withColumn("ccos", expr(dotExpr) / (col("na") * col("nb")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid").as("cluster"), col("va"), col("na"))
+      val assign = nearestCentroids(s, d, vecs(s, d), k, 1)
+        .select(col("vec_id"), col("cid").as("cluster"), col("v").as("va"), col("nrm").as("na"))
       val l = assign.select(col("cluster"), col("vec_id").as("ia"),
         col("va"), col("na"))
       val r = assign.select(col("cluster").as("cr"), col("vec_id").as("ib"),
@@ -673,15 +718,8 @@ object LlmExtras {
     // scoring — then everything after the (cluster, label) agg is
     // metadata-sized.
     "llm_cluster_purity" -> ((s, d) => {
-      val cent = vecs(s, d).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("v").as("vb"), col("nrm").as("nb"))
-      val assign = vecs(s, d)
-        .select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
-        .join(broadcast(cent), lit(true))
-        .withColumn("ccos", expr(dotExpr) / (col("na") * col("nb")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))))
-        .filter(col("rn") === 1).select(col("vec_id"), col("cid").as("cluster"))
+      val assign = nearestCentroids(s, d, vecs(s, d), 8, 1)
+        .select(col("vec_id"), col("cid").as("cluster"))
       val cl = assign
         .join(embeddings(s, d).select(col("vec_id"), col("label")), "vec_id")
         .groupBy("cluster", "label").agg(count(lit(1)).as("c"))
@@ -702,30 +740,11 @@ object LlmExtras {
     // Shared.vecs checkpoint, so the parquet scan + norm pass run once per
     // process instead of once per leg.)
     "llm_sim_ann_ivf" -> ((s, d) => {
-      val cent = vecs(s, d).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("v").as("vb"), col("nrm").as("nb"))
-      def scored(src: DataFrame, idCol: String) = src
-        .select(col("vec_id").as(idCol), col("v").as("va"), col("nrm").as("na"))
-        .join(broadcast(cent), lit(true))
-        .withColumn("ccos", expr(dotExpr) / (col("na") * col("nb")))
-      val assign = scored(vecs(s, d), "vid")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("vid").orderBy(col("ccos").desc, col("cid"))))
-        .filter(col("rn") === 1).select("vid", "cid")
-      val probes = scored(vecs(s, d).filter(col("vec_id") < 10), "qid")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("qid").orderBy(col("ccos").desc, col("cid"))))
-        .filter(col("rn") <= 2).select("qid", "cid")
-      val q = vecs(s, d).select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-      val t = vecs(s, d).select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb"))
-      probes.join(assign, "cid").filter(col("vid") =!= col("qid"))
-        .join(q, "qid").join(t, "vid")
-        .withColumn("cos", expr(dotExpr) / (col("na") * col("nb")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("qid").orderBy(col("cos").desc, col("vid"))))
-        .filter(col("rank") <= 3)
-        .select(col("qid"), col("vid"), d4(col("cos")).as("cosine"), col("rank"))
-        .orderBy("qid", "rank")
+      val assign = nearestCentroids(s, d, vecs(s, d), 8, 1)
+        .select(col("vec_id").as("vid"), col("cid"))
+      val probes = nearestCentroids(s, d, vecs(s, d).filter(col("vec_id") < 10), 8, 2)
+        .select(col("vec_id").as("qid"), col("cid"))
+      rerankTop3(s, d, probes.join(assign, "cid").filter(col("vid") =!= col("qid")))
     }),
 
     // LSH-bucketed ANN — the OTHER scale path next to IVF: sign-of-dot
@@ -751,15 +770,7 @@ object LlmExtras {
       val cand = qb.join(cb, Seq("band", "bval"))
         .filter(col("qid") =!= col("vid"))
         .select("qid", "vid").distinct()
-      val q = all.select(col("vec_id").as("qid"), col("v").as("va"), col("nrm").as("na"))
-      val t = all.select(col("vec_id").as("vid"), col("v").as("vb"), col("nrm").as("nb"))
-      cand.join(q, "qid").join(t, "vid")
-        .withColumn("cos", expr(dotExpr) / (col("na") * col("nb")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("qid").orderBy(col("cos").desc, col("vid"))))
-        .filter(col("rank") <= 3)
-        .select(col("qid"), col("vid"), d4(col("cos")).as("cosine"), col("rank"))
-        .orderBy("qid", "rank")
+      rerankTop3(s, d, cand)
     }),
 
     // k-NN graph over the embedding corpus: every vector's 3 nearest
@@ -1655,15 +1666,7 @@ object LlmExtras {
     }),
 
     "llm_kmeans_step" -> ((s, d) => {
-      val cent = vecs(s, d).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("v").as("vb"), col("nrm").as("nb"))
-      val assign = vecs(s, d)
-        .select(col("vec_id"), col("v").as("va"), col("nrm").as("na"))
-        .join(broadcast(cent), lit(true))
-        .withColumn("ccos", expr(dotExpr) / (col("na") * col("nb")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))))
-        .filter(col("rn") === 1)
+      val assign = nearestCentroids(s, d, vecs(s, d), 8, 1)
         .select(col("vec_id"), col("cid").as("cluster"))
       val upd = assign
         .join(embeddings(s, d).select("vec_id", "embedding"), "vec_id")
@@ -2027,14 +2030,8 @@ object LlmExtras {
     // Same centroid-assignment CTE as semdedup/IVF, with the label carried
     // through; purity picks the (count desc, label) argmax per cluster.
     "llm_cluster_purity" ->
-      s"""WITH v AS (SELECT vec_id, embedding, label FROM embeddings),
-               cent AS (SELECT vec_id AS cid, embedding AS cv FROM v WHERE vec_id < 8),
-               assign AS (SELECT vec_id, cluster, label FROM (
-                   SELECT v.vec_id, cent.cid AS cluster, v.label,
-                          row_number() OVER (PARTITION BY v.vec_id
-                                             ORDER BY ${Shared.cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
-                   FROM v CROSS JOIN cent) WHERE rn = 1),
-               cl AS (SELECT cluster, label, count(*) AS c
+      s"""WITH ${nearestCentroidsSql("assign", "embeddings", "8", 1)},
+               cl AS (SELECT cid AS cluster, label, count(*) AS c
                       FROM assign GROUP BY 1, 2),
                r AS (SELECT cluster, label, c,
                             row_number() OVER (PARTITION BY cluster
@@ -2050,45 +2047,22 @@ object LlmExtras {
     // both engines); dropped = any same-cluster smaller-id neighbor at
     // cos >= 0.3 (NOT-EXISTS mirrored as a distinct-drop set).
     "llm_semdedup" ->
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-               params AS (SELECT greatest(8, CAST(ceil(sqrt(count(*) / 64.0)) AS BIGINT)) AS k
+      s"""WITH params AS (SELECT greatest(8, CAST(ceil(sqrt(count(*) / 64.0)) AS BIGINT)) AS k
                           FROM embeddings),
-               cent AS (SELECT vec_id AS cid, embedding AS cv FROM v, params WHERE vec_id < k),
-               assign AS (SELECT vec_id, cluster FROM (
-                   SELECT v.vec_id, cent.cid AS cluster,
-                          row_number() OVER (PARTITION BY v.vec_id
-                                             ORDER BY ${Shared.cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
-                   FROM v CROSS JOIN cent) WHERE rn = 1),
+               ${nearestCentroidsSql("assign", "embeddings", "(SELECT k FROM params)", 1)},
                dropped AS (SELECT DISTINCT b.vec_id FROM assign a
-                   JOIN assign b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-                   JOIN v va ON va.vec_id = a.vec_id
-                   JOIN v vb ON vb.vec_id = b.vec_id
-                   WHERE ${Shared.cosSql("va.embedding", "vb.embedding")} >= 0.3)
-          SELECT a.vec_id, a.cluster,
+                   JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id
+                   WHERE ${Shared.cosSql("a.embedding", "b.embedding")} >= 0.3)
+          SELECT a.vec_id, a.cid AS cluster,
                  CAST(CASE WHEN dr.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
           FROM assign a LEFT JOIN dropped dr ON dr.vec_id = a.vec_id
           ORDER BY a.vec_id""",
     "llm_sim_ann_ivf" ->
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-               cent AS (SELECT vec_id AS cid, embedding AS cv FROM v WHERE vec_id < 8),
-               assign AS (SELECT vec_id AS vid, cid FROM (
-                   SELECT v.vec_id, cent.cid,
-                          row_number() OVER (PARTITION BY v.vec_id
-                                             ORDER BY ${Shared.cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
-                   FROM v CROSS JOIN cent) WHERE rn = 1),
-               probes AS (SELECT qid, cid FROM (
-                   SELECT q.vec_id AS qid, cent.cid,
-                          row_number() OVER (PARTITION BY q.vec_id
-                                             ORDER BY ${Shared.cosSql("q.embedding", "cent.cv")} DESC, cent.cid) AS rn
-                   FROM v q CROSS JOIN cent WHERE q.vec_id < 10) WHERE rn <= 2)
-          SELECT qid, vid, cosine, rank FROM (
-            SELECT p.qid, a.vid,
-                   ${d4Sql(Shared.cosSql("q.embedding", "t.embedding"))} AS cosine,
-                   row_number() OVER (PARTITION BY p.qid
-                                      ORDER BY ${Shared.cosSql("q.embedding", "t.embedding")} DESC, a.vid) AS rank
-            FROM probes p JOIN assign a ON p.cid = a.cid AND a.vid <> p.qid
-            JOIN v q ON q.vec_id = p.qid JOIN v t ON t.vec_id = a.vid)
-          WHERE rank <= 3 ORDER BY qid, rank""",
+      s"""WITH ${nearestCentroidsSql("assign", "embeddings", "8", 1)},
+               ${nearestCentroidsSql("probes", "(SELECT * FROM embeddings WHERE vec_id < 10)", "8", 2)},
+               cand AS (SELECT p.vec_id AS qid, a.vec_id AS vid
+                        FROM probes p JOIN assign a ON p.cid = a.cid AND a.vec_id <> p.vec_id)
+          ${rerankTop3Sql("cand")}""",
     // Same 16-hyperplane sign signatures, 4x4-bit banding, bucket join,
     // exact rerank — dot folds mirrored op-for-op.
     "llm_sim_ann_lsh" ->
@@ -2105,13 +2079,7 @@ object LlmExtras {
                cand AS (SELECT DISTINCT q.vec_id AS qid, c.vec_id AS vid
                         FROM bands q JOIN bands c ON q.band = c.band AND q.bval = c.bval
                         WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id)
-          SELECT qid, vid, cosine, rank FROM (
-            SELECT cand.qid, cand.vid,
-                   ${d4Sql(Shared.cosSql("q.embedding", "t.embedding"))} AS cosine,
-                   row_number() OVER (PARTITION BY cand.qid
-                                      ORDER BY ${Shared.cosSql("q.embedding", "t.embedding")} DESC, cand.vid) AS rank
-            FROM cand JOIN v q ON q.vec_id = cand.qid JOIN v t ON t.vec_id = cand.vid)
-          WHERE rank <= 3 ORDER BY qid, rank""",
+          ${rerankTop3Sql("cand")}""",
     // Cluster labels joined to the llm_text_quality score; best =
     // row_number pick.
     "llm_dedup_keep_best" ->
@@ -2468,14 +2436,8 @@ object LlmExtras {
          ORDER BY 1, 2"""
     },
     "llm_kmeans_step" ->
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-               cent AS (SELECT vec_id AS cid, embedding AS cv FROM v WHERE vec_id < 8),
-               assign AS (SELECT vec_id, cluster FROM (
-                   SELECT v.vec_id, cent.cid AS cluster,
-                          row_number() OVER (PARTITION BY v.vec_id
-                                             ORDER BY ${Shared.cosSql("v.embedding", "cent.cv")} DESC, cent.cid) AS rn
-                   FROM v CROSS JOIN cent) WHERE rn = 1),
-               pts AS (SELECT a.cluster, e.pos - 1 AS dim, e.x
+      s"""WITH ${nearestCentroidsSql("assign", "embeddings", "8", 1)},
+               pts AS (SELECT a.cid AS cluster, e.pos - 1 AS dim, e.x
                        FROM (SELECT vec_id,
                                     unnest(range(1, len(embedding) + 1)) AS pos,
                                     unnest(embedding) AS x

@@ -931,12 +931,7 @@ object LlmPipeline {
     // frames, then a keyed (lang, prev) shuffle join — never broadcast
     // (bigram vocab grows with corpus), never corpus².
     "llm_ngram_entropy_rate" -> ((s, d) => {
-      val bg = documents(s, d)
-        .select(col("lang"), split(col("text"), " ").as("t"))
-        .select(col("lang"), explode(expr(
-          """transform(slice(t, 1, greatest(size(t) - 1, 0)),
-                       (x, i) -> struct(x AS prev, t[i + 1] AS w))""")).as("b"))
-        .select(col("lang"), col("b.prev").as("prev"), col("b.w").as("w"))
+      val bg = bigrams(s, d, "lang")
       val cb = bg.groupBy("lang", "prev", "w").agg(count(lit(1)).as("cb"))
       val cp = bg.groupBy("lang", "prev").agg(count(lit(1)).as("cp"))
       cb.join(cp, Seq("lang", "prev"))
@@ -956,18 +951,13 @@ object LlmPipeline {
     // on both engines. Scale: all LM tables are vocab-bounded broadcasts;
     // the held-out stream is one narrow pass + one doc groupBy.
     "llm_backoff_logprob" -> ((s, d) => {
-      val bigrams = documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("t"))
-        .select(col("doc_id"), explode(expr(
-          """transform(slice(t, 1, greatest(size(t) - 1, 0)),
-                       (x, i) -> struct(x AS prev, t[i + 1] AS w))""")).as("bg"))
-        .select(col("doc_id"), col("bg.prev").as("prev"), col("bg.w").as("w"))
-      val train = bigrams.filter(col("doc_id") % 5 =!= 0)
+      val bg = bigrams(s, d, "doc_id")
+      val train = bg.filter(col("doc_id") % 5 =!= 0)
       val cb = train.groupBy("prev", "w").agg(count(lit(1)).as("cb"))
       val cp = train.groupBy("prev").agg(count(lit(1)).as("cp"))
       val cu = train.groupBy("w").agg(count(lit(1)).as("cu"))
       val tot = train.agg(count(lit(1)).as("nt"), countDistinct("w").as("vv"))
-      bigrams.filter(col("doc_id") % 5 === 0)
+      bg.filter(col("doc_id") % 5 === 0)
         .join(broadcast(cb), Seq("prev", "w"), "left")
         .join(broadcast(cp), Seq("prev"), "left")
         .join(broadcast(cu), Seq("w"), "left")
@@ -985,17 +975,12 @@ object LlmPipeline {
     }),
 
     "llm_bigram_logprob" -> ((s, d) => {
-      val bigrams = documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("t"))
-        .select(col("doc_id"), explode(expr(
-          """transform(slice(t, 1, greatest(size(t) - 1, 0)),
-                       (x, i) -> struct(x AS prev, t[i + 1] AS w))""")).as("bg"))
-        .select(col("doc_id"), col("bg.prev").as("prev"), col("bg.w").as("w"))
-      val train = bigrams.filter(col("doc_id") % 5 =!= 0)
+      val bg = bigrams(s, d, "doc_id")
+      val train = bg.filter(col("doc_id") % 5 =!= 0)
       val cb = train.groupBy("prev", "w").agg(count(lit(1)).as("cb"))
       val cp = train.groupBy("prev").agg(count(lit(1)).as("cp"))
       val vv = train.agg(countDistinct("w").as("vv"))
-      bigrams.filter(col("doc_id") % 5 === 0)
+      bg.filter(col("doc_id") % 5 === 0)
         .join(broadcast(cb), Seq("prev", "w"), "left")
         .join(broadcast(cp), Seq("prev"), "left")
         .crossJoin(broadcast(vv))
@@ -1009,6 +994,23 @@ object LlmPipeline {
         .orderBy("doc_id")
     }),
   )
+
+  /** (key, prev, w): every adjacent word pair of each document, with the
+    * document's `key` column. */
+  private def bigrams(s: SparkSession, d: String, key: String): DataFrame =
+    documents(s, d)
+      .select(col(key), split(col("text"), " ").as("t"))
+      .select(col(key), explode(expr(
+        """transform(slice(t, 1, greatest(size(t) - 1, 0)),
+                     (x, i) -> struct(x AS prev, t[i + 1] AS w))""")).as("b"))
+      .select(col(key), col("b.prev").as("prev"), col("b.w").as("w"))
+
+  /** DuckDB twin of [[bigrams]]: the CTE `bg`. */
+  private def bigramsSql(key: String): String =
+    s"""bg AS (SELECT $key,
+                      unnest(string_split(text, ' ')[1:-2]) AS prev,
+                      unnest(string_split(text, ' ')[2:]) AS w
+               FROM documents)"""
 
   /** Portable 8-family salted-md5 MinHash signatures (doc_id, mh0..mh7):
     * one narrow distinct-token explode, then ONE doc_id-keyed
@@ -1359,10 +1361,7 @@ object LlmPipeline {
          FROM csw JOIN cw USING (w) JOIN ns USING (source) CROSS JOIN tt
          GROUP BY source ORDER BY source""",
     "llm_ngram_entropy_rate" ->
-      """WITH bg AS (SELECT lang,
-                            unnest(string_split(text, ' ')[1:-2]) AS prev,
-                            unnest(string_split(text, ' ')[2:]) AS w
-                     FROM documents),
+      s"""WITH ${bigramsSql("lang")},
               cb AS (SELECT lang, prev, w, count(*) AS cb FROM bg GROUP BY 1, 2, 3),
               cp AS (SELECT lang, prev, count(*) AS cp FROM bg GROUP BY 1, 2)
          SELECT lang, CAST(sum(cb) AS BIGINT) AS n_bigrams,
@@ -1370,10 +1369,7 @@ object LlmPipeline {
          FROM cb JOIN cp USING (lang, prev)
          GROUP BY lang ORDER BY lang""",
     "llm_backoff_logprob" ->
-      """WITH bg AS (SELECT doc_id,
-                            unnest(string_split(text, ' ')[1:-2]) AS prev,
-                            unnest(string_split(text, ' ')[2:]) AS w
-                     FROM documents),
+      s"""WITH ${bigramsSql("doc_id")},
               cb AS (SELECT prev, w, count(*) AS cb FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1, 2),
               cp AS (SELECT prev, count(*) AS cp FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1),
               cu AS (SELECT w, count(*) AS cu FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1),
@@ -1390,10 +1386,7 @@ object LlmPipeline {
          WHERE doc_id % 5 = 0
          GROUP BY doc_id ORDER BY doc_id""",
     "llm_bigram_logprob" ->
-      """WITH bg AS (SELECT doc_id,
-                            unnest(string_split(text, ' ')[1:-2]) AS prev,
-                            unnest(string_split(text, ' ')[2:]) AS w
-                     FROM documents),
+      s"""WITH ${bigramsSql("doc_id")},
               cb AS (SELECT prev, w, count(*) AS cb FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1, 2),
               cp AS (SELECT prev, count(*) AS cp FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1),
               vv AS (SELECT count(DISTINCT w) AS vv FROM bg WHERE doc_id % 5 <> 0)

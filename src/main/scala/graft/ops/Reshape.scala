@@ -4,7 +4,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
-import graft.Gates
 
 /** Reshaping / format-conversion ETL family: pivot, unpivot, calendar
   * gap-fill, date formatting, schema'd JSON parsing, base64/hex codecs.
@@ -13,6 +12,10 @@ import graft.Gates
   */
 object Reshape {
   private val eventTypes = Seq("click", "error", "purchase", "signup", "view")
+
+  /** The 30-day order month since [[Shared.TpchEpoch]]. */
+  private def month = expr(s"CAST(${Shared.tpchDay("o_orderdate")} div 30 AS BIGINT)")
+  private val monthSql = s"${Shared.tpchDaySql("o_orderdate")} // 30"
 
   val ops: Map[String, Q] = Map(
     // Largest-triangle downsampling per event-type series (the LTTB shape
@@ -87,11 +90,7 @@ object Reshape {
     // rollup — the only corpus-sized stage carries one row per (partition,
     // type, day).
     "ts_burstiness" -> ((s, d) =>
-      events(s, d)
-        .select(col("event_type"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT)""").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+      Shared.eventDaily(s, d, count(lit(1)).as("c"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_days"), sum("c").as("total"),
           sum(expr("c * c")).as("q"))
@@ -111,8 +110,7 @@ object Reshape {
       val byT = Window.partitionBy("event_type").orderBy("day")
       events(s, d)
         .select(col("event_type"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT)""").as("day"))
+          expr(s"CAST(${Shared.eventDay} AS BIGINT)").as("day"))
         .distinct()
         .withColumn("gap", col("day") - lag("day", 1).over(byT))
         .groupBy("event_type")
@@ -155,7 +153,7 @@ object Reshape {
     "ts_rfm_scores" -> ((s, d) => {
       val cust = orders(s, d)
         .select(col("o_custkey"),
-          expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') AS BIGINT)").as("day"),
+          expr(s"CAST(${Shared.tpchDay("o_orderdate")} AS BIGINT)").as("day"),
           money(col("o_totalprice")).as("cents"))
         .groupBy("o_custkey")
         .agg(max("day").as("last_day"), count(lit(1)).as("freq"), sum("cents").as("mon"))
@@ -202,11 +200,7 @@ object Reshape {
     // SST — both are emitted. Scale: one corpus-sized (type, day)
     // partial agg, then metadata-sized dow/total rollups.
     "ts_seasonality_strength" -> ((s, d) => {
-      val daily = events(s, d)
-        .select(col("event_type"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT)""").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+      val daily = Shared.eventDaily(s, d, count(lit(1)).as("c"))
         .localCheckpoint(false)
       // q_tot and its 1e6 scaling ride DECIMAL(38,0) (agg_gini accumulator
       // rule): BIGINT c² sums wrap silently in non-ANSI Spark at large day
@@ -240,10 +234,10 @@ object Reshape {
     "ts_fulfillment_lag" -> ((s, d) => {
       val lag = lineitem(s, d)
         .select(col("l_orderkey"),
-          expr("CAST(datediff(CAST(l_shipdate AS DATE), DATE'1995-01-01') AS BIGINT)").as("sd"))
+          expr(s"CAST(${Shared.tpchDay("l_shipdate")} AS BIGINT)").as("sd"))
         .groupBy("l_orderkey").agg(max("sd").as("last_ship"))
         .join(orders(s, d).select(col("o_orderkey"), col("o_orderpriority"),
-          expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') AS BIGINT)").as("od")),
+          expr(s"CAST(${Shared.tpchDay("o_orderdate")} AS BIGINT)").as("od")),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_orderpriority"), (col("last_ship") - col("od")).as("lag_days"))
       lag.groupBy("o_orderpriority")
@@ -262,8 +256,7 @@ object Reshape {
     "reshape_histogram2d" -> ((s, d) =>
       orders(s, d)
         .select(
-          expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') div 30 AS BIGINT)")
-            .as("month_idx"),
+          month.as("month_idx"),
           money(col("o_totalprice")).as("cents"))
         .select(col("month_idx"), expr("cents div 50000").as("price_bucket"))
         .groupBy("month_idx", "price_bucket").agg(count(lit(1)).as("n"))
@@ -277,8 +270,7 @@ object Reshape {
     "ts_churn_by_week" -> ((s, d) => {
       val um = events(s, d)
         .select(col("user_id"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') div 7 AS BIGINT)""").as("wk"))
+          expr(s"CAST(${Shared.eventDay} div 7 AS BIGINT)").as("wk"))
         .distinct()
         .localCheckpoint(false)
       um.as("a")
@@ -302,14 +294,7 @@ object Reshape {
     // divides, the reader does).
     "ts_mom_growth" -> ((s, d) => {
       val bySeg = Window.partitionBy("seg").orderBy("mo")
-      orders(s, d)
-        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
-          Gates.bytes(s, d, "customer"), Gates.DimCap),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment").as("seg"),
-          expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') div 30 AS BIGINT)")
-            .as("mo"))
-        .agg(moneySum(col("o_totalprice")).as("rev_cents"))
+      Shared.segRevenue(s, d, month.as("mo"), "rev_cents")
         .withColumn("prev_cents", lag("rev_cents", 1).over(bySeg))
         .filter(col("prev_cents").isNotNull)
         .select(col("seg"), col("mo"), col("rev_cents"), col("prev_cents"),
@@ -331,14 +316,7 @@ object Reshape {
     // segment, C(80,2) ≈ 3.2k pairs) — constant in corpus size, so the op
     // costs one scan at 100 TB exactly like at sf0.01.
     "ts_trend_mann_kendall" -> ((s, d) => {
-      val g = orders(s, d)
-        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
-          Gates.bytes(s, d, "customer"), Gates.DimCap),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment").as("seg"),
-          expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') div 30 AS BIGINT)")
-            .as("mo"))
-        .agg(moneySum(col("o_totalprice")).as("rev"))
+      val g = Shared.segRevenue(s, d, month.as("mo"), "rev")
       val pairs = g.select(col("seg"), col("mo").as("mo1"), col("rev").as("r1"))
         .join(g.select(col("seg").as("seg2"), col("mo").as("mo2"), col("rev").as("r2")),
           col("seg") === col("seg2") && col("mo1") < col("mo2"))
@@ -369,14 +347,7 @@ object Reshape {
     // collapse, the O(grid²) pair set is calendar-sized, and the median
     // window runs on those ~3.2k pairs per segment. Constant in corpus.
     "ts_theilsen_slope" -> ((s, d) => {
-      val g = orders(s, d)
-        .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
-          Gates.bytes(s, d, "customer"), Gates.DimCap),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment").as("seg"),
-          expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') div 30 AS BIGINT)")
-            .as("mo"))
-        .agg(moneySum(col("o_totalprice")).as("rev"))
+      val g = Shared.segRevenue(s, d, month.as("mo"), "rev")
       val slopes = g.select(col("seg"), col("mo").as("mo1"), col("rev").as("r1"))
         .join(g.select(col("seg").as("seg2"), col("mo").as("mo2"), col("rev").as("r2")),
           col("seg") === col("seg2") && col("mo1") < col("mo2"))
@@ -400,11 +371,7 @@ object Reshape {
     // lags run on the metadata-sized per-type daily frame.
     "ts_snaive_error" -> ((s, d) => {
       val byT = Window.partitionBy("event_type").orderBy("day")
-      events(s, d)
-        .select(col("event_type"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT)""").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+      Shared.eventDaily(s, d, count(lit(1)).as("c"))
         .withColumn("lag1", lag("c", 1).over(byT))
         .withColumn("lag7", lag("c", 7).over(byT))
         .filter(col("lag7").isNotNull && col("lag1").isNotNull)
@@ -442,8 +409,7 @@ object Reshape {
     "ts_active_lifetime" -> ((s, d) =>
       events(s, d)
         .select(col("user_id"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT)""").as("day"))
+          expr(s"CAST(${Shared.eventDay} AS BIGINT)").as("day"))
         .groupBy("user_id")
         .agg(min("day").as("first_day"), max("day").as("last_day"),
           countDistinct("day").as("active_days"), count(lit(1)).as("n_events"))
@@ -754,8 +720,7 @@ object Reshape {
     "ts_rolling_active" -> ((s, d) => {
       val ud = events(s, d)
         .select(col("user_id"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT)""").as("day"))
+          expr(s"CAST(${Shared.eventDay} AS BIGINT)").as("day"))
         .distinct()
       val span = ud.agg(min("day").as("lo"), max("day").as("hi"))
       ud.select(col("user_id"),
@@ -801,8 +766,7 @@ object Reshape {
     "ts_wow_delta" -> ((s, d) => {
       val wk = events(s, d)
         .select(col("event_type"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT) div 7""").as("wk"))
+          expr(s"CAST(${Shared.eventDay} AS BIGINT) div 7").as("wk"))
         .groupBy("event_type", "wk").agg(count(lit(1)).as("n"))
       wk.withColumn("prev_n",
           lag(col("n"), 1).over(Window.partitionBy("event_type").orderBy("wk")))
@@ -821,8 +785,7 @@ object Reshape {
     // itself is |weeks|² rows, metadata-sized at any stream size, so the
     // final cohort-size window is free.
     "ts_cohort_retention" -> ((s, d) => {
-      val wk = expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                     DATE'2024-01-01') AS BIGINT) div 7""")
+      val wk = expr(s"CAST(${Shared.eventDay} AS BIGINT) div 7")
       val act = events(s, d).select(col("user_id"), wk.as("wk")).distinct()
       val cohort = act.groupBy("user_id").agg(min("wk").as("cohort_wk"))
       act.join(cohort, "user_id")
@@ -880,12 +843,8 @@ object Reshape {
     // (type, day) sum; every window runs over the ≤ |days|·|types|-row
     // daily frame — metadata-sized for any corpus, like ts_seasonal_index.
     "ts_changepoint_cusum" -> ((s, d) => {
-      val day = expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                      DATE'2024-01-01') AS BIGINT)""")
       val byType = Window.partitionBy("event_type")
-      val scored = events(s, d)
-        .select(col("event_type"), day.as("day"), col("value"))
-        .groupBy("event_type", "day").agg(moneySum(col("value")).as("x"))
+      val scored = Shared.eventDaily(s, d, moneySum(col("value")).as("x"))
         .withColumn("k", row_number().over(byType.orderBy("day")).cast("long"))
         .withColumn("pre", sum("x").over(byType.orderBy("day")))
         .withColumn("n", count(lit(1)).over(byType))
@@ -911,11 +870,7 @@ object Reshape {
     // (type, day) sum; the |types|-row moment frame broadcasts back onto
     // the metadata-sized daily frame.
     "ts_anomaly_spc" -> ((s, d) => {
-      val day = expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                      DATE'2024-01-01') AS BIGINT)""")
-      val daily = events(s, d)
-        .select(col("event_type"), day.as("day"), col("value"))
-        .groupBy("event_type", "day").agg(moneySum(col("value")).as("x"))
+      val daily = Shared.eventDaily(s, d, moneySum(col("value")).as("x"))
       val st = daily.groupBy("event_type").agg(
         count(lit(1)).as("n"), sum("x").as("t"),
         sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("q"))
@@ -969,9 +924,8 @@ object Reshape {
                 FROM scored)
           WHERE rk = 1 ORDER BY event_type, bucket""",
     "ts_churn_by_week" ->
-      """WITH um AS (SELECT DISTINCT user_id,
-                            date_diff('day', DATE '2024-01-01',
-                                      CAST(date_trunc('day', ts) AS DATE)) // 7 AS wk
+      s"""WITH um AS (SELECT DISTINCT user_id,
+                            ${Shared.eventDaySql} // 7 AS wk
                      FROM events)
          SELECT CAST(a.wk AS BIGINT) AS wk, count(*) AS n_active,
                 count(b.user_id) AS n_retained,
@@ -980,12 +934,7 @@ object Reshape {
          FROM um a LEFT JOIN um b ON a.user_id = b.user_id AND b.wk = a.wk + 1
          GROUP BY a.wk ORDER BY wk""",
     "ts_mom_growth" ->
-      s"""WITH m AS (SELECT c_mktsegment AS seg,
-                            date_diff('day', DATE '1995-01-01',
-                                      CAST(o_orderdate AS DATE)) // 30 AS mo,
-                            ${moneySumSql("o_totalprice")} AS rev_cents
-                     FROM orders JOIN customer ON o_custkey = c_custkey
-                     GROUP BY 1, 2),
+      s"""WITH m AS (${Shared.segRevenueSql(s"$monthSql AS mo", "rev_cents")}),
               lg AS (SELECT seg, mo, rev_cents,
                             lag(rev_cents) OVER (PARTITION BY seg ORDER BY mo) AS prev_cents
                      FROM m)
@@ -997,12 +946,7 @@ object Reshape {
     // signed slopes, and the lower-median pick is a pure row_number
     // selection under the identical total order.
     "ts_theilsen_slope" ->
-      s"""WITH g AS (SELECT c_mktsegment AS seg,
-                            date_diff('day', DATE '1995-01-01',
-                                      CAST(o_orderdate AS DATE)) // 30 AS mo,
-                            ${moneySumSql("o_totalprice")} AS rev
-                     FROM orders JOIN customer ON o_custkey = c_custkey
-                     GROUP BY 1, 2),
+      s"""WITH g AS (${Shared.segRevenueSql(s"$monthSql AS mo", "rev")}),
               sl AS (SELECT a.seg, a.mo AS mo1, b.mo AS mo2,
                             CAST((1000000 * (b.rev - a.rev)) // (b.mo - a.mo) AS BIGINT) AS slope_micro
                      FROM g a JOIN g b ON a.seg = b.seg AND a.mo < b.mo),
@@ -1017,12 +961,7 @@ object Reshape {
     // Same grid, same pair algebra; DuckDB sign() is already integral and
     // all cross-multiplied operands are BIGINT-safe (S ≤ C(grid,2) ≈ 3.2k).
     "ts_trend_mann_kendall" ->
-      s"""WITH g AS (SELECT c_mktsegment AS seg,
-                            date_diff('day', DATE '1995-01-01',
-                                      CAST(o_orderdate AS DATE)) // 30 AS mo,
-                            ${moneySumSql("o_totalprice")} AS rev
-                     FROM orders JOIN customer ON o_custkey = c_custkey
-                     GROUP BY 1, 2),
+      s"""WITH g AS (${Shared.segRevenueSql(s"$monthSql AS mo", "rev")}),
               p AS (SELECT a.seg, CAST(sum(CAST(sign(b.rev - a.rev) AS BIGINT)) AS BIGINT) AS s_stat,
                            count(*) AS n_pairs
                     FROM g a JOIN g b ON a.seg = b.seg AND a.mo < b.mo
@@ -1038,11 +977,7 @@ object Reshape {
          FROM p JOIN ns USING (seg)
          ORDER BY seg""",
     "ts_snaive_error" ->
-      """WITH daily AS (SELECT event_type,
-                               date_diff('day', DATE '2024-01-01',
-                                         CAST(date_trunc('day', ts) AS DATE)) AS day,
-                               count(*) AS c
-                        FROM events GROUP BY 1, 2),
+      s"""WITH ${Shared.eventDailySql("count(*) AS c")},
               lg AS (SELECT event_type, c,
                             lag(c, 1) OVER (PARTITION BY event_type ORDER BY day) AS lag1,
                             lag(c, 7) OVER (PARTITION BY event_type ORDER BY day) AS lag7
@@ -1062,9 +997,8 @@ object Reshape {
                 max(10000 * errs // n) AS max_error_bp
          FROM hr GROUP BY 1 ORDER BY day_idx""",
     "ts_active_lifetime" ->
-      """WITH e AS (SELECT user_id,
-                           date_diff('day', DATE '2024-01-01',
-                                     CAST(date_trunc('day', ts) AS DATE)) AS day
+      s"""WITH e AS (SELECT user_id,
+                           ${Shared.eventDaySql} AS day
                     FROM events)
          SELECT user_id, CAST(min(day) AS BIGINT) AS first_day,
                 CAST(max(day) AS BIGINT) AS last_day,
@@ -1073,9 +1007,9 @@ object Reshape {
                 10000 * count(DISTINCT day) // CAST(max(day) - min(day) + 1 AS BIGINT) AS density_bp
          FROM e GROUP BY user_id ORDER BY user_id""",
     "ts_fulfillment_lag" ->
-      """WITH lag AS (SELECT o_orderpriority,
-                             max(date_diff('day', DATE '1995-01-01', CAST(l_shipdate AS DATE)))
-                               - max(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))) AS lag_days
+      s"""WITH lag AS (SELECT o_orderpriority,
+                             max(${Shared.tpchDaySql("l_shipdate")})
+                               - max(${Shared.tpchDaySql("o_orderdate")}) AS lag_days
                       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
                       GROUP BY o_orderpriority, l_orderkey)
          SELECT o_orderpriority, count(*) AS n_orders,
@@ -1084,15 +1018,14 @@ object Reshape {
                 CAST(max(lag_days) AS BIGINT) AS max_days
          FROM lag GROUP BY o_orderpriority ORDER BY o_orderpriority""",
     "reshape_histogram2d" ->
-      s"""SELECT date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) // 30 AS month_idx,
+      s"""SELECT $monthSql AS month_idx,
                  ${graft.Norm.moneySql("o_totalprice")} // 50000 AS price_bucket,
                  count(*) AS n
           FROM orders GROUP BY 1, 2 ORDER BY month_idx, price_bucket""",
     "ts_rfm_scores" -> {
       val monSql = s"CAST(sum(${graft.Norm.moneySql("o_totalprice")}) AS BIGINT)"
       s"""WITH cust AS (SELECT o_custkey,
-                               max(date_diff('day', DATE '1995-01-01',
-                                             CAST(o_orderdate AS DATE))) AS last_day,
+                               max(${Shared.tpchDaySql("o_orderdate")}) AS last_day,
                                count(*) AS freq, $monSql AS mon
                         FROM orders GROUP BY 1),
               base AS (SELECT o_custkey,
@@ -1119,11 +1052,7 @@ object Reshape {
          FROM sc ORDER BY o_custkey"""
     },
     "ts_seasonality_strength" ->
-      """WITH daily AS (SELECT event_type,
-                               date_diff('day', DATE '2024-01-01',
-                                         CAST(date_trunc('day', ts) AS DATE)) AS day,
-                               count(*) AS c
-                        FROM events GROUP BY 1, 2),
+      s"""WITH ${Shared.eventDailySql("count(*) AS c")},
               tot AS (SELECT event_type, count(*) AS n_days, CAST(sum(c) AS BIGINT) AS s_tot,
                              sum(c * c) AS q_tot
                       FROM daily GROUP BY 1),
@@ -1149,9 +1078,8 @@ object Reshape {
                 count(*) AS active_minutes
          FROM c GROUP BY 1, 2 ORDER BY event_type, day_idx""",
     "ts_gap_report" ->
-      """WITH daily AS (SELECT DISTINCT event_type,
-                               date_diff('day', DATE '2024-01-01',
-                                         CAST(date_trunc('day', ts) AS DATE)) AS day
+      s"""WITH daily AS (SELECT DISTINCT event_type,
+                               ${Shared.eventDaySql} AS day
                         FROM events),
               g AS (SELECT event_type, day,
                            day - lag(day) OVER (PARTITION BY event_type ORDER BY day) AS gap
@@ -1162,11 +1090,7 @@ object Reshape {
                 CAST(max(day) - min(day) + 1 AS BIGINT) AS span_days
          FROM g GROUP BY event_type ORDER BY event_type""",
     "ts_burstiness" ->
-      """WITH daily AS (SELECT event_type,
-                               date_diff('day', DATE '2024-01-01',
-                                         CAST(date_trunc('day', ts) AS DATE)) AS day,
-                               count(*) AS c
-                        FROM events GROUP BY 1, 2)
+      s"""WITH ${Shared.eventDailySql("count(*) AS c")}
          SELECT event_type,
                 count(*) AS n_days,
                 CAST(sum(c) AS BIGINT) AS total,
@@ -1368,9 +1292,8 @@ object Reshape {
                 10000 * n // CAST((SELECT sum(n) FROM c) AS BIGINT) AS share_bp
          FROM c ORDER BY dow, hour""",
     "ts_rolling_active" ->
-      """WITH ud AS (SELECT DISTINCT user_id,
-                            CAST(date_diff('day', DATE '2024-01-01',
-                                           CAST(date_trunc('day', ts) AS DATE)) AS BIGINT) AS day
+      s"""WITH ud AS (SELECT DISTINCT user_id,
+                            CAST(${Shared.eventDaySql} AS BIGINT) AS day
                      FROM events),
               span AS (SELECT min(day) AS lo, max(day) AS hi FROM ud),
               x AS (SELECT user_id, day + r AS rday
@@ -1393,18 +1316,16 @@ object Reshape {
          FROM g WHERE gap_s IS NOT NULL
          GROUP BY user_id ORDER BY user_id""",
     "ts_wow_delta" ->
-      """WITH wk AS (SELECT event_type,
-                            date_diff('day', DATE '2024-01-01',
-                                      CAST(date_trunc('day', ts) AS DATE)) // 7 AS wk,
+      s"""WITH wk AS (SELECT event_type,
+                            ${Shared.eventDaySql} // 7 AS wk,
                             count(*) AS n
                      FROM events GROUP BY 1, 2)
          SELECT event_type, wk, n,
                 n - COALESCE(lag(n, 1) OVER (PARTITION BY event_type ORDER BY wk), 0) AS delta
          FROM wk ORDER BY event_type, wk""",
     "ts_cohort_retention" ->
-      """WITH act AS (SELECT DISTINCT user_id,
-                             date_diff('day', DATE '2024-01-01',
-                                       CAST(date_trunc('day', ts) AS DATE)) // 7 AS wk
+      s"""WITH act AS (SELECT DISTINCT user_id,
+                             ${Shared.eventDaySql} // 7 AS wk
                       FROM events),
               coh AS (SELECT user_id, min(wk) AS cohort_wk FROM act GROUP BY user_id),
               m AS (SELECT cohort_wk, wk - cohort_wk AS week_offset,
@@ -1437,11 +1358,7 @@ object Reshape {
                 CAST(10000 * 24 * n // (sum(n) OVER (PARTITION BY event_type)) AS BIGINT) AS index_bp
          FROM h ORDER BY event_type, hr""",
     "ts_changepoint_cusum" ->
-      s"""WITH daily AS (SELECT event_type,
-                                date_diff('day', DATE '2024-01-01',
-                                          CAST(date_trunc('day', ts) AS DATE)) AS day,
-                                ${moneySumSql("value")} AS x
-                         FROM events GROUP BY 1, 2),
+      s"""WITH ${Shared.eventDailySql(s"${moneySumSql("value")} AS x")},
               sc AS (SELECT event_type, day,
                             count(*) OVER (PARTITION BY event_type)
                               * sum(x) OVER (PARTITION BY event_type ORDER BY day)
@@ -1456,11 +1373,7 @@ object Reshape {
                FROM sc)
          WHERE rn = 1 ORDER BY event_type""",
     "ts_anomaly_spc" ->
-      s"""WITH daily AS (SELECT event_type,
-                                date_diff('day', DATE '2024-01-01',
-                                          CAST(date_trunc('day', ts) AS DATE)) AS day,
-                                ${moneySumSql("value")} AS x
-                         FROM events GROUP BY 1, 2),
+      s"""WITH ${Shared.eventDailySql(s"${moneySumSql("value")} AS x")},
               st AS (SELECT event_type, count(*) AS n, sum(x) AS t,
                             sum(CAST(x AS HUGEINT) * x) AS q
                      FROM daily GROUP BY 1)

@@ -93,7 +93,7 @@ object Scalars {
           quarter(col("o_orderdate")).as("q"),
           date_trunc("month", col("o_orderdate")).cast("date").as("month_start"),
           last_day(col("o_orderdate")).as("month_end"),
-          datediff(col("o_orderdate").cast("date"), lit("1995-01-01").cast("date")).as("days_since"),
+          expr(Shared.tpchDay("o_orderdate")).as("days_since"),
           date_add(col("o_orderdate").cast("date"), 30).as("plus30"))
         .orderBy("o_orderkey").limit(50)),
 
@@ -376,13 +376,13 @@ object Scalars {
                 unnest(string_split(text, ' ')) AS token
          FROM documents WHERE doc_id < 5 ORDER BY doc_id, pos""",
     "date_parts" ->
-      """SELECT o_orderkey, year(o_orderdate) AS y, month(o_orderdate) AS m,
+      s"""SELECT o_orderkey, year(o_orderdate) AS y, month(o_orderdate) AS m,
                 dayofmonth(o_orderdate) AS dom,
                 CAST(extract(dow FROM o_orderdate) + 1 AS INTEGER) AS dow,
                 quarter(o_orderdate) AS q,
                 CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
                 last_day(o_orderdate) AS month_end,
-                date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since,
+                ${Shared.tpchDaySql("o_orderdate")} AS days_since,
                 CAST(o_orderdate AS DATE) + 30 AS plus30
          FROM orders ORDER BY o_orderkey LIMIT 50""",
     "ts_parts" ->

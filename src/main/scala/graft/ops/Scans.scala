@@ -924,25 +924,18 @@ object Scans {
       val base = documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           (col("doc_id") % 3).as("bucket"))
-      // Overlapped fixture writes (r13, opt guide §2.6): the 15 per-dir
-      // writes are independent single-file jobs that the driver previously
-      // submitted SEQUENTIALLY — 15 × job latency was this op's dominant
-      // cost. Spark's scheduler runs concurrent jobs fine; submit them from
-      // a bounded pool and let tasks back-fill idle cores. Each job owns
-      // its private target dir, so there is no commit-protocol overlap.
-      locally {
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val writes = for (lang <- Seq("de", "en", "es", "fr", "zh"); b <- 0 to 2) yield Future {
-          base.filter(col("lang") === lang && col("bucket") === b)
-            .select("doc_id", "lang", "n_chars")
-            .coalesce(1).write.mode("overwrite").parquet(s"$root/$lang/b$b")
-        }
-        try Await.result(Future.sequence(writes), Duration.Inf)
-        finally pool.shutdown()
+      // Overlapped fixture writes: the 15 per-dir writes are independent
+      // single-file jobs, and submitted one by one their job latency was
+      // this op's dominant cost. Spark's scheduler runs concurrent jobs
+      // fine, so they run side by side and tasks back-fill idle cores. Each
+      // job owns its private target dir, so there is no commit-protocol
+      // overlap, and a failure surfaces only after every write has ended.
+      val writes = for (lang <- Seq("de", "en", "es", "fr", "zh"); b <- 0 to 2) yield { () =>
+        base.filter(col("lang") === lang && col("bucket") === b)
+          .select("doc_id", "lang", "n_chars")
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/$lang/b$b")
       }
+      graft.Scale.runAll(writes: _*)
       val glob = s.read.parquet(s"$root/*/b1")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
         .select(lit("glob_bucket1").as("mode"), col("n_docs"), col("total_chars"))

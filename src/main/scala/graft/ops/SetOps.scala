@@ -72,8 +72,7 @@ object SetOps {
         .mkString(" + ")
       events(s, d)
         .select(graft.Norm.money(col("value")).as("cents"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT)""").as("y"))
+          expr(s"CAST(${Shared.eventDay} AS BIGINT)").as("y"))
         .select(expr("cents div 100").as("x"), col("y"))
         .select(expr(s"CAST($interleave AS BIGINT)").as("z"))
         .groupBy(expr("z div 1024").as("z_bucket"))
@@ -187,7 +186,7 @@ object SetOps {
           expr("CAST(o_custkey % 1024 AS BIGINT)").as("bucket"))
         .unionByName(orders(s, d).select(
           expr("'order_day'").as("key_name"),
-          expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1995-01-01') AS BIGINT)")
+          expr(s"CAST(${Shared.tpchDay("o_orderdate")} AS BIGINT)")
             .as("bucket")))
       val counts = cands.groupBy("key_name", "bucket").agg(count(lit(1)).as("n"))
         .localCheckpoint(false)
@@ -597,8 +596,7 @@ object SetOps {
         s"((((x >> $i) & 1) << ${2 * i}) + (((y >> $i) & 1) << ${2 * i + 1}))")
         .mkString(" + ")
       s"""WITH b AS (SELECT ${graft.Norm.moneySql("value")} // 100 AS x,
-                            date_diff('day', DATE '2024-01-01',
-                                      CAST(date_trunc('day', ts) AS DATE)) AS y
+                            ${Shared.eventDaySql} AS y
                      FROM events),
               z AS (SELECT CAST($interleave AS BIGINT) AS z FROM b)
          SELECT z // 1024 AS z_bucket, count(*) AS n,
@@ -606,12 +604,11 @@ object SetOps {
          FROM z GROUP BY 1 ORDER BY 1"""
     },
     "util_key_entropy" ->
-      """WITH cands AS (SELECT 'custkey_mod1024' AS key_name,
+      s"""WITH cands AS (SELECT 'custkey_mod1024' AS key_name,
                                CAST(o_custkey % 1024 AS BIGINT) AS bucket FROM orders
                         UNION ALL
                         SELECT 'order_day' AS key_name,
-                               CAST(date_diff('day', DATE '1995-01-01',
-                                              CAST(o_orderdate AS DATE)) AS BIGINT) AS bucket
+                               CAST(${Shared.tpchDaySql("o_orderdate")} AS BIGINT) AS bucket
                         FROM orders),
               c AS (SELECT key_name, bucket, count(*) AS n FROM cands GROUP BY 1, 2),
               t AS (SELECT key_name, CAST(sum(n) AS BIGINT) AS t, count(*) AS n_buckets

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Gates
-import graft.Norm.money
+import graft.Norm.{money, moneySum, moneySumSql}
 import graft.Tables._
 
 /** Parking lot for DataFrames an op must `persist()` but cannot itself
@@ -127,6 +127,58 @@ private[graft] object Shared {
         Seq("l_returnflag", "cents"))
       .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("w"))
       .localCheckpoint(false)
+
+  // Day indexes (SURVEY §1.4): every timestamp reduces to whole days since
+  // a fixed epoch, so both engines hash the same integers. Events count
+  // from EventEpoch after truncating `ts` to the second, TPC-H dates from
+  // TpchEpoch. The indexes are INT expression text; each call site keeps
+  // its own CAST AS BIGINT and week or month division around them.
+  val EventEpoch = "2024-01-01"
+  val TpchEpoch = "1995-01-01"
+
+  /** Days from [[EventEpoch]] to the event's `ts`. */
+  val eventDay: String =
+    s"datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE), DATE'$EventEpoch')"
+
+  /** DuckDB twin of [[eventDay]]. */
+  val eventDaySql: String =
+    s"date_diff('day', DATE '$EventEpoch', CAST(date_trunc('day', ts) AS DATE))"
+
+  /** Days from [[TpchEpoch]] to the date column `c`. */
+  def tpchDay(c: String): String = s"datediff(CAST($c AS DATE), DATE'$TpchEpoch')"
+
+  /** DuckDB twin of [[tpchDay]]. */
+  def tpchDaySql(c: String): String = s"date_diff('day', DATE '$TpchEpoch', CAST($c AS DATE))"
+
+  /** The (event_type, day: BIGINT [[eventDay]]) grid of the events with
+    * one `measure` per cell. */
+  def eventDaily(s: SparkSession, d: String, measure: Column): DataFrame =
+    events(s, d).withColumn("day", expr(s"CAST($eventDay AS BIGINT)"))
+      .groupBy("event_type", "day").agg(measure)
+
+  /** DuckDB twin of [[eventDaily]]: the CTE `daily`, with the select-list
+    * item `measure`. */
+  def eventDailySql(measure: String): String =
+    s"""daily AS (SELECT event_type, $eventDaySql AS day, $measure
+                  FROM events GROUP BY 1, 2)"""
+
+  /** Exact order revenue per (seg = the customer's market segment, `key`),
+    * in cents as `rev`. The customer dimension broadcasts under
+    * [[Gates.DimCap]]. */
+  def segRevenue(s: SparkSession, d: String, key: Column, rev: String): DataFrame =
+    orders(s, d)
+      .join(Gates.broadcastUnder(customer(s, d).select("c_custkey", "c_mktsegment"),
+        Gates.bytes(s, d, "customer"), Gates.DimCap),
+        col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_mktsegment").as("seg"), key)
+      .agg(moneySum(col("o_totalprice")).as(rev))
+
+  /** DuckDB twin of [[segRevenue]]: a SELECT over the select-list item
+    * `key`. */
+  def segRevenueSql(key: String, rev: String): String =
+    s"""SELECT c_mktsegment AS seg, $key, ${moneySumSql("o_totalprice")} AS $rev
+        FROM orders JOIN customer ON o_custkey = c_custkey
+        GROUP BY 1, 2"""
 
   /** The `llm_text_quality` composite 0.5·min(n/50, 1) + 0.3·(1 − st/n)
     * + 0.2·(1 − np/len) in integer basis points, exactly, over the columns

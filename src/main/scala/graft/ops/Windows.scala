@@ -426,11 +426,7 @@ object Windows {
     // days, so Σx² ·7 > (Σx)² strictly) — no division-by-zero branch
     // exists on either engine.
     "win_rolling_slope" -> ((s, d) => {
-      val daily = events(s, d)
-        .select(col("event_type"),
-          expr("""CAST(datediff(CAST(date_trunc('day', date_trunc('second', ts)) AS DATE),
-                                DATE'2024-01-01') AS BIGINT)""").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+      val daily = Shared.eventDaily(s, d, count(lit(1)).as("c"))
       val w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-6, 0)
       daily
         .select(col("event_type"), col("day"), col("c"),
@@ -455,7 +451,7 @@ object Windows {
       val w = Window.partitionBy("user_id").orderBy("day")
       days
         .withColumn("grp",
-          datediff(col("day"), lit("2024-01-01").cast("date")) - row_number().over(w))
+          datediff(col("day"), lit(Shared.EventEpoch).cast("date")) - row_number().over(w))
         .groupBy("user_id", "grp").agg(count(lit(1)).as("len"))
         .groupBy("user_id")
         .agg(max("len").as("max_streak"), count(lit(1)).as("n_islands"))
@@ -804,11 +800,7 @@ object Windows {
          FROM e ORDER BY user_id, v, event_id LIMIT 500"""
     },
     "win_rolling_slope" ->
-      """WITH daily AS (SELECT event_type,
-                               date_diff('day', DATE '2024-01-01',
-                                         CAST(date_trunc('day', ts) AS DATE)) AS day,
-                               count(*) AS c
-                        FROM events GROUP BY 1, 2),
+      s"""WITH ${Shared.eventDailySql("count(*) AS c")},
               r AS (SELECT event_type, day, c,
                            count(*) OVER w AS n,
                            CAST(sum(day) OVER w AS BIGINT) AS sx,
@@ -825,10 +817,10 @@ object Windows {
                            / (7 * sx2 - sx * sx)) AS BIGINT) AS slope_micro
          FROM r WHERE n = 7 ORDER BY event_type, day""",
     "win_streak" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
+      s"""WITH days AS (SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
                        FROM events),
               isl AS (SELECT user_id,
-                             date_diff('day', DATE '2024-01-01', day)
+                             date_diff('day', DATE '${Shared.EventEpoch}', day)
                                - row_number() OVER (PARTITION BY user_id ORDER BY day) AS grp
                       FROM days),
               runs AS (SELECT user_id, grp, count(*) AS len FROM isl GROUP BY user_id, grp)

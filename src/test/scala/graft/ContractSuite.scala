@@ -108,6 +108,17 @@ class ContractSuite extends AnyFunSuite {
     assert(views == Seq("graft/ops/package.scala"), s"bind temp views through withTempViews: $views")
   }
 
+  test("src/main has one day epoch per calendar, one centroid assignment, one bigram frame and no hand-rolled futures") {
+    val epochs = filesMatching("""DATE ?'(2024|1995)-01-01'|"(2024|1995)-01-01"""").distinct
+    assert(epochs == Seq("graft/ops/Shared.scala"),
+      s"index days through Shared.eventDay / Shared.tpchDay (and their Sql twins): $epochs")
+    for (tok <- Seq("""col("ccos").desc, col("cid")""", """cent.cv")} DESC, cent.cid"""))
+      assert(filesUsing(tok).size == 1, s"assign centroids through LlmExtras.nearestCentroids(Sql): $tok")
+    for (tok <- Seq("struct(x AS prev", "[1:-2]) AS prev"))
+      assert(filesUsing(tok).size == 1, s"explode bigrams through LlmPipeline.bigrams(Sql): $tok")
+    assert(filesUsing("Future.sequence").isEmpty, "run concurrent tasks through Scale.runAll")
+  }
+
   test("every scratchDir call site passes its own literal tag") {
     val tags = mainSources.flatMap { case (_, src) =>
       "scratchDir\\(d, \"([^\"]+)\"\\)".r.findAllMatchIn(src).map(_.group(1))

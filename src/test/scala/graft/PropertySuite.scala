@@ -587,4 +587,55 @@ class PropertySuite extends AnyFunSuite {
       s"both cuts must cross in bucket 0: $rows")
     assert(rows == want.collect().sortBy(_.getString(0)).toSeq)
   }
+
+  test("Shared.eventDay == java.time whole days since the event epoch, on either side of midnight") {
+    import java.time.{LocalDate, LocalDateTime}
+    import java.time.temporal.ChronoUnit
+    val sp = s; import sp.implicits._
+    val epoch = LocalDate.parse(graft.ops.Shared.EventEpoch)
+    // the last microsecond of a day and the first of the next, around the
+    // epoch, a leap day and a year end
+    val edges = Seq("2023-12-31", "2024-01-01", "2024-02-28", "2024-02-29", "2024-12-31")
+      .flatMap { d =>
+        val day = LocalDate.parse(d)
+        Seq(day.atTime(23, 59, 59, 999999000), day.plusDays(1).atStartOfDay())
+      }
+    val micros = Gen.chooseNum(-40L * 86400000000L, 800L * 86400000000L)
+    val random = samples(micros, 200).map(us => epoch.atStartOfDay().plus(us, ChronoUnit.MICROS))
+    val ts: Seq[LocalDateTime] = edges ++ random
+    val got = ts.zipWithIndex.toDF("ts", "i")
+      .select(col("i"), expr(graft.ops.Shared.eventDay).cast("long"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    ts.zipWithIndex.foreach { case (t, i) =>
+      assert(got(i) == ChronoUnit.DAYS.between(epoch, t.toLocalDate), s"ts=$t")
+    }
+  }
+
+  test("nearestCentroids: identical centroids tie to the lower cid, and top-2 keeps both in cid order") {
+    val sp = s; import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_centroids").toString
+    val vec = Gen.listOfN(6, Gen.chooseNum(-1.0f, 1.0f)).map(_.toArray)
+    val twin = Array(0.5f, -0.25f, 1.0f, 0.0f, 0.75f, -1.0f)
+    // centroids: vec_id 0 and 1 carry the same vector, 2 another one
+    val vs = Seq(twin, twin, Array(-1.0f, 0.5f, 0.25f, 1.0f, -0.5f, 0.0f)) ++ samples(vec, 60)
+    vs.zipWithIndex.map { case (v, i) => (i.toLong, v, 0L) }.toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    // the same index-order double fold as graft_dot
+    def dot(a: Array[Float], b: Array[Float]): Double =
+      a.indices.foldLeft(0.0)((acc, j) => acc + a(j).toDouble * b(j).toDouble)
+    def cos(a: Array[Float], b: Array[Float]): Double =
+      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    for (top <- Seq(1, 2)) {
+      val got = graft.ops.LlmExtras.nearestCentroids(s, dir, graft.ops.Shared.vecs(s, dir), 3, top)
+        .select("vec_id", "cid").as[(Long, Long)].collect()
+        .groupBy(_._1).map { case (id, r) => id -> r.map(_._2).sorted.toSeq }
+      val want = vs.zipWithIndex.map { case (v, i) =>
+        i.toLong -> (0 until 3).sortBy(c => (-cos(v, vs(c)), c)).take(top).map(_.toLong).sorted
+      }.toMap
+      assert(got == want, s"top=$top")
+      if (top == 1) assert(!got.values.exists(_ == Seq(1L)), "a tie must go to the lower cid")
+      else assert(got.values.count(_ == Seq(0L, 1L)) > 0 && !got.values.exists(_ == Seq(1L, 2L)),
+        "tied centroids are kept together, the lower cid first")
+    }
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 
 /** Scale techniques that don't fit a single SURVEY §2 op key but are part of
-  * the 100 TB design surface: skew-salted joins, partitioned layout writers,
+  * the 100 TB design surface: skew-salted joins, connected components,
   * and bucketed (shuffle-free) join layouts. Exercised by `ScaleSuite`.
   * Sizing rules for every knob here (salt buckets, bucket counts, CC
   * checkpoint cadence) are centralized in SCALE_TUNING.md.
@@ -120,12 +120,6 @@ object Scale {
     lbl1.join(labels.select(col("doc_id").as("lbl"), col("lbl").as("flbl")), Seq("lbl"), "left")
       .select(col("doc_id"), coalesce(col("flbl"), col("lbl")).as("cluster_rep"))
   }
-
-  /** Write `df` as a directory tree partitioned by `partCols` — the layout
-    * that turns a 100 TB scan plus a partition predicate into a directory
-    * listing. Reads back with `spark.read.parquet(path)`. */
-  def writePartitioned(df: DataFrame, path: String, partCols: String*): Unit =
-    df.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
 
   /** Run `tasks` on threads of their own and return once EVERY task has
     * finished. The first failure is thrown only then (the others ride along

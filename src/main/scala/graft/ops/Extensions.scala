@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
+import graft.sources.GraftRangeTable
 
 /** SURVEY.md §2.K — user-defined function surface, public API only.
   *
@@ -165,9 +166,7 @@ object Extensions {
 
   val oracle: Map[String, String] = Map(
     "catalog_v2_function" ->
-      """WITH t AS (SELECT range AS id, range % 100 AS bucket,
-                           ['a','b','c','d','e'][CAST(range % 5 AS INT) + 1] AS tag2
-                    FROM range(50000))
+      s"""WITH t AS (SELECT id, bucket, tag AS tag2 FROM (${GraftRangeTable.sql(50000)}))
          SELECT tag2, count(*) AS n, CAST(sum(bucket * bucket) AS BIGINT) AS ssq
          FROM t WHERE id >= 1000 AND id < 41000
          GROUP BY tag2 ORDER BY tag2""",

@@ -1,9 +1,11 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Norm._
 import graft.Tables._
+import graft.sources.GraftRangeTable
 import graft.Gates
 
 /** SURVEY.md §2.C — joins.
@@ -29,9 +31,7 @@ object Joins {
     * from thousands of mappers). The declared AQE op passes 16 to model
     * that reality; the salted twin doesn't need it (salting re-keys the
     * rows themselves, not the partition boundaries). */
-  private[graft] def skewAqeJoin(s: org.apache.spark.sql.SparkSession, d: String,
-                                 mappers: Int = 0)
-      : org.apache.spark.sql.DataFrame = {
+  private[graft] def skewAqeJoin(s: SparkSession, d: String, mappers: Int = 0): DataFrame = {
     val fact0 = lineitem(s, d).select(
       expr("CASE WHEN l_orderkey % 4 = 0 THEN l_orderkey % 97 ELSE CAST(0 AS BIGINT) END")
         .as("hot_key"),
@@ -40,6 +40,40 @@ object Joins {
     val dim = s.range(0, 97).select(col("id").as("hot_key"),
       (col("id") % 5).as("dim_grp"))
     fact.join(dim, "hot_key")
+  }
+
+  /** The purchases among the click and purchase events, as (event_id,
+    * user_id, event_type, ts_s) plus, per flag, the user's preceding click
+    * `last_click_ts` and following click `next_click_ts` in (ts_s,
+    * event_id) order. Each flag adds one user_id-partitioned window. */
+  private def clickAsof(s: SparkSession, d: String, prev: Boolean, next: Boolean): DataFrame = {
+    val ev = events(s, d)
+      .filter(col("event_type").isin("click", "purchase"))
+      .select(col("event_id"), col("user_id"), col("event_type"), tsec(col("ts")).as("ts_s"))
+    val byUser = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
+    val click = when(col("event_type") === "click", col("ts_s"))
+    val withPrev = if (!prev) ev else ev.withColumn("last_click_ts",
+      last(click, ignoreNulls = true).over(byUser.rowsBetween(Window.unboundedPreceding, -1)))
+    val withNext = if (!next) withPrev else withPrev.withColumn("next_click_ts",
+      first(click, ignoreNulls = true).over(byUser.rowsBetween(1, Window.unboundedFollowing)))
+    withNext.filter(col("event_type") === "purchase")
+  }
+
+  /** DuckDB twin of [[clickAsof]]: a SELECT of the same columns. */
+  private def clickAsofSql(prev: Boolean, next: Boolean): String = {
+    def click(fn: String, frame: String, as: String): String =
+      s"""$fn(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
+            OVER (PARTITION BY user_id ORDER BY ts_s, event_id ROWS BETWEEN $frame) AS $as"""
+    val clicks = Seq(
+      prev -> click("last_value", "UNBOUNDED PRECEDING AND 1 PRECEDING", "last_click_ts"),
+      next -> click("first_value", "1 FOLLOWING AND UNBOUNDED FOLLOWING", "next_click_ts"))
+      .collect { case (true, c) => s", $c" }.mkString
+    s"""SELECT * FROM (
+          SELECT event_id, user_id, event_type, ts_s$clicks
+          FROM (SELECT event_id, user_id, event_type,
+                       CAST(date_trunc('second', ts) AS TIMESTAMP) AS ts_s
+                FROM events WHERE event_type IN ('click','purchase')))
+        WHERE event_type = 'purchase'"""
   }
 
   val ops: Map[String, Q] = Map(
@@ -236,18 +270,10 @@ object Joins {
     // Event-time as-of: for each purchase, the most recent preceding click by
     // the same user. One shuffle on user_id + ordered window scan; `last(...,
     // ignoreNulls)` carries the latest click timestamp forward.
-    "join_asof" -> ((s, d) => {
-      val ev = events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_id"), col("user_id"), col("event_type"), tsec(col("ts")).as("ts_s"))
-      val w = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      ev.withColumn("last_click_ts",
-          last(when(col("event_type") === "click", col("ts_s")), ignoreNulls = true).over(w))
-        .filter(col("event_type") === "purchase")
+    "join_asof" -> ((s, d) =>
+      clickAsof(s, d, prev = true, next = false)
         .select("user_id", "event_id", "ts_s", "last_click_ts")
-        .orderBy("user_id", "event_id")
-    }),
+        .orderBy("user_id", "event_id")),
 
     // As-of with TOLERANCE (the pandas merge_asof(tolerance=) / QuestDB
     // semantic): the preceding click only counts if it is within 30
@@ -255,54 +281,27 @@ object Joins {
     // window. Same single user_id-partitioned window as join_asof; the
     // tolerance is a post-window CASE on integer-second distance, so the
     // variant costs nothing extra at scale.
-    "join_asof_tolerance" -> ((s, d) => {
-      val ev = events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_id"), col("user_id"), col("event_type"), tsec(col("ts")).as("ts_s"))
-      val w = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      ev.withColumn("last_click_ts",
-          last(when(col("event_type") === "click", col("ts_s")), ignoreNulls = true).over(w))
-        .filter(col("event_type") === "purchase")
+    "join_asof_tolerance" -> ((s, d) =>
+      clickAsof(s, d, prev = true, next = false)
         .select(col("user_id"), col("event_id"), col("ts_s"),
           when(col("last_click_ts") >= col("ts_s") - expr("INTERVAL 30 MINUTES"),
             col("last_click_ts")).as("click_within_ts"),
           when(col("last_click_ts") >= col("ts_s") - expr("INTERVAL 30 MINUTES"),
             expr("timestampdiff(SECOND, last_click_ts, ts_s)")).as("gap_s"))
-        .orderBy("user_id", "event_id")
-    }),
+        .orderBy("user_id", "event_id")),
 
     // Forward as-of: for each purchase, the NEXT click by the same user
     // (lookahead window mirror of join_asof).
-    "join_asof_forward" -> ((s, d) => {
-      val ev = events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_id"), col("user_id"), col("event_type"), tsec(col("ts")).as("ts_s"))
-      val w = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
-        .rowsBetween(1, Window.unboundedFollowing)
-      ev.withColumn("next_click_ts",
-          first(when(col("event_type") === "click", col("ts_s")), ignoreNulls = true).over(w))
-        .filter(col("event_type") === "purchase")
+    "join_asof_forward" -> ((s, d) =>
+      clickAsof(s, d, prev = false, next = true)
         .select("user_id", "event_id", "ts_s", "next_click_ts")
-        .orderBy("user_id", "event_id")
-    }),
+        .orderBy("user_id", "event_id")),
 
     // Nearest as-of: for each purchase, the click (either direction) with the
     // smallest time distance; ties resolve to the PRECEDING click. Distance
     // is integer seconds, so no float can disagree between engines.
-    "join_asof_nearest" -> ((s, d) => {
-      val ev = events(s, d)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_id"), col("user_id"), col("event_type"), tsec(col("ts")).as("ts_s"))
-      val wPrev = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wNext = Window.partitionBy("user_id").orderBy("ts_s", "event_id")
-        .rowsBetween(1, Window.unboundedFollowing)
-      ev.withColumn("last_click_ts",
-          last(when(col("event_type") === "click", col("ts_s")), ignoreNulls = true).over(wPrev))
-        .withColumn("next_click_ts",
-          first(when(col("event_type") === "click", col("ts_s")), ignoreNulls = true).over(wNext))
-        .filter(col("event_type") === "purchase")
+    "join_asof_nearest" -> ((s, d) =>
+      clickAsof(s, d, prev = true, next = true)
         .withColumn("nearest_click_ts",
           when(col("last_click_ts").isNull, col("next_click_ts"))
             .when(col("next_click_ts").isNull, col("last_click_ts"))
@@ -313,8 +312,7 @@ object Joins {
         .withColumn("dist_s",
           abs(unix_timestamp(col("nearest_click_ts")) - unix_timestamp(col("ts_s"))))
         .select("user_id", "event_id", "ts_s", "nearest_click_ts", "dist_s")
-        .orderBy("user_id", "event_id")
-    }),
+        .orderBy("user_id", "event_id")),
 
     // TPC-H Q5 shape: the three dimension legs are broadcast; only
     // customer⋈orders⋈lineitem shuffles.
@@ -764,65 +762,32 @@ object Joins {
     // Same window emulation as the Spark side for semantic identity
     // (SURVEY §2.C join_asof).
     "join_asof" ->
-      """SELECT user_id, event_id, ts_s, last_click_ts FROM (
-           SELECT user_id, event_id, event_type, ts_s,
-                  last_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
-                    OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_ts
-           FROM (SELECT event_id, user_id, event_type,
-                        CAST(date_trunc('second', ts) AS TIMESTAMP) AS ts_s
-                 FROM events WHERE event_type IN ('click','purchase')))
-         WHERE event_type = 'purchase' ORDER BY user_id, event_id""",
+      s"""SELECT user_id, event_id, ts_s, last_click_ts
+          FROM (${clickAsofSql(prev = true, next = false)}) ORDER BY user_id, event_id""",
     "join_asof_tolerance" ->
-      """SELECT user_id, event_id, ts_s,
-                CASE WHEN last_click_ts >= ts_s - INTERVAL '30 minutes'
-                     THEN last_click_ts END AS click_within_ts,
-                CASE WHEN last_click_ts >= ts_s - INTERVAL '30 minutes'
-                     THEN date_diff('second', last_click_ts, ts_s) END AS gap_s
-         FROM (
-           SELECT user_id, event_id, event_type, ts_s,
-                  last_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
-                    OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_ts
-           FROM (SELECT event_id, user_id, event_type,
-                        CAST(date_trunc('second', ts) AS TIMESTAMP) AS ts_s
-                 FROM events WHERE event_type IN ('click','purchase')))
-         WHERE event_type = 'purchase' ORDER BY user_id, event_id""",
+      s"""SELECT user_id, event_id, ts_s,
+                 CASE WHEN last_click_ts >= ts_s - INTERVAL '30 minutes'
+                      THEN last_click_ts END AS click_within_ts,
+                 CASE WHEN last_click_ts >= ts_s - INTERVAL '30 minutes'
+                      THEN date_diff('second', last_click_ts, ts_s) END AS gap_s
+          FROM (${clickAsofSql(prev = true, next = false)}) ORDER BY user_id, event_id""",
     // Nearest = closer of the two directional as-ofs; ties → preceding.
     // epoch() distances are integral seconds on date_trunc'd timestamps.
     "join_asof_nearest" ->
-      """SELECT user_id, event_id, ts_s, nearest_click_ts,
-                CAST(abs(epoch(nearest_click_ts) - epoch(ts_s)) AS BIGINT) AS dist_s
-         FROM (
-           SELECT user_id, event_id, ts_s,
-                  CASE WHEN last_click_ts IS NULL THEN next_click_ts
-                       WHEN next_click_ts IS NULL THEN last_click_ts
-                       WHEN epoch(ts_s) - epoch(last_click_ts)
-                            <= epoch(next_click_ts) - epoch(ts_s) THEN last_click_ts
-                       ELSE next_click_ts END AS nearest_click_ts
-           FROM (
-             SELECT user_id, event_id, event_type, ts_s,
-                    last_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
-                      OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_ts,
-                    first_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
-                      OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-                            ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_click_ts
-             FROM (SELECT event_id, user_id, event_type,
-                          CAST(date_trunc('second', ts) AS TIMESTAMP) AS ts_s
-                   FROM events WHERE event_type IN ('click','purchase')))
-           WHERE event_type = 'purchase')
-         ORDER BY user_id, event_id""",
+      s"""SELECT user_id, event_id, ts_s, nearest_click_ts,
+                 CAST(abs(epoch(nearest_click_ts) - epoch(ts_s)) AS BIGINT) AS dist_s
+          FROM (
+            SELECT user_id, event_id, ts_s,
+                   CASE WHEN last_click_ts IS NULL THEN next_click_ts
+                        WHEN next_click_ts IS NULL THEN last_click_ts
+                        WHEN epoch(ts_s) - epoch(last_click_ts)
+                             <= epoch(next_click_ts) - epoch(ts_s) THEN last_click_ts
+                        ELSE next_click_ts END AS nearest_click_ts
+            FROM (${clickAsofSql(prev = true, next = true)}))
+          ORDER BY user_id, event_id""",
     "join_asof_forward" ->
-      """SELECT user_id, event_id, ts_s, next_click_ts FROM (
-           SELECT user_id, event_id, event_type, ts_s,
-                  first_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
-                    OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-                          ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_click_ts
-           FROM (SELECT event_id, user_id, event_type,
-                        CAST(date_trunc('second', ts) AS TIMESTAMP) AS ts_s
-                 FROM events WHERE event_type IN ('click','purchase')))
-         WHERE event_type = 'purchase' ORDER BY user_id, event_id""",
+      s"""SELECT user_id, event_id, ts_s, next_click_ts
+          FROM (${clickAsofSql(prev = false, next = true)}) ORDER BY user_id, event_id""",
     "join_null_routed" ->
       s"""WITH f AS (SELECT CASE WHEN o_orderkey % 10 = 0 THEN NULL
                                  ELSE o_custkey END AS k,
@@ -873,13 +838,9 @@ object Joins {
     // Storage partitioning is layout only — the oracle is the plain join
     // over the same deterministic generated relations.
     "join_spj_storage_partitioned" ->
-      """WITH fact AS (SELECT range % 100 AS bucket,
-                              (range * range) % 1000003 AS val
-                       FROM range(50000)),
-              dim AS (SELECT range % 100 AS bucket,
-                             (range * range) % 1000003 AS dim_val,
-                             ['a','b','c','d','e'][CAST(range % 5 AS INT) + 1] AS dim_tag
-                      FROM range(100))
+      s"""WITH fact AS (${GraftRangeTable.sql(50000)}),
+              dim AS (SELECT bucket, val AS dim_val, tag AS dim_tag
+                      FROM (${GraftRangeTable.sql(100)}))
          SELECT dim_tag, count(*) AS n,
                 CAST(sum(val + dim_val) AS BIGINT) AS sum_vals,
                 max(bucket) AS max_bucket

@@ -13,25 +13,22 @@ import graft.Gates
   * domain-mix resampling, and token-budget sequence packing for the trainer.
   *
   * Tokenization is the project-wide space-split convention (shared with
-  * llm_text_wordcount / llm_text_ngrams); every fixture doc has ≥10 words at
-  * all scale factors, so 5-gram windows always exist. All ratio outputs are
-  * integer basis points via `10000 · x div y` (Norm doctrine: no doubles in
-  * hashed columns).
+  * llm_text_wordcount / llm_text_ngrams). All ratio outputs are integer
+  * basis points via `10000 · x div y` (Norm doctrine: no doubles in hashed
+  * columns).
   */
 object LlmCuration {
-  /** Distinct word-5-grams per doc. One explode per doc of (len−4) grams —
-    * narrow, then the distinct is the only shuffle (keyed on (doc_id, g)).
-    * The token array is materialized ONCE per row before the transform:
-    * writing `split(text)[i+k]` inside the lambda would re-run the O(len)
-    * split on every element access (O(len²) per doc). The greatest(…, 0)
-    * guard keeps the operator total: a <5-token doc yields zero grams
-    * instead of a negative-slice-length runtime error killing the stage. */
-  private def grams5(df: DataFrame): DataFrame =
+  /** Distinct (doc_id, g) word n-grams ([[Shared.wordGrams]]) of `df`'s
+    * docs: one explode per doc, then the distinct is the only shuffle
+    * (keyed on (doc_id, g)). */
+  private def docGrams(df: DataFrame, n: Int): DataFrame =
     df.select(col("doc_id"), split(col("text"), " ").as("t"))
-      .select(col("doc_id"), explode(expr(
-        """transform(slice(t, 1, greatest(size(t) - 4, 0)),
-                     (x, i) -> concat_ws(' ', x, t[i + 1], t[i + 2], t[i + 3], t[i + 4]))"""))
-        .as("g")).distinct()
+      .select(col("doc_id"), explode(Shared.wordGrams("t", n)).as("g")).distinct()
+
+  /** DuckDB twin of [[docGrams]] over every document: the CTE `grams`. */
+  private def docGramsSql(n: Int): String =
+    s"""grams AS (SELECT DISTINCT doc_id, unnest(${Shared.wordGramsSql("t", n.toString)}) AS g
+                  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))"""
 
   /** The first-fit fold shared by llm_pack_greedy's per-bucket flatMapGroups
     * and property-tested on random inputs in PropertySuite: docs in input
@@ -57,7 +54,7 @@ object LlmCuration {
 
   /** Per-doc word-repetition profile — the dup_word_bp basis shared by
     * llm_quality_repetition, llm_curation_e2e, and llm_mix_epochs (one
-    * definition, like grams5/mixBucket, so the three ops and their oracles
+    * definition, like docGrams/mixBucket, so the three ops and their oracles
     * cannot silently diverge). One explode → (keys, word) partial-agg →
     * per-keys agg; both shuffles carry doc_id, so the plan is two
     * map-side-combinable aggregations. Emits n_words / n_uniq / max_w. */
@@ -376,8 +373,8 @@ object LlmCuration {
       // ONE 5-gram bench build is too small to amortize the added
       // exchange; the sweep wins only because its three builds (incl. the
       // 8-gram) each cost ~0.9 s serial.
-      val bench = grams5(docs.filter(col("doc_id") % 20 === 0)).select("g").distinct()
-      val corpus = grams5(docs.filter(col("doc_id") % 20 =!= 0))
+      val bench = docGrams(docs.filter(col("doc_id") % 20 === 0), 5).select("g").distinct()
+      val corpus = docGrams(docs.filter(col("doc_id") % 20 =!= 0), 5)
       // The bench slice is corpus/20 — a FRACTION, not a bound, so the
       // broadcast hint is size-gated (r12 sf100 doctrine: an unconditional
       // hint on a corpus-scaling gram frame is a latent outage; above the
@@ -635,13 +632,13 @@ object LlmCuration {
       val rep = repetitionProfile(docs, "doc_id", "lang")
         .filter(expr("10000 * (n_words - n_uniq) div n_words < 5000"))
         .localCheckpoint(false)
-      val bench = grams5(docs.filter(col("doc_id") % 20 === 0)).select("g").distinct()
+      val bench = docGrams(docs.filter(col("doc_id") % 20 === 0), 5).select("g").distinct()
       // the corpus gram leg (the dominant explode+distinct) runs ONLY over
       // docs that survived the repetition gate — the gate drops ~half the
       // corpus, so screening the rejects would double the heaviest stage
       val survivors = docs.join(
         rep.filter(col("doc_id") % 20 =!= 0).select("doc_id"), Seq("doc_id"), "left_semi")
-      val contaminated = grams5(survivors)
+      val contaminated = docGrams(survivors, 5)
         .join(broadcast(bench), "g").select("doc_id").distinct()
       rep.filter(col("doc_id") % 20 =!= 0)
         .join(contaminated, Seq("doc_id"), "left_anti")
@@ -656,7 +653,7 @@ object LlmCuration {
     // stage): each doc is cut into 32-token chunks on a 24-token stride
     // (8-token overlap), boundaries clipped at the doc end. One narrow
     // explode per doc — chunk starts come from a sequence() over the
-    // materialized token array (the grams5 one-split-per-row discipline);
+    // materialized token array (the Shared.wordGrams one-split-per-row discipline);
     // chunk text leaves as an md5 so no corpus-sized strings reach the
     // hashed output. At 100 TB this is a map-only stage: no shuffle at all
     // before the declared output sort.
@@ -879,11 +876,7 @@ object LlmCuration {
     // (the first-occurrence frame is corpus-scale, NOT broadcast-able);
     // novelty in integer basis points.
     "llm_ngram_novelty" -> ((s, d) => {
-      val g3 = documents(s, d).select(col("doc_id"), split(col("text"), " ").as("t"))
-        .select(col("doc_id"), explode(expr(
-          """transform(slice(t, 1, greatest(size(t) - 2, 0)),
-                       (x, i) -> concat_ws(' ', x, t[i + 1], t[i + 2]))""")).as("g"))
-        .distinct()
+      val g3 = docGrams(documents(s, d), 3)
       // r14: n_novel is just a COUNT per first_doc of the gram→min(doc)
       // frame, so the gram-keyed join of the full gram frame back against
       // `first` (a corpus-gram-sized shuffle of both legs) collapses to two
@@ -1219,14 +1212,6 @@ object LlmCuration {
     // map-side, nothing corpus² — and the bench leg stays corpus/20-sized.
     "llm_contamination_sweep" -> ((s, d) => {
       val docs = documents(s, d)
-      def gramsN(df: DataFrame, n: Int): DataFrame = {
-        val parts = (1 until n).map(k => s"t[i + $k]").mkString(", ")
-        df.select(col("doc_id"), split(col("text"), " ").as("t"))
-          .select(col("doc_id"), explode(expr(
-            s"""transform(slice(t, 1, greatest(size(t) - ${n - 1}, 0)),
-                          (x, i) -> concat_ws(' ', x, $parts))""")).as("g"))
-          .distinct()
-      }
       // r14: the three bench-side gram builds each ran as ONE 0.9 s task
       // (5%-slice of a single-row-group scan → 1 partition into the
       // CPU-dense tokenize+explode; ProfileOp jobs 106/107/109) and their
@@ -1237,12 +1222,12 @@ object LlmCuration {
       // construction.
       val dp = s.sparkContext.defaultParallelism
       Seq(3, 5, 8).map { n =>
-        // Dedup to distinct GRAMS (gramsN dedupes (doc_id, gram)): a gram
+        // Dedup to distinct GRAMS (docGrams dedupes (doc_id, gram)): a gram
         // shared by k bench docs would otherwise fan the probe join out ×k
         // and inflate both counters.
-        val bench = gramsN(docs.filter(col("doc_id") % 20 === 0)
+        val bench = docGrams(docs.filter(col("doc_id") % 20 === 0)
           .repartition(dp, col("doc_id")), n).select("g").distinct()
-        val corpus = gramsN(docs.filter(col("doc_id") % 20 =!= 0), n)
+        val corpus = docGrams(docs.filter(col("doc_id") % 20 =!= 0), n)
         // Same size-gated hint as llm_contamination (r12): three gram
         // widths ⇒ three bench frames, each corpus/20-scaling.
         corpus.join(
@@ -1276,9 +1261,7 @@ object LlmCuration {
       val sp = s; import sp.implicits._
       val cnt = documents(s, d)
         .select(split(col("text"), " ").as("t"))
-        .select(explode(expr(
-          """transform(slice(t, 1, size(t) - 1), (x, i) -> concat(x, ' ', t[i + 1]))"""))
-          .as("bg"))
+        .select(explode(Shared.wordGrams("t", 2)).as("bg"))
         .groupBy("bg").agg(count(lit(1)).as("c"))
       val ord = Window.orderBy(col("c").desc, col("bg"))
       val ranked = cnt
@@ -1298,13 +1281,11 @@ object LlmCuration {
 
   private val curationOracleExtra: Map[String, String] = Map(
     "llm_contamination_sweep" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
               ns AS (SELECT CAST(unnest([3, 5, 8]) AS BIGINT) AS gram_n),
               g AS (SELECT DISTINCT gram_n, doc_id,
-                           array_to_string(tk[i : i + gram_n - 1], ' ') AS g
-                    FROM (SELECT gram_n, doc_id, tk,
-                                 unnest(range(1, greatest(len(tk) - gram_n + 2, 1))) AS i
-                          FROM toks CROSS JOIN ns)),
+                           unnest(${Shared.wordGramsSql("tk", "gram_n")}) AS g
+                    FROM toks CROSS JOIN ns),
               bench AS (SELECT DISTINCT gram_n, g FROM g WHERE doc_id % 20 = 0),
               corpus AS (SELECT gram_n, doc_id, g FROM g WHERE doc_id % 20 <> 0),
               per AS (SELECT c.gram_n, c.doc_id, count(*) AS n_grams,
@@ -1326,10 +1307,8 @@ object LlmCuration {
                 CAST(10000 * 16 * sum(n_tok) // tok_total AS BIGINT) AS load_bp
          FROM sh, tot GROUP BY shard, tok_total ORDER BY shard""",
     "llm_ngram_coverage" ->
-      """WITH bg AS (SELECT concat(w1, ' ', w2) AS bg FROM (
-                       SELECT unnest(tk[1:len(tk) - 1]) AS w1,
-                              unnest(tk[2:len(tk)]) AS w2
-                       FROM (SELECT string_split(text, ' ') AS tk FROM documents))),
+      s"""WITH bg AS (SELECT unnest(${Shared.wordGramsSql("tk", "2")}) AS bg
+                     FROM (SELECT string_split(text, ' ') AS tk FROM documents)),
               c AS (SELECT bg, count(*) AS c FROM bg GROUP BY bg),
               r AS (SELECT c, row_number() OVER (ORDER BY c DESC, bg) AS rk,
                            sum(c) OVER (ORDER BY c DESC, bg
@@ -1387,13 +1366,7 @@ object LlmCuration {
       s"""WITH ${repetitionSqlCte("doc_id, lang")},
               kept AS (SELECT doc_id, lang, n_words FROM rep
                        WHERE 10000 * (n_words - n_uniq) // n_words < 5000),
-              toks AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-              grams AS (SELECT DISTINCT doc_id, concat_ws(' ', w1, w2, w3, w4, w5) AS g FROM (
-                SELECT doc_id,
-                       unnest(tk[1:len(tk)-4]) AS w1, unnest(tk[2:len(tk)-3]) AS w2,
-                       unnest(tk[3:len(tk)-2]) AS w3, unnest(tk[4:len(tk)-1]) AS w4,
-                       unnest(tk[5:len(tk)]) AS w5
-                FROM toks)),
+              ${docGramsSql(5)},
               bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0),
               cont AS (SELECT DISTINCT c.doc_id FROM grams c JOIN bench b ON c.g = b.g
                        WHERE c.doc_id % 20 <> 0),
@@ -1529,13 +1502,7 @@ object LlmCuration {
                 CAST(10000 * max_w // n_words AS BIGINT) AS top_word_bp
          FROM rep ORDER BY doc_id""",
     "llm_contamination" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-              grams AS (SELECT DISTINCT doc_id, concat_ws(' ', w1, w2, w3, w4, w5) AS g FROM (
-                SELECT doc_id,
-                       unnest(t[1:len(t)-4]) AS w1, unnest(t[2:len(t)-3]) AS w2,
-                       unnest(t[3:len(t)-2]) AS w3, unnest(t[4:len(t)-1]) AS w4,
-                       unnest(t[5:len(t)]) AS w5
-                FROM toks)),
+      s"""WITH ${docGramsSql(5)},
               bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0),
               corpus AS (SELECT doc_id, g FROM grams WHERE doc_id % 20 <> 0),
               tot AS (SELECT doc_id, count(*) AS n_grams FROM corpus GROUP BY 1),
@@ -1671,12 +1638,7 @@ object LlmCuration {
                 10000 * CAST(sum(oov) AS BIGINT) // count(*) AS oov_bp
          FROM j GROUP BY doc_id ORDER BY doc_id""",
     "llm_ngram_novelty" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-              grams AS (SELECT DISTINCT doc_id, concat_ws(' ', w1, w2, w3) AS g FROM (
-                SELECT doc_id,
-                       unnest(t[1:len(t)-2]) AS w1, unnest(t[2:len(t)-1]) AS w2,
-                       unnest(t[3:len(t)]) AS w3
-                FROM toks)),
+      s"""WITH ${docGramsSql(3)},
               f AS (SELECT g, min(doc_id) AS first_doc FROM grams GROUP BY g)
          SELECT doc_id, count(*) AS n_grams,
                 CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,

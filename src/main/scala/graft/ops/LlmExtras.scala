@@ -421,9 +421,7 @@ object LlmExtras {
       val post = documents(s, d, par = true)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .filter(size(col("t")) >= 5)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(t) - 5), i -> concat_ws(' ', slice(t, i + 1, 5)))"))
-          .as("tok"))
+        .select(col("doc_id"), explode(Shared.wordGrams("t", 5)).as("tok"))
         .distinct()
       val rare = post.groupBy("tok").agg(count(lit(1)).as("df"))
         .filter(col("df") <= 64).select("tok")
@@ -577,9 +575,7 @@ object LlmExtras {
       val sh = documents(s, d, par = true)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .filter(size(col("toks")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(toks) - 8), i -> concat_ws(' ', slice(toks, i + 1, 8)))"))
-          .as("shingle"))
+        .select(col("doc_id"), explode(Shared.wordGrams("toks", 8)).as("shingle"))
       val train = sh.filter(col("doc_id") < 400).distinct()
       val eval_ = sh.filter(col("doc_id") >= 400)
         .select(col("shingle"), col("doc_id").as("eval_doc")).distinct()
@@ -601,17 +597,9 @@ object LlmExtras {
     // argument — never corpus²); per-source gram counts broadcast back for
     // the |A∪B| = |A|+|B|−|A∩B| denominator. Output ≤ C(|sources|,2) rows.
     "llm_source_similarity" -> ((s, d) => {
-      // Gram positions come from slice(…, greatest(size-2, 0)), not
-      // sequence(0, size-3): on a <3-token doc sequence() descends
-      // ([0,-1,…]) and concat_ws silently drops the out-of-range nulls,
-      // emitting spurious short grams the oracle's range() never yields —
-      // the guard makes both engines emit zero grams for short docs
-      // instead of leaning on the fixture's ≥10-words contract.
       val gs = documents(s, d, par = true)
         .select(col("source"), split(col("text"), " ").as("t"))
-        .select(col("source"), explode(expr(
-          """transform(slice(t, 1, greatest(size(t) - 2, 0)),
-                       (x, i) -> concat_ws(' ', t[i], t[i + 1], t[i + 2]))""")).as("g"))
+        .select(col("source"), explode(Shared.wordGrams("t", 3)).as("g"))
         .distinct()
       val per = gs.groupBy("source").agg(count(lit(1)).as("n"))
       gs.as("x").join(gs.as("y"),
@@ -662,9 +650,7 @@ object LlmExtras {
       val wins = documents(s, d, par = true)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .filter(size(col("t")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          """transform(sequence(0, size(t) - 8),
-                       i -> concat_ws(' ', slice(t, i + 1, 8)))""")).as("g"))
+        .select(col("doc_id"), explode(Shared.wordGrams("t", 8)).as("g"))
       val gcount = wins.groupBy("g").agg(count(lit(1)).as("gc"))
       wins.join(gcount, "g")
         .groupBy("doc_id")
@@ -1231,9 +1217,7 @@ object LlmExtras {
     "llm_text_langid" -> ((s, d) => {
       def bigrams(df: DataFrame) = df
         .select(col("doc_id"), col("lang"), split(col("text"), " ").as("t"))
-        .select(col("doc_id"), col("lang"), explode(expr(
-          """transform(slice(t, 1, size(t) - 1),
-                       (x, i) -> concat(x, ' ', t[i + 1]))""")).as("bg"))
+        .select(col("doc_id"), col("lang"), explode(Shared.wordGrams("t", 2)).as("bg"))
       val train = bigrams(documents(s, d).filter(col("doc_id") < 250))
         .groupBy(col("lang").as("lang_cand"), col("bg")).agg(count(lit(1)).as("w"))
       val test = bigrams(documents(s, d).filter(col("doc_id") >= 250 && col("doc_id") < 350))
@@ -1924,11 +1908,9 @@ object LlmExtras {
     // Exact all-pairs over the FULL corpus; the size-ratio prefilter
     // (J >= 0.7 forces 10·min >= 7·max) is semantics-preserving pruning.
     "llm_dedup_containment" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-              sh AS (SELECT DISTINCT doc_id,
-                            concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3], t[i+4]) AS tok
-                     FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i
-                           FROM toks WHERE len(t) >= 5)),
+      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+              sh AS (SELECT DISTINCT doc_id, unnest(${Shared.wordGramsSql("t", "5")}) AS tok
+                     FROM toks WHERE len(t) >= 5),
               rare AS (SELECT tok FROM (SELECT tok, count(*) AS df FROM sh GROUP BY 1)
                        WHERE df <= 64),
               p AS (SELECT doc_id, tok FROM sh JOIN rare USING (tok)),
@@ -1975,13 +1957,9 @@ object LlmExtras {
       s"""WITH RECURSIVE ${Shared.wordPairsSql("pairs")},
                ${Shared.ccLabelsSql("labels", "pairs")}
           SELECT doc_id, cluster_rep FROM labels ORDER BY doc_id""",
-    // Same 8-token shingling (DuckDB list slices are end-inclusive:
-    // toks[i:i+7] = 8 tokens; Spark's slice(toks, i+1, 8) matches).
     "llm_decontaminate" ->
-      """WITH sh AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(toks) - 6),
-                                        i -> list_aggregate(toks[i:i+7], 'string_agg', ' '))) AS shingle
+      s"""WITH sh AS (
+           SELECT doc_id, unnest(${Shared.wordGramsSql("toks", "8")}) AS shingle
            FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
            WHERE len(toks) >= 8),
          tr AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id < 400),
@@ -1992,9 +1970,7 @@ object LlmExtras {
          FROM tr JOIN ev USING (shingle)
          GROUP BY tr.doc_id ORDER BY tr.doc_id""",
     "llm_source_similarity" ->
-      """WITH gs AS (SELECT DISTINCT source,
-                            unnest(list_transform(range(1, len(toks) - 1),
-                                                  i -> list_aggregate(toks[i:i+2], 'string_agg', ' '))) AS g
+      s"""WITH gs AS (SELECT DISTINCT source, unnest(${Shared.wordGramsSql("toks", "3")}) AS g
                      FROM (SELECT source, string_split(text, ' ') AS toks FROM documents)),
               per AS (SELECT source, count(*) AS n FROM gs GROUP BY source),
               pairs AS (SELECT x.source AS src_a, y.source AS src_b, count(*) AS common
@@ -2015,10 +1991,8 @@ object LlmExtras {
          FROM t WHERE len(toks) >= 20
          ORDER BY doc_id""",
     "llm_dedup_substring" ->
-      """WITH w AS (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, len(toks) - 6),
-                                        i -> list_aggregate(toks[i:i+7], 'string_agg', ' '))) AS g
+      s"""WITH w AS (
+           SELECT doc_id, unnest(${Shared.wordGramsSql("toks", "8")}) AS g
            FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
            WHERE len(toks) >= 8),
          gc AS (SELECT g, count(*) AS gc FROM w GROUP BY g)
@@ -2209,10 +2183,8 @@ object LlmExtras {
                  ${d6Sql("list_aggregate(list_transform(range(1, len(v) + 1), i -> abs(v[i] - q[i] * maxabs / 127.0)), 'max')")} AS maxerr_u
           FROM q ORDER BY vec_id""",
     "llm_text_langid" ->
-      """WITH bg AS (SELECT doc_id, lang, concat(w1, ' ', w2) AS bg FROM (
-                       SELECT doc_id, lang,
-                              unnest(toks[1:len(toks) - 1]) AS w1, unnest(toks[2:len(toks)]) AS w2
-                       FROM (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents))),
+      s"""WITH bg AS (SELECT doc_id, lang, unnest(${Shared.wordGramsSql("toks", "2")}) AS bg
+                      FROM (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents)),
                train AS (SELECT lang AS lang_cand, bg, count(*) AS w
                          FROM bg WHERE doc_id < 250 GROUP BY 1, 2),
                test AS (SELECT doc_id, lang AS lang_true, bg, count(*) AS c

@@ -435,15 +435,10 @@ object LlmPipeline {
         .limit(100)
     }),
 
-    // (token array materialized once per row — `split(text)[i+1]` inside
-    // the lambda would re-run the O(len) split per element access)
     "llm_text_ngrams" -> ((s, d) =>
       documents(s, d)
         .select(split(col("text"), " ").as("t"))
-        .select(explode(expr(
-          """transform(slice(t, 1, size(t) - 1),
-                       (x, i) -> concat(x, ' ', t[i + 1]))"""))
-          .as("bigram"))
+        .select(explode(Shared.wordGrams("t", 2)).as("bigram"))
         .groupBy("bigram")
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("bigram"))
@@ -460,9 +455,7 @@ object LlmPipeline {
     // output collocation-sized. Nothing corpus² anywhere.
     "llm_bigram_pmi" -> ((s, d) => {
       val toks = documents(s, d).select(split(col("text"), " ").as("t"))
-      val big = toks.select(explode(expr(
-          """transform(slice(t, 1, size(t) - 1),
-                       (x, i) -> concat(x, ' ', t[i + 1]))""")).as("bigram"))
+      val big = toks.select(explode(Shared.wordGrams("t", 2)).as("bigram"))
         .groupBy("bigram").agg(count(lit(1)).as("n_xy"))
         .filter(col("n_xy") >= 10)
       val uni = toks.select(explode(col("t")).as("tok"))
@@ -805,7 +798,7 @@ object LlmPipeline {
     // micro-unit ln so the per-doc sum is shuffle-order-immune):
     // P(w|prev) = (c(prev,w)+1) / (c(prev)+V), V = train next-word vocab.
     // Bigrams come from one slice+transform pass over the materialized
-    // token array (the grams5 rule: never index split() inside the
+    // token array (the Shared.wordGrams rule: never index split() inside the
     // lambda). Scale: train tables are vocab-bounded → both probe joins
     // broadcast like unigram's; the held-out bigram stream never joins
     // corpus×corpus. n_unseen counts unseen CONTEXTS (cp null) separately
@@ -1187,16 +1180,14 @@ object LlmPipeline {
           FROM tf JOIN dl ON tf.doc_id = dl.doc_id JOIN df ON tf.term = df.term CROSS JOIN n
           ORDER BY score_r DESC, tf.doc_id, tf.term LIMIT 100""",
     "llm_text_ngrams" ->
-      """SELECT bigram, count(*) AS n FROM (
-           SELECT concat(w1, ' ', w2) AS bigram FROM (
-             SELECT unnest(toks[1:len(toks) - 1]) AS w1, unnest(toks[2:len(toks)]) AS w2
-             FROM (SELECT string_split(text, ' ') AS toks FROM documents)))
+      s"""SELECT bigram, count(*) AS n FROM (
+           SELECT unnest(${Shared.wordGramsSql("toks", "2")}) AS bigram
+           FROM (SELECT string_split(text, ' ') AS toks FROM documents))
          GROUP BY bigram ORDER BY n DESC, bigram LIMIT 50""",
     "llm_bigram_pmi" ->
-      """WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
-              big AS (SELECT concat(w1, ' ', w2) AS bigram, count(*) AS n_xy FROM (
-                        SELECT unnest(t[1:len(t) - 1]) AS w1, unnest(t[2:len(t)]) AS w2
-                        FROM toks)
+      s"""WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
+              big AS (SELECT bigram, count(*) AS n_xy FROM (
+                        SELECT unnest(${Shared.wordGramsSql("t", "2")}) AS bigram FROM toks)
                       GROUP BY 1 HAVING count(*) >= 10),
               uni AS (SELECT tok, count(*) AS n_tok
                       FROM (SELECT unnest(t) AS tok FROM toks) GROUP BY 1),

@@ -427,9 +427,7 @@ object Reshape {
 
     // Long form: one (metric, value) row per measure column.
     "reshape_unpivot" -> ((s, d) =>
-      lineitem(s, d)
-        .orderBy("l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity")
-        .limit(50)
+      Shared.lineitemSlice(s, d)
         .unpivot(
           Array(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice")),
           Array(col("l_quantity"), col("l_discount"), col("l_tax")),
@@ -1102,8 +1100,7 @@ object Reshape {
           ${eventTypes.map(t => s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS $t").mkString(", ")}
           FROM events GROUP BY 1 ORDER BY bucket""",
     "reshape_unpivot" ->
-      """WITH src AS (SELECT * FROM lineitem
-                      ORDER BY l_orderkey, l_linenumber, l_extendedprice, l_quantity LIMIT 50)
+      s"""WITH src AS (SELECT * FROM lineitem ${Shared.lineitemSliceSql})
          SELECT l_orderkey, l_linenumber, l_extendedprice, metric, v FROM (
            SELECT l_orderkey, l_linenumber, l_extendedprice, 'l_quantity' AS metric, l_quantity AS v FROM src
            UNION ALL

@@ -107,13 +107,8 @@ object Scalars {
           date_trunc("hour", col("ts_s")).as("hour_start"))
         .orderBy("event_id").limit(50)),
 
-    // (l_orderkey, l_linenumber) is NOT unique in the synthetic data — row
-    // slices over lineitem sort on the 4-column key (orderkey, linenumber,
-    // extendedprice, quantity), verified unique at sf0.1, before projecting.
     "math_basic" -> ((s, d) =>
-      lineitem(s, d)
-        .orderBy("l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity")
-        .limit(50)
+      Shared.lineitemSlice(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("l_quantity"), 1).as("r_qty"),
           abs(col("l_discount") - 0.05).as("abs_d"),
@@ -128,9 +123,7 @@ object Scalars {
           signum(col("l_discount") - 0.05).cast("int").as("sgn"))),
 
     "cond_case" -> ((s, d) =>
-      lineitem(s, d)
-        .orderBy("l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity")
-        .limit(50)
+      Shared.lineitemSlice(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           when(col("l_discount") < 0.03, "low")
             .when(col("l_discount") < 0.07, "mid")
@@ -140,9 +133,7 @@ object Scalars {
           greatest(col("l_tax"), lit(0.05)).as("tax_floor"))),
 
     "cast_types" -> ((s, d) =>
-      lineitem(s, d)
-        .orderBy("l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity")
-        .limit(50)
+      Shared.lineitemSlice(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_extendedprice").cast("int").as("price_int"),
           col("l_linenumber").cast("string").as("ln_str"),
@@ -404,23 +395,23 @@ object Scalars {
           pow(l_quantity, 2) AS q2,
           l_partkey % 7 AS pm,
           CAST(sign(l_discount - 0.05) AS INTEGER) AS sgn
-          FROM lineitem ORDER BY l_orderkey, l_linenumber, l_extendedprice, l_quantity LIMIT 50""",
+          FROM lineitem ${Shared.lineitemSliceSql}""",
     "cond_case" ->
-      """SELECT l_orderkey, l_linenumber,
+      s"""SELECT l_orderkey, l_linenumber,
                 CASE WHEN l_discount < 0.03 THEN 'low'
                      WHEN l_discount < 0.07 THEN 'mid' ELSE 'high' END AS disc_band,
                 coalesce(nullif(l_returnflag, 'N'), 'none') AS flag,
                 least(l_quantity, 25.0) AS q_cap,
                 greatest(l_tax, 0.05) AS tax_floor
-         FROM lineitem ORDER BY l_orderkey, l_linenumber, l_extendedprice, l_quantity LIMIT 50""",
+         FROM lineitem ${Shared.lineitemSliceSql}""",
     "cast_types" ->
-      """SELECT l_orderkey, l_linenumber,
+      s"""SELECT l_orderkey, l_linenumber,
                 CAST(trunc(l_extendedprice) AS INTEGER) AS price_int,
                 CAST(l_linenumber AS VARCHAR) AS ln_str,
                 CAST(CAST(l_quantity AS VARCHAR) AS DOUBLE) AS qty_roundtrip,
                 CAST(l_shipdate AS DATE) AS ship_date,
                 CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS VARCHAR) AS price_dec
-         FROM lineitem ORDER BY l_orderkey, l_linenumber, l_extendedprice, l_quantity LIMIT 50""",
+         FROM lineitem ${Shared.lineitemSliceSql}""",
     "str_collation" ->
       s"""SELECT lower(seg_mixed) AS segment, count(*) AS n,
                  ${moneySumSql("c_acctbal")} AS total_bal

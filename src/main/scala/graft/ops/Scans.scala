@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
+import graft.sources.GraftRangeTable
 
 /** SURVEY.md §2.A — scans / sources / sinks.
   *
@@ -936,7 +937,13 @@ object Scans {
           .coalesce(1).write.mode("overwrite").parquet(s"$root/$lang/b$b")
       }
       graft.Scale.runAll(writes: _*)
-      val glob = s.read.parquet(s"$root/*/b1")
+      // A read of the literal glob path first stats it as a streaming-sink
+      // directory and logs a FileNotFoundException. The glob is expanded
+      // through Hadoop's globStatus instead, as Spark's own path
+      // resolution does, and the matched directories are read.
+      val b1 = new org.apache.hadoop.fs.Path(s"$root/*/b1")
+      val glob = s.read.parquet(b1.getFileSystem(s.sparkContext.hadoopConfiguration)
+          .globStatus(b1).map(_.getPath.toString).sorted.toSeq: _*)
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
         .select(lit("glob_bucket1").as("mode"), col("n_docs"), col("total_chars"))
       val recur = s.read.option("recursiveFileLookup", "true").parquet(root)
@@ -947,32 +954,21 @@ object Scans {
   )
 
   val oracle: Map[String, String] = Map(
-    // The generated relation re-derived from range(): same id domain,
-    // same exact-integer column math as GraftRangeTable.fieldValue.
     "scan_dsv2_pushdown" ->
-      """WITH t AS (SELECT range AS id, range % 100 AS bucket,
-                           (range * range) % 1000003 AS val,
-                           ['a','b','c','d','e'][CAST(range % 5 AS INT) + 1] AS tag
-                    FROM range(100000))
+      s"""WITH t AS (${GraftRangeTable.sql(100000)})
          SELECT bucket, count(*) AS n, CAST(sum(val) AS BIGINT) AS sum_val
          FROM t WHERE id >= 20000 AND id < 70000 AND tag <> 'c'
          GROUP BY bucket ORDER BY bucket""",
 
     "scan_dsv2_columnar" ->
-      """WITH t AS (SELECT range AS id, range % 100 AS bucket,
-                           (range * range) % 1000003 AS val,
-                           ['a','b','c','d','e'][CAST(range % 5 AS INT) + 1] AS tag
-                    FROM range(100000))
+      s"""WITH t AS (${GraftRangeTable.sql(100000)})
          SELECT tag, count(*) AS n, CAST(sum(val) AS BIGINT) AS sum_val,
                 max(bucket) AS max_bucket
          FROM t WHERE id >= 10000 AND id < 90000 AND tag <> 'e'
          GROUP BY tag ORDER BY tag""",
 
     "scan_dsv2_agg_pushdown" ->
-      """WITH t AS (SELECT range AS id, range % 100 AS bucket,
-                           (range * range) % 1000003 AS val,
-                           ['a','b','c','d','e'][CAST(range % 5 AS INT) + 1] AS tag
-                    FROM range(100000))
+      s"""WITH t AS (${GraftRangeTable.sql(100000)})
          SELECT bucket, count(*) AS n, CAST(sum(val) AS BIGINT) AS sum_val,
                 min(val) AS min_val, max(tag) AS max_tag
          FROM t WHERE id >= 20000 AND id < 80000
@@ -981,8 +977,7 @@ object Scans {
     // OFFSET/LIMIT ride the id order — the contractual generation order
     // the pushed span arithmetic preserves on the Spark side.
     "scan_dsv2_limit_pushdown" ->
-      """WITH t AS (SELECT range AS id, (range * range) % 1000003 AS val
-                    FROM range(100000)),
+      s"""WITH t AS (${GraftRangeTable.sql(100000)}),
               page AS (SELECT id, val FROM t
                        WHERE id >= 20000 AND id < 80000
                        ORDER BY id LIMIT 20000 OFFSET 55000)
@@ -992,8 +987,7 @@ object Scans {
          FROM page""",
 
     "scan_dsv2_topn_pushdown" ->
-      """WITH t AS (SELECT range AS id, (range * range) % 1000003 AS val
-                    FROM range(100000)),
+      s"""WITH t AS (${GraftRangeTable.sql(100000)}),
               topk AS (SELECT id, val FROM t
                        WHERE id >= 20000 AND id < 80000
                        ORDER BY id DESC LIMIT 1000)
@@ -1004,13 +998,9 @@ object Scans {
     // The plain join — runtime partition pruning is an optimization the
     // oracle must be blind to.
     "scan_dsv2_runtime_filter" ->
-      """WITH fact AS (SELECT range % 100 AS bucket,
-                              (range * range) % 1000003 AS val
-                       FROM range(200000)),
-              dim AS (SELECT range % 100 AS d_bucket,
-                             (range * range) % 1000003 AS d_val
-                      FROM range(100)
-                      WHERE ['a','b','c','d','e'][CAST(range % 5 AS INT) + 1] = 'b')
+      s"""WITH fact AS (${GraftRangeTable.sql(200000)}),
+              dim AS (SELECT bucket AS d_bucket, val AS d_val
+                      FROM (${GraftRangeTable.sql(100)}) WHERE tag = 'b')
          SELECT bucket, count(*) AS n, CAST(sum(val) AS BIGINT) AS sum_val,
                 max(d_val) AS dim_val
          FROM fact JOIN dim ON bucket = d_bucket
@@ -1019,9 +1009,7 @@ object Scans {
     // The slice ordinal re-derived arithmetically: contiguous slicing of
     // the filtered span [20000, 80000) into 5 equal 12000-id slices.
     "scan_dsv2_metadata_cols" ->
-      """WITH t AS (SELECT range AS id, range % 100 AS bucket,
-                           (range * range) % 1000003 AS val
-                    FROM range(100000))
+      s"""WITH t AS (${GraftRangeTable.sql(100000)})
          SELECT (id - 20000) // 12000 AS _slice, count(*) AS n,
                 CAST(sum(val) AS BIGINT) AS sum_val,
                 min(bucket) AS min_bucket, max(bucket) AS max_bucket

@@ -201,6 +201,37 @@ private[graft] object Shared {
        CAST(length(regexp_replace(text, '[a-z0-9 ]', '', 'g')) AS BIGINT) AS np,
        CAST(length(text) AS BIGINT) AS len"""
 
+  /** The word n-grams of the token-array column `t`: each run of n
+    * consecutive tokens joined by single spaces, in order, max(size − n + 1, 0)
+    * of them. Total: the greatest(…, 0) guard makes an array shorter than
+    * n yield no gram, where a negative slice length would fail the stage.
+    * `t` must be a materialized column, not `split(text)`: indexing a split
+    * inside the lambda re-splits per element access, O(len²) per doc. No
+    * sub-array is allocated per gram, and `concat` of the indexed tokens
+    * evaluates faster than `concat_ws` or a per-gram slice. */
+  def wordGrams(t: String, n: Int): Column = {
+    val rest = (1 until n).map(k => s", ' ', $t[i + $k]").mkString
+    expr(s"transform(slice($t, 1, greatest(size($t) - ${n - 1}, 0)), (x, i) -> concat(x$rest))")
+  }
+
+  /** DuckDB twin of [[wordGrams]] over the list `t`; `n` is any integer
+    * expression, a column too. It is just as total: `range` is end-exclusive,
+    * so it is empty when len(t) < n. DuckDB list slices are 1-based and
+    * end-inclusive, so t[i:i + n - 1] holds n tokens. */
+  def wordGramsSql(t: String, n: String): String =
+    s"list_transform(range(1, len($t) - $n + 2), i -> array_to_string($t[i:i + $n - 1], ' '))"
+
+  // (l_orderkey, l_linenumber) is not unique in the synthetic data, so row
+  // slices over lineitem sort on this 4-column key, verified unique at sf0.1.
+  private val LineitemKey = Seq("l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity")
+
+  /** The first 50 lineitem rows in [[LineitemKey]] order. */
+  def lineitemSlice(s: SparkSession, d: String): DataFrame =
+    lineitem(s, d).orderBy(LineitemKey.map(col): _*).limit(50)
+
+  /** DuckDB twin of [[lineitemSlice]]: the clause after `FROM lineitem`. */
+  val lineitemSliceSql: String = s"ORDER BY ${LineitemKey.mkString(", ")} LIMIT 50"
+
   /** Process-lifetime memos of the expensive frames SHARED by several declared
     * ops: the exact word-Jaccard near-dup pair set (`llm_dedup_near`,
     * `llm_dedup_clusters`, `llm_dedup_keep_best`), its connected-component

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 import graft.Norm._
 import graft.Tables._
+import graft.sources.GraftRangeTable
 import graft.Gates
 
 /** SURVEY.md §2.I — streaming semantics, declared as batch-equivalent queries
@@ -727,14 +728,10 @@ object Streaming {
           FROM (SELECT $tsS AS ts_s, event_type, ${moneySql("value")} AS cents
                 FROM events)
           GROUP BY 1, 2 ORDER BY window_start, event_type""",
-    // The generated relation re-derived from DuckDB range() (the
-    // scan_dsv2_* convention): parity across the epoch boundaries is the
-    // exactly-once claim for the streaming SOURCE.
+    // Parity across the epoch boundaries is the exactly-once claim for the
+    // streaming SOURCE.
     "stream_dsv2_source" ->
-      """WITH t AS (SELECT range AS id,
-                           (range * range) % 1000003 AS val,
-                           ['a','b','c','d','e'][CAST(range % 5 AS INT) + 1] AS tag
-                    FROM range(60000))
+      s"""WITH t AS (${GraftRangeTable.sql(60000)})
          SELECT tag, count(*) AS n, CAST(sum(val) AS BIGINT) AS sum_val,
                 min(id) AS min_id, max(id) AS max_id
          FROM t GROUP BY tag ORDER BY tag""",

@@ -30,7 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   bucket BIGINT   id % 100
   *   val    BIGINT   (id·id) % 1000003   (exact in BIGINT for id < 3e9 —
   *                    and reproducible VERBATIM in DuckDB, so the oracle
-  *                    is `range(N)` + the same arithmetic)
+  *                    is `range(N)` + the same arithmetic:
+  *                    [[GraftRangeTable.sql]])
   *   tag    STRING   ('a','b','c','d','e')[id % 5]
   *
   * Pushdown surfaces — each one decides whether a 100 TB scan reads
@@ -132,7 +133,7 @@ object GraftRangeTable {
   /** One generated field value; the single source of truth the readers
     * (row, columnar — the vector fillers in
     * [[GraftRangeReaderFactory.createColumnarReader]] mirror these four
-    * arms 1:1 — and aggregating) and the DuckDB oracle expression all
+    * arms 1:1 — and aggregating) and the DuckDB oracle [[sql]] all
     * follow. */
   private[sources] def fieldValue(name: String, id: Long): Any = name match {
     case "id" => id
@@ -140,6 +141,13 @@ object GraftRangeTable {
     case "val" => (id * id) % 1000003
     case "tag" => TAGS((id % 5).toInt)
   }
+
+  /** DuckDB twin of the `rows`-row table: a SELECT of the four columns over
+    * `range(rows)`, the arms of [[fieldValue]] one for one. */
+  def sql(rows: Long): String =
+    s"""SELECT range AS id, range % 100 AS bucket, (range * range) % 1000003 AS val,
+              ${TAGS.map(t => s"'$t'").mkString("[", ",", "]")}[CAST(range % 5 AS INT) + 1] AS tag
+       FROM range($rows)"""
 
   /** A single-name reference to a DECLARED schema column, or None. The
     * one resolver every pushdown surface (agg/topN in the builder,

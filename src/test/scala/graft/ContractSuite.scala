@@ -119,6 +119,24 @@ class ContractSuite extends AnyFunSuite {
     assert(filesUsing("Future.sequence").isEmpty, "run concurrent tasks through Scale.runAll")
   }
 
+  test("src/main has one word n-gram builder, one range relation, one as-of click frame and one lineitem slice") {
+    import java.util.regex.Pattern.quote
+    val once = Seq(
+      quote("(x, i) -> concat") -> "graft/ops/Shared.scala",
+      quote("(range * range) % 1000003") -> "graft/sources/RangeSource.scala",
+      quote("CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS") -> "graft/ops/Joins.scala",
+      quote("\"l_orderkey\", \"l_linenumber\", \"l_extendedprice\", \"l_quantity\"")
+        -> "graft/ops/Shared.scala")
+    once.foreach { case (regex, file) =>
+      assert(filesMatching(regex) == Seq(file), s"one definition of /$regex/, in $file")
+    }
+    // the hand-rolled gram spellings, gone for Shared.wordGrams(Sql)
+    for (regex <- Seq("""concat_ws\(' ', slice\((t|toks), i \+ 1""",
+                      """unnest\((t|tk|toks)\[1:len""",
+                      """list_aggregate\((t|tk|toks)\[i:i\+"""))
+      assert(filesMatching(regex).isEmpty, s"build word n-grams through Shared.wordGrams(Sql): /$regex/")
+  }
+
   test("every scratchDir call site passes its own literal tag") {
     val tags = mainSources.flatMap { case (_, src) =>
       "scratchDir\\(d, \"([^\"]+)\"\\)".r.findAllMatchIn(src).map(_.group(1))

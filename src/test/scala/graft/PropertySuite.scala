@@ -638,4 +638,22 @@ class PropertySuite extends AnyFunSuite {
         "tied centroids are kept together, the lower cid first")
     }
   }
+
+  test("Shared.wordGrams == toks.sliding(n) complete windows: total on arrays shorter than n, as its DuckDB twin") {
+    // The contract both wordGrams and wordGramsSql keep: max(L − n + 1, 0)
+    // grams, so an array shorter than n yields none, never a short gram.
+    val sp = s; import sp.implicits._
+    val tok = Gen.oneOf("a", "b", "", "cc")
+    for (n <- Seq(2, 3, 5, 8)) {
+      val arrays = samples(Gen.chooseNum(0, n + 1).flatMap(Gen.listOfN(_, tok)), 60) ++
+        (0 to n + 1).map(l => List.fill(l)("a"))
+      val got = arrays.zipWithIndex.toDF("t", "i")
+        .select(col("i"), graft.ops.Shared.wordGrams("t", n))
+        .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
+      arrays.zipWithIndex.foreach { case (t, i) =>
+        val want = t.sliding(n).filter(_.size == n).map(_.mkString(" ")).toSeq
+        assert(got(i) == want, s"n=$n toks=$t")
+      }
+    }
+  }
 }

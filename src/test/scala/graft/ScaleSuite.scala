@@ -65,8 +65,8 @@ class ScaleSuite extends AnyFunSuite {
 
   test("partitioned layout prunes partitions at the scan") {
     val path = s"$tmp/events_by_type"
-    Scale.writePartitioned(
-      Tables.events(s, d).select("event_id", "user_id", "event_type"), path, "event_type")
+    Tables.events(s, d).select("event_id", "user_id", "event_type")
+      .write.mode("overwrite").partitionBy("event_type").parquet(path)
     val read = s.read.parquet(path).filter(col("event_type") === "click")
     val plan = read.queryExecution.executedPlan.toString()
     assert(plan.contains("PartitionFilters") && plan.contains("event_type"),

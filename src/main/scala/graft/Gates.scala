@@ -63,16 +63,7 @@ object Gates {
   private val RebalanceCap: Long = 256L << 20
   private val RebalanceFloor: Long = 64L << 10
 
-  private[graft] def rebalance(s: SparkSession, d: String, table: String,
-                               df: DataFrame, keys: Seq[String]): DataFrame = {
-    if (!rebalanceOn) return df
-    val cores = s.sparkContext.defaultParallelism
-    val (bytes, files) = stat(s, d, table)
-    if (files >= cores / 2 || bytes > RebalanceCap || bytes < RebalanceFloor) df
-    else df.repartition(cores, keys.map(col): _*)
-  }
-
-  /** The [[rebalance]] gate with keys chosen by the caller: the keys of the
+  /** Keys are chosen by the caller: a loader's own key, or the keys of the
     * NEXT operator (e.g. a histogram's group columns), so one narrow
     * exchange both spreads the scan's CPU-dense stage and satisfies the
     * downstream aggregation's distribution. Apply after the narrow
@@ -80,7 +71,13 @@ object Gates {
     * partial aggregation before its one exchange, the right shape at
     * scale. */
   def spreadBy(s: SparkSession, d: String, table: String, df: DataFrame,
-               keys: Seq[String]): DataFrame = rebalance(s, d, table, df, keys)
+               keys: Seq[String]): DataFrame = {
+    if (!rebalanceOn) return df
+    val cores = s.sparkContext.defaultParallelism
+    val (bytes, files) = stat(s, d, table)
+    if (files >= cores / 2 || bytes > RebalanceCap || bytes < RebalanceFloor) df
+    else df.repartition(cores, keys.map(col): _*)
+  }
 
   // ----------------------------------------------------------- broadcast
 

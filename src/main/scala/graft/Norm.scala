@@ -18,6 +18,21 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * timestamp[ns] (Spark truncates to µs, DuckDB keeps ns) so any ts-derived
   * output is truncated to whole seconds on both engines.
   *
+  * Two scaled-integer encodings, each with a Spark builder and a DuckDB
+  * twin below:
+  *   - ROUNDED (`money`/`d4`/`d6` and the `…Sum` forms): a double that is
+  *     itself the output, rounded in exact decimal arithmetic then scaled.
+  *   - FLOORED (`floorBp`/`floorMicro`): a per-row transcendental term
+  *     (ln, log10, exp, a ratio) that is SUMMED or differenced afterwards.
+  *     It is floored to 10⁴/10⁶ units BEFORE the sum, so the sum is exact
+  *     BIGINT arithmetic, immune to shuffle arrival order; both engines
+  *     floor the same IEEE double because the SQL text is the same on
+  *     both. The floor comes BEFORE the cast because the casts differ:
+  *     Spark truncates toward zero, DuckDB rounds to nearest
+  *     (`CAST(1000000 * ln(0.3) AS BIGINT)` is −1203972 in Spark and
+  *     −1203973 in DuckDB 1.0.0), so a bare cast diverges on negative
+  *     log-probabilities.
+  *
   * Determinism of the decimal round (probed against DuckDB 1.0.0):
   *   - double → DECIMAL(28,10) rounds the binary value to 10 decimals on
   *     both engines; a divergence needs the shortest-repr to land exactly on
@@ -49,6 +64,9 @@ object Norm {
   /** tf-idf-style small magnitudes → integer micro-units (×1e6) as BIGINT. */
   def d6(c: Column): Column =
     (round(c.cast(DecimalType(28, 10)), 6) * lit(1000000)).cast(LongType)
+  /** Exact micro-unit SUM: the [[moneySum]] shape at 6 places. */
+  def d6Sum(c: Column): Column =
+    (round(sum(c.cast(DecimalType(28, 10))), 6) * lit(1000000)).cast(LongType)
   /** Event-time columns: truncate to whole seconds (ns vs µs parity). */
   def tsec(c: Column): Column = date_trunc("second", c)
 
@@ -62,4 +80,14 @@ object Norm {
     s"CAST(ROUND(CAST(($e) AS DECIMAL(28,10)), 4) * 10000 AS BIGINT)"
   def d6Sql(e: String): String =
     s"CAST(ROUND(CAST(($e) AS DECIMAL(28,10)), 6) * 1000000 AS BIGINT)"
+  def d6SumSql(e: String): String =
+    s"CAST(CAST(ROUND(sum(CAST(($e) AS DECIMAL(28,10))), 6) AS DECIMAL(28,6)) * 1000000 AS BIGINT)"
+
+  /** Floored fixed point (see the object doc): SQL text that Spark `expr`
+    * and DuckDB parse alike, so one string serves both engines. Callers
+    * keep their own `sum(…)` and outer `CAST … AS BIGINT`. */
+  def floorBp(e: String): String = floorScaled(10000, e)
+  def floorMicro(e: String): String = floorScaled(1000000, e)
+  private def floorScaled(k: Int, e: String): String =
+    s"CAST(floor($k * ($e)) AS BIGINT)"
 }

@@ -102,11 +102,11 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = t(s, d, "part")
   def orders(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val df = t(s, d, "orders")
-    if (par) Gates.rebalance(s, d, "orders", df, Seq("o_orderkey")) else df
+    if (par) Gates.spreadBy(s, d, "orders", df, Seq("o_orderkey")) else df
   }
   def lineitem(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val df = t(s, d, "lineitem")
-    if (par) Gates.rebalance(s, d, "lineitem", df, Seq("l_orderkey", "l_linenumber")) else df
+    if (par) Gates.spreadBy(s, d, "lineitem", df, Seq("l_orderkey", "l_linenumber")) else df
   }
   /** `events.ts` has shipped as parquet `timestamp[ns]` (which Spark 4 only
     * reads via `nanosAsLong`) in some data generations and `timestamp[us]`
@@ -126,7 +126,7 @@ object Tables {
     */
   def events(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val raw0 = t(s, d, "events")
-    val raw = if (par) Gates.rebalance(s, d, "events", raw0, Seq("event_id")) else raw0
+    val raw = if (par) Gates.spreadBy(s, d, "events", raw0, Seq("event_id")) else raw0
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn(
@@ -137,7 +137,7 @@ object Tables {
   }
   def documents(s: SparkSession, d: String, par: Boolean = false): DataFrame = {
     val df = t(s, d, "documents")
-    if (par) Gates.rebalance(s, d, "documents", df, Seq("doc_id")) else df
+    if (par) Gates.spreadBy(s, d, "documents", df, Seq("doc_id")) else df
   }
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }

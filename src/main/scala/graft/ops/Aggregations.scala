@@ -19,6 +19,9 @@ object Aggregations {
   /** Closed event-type domain probed by agg_sketch_cms (the fixture's
     * events.event_type values — SURVEY §1.3). */
   private val eventTypesCms = Seq("click", "error", "purchase", "signup", "view")
+  /** agg_theil's per-firm term (x/μ)·ln(x/μ), x/μ = r·n/S, both engines. */
+  private val TheilTerm =
+    "((r * n_firms) / (tot + 0.0)) * ln((r * n_firms) / (tot + 0.0))"
 
   val ops: Map[String, Q] = Map(
     // Pairwise Pearson correlation MATRIX over four lineitem measures
@@ -189,12 +192,10 @@ object Aggregations {
     // Theil T inequality index per market segment — the mean-log-deviation
     // member of the inequality trio (agg_gini: rank-based; agg_hhi:
     // concentration; Theil: decomposable entropy form). T·n = Σ (x/μ)·
-    // ln(x/μ) with x/μ = r·n/S; each term is floored to INTEGER micro-nats
-    // BEFORE the sum (the llm_unigram_logprob rule: shuffle-order-immune,
-    // and both engines floor the ln of the identical IEEE double — the
-    // expression text is character-identical on both sides). Emitted as
-    // (sum, n): the engine never divides. r·n ≤ ~1.5e15 stays inside
-    // double's 2^53 exact-integer range — documented headroom, not luck.
+    // ln(x/μ) with x/μ = r·n/S; each term is in floored micro-nats
+    // (Norm.floorMicro). Emitted as (sum, n): the engine never divides.
+    // r·n ≤ ~1.5e15 stays inside double's 2^53 exact-integer range —
+    // documented headroom, not luck.
     // Scale: (seg, custkey) partial agg, |segs|-row stats broadcast back,
     // one final partial-aggregatable seg rollup.
     "agg_theil" -> ((s, d) => {
@@ -202,8 +203,7 @@ object Aggregations {
       val stats = rev.groupBy("seg")
         .agg(count(lit(1)).as("n_firms"), sum("r").as("tot"))
       rev.join(broadcast(stats), Seq("seg"))
-        .withColumn("term", expr(
-          "CAST(floor(1000000 * (((r * n_firms) / (tot + 0.0)) * ln((r * n_firms) / (tot + 0.0)))) AS BIGINT)"))
+        .withColumn("term", expr(floorMicro(TheilTerm)))
         .groupBy("seg")
         .agg(max("n_firms").as("n_firms"), max("tot").as("total_cents"),
           sum("term").as("theil_micro_sum"))
@@ -215,9 +215,8 @@ object Aggregations {
     // taken from the EXACT integer cents (money() BIGINT → string → first
     // char), so both engines see the identical character; the observed
     // share and the Benford expectation log10(1+1/d) are both emitted as
-    // integer basis points (one integral divide; floored double for the
-    // expectation, with character-identical IEEE expression text on both
-    // sides). Scale: one partial-aggregatable 9-group groupBy plus a
+    // integer basis points (one integral divide; Norm.floorBp for the
+    // expectation). Scale: one partial-aggregatable 9-group groupBy plus a
     // broadcast 1-row total — nothing corpus-sized held or sorted.
     "agg_benford" -> ((s, d) => {
       // guard digit ∈ '1'..'9' so the op is total over its input domain: a
@@ -231,8 +230,7 @@ object Aggregations {
       digits.crossJoin(broadcast(tot))
         .select(col("digit"), col("n"),
           expr("10000 * n div total").as("share_bp"),
-          expr("CAST(floor(10000 * log10(1.0 + 1.0 / CAST(digit AS DOUBLE))) AS BIGINT)")
-            .as("benford_bp"))
+          expr(floorBp("log10(1.0 + 1.0 / CAST(digit AS DOUBLE))")).as("benford_bp"))
         .orderBy("digit")
     }),
 
@@ -240,9 +238,8 @@ object Aggregations {
     // the dependence screen that tells a pipeline whether a categorical
     // pair is worth a composite partition key. Cell/marginal counts are
     // exact partial-aggregatable aggregates; the per-cell
-    // pmi = ln(n_xy·N / (n_x·n_y)) is floored to integer micro-nats with
-    // character-identical IEEE expression text on both engines (the
-    // agg_theil rule). Scale: one corpus-sized (type, dow) groupBy — 35
+    // pmi = ln(n_xy·N / (n_x·n_y)) is in floored micro-nats
+    // (Norm.floorMicro). Scale: one corpus-sized (type, dow) groupBy — 35
     // cells — then metadata-sized re-aggregations and broadcast joins.
     "agg_mutual_info" -> ((s, d) => {
       val cells = events(s, d)
@@ -255,7 +252,7 @@ object Aggregations {
       cells.join(broadcast(nx), Seq("event_type")).join(broadcast(ny), Seq("dow"))
         .crossJoin(broadcast(tot))
         .select(col("event_type"), col("dow"), col("n_xy"),
-          expr("CAST(floor(1000000 * ln((CAST(n_xy AS DOUBLE) * total) / (CAST(n_x AS DOUBLE) * n_y))) AS BIGINT)")
+          expr(floorMicro("ln((CAST(n_xy AS DOUBLE) * total) / (CAST(n_x AS DOUBLE) * n_y))"))
             .as("pmi_micro"))
         .orderBy("event_type", "dow")
     }),
@@ -845,21 +842,18 @@ object Aggregations {
     }),
 
     // Shannon diversity — the log-based sibling of agg_diversity_simpson:
-    // H = ln N − (Σ c·ln c)/N per user. Each per-type count's ln is floored
-    // to integer micro-units BEFORE the weighted sum (the
-    // llm_unigram_logprob rule), so the aggregation and the final division
-    // are exact integer arithmetic — shuffle-order-immune, and both engines
-    // floor the ln of the identical double. Same two partial-aggregatable
+    // H = ln N − (Σ c·ln c)/N per user. Each ln is in floored micro-units
+    // (Norm.floorMicro), so the weighted sum and the final division are
+    // exact integer arithmetic. Same two partial-aggregatable
     // shuffles as simpson: (user, type) then (user); no corpus-sized state.
     "agg_diversity_shannon" -> ((s, d) =>
       events(s, d)
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
         .groupBy("user_id")
         .agg(sum("c").as("n_events"), count(lit(1)).as("n_types"),
-          sum(expr("c * CAST(floor(1000000 * ln(CAST(c AS DOUBLE))) AS BIGINT)"))
-            .as("clnc_u"))
+          sum(expr(s"c * ${floorMicro("ln(CAST(c AS DOUBLE))")}")).as("clnc_u"))
         .select(col("user_id"), col("n_events"), col("n_types"),
-          expr("""CAST(floor(1000000 * ln(CAST(n_events AS DOUBLE))) AS BIGINT)
+          expr(s"""${floorMicro("ln(CAST(n_events AS DOUBLE))")}
                   - clnc_u div n_events""").as("shannon_u"))
         .orderBy("user_id")),
   )
@@ -973,15 +967,13 @@ object Aggregations {
                     FROM rev GROUP BY seg)
          SELECT seg, n_firms, CAST(10000 * sq // (t * t) AS BIGINT) AS hhi_bp
          FROM a ORDER BY seg""",
-    // Character-identical arithmetic text to the Spark side (same IEEE op
-    // order) so the floored micro-nat terms agree exactly.
     "agg_theil" ->
       s"""WITH rev AS (${Shared.segRevenueSql("o_custkey", "r")}),
               st AS (SELECT seg, count(*) AS n_firms, CAST(sum(r) AS BIGINT) AS tot
                      FROM rev GROUP BY seg)
          SELECT seg, CAST(max(n_firms) AS BIGINT) AS n_firms,
                 CAST(max(tot) AS BIGINT) AS total_cents,
-                CAST(sum(CAST(floor(1000000 * (((r * n_firms) / (tot + 0.0)) * ln((r * n_firms) / (tot + 0.0)))) AS BIGINT)) AS BIGINT) AS theil_micro_sum
+                CAST(sum(${floorMicro(TheilTerm)}) AS BIGINT) AS theil_micro_sum
          FROM rev JOIN st USING (seg) GROUP BY seg ORDER BY seg""",
     "agg_grouping_id" ->
       """SELECT o_orderstatus, o_orderpriority,
@@ -999,16 +991,16 @@ object Aggregations {
                       GROUP BY 1)
          SELECT digit, n,
                 10000 * n // CAST((SELECT sum(n) FROM dg) AS BIGINT) AS share_bp,
-                CAST(floor(10000 * log10(1.0 + 1.0 / CAST(digit AS DOUBLE))) AS BIGINT) AS benford_bp
+                ${floorBp("log10(1.0 + 1.0 / CAST(digit AS DOUBLE))")} AS benford_bp
          FROM dg ORDER BY digit""",
     "agg_mutual_info" ->
-      """WITH c AS (SELECT event_type, CAST(isodow(ts) AS BIGINT) AS dow, count(*) AS n_xy
+      s"""WITH c AS (SELECT event_type, CAST(isodow(ts) AS BIGINT) AS dow, count(*) AS n_xy
                     FROM events GROUP BY 1, 2),
               nx AS (SELECT event_type, CAST(sum(n_xy) AS BIGINT) AS n_x FROM c GROUP BY 1),
               ny AS (SELECT dow, CAST(sum(n_xy) AS BIGINT) AS n_y FROM c GROUP BY 1),
               tt AS (SELECT CAST(sum(n_xy) AS BIGINT) AS total FROM c)
          SELECT event_type, dow, n_xy,
-                CAST(floor(1000000 * ln((CAST(n_xy AS DOUBLE) * total) / (CAST(n_x AS DOUBLE) * n_y))) AS BIGINT) AS pmi_micro
+                ${floorMicro("ln((CAST(n_xy AS DOUBLE) * total) / (CAST(n_x AS DOUBLE) * n_y))")} AS pmi_micro
          FROM c JOIN nx USING (event_type) JOIN ny USING (dow) CROSS JOIN tt
          ORDER BY event_type, dow""",
     "agg_iqr" ->
@@ -1261,14 +1253,14 @@ object Aggregations {
           FROM c WHERE cum * 2 >= tot
           GROUP BY 1 ORDER BY 1""",
     "agg_diversity_shannon" ->
-      """WITH pt AS (SELECT user_id, event_type, count(*) AS c
+      s"""WITH pt AS (SELECT user_id, event_type, count(*) AS c
                      FROM events GROUP BY 1, 2),
               ag AS (SELECT user_id, CAST(sum(c) AS BIGINT) AS n_events,
                             count(*) AS n_types,
-                            CAST(sum(c * CAST(floor(1000000 * ln(CAST(c AS DOUBLE))) AS BIGINT)) AS BIGINT) AS clnc_u
+                            CAST(sum(c * ${floorMicro("ln(CAST(c AS DOUBLE))")}) AS BIGINT) AS clnc_u
                      FROM pt GROUP BY user_id)
          SELECT user_id, n_events, n_types,
-                CAST(floor(1000000 * ln(CAST(n_events AS DOUBLE))) AS BIGINT)
+                ${floorMicro("ln(CAST(n_events AS DOUBLE))")}
                   - clnc_u // n_events AS shannon_u
          FROM ag ORDER BY user_id""",
   )

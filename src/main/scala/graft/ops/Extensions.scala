@@ -134,9 +134,9 @@ object Extensions {
     // node survives) is asserted in Round6Suite. CREATE OR REPLACE is
     // idempotent, so Verify's thread pool re-declaring it is safe.
     "udf_sql_function" -> ((s, d) => {
-      s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_cents(p DOUBLE)
+      s.sql(s"""CREATE OR REPLACE TEMPORARY FUNCTION graft_cents(p DOUBLE)
                RETURNS BIGINT
-               RETURN CAST(ROUND(CAST(p AS DECIMAL(28,10)), 2) * 100 AS BIGINT)""")
+               RETURN ${moneySql("p")}""")
       s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_band(p DOUBLE)
                RETURNS STRING
                RETURN CASE WHEN graft_cents(p) < 5000000 THEN 'low'
@@ -191,8 +191,7 @@ object Extensions {
     // The oracle is the hand-inlined body — exactly what Catalyst's rewrite
     // produces, so the parity check doubles as an inlining-semantics check.
     "udf_sql_function" ->
-      """WITH t AS (SELECT CAST(ROUND(CAST(o_totalprice AS DECIMAL(28,10)), 2) * 100 AS BIGINT) AS cents
-                    FROM orders)
+      s"""WITH t AS (SELECT ${moneySql("o_totalprice")} AS cents FROM orders)
          SELECT CASE WHEN cents < 5000000 THEN 'low'
                      WHEN cents < 15000000 THEN 'mid'
                      ELSE 'high' END AS band,

@@ -870,8 +870,7 @@ object Joins {
     // Oracle is the brute-force ε-join (DuckDB's IEJoin handles the range
     // predicate); grid blocking is plan-shape only, the answer is identical.
     "join_spatial_grid" ->
-      """WITH pts AS (SELECT event_id,
-                             CAST(ROUND(CAST(value AS DECIMAL(28,10)), 2) * 100 AS BIGINT) AS x,
+      s"""WITH pts AS (SELECT event_id, ${moneySql("value")} AS x,
                              CAST(datepart('hour', ts) * 3600 + datepart('minute', ts) * 60
                                   + datepart('second', ts) AS BIGINT) AS y
                       FROM events)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Norm.floorMicro
 import graft.Tables._
 import graft.Gates
 
@@ -158,17 +159,14 @@ object LlmCuration {
     bpeTrained(s, d); ()
   }
 
-  /** Unrolled K-round DuckDB twin of the BPE train loop: per round a CTE
-    * triple p{k} (pair counts), b{k} (argmax winner), w{k} (merged symbol
-    * stream) — the same shapes the Spark loop materializes per iteration. */
-  /** The per-round CTE blocks shared by the train and apply oracles:
-    * p{r} (pair counts), b{r} (argmax winner, cols bp/n), w{r} (merged
-    * symbol stream), over w0 = the spaced-symbol words. */
+  /** Unrolled K-round DuckDB twin of the BPE train loop, shared by the
+    * train and apply oracles: per round the CTEs p{r} (pair counts), b{r}
+    * (argmax winner, cols bp/n), w{r} (merged symbol stream), over w0 = the
+    * spaced-symbol words — the shapes the Spark loop materializes. */
   private def bpeRoundsCte(k: Int): String = {
     val rounds = (1 to k).map { r =>
       s"""p$r AS (SELECT pair, count(*) AS n FROM (
-                   SELECT unnest(list_transform(generate_series(1, len(a) - 1),
-                                 j -> a[j] || ' ' || a[j + 1])) AS pair
+                   SELECT unnest(${Shared.wordGramsSql("a", "2")}) AS pair
                    FROM (SELECT string_split(sym, ' ') AS a FROM w${r - 1}))
                  GROUP BY 1),
           b$r AS (SELECT pair AS bp, n FROM p$r ORDER BY n DESC, pair LIMIT 1),
@@ -1141,11 +1139,10 @@ object LlmCuration {
     // rule: sample source s with p ∝ n_s^α, α = 0.7 — upweights the tail
     // so small sources aren't drowned, the standard alternative to
     // llm_mixture_weights' fixed targets): per source, the n^0.7 weight
-    // floored to micro-units (one deterministic exp(0.7·ln n) per source
-    // — metadata-sized, the per-term floor making everything after exact
-    // integers). ACCEPTED ULP RISK (r9 ADVICE, documented next to the
-    // exact-integer rules in SCALE_TUNING.md): exp∘ln composes two libm
-    // calls per engine, so a cross-engine divergence ≤ ~3e-15 relative
+    // in floored micro-units (Norm.floorMicro; one exp(0.7·ln n) per
+    // source, metadata-sized). ACCEPTED ULP RISK (r9 ADVICE, documented
+    // next to the exact-integer rules in SCALE_TUNING.md): exp∘ln composes
+    // two libm calls per engine, so a cross-engine divergence ≤ ~3e-15 relative
     // can flip the floor when 1e6·n^0.7 sits within that band of an
     // integer. A TRUE integer fix (w^10 ≤ 1e60·n^7 root extraction)
     // exceeds both engines' 128-bit integers, so instead the risk is
@@ -1162,7 +1159,7 @@ object LlmCuration {
     "llm_sample_temperature" -> ((s, d) => {
       val n = documents(s, d).groupBy("source").agg(count(lit(1)).as("n_docs"))
         .withColumn("weight_u",
-          expr("CAST(floor(1000000 * exp(0.7 * ln(CAST(n_docs AS DOUBLE)))) AS BIGINT)"))
+          expr(floorMicro("exp(0.7 * ln(CAST(n_docs AS DOUBLE)))")))
       val tot = n.agg(sum("weight_u").as("tw"))
       val q = n.join(broadcast(tot), lit(true))
         .withColumn("base", expr("10000 * weight_u div tw"))
@@ -1578,13 +1575,12 @@ object LlmCuration {
                   // CAST(sum(n_tok) AS BIGINT) AS trunc_bp
          FROM t, w GROUP BY win_size ORDER BY win_size""",
     "llm_bpe_merge_step" ->
-      """WITH ws AS (SELECT w FROM (SELECT unnest(string_split(text, ' ')) AS w
+      s"""WITH ws AS (SELECT w FROM (SELECT unnest(string_split(text, ' ')) AS w
                                     FROM documents)
                      WHERE length(w) >= 2),
               sp AS (SELECT array_to_string(str_split_regex(w, ''), ' ') AS sym FROM ws),
               p1 AS (SELECT pair, count(*) AS n FROM (
-                       SELECT unnest(list_transform(generate_series(1, len(a) - 1),
-                                     i -> a[i] || ' ' || a[i + 1])) AS pair
+                       SELECT unnest(${Shared.wordGramsSql("a", "2")}) AS pair
                        FROM (SELECT string_split(sym, ' ') AS a FROM sp))
                      GROUP BY 1),
               best AS (SELECT pair AS best_pair FROM p1
@@ -1595,9 +1591,7 @@ object LlmCuration {
                                         ' ' || replace(best_pair, ' ', '') || ' ')) AS sym2
                     FROM sp, best),
               p2 AS (SELECT best_pair, pair, count(*) AS n FROM (
-                       SELECT best_pair,
-                              unnest(list_transform(generate_series(1, len(a) - 1),
-                                     i -> a[i] || ' ' || a[i + 1])) AS pair
+                       SELECT best_pair, unnest(${Shared.wordGramsSql("a", "2")}) AS pair
                        FROM (SELECT best_pair, string_split(sym2, ' ') AS a FROM m))
                      GROUP BY 1, 2)
          SELECT best_pair, pair, n FROM p2 ORDER BY n DESC, pair LIMIT 20""",
@@ -1812,8 +1806,8 @@ object LlmCuration {
     // Same per-source micro-floored n^0.7 weight; largest-remainder
     // apportionment in exact integers.
     "llm_sample_temperature" ->
-      """WITH n AS (SELECT source, count(*) AS n_docs,
-                           CAST(floor(1000000 * exp(0.7 * ln(CAST(count(*) AS DOUBLE)))) AS BIGINT) AS weight_u
+      s"""WITH n AS (SELECT source, count(*) AS n_docs,
+                           ${floorMicro("exp(0.7 * ln(CAST(count(*) AS DOUBLE)))")} AS weight_u
                     FROM documents GROUP BY 1),
               t AS (SELECT sum(weight_u) AS tw FROM n),
               q AS (SELECT source, n_docs, weight_u,

@@ -401,13 +401,6 @@ object LlmExtras {
         .orderBy("doc_a", "doc_b")
     }),
 
-    // Char-3-gram Jaccard near-dup (threshold 0.7) over the FULL corpus.
-    // 3-gram vocabulary is charset-bounded (377 grams here), so the adaptive
-    // path picks the interned-bitmap popcount kernel — candidate pruning
-    // cannot work at this threshold anyway (background gram-set similarity
-    // ≈ 0.6 makes every pruner — LSH bands or rare-prefix — degenerate to
-    // all-pairs; measured at sf0.1), so the design makes each pair cost a
-    // few long-ANDs instead of a shuffled array-pair row.
     // Asymmetric CONTAINMENT dedup on df-pruned 5-gram shingles — catches
     // the subset-duplicate (a doc wholly embedded in a larger doc) that
     // symmetric Jaccard misses. Shingles (not unigrams: this corpus's word
@@ -440,6 +433,13 @@ object LlmExtras {
         .orderBy("doc_a", "doc_b")
     }),
 
+    // Char-3-gram Jaccard near-dup (threshold 0.7) over the FULL corpus.
+    // 3-gram vocabulary is charset-bounded (377 grams here), so the adaptive
+    // path picks the interned-bitmap popcount kernel — candidate pruning
+    // cannot work at this threshold anyway (background gram-set similarity
+    // ≈ 0.6 makes every pruner — LSH bands or rare-prefix — degenerate to
+    // all-pairs; measured at sf0.1), so the design makes each pair cost a
+    // few long-ANDs instead of a shuffled array-pair row.
     "llm_dedup_ngram_jaccard" -> ((s, d) => {
       val sp = s
       import sp.implicits._
@@ -1579,8 +1579,7 @@ object LlmExtras {
         .toDF("label", "dim", "x")
         .groupBy("label", "dim")
         .agg(count(lit(1)).as("n"),
-          expr("CAST(round(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10))), 6) * 1000000 AS BIGINT)")
-            .as("sum_u"))
+          d6Sum(col("x").cast("double")).as("sum_u"))
         .select(col("label"), col("dim").cast("long").as("dim"), col("n"), col("sum_u"))
         .orderBy("label", "dim")),
 
@@ -1620,8 +1619,7 @@ object LlmExtras {
         .select(col("vec_id"), posexplode(col("embedding")))
         .toDF("vec_id", "dim", "x")
         .select(col("vec_id"), col("dim").cast("long").as("dim"),
-          expr("CAST(round(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10)), 6) * 1000000 AS BIGINT)")
-            .as("xu"))
+          d6(col("x").cast("double")).as("xu"))
         .localCheckpoint(true) // re-read 7 times across the 3 rounds
       var cent = xu.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("dim"), expr("xu div 100").as("cu"))
@@ -1658,14 +1656,12 @@ object LlmExtras {
         .toDF("cluster", "dim", "x")
         .groupBy("cluster", "dim")
         .agg(count(lit(1)).as("n"),
-          expr("CAST(round(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10))), 6) * 1000000 AS BIGINT)")
-            .as("sum_u"))
+          d6Sum(col("x").cast("double")).as("sum_u"))
       val seeds = embeddings(s, d).filter(col("vec_id") < 8)
         .select(col("vec_id").as("cluster"), posexplode(col("embedding")))
         .toDF("cluster", "dim", "sx")
         .select(col("cluster"), col("dim"),
-          expr("CAST(round(CAST(CAST(sx AS DOUBLE) AS DECIMAL(28,10)), 6) * 1000000 AS BIGINT)")
-            .as("seed_u"))
+          d6(col("sx").cast("double")).as("seed_u"))
       upd.join(broadcast(seeds), Seq("cluster", "dim"))
         .select(col("cluster"), col("dim").cast("long").as("dim"), col("n"),
           col("sum_u"), col("seed_u"),
@@ -1905,8 +1901,8 @@ object LlmExtras {
             FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id)
           WHERE hamming <= 3 ORDER BY doc_a, doc_b"""
     },
-    // Exact all-pairs over the FULL corpus; the size-ratio prefilter
-    // (J >= 0.7 forces 10·min >= 7·max) is semantics-preserving pruning.
+    // Rare 5-gram postings (df <= 64), pairs kept where na >= 5 and
+    // 5·common >= 4·na.
     "llm_dedup_containment" ->
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
               sh AS (SELECT DISTINCT doc_id, unnest(${Shared.wordGramsSql("t", "5")}) AS tok
@@ -1924,6 +1920,8 @@ object LlmExtras {
                FROM cm JOIN szr ON szr.doc_id = cm.doc_a)
          WHERE na >= 5 AND common_rare * 5 >= na * 4
          ORDER BY doc_a, doc_b""",
+    // Exact all-pairs over the FULL corpus; the size-ratio prefilter
+    // (J >= 0.7 forces 10·min >= 7·max) is semantics-preserving pruning.
     "llm_dedup_ngram_jaccard" ->
       s"""WITH g AS (SELECT doc_id,
                             list_distinct(list_transform(range(1, length(text) - 1),
@@ -2286,7 +2284,7 @@ object LlmExtras {
          ORDER BY doc_id""",
     // Same char-sorted histogram, same sequential ln fold.
     "llm_text_entropy" ->
-      """WITH chars AS (
+      s"""WITH chars AS (
             SELECT doc_id,
                    unnest(list_transform(range(1, length(text) + 1),
                                          i -> substring(text, i, 1))) AS ch
@@ -2298,11 +2296,10 @@ object LlmExtras {
                        CAST(sum(cnt) AS BIGINT) AS n
                 FROM hist GROUP BY doc_id)
           SELECT doc_id, n AS n_chars_counted, n_distinct_chars,
-                 CAST(ROUND(CAST(ln(CAST(n AS DOUBLE)) -
+                 ${d4Sql("""ln(CAST(n AS DOUBLE)) -
                       list_reduce(list_prepend(CAST(0 AS DOUBLE),
                           list_transform(cnts, c -> CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)))),
-                          (a, x) -> a + x) / CAST(n AS DOUBLE)
-                      AS DECIMAL(28,10)), 4) * 10000 AS BIGINT) AS entropy_nats_bp
+                          (a, x) -> a + x) / CAST(n AS DOUBLE)""")} AS entropy_nats_bp
           FROM h ORDER BY doc_id""",
     // Pipeline.run, stage for stage: quality_bp (pure integer arithmetic,
     // Pipeline.withQuality op-for-op), filter >= 9000, drop the larger id
@@ -2360,9 +2357,8 @@ object LlmExtras {
          FROM pr JOIN np na ON na.event_type = ta JOIN np nb ON nb.event_type = tb
          ORDER BY ta, tb""",
     "llm_embed_centroid" ->
-      """SELECT label, pos - 1 AS dim, count(*) AS n,
-                CAST(CAST(round(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10))), 6)
-                          AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS sum_u
+      s"""SELECT label, pos - 1 AS dim, count(*) AS n,
+                ${d6SumSql("CAST(x AS DOUBLE)")} AS sum_u
          FROM (SELECT label,
                       unnest(range(1, len(embedding) + 1)) AS pos,
                       unnest(embedding) AS x
@@ -2389,9 +2385,7 @@ object LlmExtras {
             c$k AS (SELECT a.cid, x.dim, sum(x.xu) // (100 * count(*)) AS cu
                     FROM xu x JOIN $a a ON a.vec_id = x.vec_id GROUP BY 1, 2)"""
       }
-      s"""WITH xu AS (SELECT vec_id, pos - 1 AS dim,
-                             CAST(CAST(round(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10)), 6)
-                                       AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS xu
+      s"""WITH xu AS (SELECT vec_id, pos - 1 AS dim, ${d6Sql("CAST(x AS DOUBLE)")} AS xu
                       FROM (SELECT vec_id,
                                    unnest(range(1, len(embedding) + 1)) AS pos,
                                    unnest(embedding) AS x
@@ -2416,12 +2410,10 @@ object LlmExtras {
                              FROM embeddings) e
                        JOIN assign a ON a.vec_id = e.vec_id),
                upd AS (SELECT cluster, dim, count(*) AS n,
-                              CAST(CAST(round(sum(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10))), 6)
-                                        AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS sum_u
+                              ${d6SumSql("CAST(x AS DOUBLE)")} AS sum_u
                        FROM pts GROUP BY 1, 2),
                seeds AS (SELECT vec_id AS cluster, pos - 1 AS dim,
-                                CAST(CAST(round(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,10)), 6)
-                                          AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS seed_u
+                                ${d6Sql("CAST(x AS DOUBLE)")} AS seed_u
                          FROM (SELECT vec_id,
                                       unnest(range(1, len(embedding) + 1)) AS pos,
                                       unnest(embedding) AS x

@@ -447,9 +447,8 @@ object LlmPipeline {
     // Collocation mining: PMI of adjacent token pairs with support ≥10 —
     // the phrase-detection pass a tokenizer-training pipeline runs before
     // merging multi-word units. pmi = ln(n_xy·N / (n_x·n_y)) with one
-    // shared normalizer N (total token count), floored to integer
-    // micro-nats with character-identical IEEE expression text on both
-    // engines (the agg_theil rule). Scale: bigram and unigram counts are
+    // shared normalizer N (total token count), in floored micro-nats
+    // (Norm.floorMicro). Scale: bigram and unigram counts are
     // partial-aggregatable shuffles; the unigram table is VOCAB-bounded so
     // both marginal joins broadcast, and the support filter keeps the
     // output collocation-sized. Nothing corpus² anywhere.
@@ -468,7 +467,7 @@ object LlmPipeline {
         .join(broadcast(uni.select(col("tok").as("w2"), col("n_tok").as("n_y"))), Seq("w2"))
         .crossJoin(broadcast(tot))
         .select(col("bigram"), col("n_xy"),
-          expr("CAST(floor(1000000 * ln((CAST(n_xy AS DOUBLE) * total) / (CAST(n_x AS DOUBLE) * n_y))) AS BIGINT)")
+          expr(floorMicro("ln((CAST(n_xy AS DOUBLE) * total) / (CAST(n_x AS DOUBLE) * n_y))"))
             .as("pmi_micro"))
         .orderBy("bigram")
     }),
@@ -502,15 +501,14 @@ object LlmPipeline {
     // slope ≈ −1 and high R²; synthetic/spammy sources drift): per source,
     // the least-squares line through (ln rank, ln freq) over the full
     // frequency table. Cross-engine float discipline: each ln is floored
-    // to micro-units PER TERM (the llm_source_kl rule — integer sums are
-    // shuffle-arrival-order-immune), the five regression sums accumulate
-    // exactly (x·y on the DECIMAL(38,0) accumulator rule: vocab·(1.2e7)²
-    // overflows BIGINT), and slope/R² are computed from the exact sums in
-    // ONE double step per output (casting the same exact integer to double
-    // is deterministic on both engines), floored to bp. Scale: one (source,
-    // word) partial-aggregatable count, a rank window over the COLLAPSED
-    // frequency frame, one (source) partial-aggregatable sum — vocab-bound
-    // throughout, never corpus².
+    // to micro-units PER TERM (Norm.floorMicro), the five regression sums
+    // accumulate exactly (x·y on the DECIMAL(38,0) accumulator rule:
+    // vocab·(1.2e7)² overflows BIGINT), and slope/R² are computed from the
+    // exact sums in ONE double step per output (casting the same exact
+    // integer to double is deterministic on both engines), floored to bp
+    // (Norm.floorBp). Scale: one (source, word) partial-aggregatable count,
+    // a rank window over the COLLAPSED frequency frame, one (source)
+    // partial-aggregatable sum — vocab-bound throughout, never corpus².
     // Unigram-LM perplexity proxy per document (the CCNet-style LM quality
     // filter: docs whose tokens are globally rare score high surprisal and
     // get routed to the low-quality bucket): corpus unigram counts collapse
@@ -530,8 +528,8 @@ object LlmPipeline {
       val surp = toks.groupBy("w").agg(count(lit(1)).as("c"))
         .crossJoin(broadcast(toks.agg(count(lit(1)).as("tc"))))
         .select(col("w"),
-          expr("""CAST(floor(1000000 * ln(CAST(tc AS DOUBLE))) AS BIGINT)
-                  - CAST(floor(1000000 * ln(CAST(c AS DOUBLE))) AS BIGINT)""").as("sp"))
+          expr(s"""${floorMicro("ln(CAST(tc AS DOUBLE))")}
+                  - ${floorMicro("ln(CAST(c AS DOUBLE))")}""").as("sp"))
       toks.join(surp, "w")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_tok"), sum("sp").as("nll_total"))
@@ -547,8 +545,8 @@ object LlmPipeline {
       val xy = tf.withColumn("rk", row_number().over(
           Window.partitionBy("source").orderBy(col("c").desc, col("w"))))
         .select(col("source"),
-          expr("CAST(floor(1000000 * ln(CAST(rk AS DOUBLE))) AS BIGINT)").as("x"),
-          expr("CAST(floor(1000000 * ln(CAST(c AS DOUBLE))) AS BIGINT)").as("y"))
+          expr(floorMicro("ln(CAST(rk AS DOUBLE))")).as("x"),
+          expr(floorMicro("ln(CAST(c AS DOUBLE))")).as("y"))
       xy.groupBy("source").agg(
           count(lit(1)).as("vocab_n"),
           sum(expr("CAST(x AS DECIMAL(38,0))")).as("sx"),
@@ -557,45 +555,32 @@ object LlmPipeline {
           sum(expr("CAST(x * x AS DECIMAL(38,0))")).as("sxx"),
           sum(expr("CAST(y * y AS DECIMAL(38,0))")).as("syy"))
         .select(col("source"), col("vocab_n"),
-          expr("""CASE WHEN vocab_n < 2 OR vocab_n * sxx - sx * sx = 0 THEN 0
-                       ELSE CAST(floor(10000 * (CAST(vocab_n * sxy - sx * sy AS DOUBLE)
-                                                / CAST(vocab_n * sxx - sx * sx AS DOUBLE))) AS BIGINT)
+          expr(s"""CASE WHEN vocab_n < 2 OR vocab_n * sxx - sx * sx = 0 THEN 0
+                       ELSE ${floorBp("""CAST(vocab_n * sxy - sx * sy AS DOUBLE)
+                                         / CAST(vocab_n * sxx - sx * sx AS DOUBLE)""")}
                   END""").as("slope_bp"),
-          expr("""CASE WHEN vocab_n < 2 OR vocab_n * sxx - sx * sx = 0
+          expr(s"""CASE WHEN vocab_n < 2 OR vocab_n * sxx - sx * sx = 0
                          OR vocab_n * syy - sy * sy = 0 THEN 0
-                       ELSE CAST(floor(10000 * (CAST(vocab_n * sxy - sx * sy AS DOUBLE)
-                                                * CAST(vocab_n * sxy - sx * sy AS DOUBLE)
-                                                / (CAST(vocab_n * sxx - sx * sx AS DOUBLE)
-                                                   * CAST(vocab_n * syy - sy * sy AS DOUBLE)))) AS BIGINT)
+                       ELSE ${floorBp("""CAST(vocab_n * sxy - sx * sy AS DOUBLE)
+                                         * CAST(vocab_n * sxy - sx * sy AS DOUBLE)
+                                         / (CAST(vocab_n * sxx - sx * sx AS DOUBLE)
+                                            * CAST(vocab_n * syy - sy * sy AS DOUBLE))""")}
                   END""").as("r2_bp"))
         .orderBy("source")
     }),
 
     // Laplace-smoothed unigram LM scoring — the simplest of the model-based
-    // quality filters (a perplexity gate): train counts from the doc_id%5≠0
-    // slice, held-out docs scored by Σ ln p(w). Each token's log-prob is
-    // floored to INTEGER micro-units BEFORE the per-doc sum, so the
-    // aggregation is exact integer arithmetic — immune to shuffle-order
-    // float association — and both engines floor the ln of the identical
-    // double ratio. Vocab counts broadcast (vocab ≪ corpus at any scale);
-    // the corpus side never shuffles until the doc_id-keyed count.
-    "llm_unigram_logprob" -> ((s, d) => {
-      val toks = documents(s, d)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-      val counts = toks.filter(col("doc_id") % 5 =!= 0)
-        .groupBy("w").agg(count(lit(1)).as("c"))
-      val stats = counts.agg(sum("c").as("nn"), count(lit(1)).as("vv"))
-      toks.filter(col("doc_id") % 5 === 0)
-        .join(broadcast(counts), Seq("w"), "left")
-        .crossJoin(broadcast(stats))
-        .withColumn("lp_u", expr(
-          "CAST(floor(1000000 * ln((coalesce(c, 0) + 1.0) / (nn + vv + 1.0))) AS BIGINT)"))
+    // quality filters (a perplexity gate): held-out docs scored by Σ ln p(w)
+    // under the train-slice unigram LM ([[heldOutUnigrams]]). Vocab counts
+    // broadcast (vocab ≪ corpus at any scale); the corpus side never
+    // shuffles until the doc_id-keyed count.
+    "llm_unigram_logprob" -> ((s, d) =>
+      heldOutUnigrams(s, d)
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_toks"),
           sum(when(col("c").isNull, 1L).otherwise(0L)).as("n_oov"),
           sum("lp_u").as("logprob_u"))
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
 
     // Portable MinHash signatures (the dedup-sketch layer itself, exposed
     // as a declared result): 8 salted-md5 hash families, mh_k = min over
@@ -738,16 +723,7 @@ object LlmPipeline {
     // onto the score frame; the report is one partial-aggregatable lang
     // groupBy.
     "llm_perplexity_filter" -> ((s, d) => {
-      val toks = documents(s, d)
-        .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
-      val counts = toks.filter(col("doc_id") % 5 =!= 0)
-        .groupBy("w").agg(count(lit(1)).as("c"))
-      val stats = counts.agg(sum("c").as("nn"), count(lit(1)).as("vv"))
-      val scores = toks.filter(col("doc_id") % 5 === 0)
-        .join(broadcast(counts), Seq("w"), "left")
-        .crossJoin(broadcast(stats))
-        .withColumn("lp_u", expr(
-          "CAST(floor(1000000 * ln((coalesce(c, 0) + 1.0) / (nn + vv + 1.0))) AS BIGINT)"))
+      val scores = heldOutUnigrams(s, d, "lang")
         .groupBy("doc_id", "lang")
         .agg(count(lit(1)).as("n_toks"), sum("lp_u").as("lp"))
         .withColumn("avg_lp", expr("lp div n_toks"))
@@ -830,11 +806,11 @@ object LlmPipeline {
     // deterministically from the corpus itself: the 3 highest-df tokens
     // appearing in at most half the docs (df-bounded so idf > 0 and the
     // choice is reproducible; ties by token). Per-(doc, term) scores are
-    // floored to integer micro-units BEFORE the doc sum (order-immune);
-    // every mixed-type arithmetic starts from an explicit CAST AS DOUBLE
-    // (the decimal-literal rule). Scale: tf is one partial-aggregatable
-    // (doc, tok) groupBy; the 3-term query, df table slice, and 1-row
-    // length stats all broadcast; top-20 via TakeOrdered.
+    // floored micro-units (Norm.floorMicro); every mixed-type arithmetic
+    // starts from an explicit CAST AS DOUBLE (the decimal-literal rule).
+    // Scale: tf is one partial-aggregatable (doc, tok) groupBy; the 3-term
+    // query, df table slice, and 1-row length stats all broadcast; top-20
+    // via TakeOrdered.
     "llm_bm25_topk" -> ((s, d) => {
       val tf = documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -850,12 +826,7 @@ object LlmPipeline {
       tf.join(broadcast(terms), Seq("tok"))
         .join(dl, Seq("doc_id"))
         .crossJoin(broadcast(stats))
-        .withColumn("term_micro", expr(
-          """CAST(floor(1000000 * (
-               ln((CAST(nd - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))
-               * ((CAST(c AS DOUBLE) * 2.2)
-                  / (CAST(c AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(len AS DOUBLE) / (CAST(sumlen AS DOUBLE) / nd)))))
-             )) AS BIGINT)"""))
+        .withColumn("term_micro", expr(floorMicro(Bm25Term)))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_terms_hit"), sum("term_micro").as("bm25_micro"))
         .orderBy(col("bm25_micro").desc, col("doc_id")).limit(20)
@@ -892,9 +863,9 @@ object LlmPipeline {
     // the drift detector a mixture-rebalancing pipeline watches (a source
     // whose token distribution diverges is over/under-represented or
     // contaminated). D(P_s‖Q)·1e6 = Σ_w floor(1e6·(c_sw/N_s)·
-    // ln(c_sw·N/(N_s·c_w))), floored PER TERM before the source sum
-    // (order-immune, CAST-AS-DOUBLE rule); only observed words contribute
-    // (c_sw > 0), so no smoothing constant enters the declared result.
+    // ln(c_sw·N/(N_s·c_w))), floored PER TERM (Norm.floorMicro); only
+    // observed words contribute (c_sw > 0), so no smoothing constant
+    // enters the declared result.
     // Scale: (source, w) partial agg; corpus unigram table and |sources|-
     // row totals broadcast (vocab-bounded); nothing corpus².
     "llm_source_kl" -> ((s, d) => {
@@ -906,9 +877,7 @@ object LlmPipeline {
       val nt = cw.agg(sum("cw").as("nt"))
       csw.join(broadcast(cw), Seq("w")).join(broadcast(ns), Seq("source"))
         .crossJoin(broadcast(nt))
-        .withColumn("term", expr(
-          """CAST(floor(1000000 * ((CAST(c AS DOUBLE) / ns)
-             * ln((CAST(c AS DOUBLE) * nt) / (CAST(ns AS DOUBLE) * cw)))) AS BIGINT)"""))
+        .withColumn("term", expr(floorMicro(KlTerm)))
         .groupBy("source")
         .agg(max("ns").as("n_toks"), sum("term").as("kl_micro_sum"))
         .orderBy("source")
@@ -917,9 +886,9 @@ object LlmPipeline {
     // Conditional bigram entropy rate per language — the predictability
     // statistic that separates natural prose from template/boilerplate
     // corpora (low H(W|prev) = repetitive). Each (prev, w) contributes
-    // cb·ln(cb/cp), floored to integer micro-nats BEFORE the language sum
-    // (order-immune, CAST-AS-DOUBLE rule); emitted as (Σcb, Σterms) — the
-    // engine never divides, −Σterms/N is the reader's entropy rate.
+    // cb·ln(cb/cp) in floored micro-nats (Norm.floorMicro); emitted as
+    // (Σcb, Σterms) — the engine never divides, −Σterms/N is the reader's
+    // entropy rate.
     // Scale: two partial-aggregatable groupBys over bigram-type-bounded
     // frames, then a keyed (lang, prev) shuffle join — never broadcast
     // (bigram vocab grows with corpus), never corpus².
@@ -928,8 +897,7 @@ object LlmPipeline {
       val cb = bg.groupBy("lang", "prev", "w").agg(count(lit(1)).as("cb"))
       val cp = bg.groupBy("lang", "prev").agg(count(lit(1)).as("cp"))
       cb.join(cp, Seq("lang", "prev"))
-        .withColumn("term", expr(
-          "CAST(floor(1000000 * (CAST(cb AS DOUBLE) * ln(CAST(cb AS DOUBLE) / cp))) AS BIGINT)"))
+        .withColumn("term", expr(floorMicro("CAST(cb AS DOUBLE) * ln(CAST(cb AS DOUBLE) / cp)")))
         .groupBy("lang")
         .agg(sum("cb").as("n_bigrams"), sum("term").as("neg_ent_micro_sum"))
         .orderBy("lang")
@@ -939,26 +907,22 @@ object LlmPipeline {
     // seen bigram → ln(cb/cp); unseen → fixed 0.4 penalty times the
     // Laplace unigram — the backoff LM an n-gram quality filter actually
     // ships (llm_bigram_logprob is the no-backoff sibling). Every per-token
-    // score is floored to integer micro-nats BEFORE the doc sum
-    // (shuffle-order-immune), with character-identical IEEE expression text
-    // on both engines. Scale: all LM tables are vocab-bounded broadcasts;
-    // the held-out stream is one narrow pass + one doc groupBy.
+    // score is in floored micro-nats (Norm.floorMicro). Scale: all LM
+    // tables ([[heldOutBigrams]]) are vocab-bounded broadcasts; the
+    // held-out stream is one narrow pass + one doc groupBy.
     "llm_backoff_logprob" -> ((s, d) => {
-      val bg = bigrams(s, d, "doc_id")
-      val train = bg.filter(col("doc_id") % 5 =!= 0)
-      val cb = train.groupBy("prev", "w").agg(count(lit(1)).as("cb"))
-      val cp = train.groupBy("prev").agg(count(lit(1)).as("cp"))
+      val (train, held, cb, cp) = heldOutBigrams(s, d)
       val cu = train.groupBy("w").agg(count(lit(1)).as("cu"))
       val tot = train.agg(count(lit(1)).as("nt"), countDistinct("w").as("vv"))
-      bg.filter(col("doc_id") % 5 === 0)
+      held
         .join(broadcast(cb), Seq("prev", "w"), "left")
         .join(broadcast(cp), Seq("prev"), "left")
         .join(broadcast(cu), Seq("w"), "left")
         .crossJoin(broadcast(tot))
         .withColumn("lp", expr(
-          """CASE WHEN cb IS NOT NULL
-                  THEN CAST(floor(1000000 * ln(CAST(cb AS DOUBLE) / cp)) AS BIGINT)
-                  ELSE CAST(floor(1000000 * ln(0.4 * ((coalesce(cu, 0) + 1.0) / (nt + vv)))) AS BIGINT)
+          s"""CASE WHEN cb IS NOT NULL
+                  THEN ${floorMicro("ln(CAST(cb AS DOUBLE) / cp)")}
+                  ELSE ${floorMicro("ln(0.4 * ((coalesce(cu, 0) + 1.0) / (nt + vv)))")}
              END"""))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"),
@@ -968,17 +932,13 @@ object LlmPipeline {
     }),
 
     "llm_bigram_logprob" -> ((s, d) => {
-      val bg = bigrams(s, d, "doc_id")
-      val train = bg.filter(col("doc_id") % 5 =!= 0)
-      val cb = train.groupBy("prev", "w").agg(count(lit(1)).as("cb"))
-      val cp = train.groupBy("prev").agg(count(lit(1)).as("cp"))
+      val (train, held, cb, cp) = heldOutBigrams(s, d)
       val vv = train.agg(countDistinct("w").as("vv"))
-      bg.filter(col("doc_id") % 5 === 0)
+      held
         .join(broadcast(cb), Seq("prev", "w"), "left")
         .join(broadcast(cp), Seq("prev"), "left")
         .crossJoin(broadcast(vv))
-        .withColumn("lp_u", expr(
-          "CAST(floor(1000000 * ln((coalesce(cb, 0) + 1.0) / (coalesce(cp, 0) + vv))) AS BIGINT)"))
+        .withColumn("lp_u", expr(floorMicro("ln((coalesce(cb, 0) + 1.0) / (coalesce(cp, 0) + vv))")))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"),
           sum(when(col("cb").isNull, 1L).otherwise(0L)).as("n_unseen_bg"),
@@ -1004,6 +964,73 @@ object LlmPipeline {
                       unnest(string_split(text, ' ')[1:-2]) AS prev,
                       unnest(string_split(text, ' ')[2:]) AS w
                FROM documents)"""
+
+  /** The language-model split of a doc_id-keyed frame: (train, held out).
+    * Every fifth document (doc_id divisible by 5) is held out for scoring;
+    * the models train on the rest. */
+  private def lmSplit(df: DataFrame): (DataFrame, DataFrame) =
+    (df.filter(col("doc_id") % 5 =!= 0), df.filter(col("doc_id") % 5 === 0))
+  /** DuckDB twin of [[lmSplit]]: the (train, held-out) predicates. */
+  private val TrainSql = "doc_id % 5 <> 0"
+  private val HeldOutSql = "doc_id % 5 = 0"
+
+  /** Laplace unigram log-prob of a held-out token, floored per token. */
+  private val UnigramLp = floorMicro("ln((coalesce(c, 0) + 1.0) / (nn + vv + 1.0))")
+
+  /** Held-out tokens (doc_id, keys…, w) scored by the train-slice Laplace
+    * unigram LM: train count `c` (null when unseen), train totals `nn`/`vv`
+    * and the per-token `lp_u`. */
+  private def heldOutUnigrams(s: SparkSession, d: String, keys: String*): DataFrame = {
+    val toks = documents(s, d)
+      .select((col("doc_id") +: keys.map(col) :+ explode(split(col("text"), " ")).as("w")): _*)
+    val (train, held) = lmSplit(toks)
+    val counts = train.groupBy("w").agg(count(lit(1)).as("c"))
+    val stats = counts.agg(sum("c").as("nn"), count(lit(1)).as("vv"))
+    held.join(broadcast(counts), Seq("w"), "left")
+      .crossJoin(broadcast(stats))
+      .withColumn("lp_u", expr(UnigramLp))
+  }
+
+  /** DuckDB twin of [[heldOutUnigrams]]: the CTEs `toks`, `counts`, `stats`
+    * and `scored`. */
+  private def heldOutUnigramsSql(keys: String*): String =
+    s"""toks AS (SELECT doc_id, ${keys.map(_ + ", ").mkString}unnest(string_split(text, ' ')) AS w
+                 FROM documents),
+        counts AS (SELECT w, count(*) AS c FROM toks WHERE $TrainSql GROUP BY w),
+        stats AS (SELECT CAST(sum(c) AS BIGINT) AS nn, count(*) AS vv FROM counts),
+        scored AS (SELECT *, $UnigramLp AS lp_u
+                   FROM toks LEFT JOIN counts USING (w) CROSS JOIN stats
+                   WHERE $HeldOutSql)"""
+
+  /** The bigram LM tables over [[bigrams]] by doc_id: (train bigrams,
+    * held-out bigrams, train (prev, w) counts `cb`, train prev counts `cp`). */
+  private def heldOutBigrams(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val (train, held) = lmSplit(bigrams(s, d, "doc_id"))
+    val cb = train.groupBy("prev", "w").agg(count(lit(1)).as("cb"))
+    val cp = train.groupBy("prev").agg(count(lit(1)).as("cp"))
+    (train, held, cb, cp)
+  }
+
+  /** DuckDB twin of [[heldOutBigrams]]: the CTEs `bg`, `train`, `held`,
+    * `cb` and `cp`. */
+  private val heldOutBigramsSql: String =
+    s"""${bigramsSql("doc_id")},
+        train AS (SELECT * FROM bg WHERE $TrainSql),
+        held AS (SELECT * FROM bg WHERE $HeldOutSql),
+        cb AS (SELECT prev, w, count(*) AS cb FROM train GROUP BY 1, 2),
+        cp AS (SELECT prev, count(*) AS cp FROM train GROUP BY 1)"""
+
+  /** BM25 (k1=1.2, b=0.75) per-(doc, term) score, the same text on both
+    * engines. */
+  private val Bm25Term =
+    """ln((CAST(nd - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))
+       * ((CAST(c AS DOUBLE) * 2.2)
+          / (CAST(c AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(len AS DOUBLE) / (CAST(sumlen AS DOUBLE) / nd)))))"""
+
+  /** Per-(source, word) KL term (c/ns)·ln(c·nt / (ns·cw)), both engines. */
+  private val KlTerm =
+    "(CAST(c AS DOUBLE) / ns) * ln((CAST(c AS DOUBLE) * nt) / (CAST(ns AS DOUBLE) * cw))"
 
   /** Portable 8-family salted-md5 MinHash signatures (doc_id, mh0..mh7):
     * one narrow distinct-token explode, then ONE doc_id-keyed
@@ -1193,7 +1220,7 @@ object LlmPipeline {
                       FROM (SELECT unnest(t) AS tok FROM toks) GROUP BY 1),
               tt AS (SELECT CAST(sum(n_tok) AS BIGINT) AS total FROM uni)
          SELECT bigram, n_xy,
-                CAST(floor(1000000 * ln((CAST(n_xy AS DOUBLE) * total) / (CAST(n_x AS DOUBLE) * n_y))) AS BIGINT) AS pmi_micro
+                ${floorMicro("ln((CAST(n_xy AS DOUBLE) * total) / (CAST(n_x AS DOUBLE) * n_y))")} AS pmi_micro
          FROM big
          JOIN (SELECT tok AS w1x, n_tok AS n_x FROM uni) ON split_part(bigram, ' ', 1) = w1x
          JOIN (SELECT tok AS w2x, n_tok AS n_y FROM uni) ON split_part(bigram, ' ', 2) = w2x
@@ -1217,32 +1244,32 @@ object LlmPipeline {
                FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
                GROUP BY w)
          GROUP BY 1 ORDER BY 1""",
-    // Same per-term micro-floored lns; DuckDB sum(BIGINT) is HUGEINT, the
-    // exact twin of the Spark side's DECIMAL(38,0) accumulators.
     // Same two independently-floored lns; the total is the token count
     // (Σ vocab counts), computed off the token stream on both engines.
     "llm_perplexity_unigram" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
                        FROM documents),
               vocab AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
               tot AS (SELECT CAST(count(*) AS BIGINT) AS tc FROM toks),
               surp AS (SELECT w,
-                              CAST(floor(1000000 * ln(CAST(tc AS DOUBLE))) AS BIGINT)
-                              - CAST(floor(1000000 * ln(CAST(c AS DOUBLE))) AS BIGINT) AS sp
+                              ${floorMicro("ln(CAST(tc AS DOUBLE))")}
+                              - ${floorMicro("ln(CAST(c AS DOUBLE))")} AS sp
                        FROM vocab, tot)
          SELECT doc_id, count(*) AS n_tok,
                 CAST(sum(sp) AS BIGINT) AS nll_total,
                 CAST(sum(sp) // count(*) AS BIGINT) AS mean_nll_micro
          FROM toks JOIN surp USING (w)
          GROUP BY doc_id ORDER BY doc_id""",
+    // Same per-term micro-floored lns; DuckDB sum(BIGINT) is HUGEINT, the
+    // exact twin of the Spark side's DECIMAL(38,0) accumulators.
     "llm_zipf_fit" ->
-      """WITH tf AS (SELECT source, w, count(*) AS c
+      s"""WITH tf AS (SELECT source, w, count(*) AS c
                      FROM (SELECT source, unnest(string_split(text, ' ')) AS w
                            FROM documents)
                      GROUP BY 1, 2),
               xy AS (SELECT source,
-                            CAST(floor(1000000 * ln(CAST(rk AS DOUBLE))) AS BIGINT) AS x,
-                            CAST(floor(1000000 * ln(CAST(c AS DOUBLE))) AS BIGINT) AS y
+                            ${floorMicro("ln(CAST(rk AS DOUBLE))")} AS x,
+                            ${floorMicro("ln(CAST(c AS DOUBLE))")} AS y
                      FROM (SELECT source, c,
                                   row_number() OVER (PARTITION BY source
                                                      ORDER BY c DESC, w) AS rk
@@ -1256,28 +1283,23 @@ object LlmPipeline {
                        FROM xy GROUP BY 1)
          SELECT source, CAST(n AS BIGINT) AS vocab_n,
                 CASE WHEN n < 2 OR n * sxx - sx * sx = 0 THEN 0
-                     ELSE CAST(floor(10000 * (CAST(n * sxy - sx * sy AS DOUBLE)
-                                              / CAST(n * sxx - sx * sx AS DOUBLE))) AS BIGINT)
+                     ELSE ${floorBp("""CAST(n * sxy - sx * sy AS DOUBLE)
+                                       / CAST(n * sxx - sx * sx AS DOUBLE)""")}
                 END AS slope_bp,
                 CASE WHEN n < 2 OR n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0 THEN 0
-                     ELSE CAST(floor(10000 * (CAST(n * sxy - sx * sy AS DOUBLE)
-                                              * CAST(n * sxy - sx * sy AS DOUBLE)
-                                              / (CAST(n * sxx - sx * sx AS DOUBLE)
-                                                 * CAST(n * syy - sy * sy AS DOUBLE)))) AS BIGINT)
+                     ELSE ${floorBp("""CAST(n * sxy - sx * sy AS DOUBLE)
+                                       * CAST(n * sxy - sx * sy AS DOUBLE)
+                                       / (CAST(n * sxx - sx * sx AS DOUBLE)
+                                          * CAST(n * syy - sy * sy AS DOUBLE))""")}
                 END AS r2_bp
          FROM sums ORDER BY source""",
     // quantile_disc is DuckDB's discrete-percentile twin of bucketedPdisc
     // (smallest value whose cume_dist ≥ p — the agg_percentile_disc pairing);
     // `//` truncates toward zero exactly like Spark's `div`.
     "llm_perplexity_filter" ->
-      """WITH toks AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w FROM documents),
-              counts AS (SELECT w, count(*) AS c FROM toks WHERE doc_id % 5 <> 0 GROUP BY w),
-              stats AS (SELECT CAST(sum(c) AS BIGINT) AS nn, count(*) AS vv FROM counts),
-              sc AS (SELECT doc_id, lang, count(*) AS n_toks,
-                            CAST(sum(CAST(floor(1000000 * ln((coalesce(c, 0) + 1.0) / (nn + vv + 1.0))) AS BIGINT)) AS BIGINT) AS lp
-                     FROM toks LEFT JOIN counts USING (w) CROSS JOIN stats
-                     WHERE doc_id % 5 = 0
-                     GROUP BY doc_id, lang),
+      s"""WITH ${heldOutUnigramsSql("lang")},
+              sc AS (SELECT doc_id, lang, count(*) AS n_toks, CAST(sum(lp_u) AS BIGINT) AS lp
+                     FROM scored GROUP BY doc_id, lang),
               av AS (SELECT lang, n_toks, lp // n_toks AS avg_lp FROM sc),
               cut AS (SELECT quantile_disc(avg_lp, 0.25) AS cutoff FROM av)
          SELECT lang, count(*) AS n_held,
@@ -1285,15 +1307,11 @@ object LlmPipeline {
                 CAST(sum(CASE WHEN avg_lp >= cutoff THEN n_toks ELSE 0 END) AS BIGINT) AS kept_tokens
          FROM av CROSS JOIN cut GROUP BY lang ORDER BY lang""",
     "llm_unigram_logprob" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-              counts AS (SELECT w, count(*) AS c FROM toks WHERE doc_id % 5 <> 0 GROUP BY w),
-              stats AS (SELECT CAST(sum(c) AS BIGINT) AS nn, count(*) AS vv FROM counts)
+      s"""WITH ${heldOutUnigramsSql()}
          SELECT doc_id, count(*) AS n_toks,
                 CAST(sum(CASE WHEN c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-                CAST(sum(CAST(floor(1000000 * ln((coalesce(c, 0) + 1.0) / (nn + vv + 1.0))) AS BIGINT)) AS BIGINT) AS logprob_u
-         FROM toks LEFT JOIN counts USING (w) CROSS JOIN stats
-         WHERE doc_id % 5 = 0
-         GROUP BY doc_id ORDER BY doc_id""",
+                CAST(sum(lp_u) AS BIGINT) AS logprob_u
+         FROM scored GROUP BY doc_id ORDER BY doc_id""",
     "llm_dup_overlap_matrix" ->
       """WITH hs AS (SELECT DISTINCT
                             md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS h,
@@ -1314,7 +1332,7 @@ object LlmPipeline {
                               THEN 1 ELSE -1 END) AS BIGINT) AS feat
          FROM t GROUP BY 1, 2 ORDER BY source, bucket""",
     "llm_bm25_topk" ->
-      """WITH tf AS (SELECT doc_id, tok, count(*) AS c
+      s"""WITH tf AS (SELECT doc_id, tok, count(*) AS c
                      FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
                      GROUP BY 1, 2),
               dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS len
@@ -1325,11 +1343,7 @@ object LlmPipeline {
                         WHERE df * 2 <= nd
                         ORDER BY df DESC, tok LIMIT 3)
          SELECT doc_id, count(*) AS n_terms_hit,
-                CAST(sum(CAST(floor(1000000 * (
-                  ln((CAST(nd - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))
-                  * ((CAST(c AS DOUBLE) * 2.2)
-                     / (CAST(c AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(len AS DOUBLE) / (CAST(sumlen AS DOUBLE) / nd)))))
-                )) AS BIGINT)) AS BIGINT) AS bm25_micro
+                CAST(sum(${floorMicro(Bm25Term)}) AS BIGINT) AS bm25_micro
          FROM tf JOIN terms USING (tok) JOIN dl USING (doc_id) CROSS JOIN st
          GROUP BY doc_id ORDER BY bm25_micro DESC, doc_id LIMIT 20""",
     "llm_token_moments" ->
@@ -1341,14 +1355,13 @@ object LlmPipeline {
                 CAST(1000000000 * sum(c * c) // (sum(c) * sum(c)) AS BIGINT) AS repeat_ppb
          FROM csw GROUP BY source ORDER BY source""",
     "llm_source_kl" ->
-      """WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
+      s"""WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
               csw AS (SELECT source, w, count(*) AS c FROM tok GROUP BY 1, 2),
               cw AS (SELECT w, count(*) AS cw FROM tok GROUP BY 1),
               ns AS (SELECT source, CAST(sum(c) AS BIGINT) AS ns FROM csw GROUP BY 1),
               tt AS (SELECT CAST(sum(cw) AS BIGINT) AS nt FROM cw)
          SELECT source, max(ns) AS n_toks,
-                CAST(sum(CAST(floor(1000000 * ((CAST(c AS DOUBLE) / ns)
-                  * ln((CAST(c AS DOUBLE) * nt) / (CAST(ns AS DOUBLE) * cw)))) AS BIGINT)) AS BIGINT) AS kl_micro_sum
+                CAST(sum(${floorMicro(KlTerm)}) AS BIGINT) AS kl_micro_sum
          FROM csw JOIN cw USING (w) JOIN ns USING (source) CROSS JOIN tt
          GROUP BY source ORDER BY source""",
     "llm_ngram_entropy_rate" ->
@@ -1356,38 +1369,30 @@ object LlmPipeline {
               cb AS (SELECT lang, prev, w, count(*) AS cb FROM bg GROUP BY 1, 2, 3),
               cp AS (SELECT lang, prev, count(*) AS cp FROM bg GROUP BY 1, 2)
          SELECT lang, CAST(sum(cb) AS BIGINT) AS n_bigrams,
-                CAST(sum(CAST(floor(1000000 * (CAST(cb AS DOUBLE) * ln(CAST(cb AS DOUBLE) / cp))) AS BIGINT)) AS BIGINT) AS neg_ent_micro_sum
+                CAST(sum(${floorMicro("CAST(cb AS DOUBLE) * ln(CAST(cb AS DOUBLE) / cp)")}) AS BIGINT) AS neg_ent_micro_sum
          FROM cb JOIN cp USING (lang, prev)
          GROUP BY lang ORDER BY lang""",
     "llm_backoff_logprob" ->
-      s"""WITH ${bigramsSql("doc_id")},
-              cb AS (SELECT prev, w, count(*) AS cb FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1, 2),
-              cp AS (SELECT prev, count(*) AS cp FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1),
-              cu AS (SELECT w, count(*) AS cu FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1),
-              tt AS (SELECT count(*) AS nt, count(DISTINCT w) AS vv
-                     FROM bg WHERE doc_id % 5 <> 0)
+      s"""WITH $heldOutBigramsSql,
+              cu AS (SELECT w, count(*) AS cu FROM train GROUP BY 1),
+              tt AS (SELECT count(*) AS nt, count(DISTINCT w) AS vv FROM train)
          SELECT doc_id, count(*) AS n_bigrams,
                 CAST(sum(CASE WHEN cb.cb IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_backoff,
                 CAST(sum(CASE WHEN cb.cb IS NOT NULL
-                              THEN CAST(floor(1000000 * ln(CAST(cb.cb AS DOUBLE) / cp.cp)) AS BIGINT)
-                              ELSE CAST(floor(1000000 * ln(0.4 * ((coalesce(cu.cu, 0) + 1.0) / (nt + vv)))) AS BIGINT)
+                              THEN ${floorMicro("ln(CAST(cb.cb AS DOUBLE) / cp.cp)")}
+                              ELSE ${floorMicro("ln(0.4 * ((coalesce(cu.cu, 0) + 1.0) / (nt + vv)))")}
                          END) AS BIGINT) AS logprob_micro
-         FROM bg LEFT JOIN cb USING (prev, w) LEFT JOIN cp USING (prev)
-                 LEFT JOIN cu USING (w) CROSS JOIN tt
-         WHERE doc_id % 5 = 0
+         FROM held LEFT JOIN cb USING (prev, w) LEFT JOIN cp USING (prev)
+                   LEFT JOIN cu USING (w) CROSS JOIN tt
          GROUP BY doc_id ORDER BY doc_id""",
     "llm_bigram_logprob" ->
-      s"""WITH ${bigramsSql("doc_id")},
-              cb AS (SELECT prev, w, count(*) AS cb FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1, 2),
-              cp AS (SELECT prev, count(*) AS cp FROM bg WHERE doc_id % 5 <> 0 GROUP BY 1),
-              vv AS (SELECT count(DISTINCT w) AS vv FROM bg WHERE doc_id % 5 <> 0)
+      s"""WITH $heldOutBigramsSql,
+              vv AS (SELECT count(DISTINCT w) AS vv FROM train)
          SELECT doc_id, count(*) AS n_bigrams,
                 CAST(sum(CASE WHEN cb.cb IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_unseen_bg,
                 CAST(sum(CASE WHEN cp.cp IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_unseen_ctx,
-                CAST(sum(CAST(floor(1000000 * ln((coalesce(cb.cb, 0) + 1.0)
-                                                 / (coalesce(cp.cp, 0) + vv))) AS BIGINT)) AS BIGINT) AS logprob_u
-         FROM bg LEFT JOIN cb USING (prev, w) LEFT JOIN cp USING (prev) CROSS JOIN vv
-         WHERE doc_id % 5 = 0
+                CAST(sum(${floorMicro("ln((coalesce(cb.cb, 0) + 1.0) / (coalesce(cp.cp, 0) + vv))")}) AS BIGINT) AS logprob_u
+         FROM held LEFT JOIN cb USING (prev, w) LEFT JOIN cp USING (prev) CROSS JOIN vv
          GROUP BY doc_id ORDER BY doc_id""",
   )
 }

@@ -16,6 +16,8 @@ object Reshape {
   /** The 30-day order month since [[Shared.TpchEpoch]]. */
   private def month = expr(s"CAST(${Shared.tpchDay("o_orderdate")} div 30 AS BIGINT)")
   private val monthSql = s"${Shared.tpchDaySql("o_orderdate")} // 30"
+  /** ts_seasonality_strength's S²/n term, both engines. */
+  private val SeasonMean = "CAST(s_tot AS DOUBLE) * s_tot / n_days"
 
   val ops: Map[String, Q] = Map(
     // Largest-triangle downsampling per event-type series (the LTTB shape
@@ -194,11 +196,9 @@ object Reshape {
     // Day-of-week seasonality strength per event type: the ANOVA-style
     // variance decomposition SSB/SST over daily counts, where
     // SSB = Σ_k S_k²/n_k − S²/n (between-dow) and SST = Q − S²/n. Every
-    // division is floored to integer micro-units BEFORE any cross-group
-    // sum (per-term floors are shuffle-order-immune — the agg_theil rule,
-    // with explicit CAST AS DOUBLE), and the engine never divides SSB by
-    // SST — both are emitted. Scale: one corpus-sized (type, day)
-    // partial agg, then metadata-sized dow/total rollups.
+    // division is in floored micro-units (Norm.floorMicro), and the engine
+    // never divides SSB by SST — both are emitted. Scale: one corpus-sized
+    // (type, day) partial agg, then metadata-sized dow/total rollups.
     "ts_seasonality_strength" -> ((s, d) => {
       val daily = Shared.eventDaily(s, d, count(lit(1)).as("c"))
         .localCheckpoint(false)
@@ -210,17 +210,12 @@ object Reshape {
           expr("sum(CAST(c AS DECIMAL(38,0)) * c)").as("q_tot"))
       val dw = daily.groupBy(col("event_type"), expr("day % 7").as("dow"))
         .agg(count(lit(1)).as("n_k"), sum("c").as("s_k"))
-        .withColumn("term",
-          expr("CAST(floor(1000000 * (CAST(s_k AS DOUBLE) * s_k / n_k)) AS BIGINT)"))
+        .withColumn("term", expr(floorMicro("CAST(s_k AS DOUBLE) * s_k / n_k")))
         .groupBy("event_type").agg(sum("term").as("ssb_terms_micro"))
       tot.join(dw, Seq("event_type"))
         .select(col("event_type"), col("n_days"),
-          (col("ssb_terms_micro") -
-            expr("CAST(floor(1000000 * (CAST(s_tot AS DOUBLE) * s_tot / n_days)) AS BIGINT)"))
-            .as("ssb_micro"),
-          expr("""CAST(1000000 * q_tot -
-                       CAST(floor(1000000 * (CAST(s_tot AS DOUBLE) * s_tot / n_days)) AS BIGINT)
-                       AS BIGINT)""").as("sst_micro"))
+          (col("ssb_terms_micro") - expr(floorMicro(SeasonMean))).as("ssb_micro"),
+          expr(s"CAST(1000000 * q_tot - ${floorMicro(SeasonMean)} AS BIGINT)").as("sst_micro"))
         .orderBy("event_type")
     }),
 
@@ -1055,14 +1050,14 @@ object Reshape {
                              sum(c * c) AS q_tot
                       FROM daily GROUP BY 1),
               dw AS (SELECT event_type,
-                            CAST(sum(CAST(floor(1000000 * (CAST(s_k AS DOUBLE) * s_k / n_k)) AS BIGINT)) AS BIGINT) AS ssb_terms_micro
+                            CAST(sum(${floorMicro("CAST(s_k AS DOUBLE) * s_k / n_k")}) AS BIGINT) AS ssb_terms_micro
                      FROM (SELECT event_type, day % 7 AS dow, count(*) AS n_k,
                                   CAST(sum(c) AS BIGINT) AS s_k
                            FROM daily GROUP BY 1, 2)
                      GROUP BY 1)
          SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
-                ssb_terms_micro - CAST(floor(1000000 * (CAST(s_tot AS DOUBLE) * s_tot / n_days)) AS BIGINT) AS ssb_micro,
-                CAST(1000000 * q_tot - CAST(floor(1000000 * (CAST(s_tot AS DOUBLE) * s_tot / n_days)) AS BIGINT) AS BIGINT) AS sst_micro
+                ssb_terms_micro - ${floorMicro(SeasonMean)} AS ssb_micro,
+                CAST(1000000 * q_tot - ${floorMicro(SeasonMean)} AS BIGINT) AS sst_micro
          FROM tot JOIN dw USING (event_type) ORDER BY event_type""",
     "ts_peak_concurrency" ->
       """WITH occ AS (SELECT event_type,

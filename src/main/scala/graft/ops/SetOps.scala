@@ -193,8 +193,7 @@ object SetOps {
       val tot = counts.groupBy("key_name")
         .agg(sum("n").as("t"), count(lit(1)).as("n_buckets"))
       counts.join(broadcast(tot), Seq("key_name"))
-        .withColumn("term", expr(
-          "CAST(floor(1000000 * ((CAST(n AS DOUBLE) / t) * ln(CAST(t AS DOUBLE) / n))) AS BIGINT)"))
+        .withColumn("term", expr(floorMicro("(CAST(n AS DOUBLE) / t) * ln(CAST(t AS DOUBLE) / n)")))
         .withColumn("share_bp", expr("10000 * n div t"))
         .groupBy("key_name")
         .agg(max("n_buckets").as("n_buckets"), max("t").as("total"),
@@ -614,7 +613,7 @@ object SetOps {
               t AS (SELECT key_name, CAST(sum(n) AS BIGINT) AS t, count(*) AS n_buckets
                     FROM c GROUP BY 1)
          SELECT key_name, max(n_buckets) AS n_buckets, max(t) AS total,
-                CAST(sum(CAST(floor(1000000 * ((CAST(n AS DOUBLE) / t) * ln(CAST(t AS DOUBLE) / n))) AS BIGINT)) AS BIGINT) AS entropy_micro_sum,
+                CAST(sum(${floorMicro("(CAST(n AS DOUBLE) / t) * ln(CAST(t AS DOUBLE) / n)")}) AS BIGINT) AS entropy_micro_sum,
                 max(10000 * n // t) AS max_share_bp
          FROM c JOIN t USING (key_name)
          GROUP BY key_name ORDER BY key_name""",

@@ -172,9 +172,9 @@ object Subqueries {
   // goes through the @marker temp view. The oracle is the same text with
   // the three parameters inlined as literals.
   private val SUB_PARAM =
-    """SELECT o_orderpriority, count(*) AS n
+    s"""SELECT o_orderpriority, count(*) AS n
        FROM @orders
-       WHERE CAST(ROUND(CAST(o_totalprice AS DECIMAL(28,10)), 2) * 100 AS BIGINT) > :min_cents
+       WHERE ${moneySql("o_totalprice")} > :min_cents
          AND o_orderpriority IN (:hot1, :hot2)
        GROUP BY o_orderpriority ORDER BY o_orderpriority"""
 

@@ -133,8 +133,20 @@ class ContractSuite extends AnyFunSuite {
     // the hand-rolled gram spellings, gone for Shared.wordGrams(Sql)
     for (regex <- Seq("""concat_ws\(' ', slice\((t|toks), i \+ 1""",
                       """unnest\((t|tk|toks)\[1:len""",
-                      """list_aggregate\((t|tk|toks)\[i:i\+"""))
+                      """list_aggregate\((t|tk|toks)\[i:i\+""",
+                      """\|\| ' ' \|\| a\[[ij] \+ 1\]"""))
       assert(filesMatching(regex).isEmpty, s"build word n-grams through Shared.wordGrams(Sql): /$regex/")
+  }
+
+  test("src/main encodes scaled integers through Norm and splits the held-out LM once per engine and side") {
+    val floors = filesMatching("""floor\((1000000|10000) \*""")
+    assert(floors.forall(_ == "graft/Norm.scala"), s"floor through Norm.floorMicro / floorBp: $floors")
+    // The one reviewed exception: sink_decimal_roundtrip's DECIMAL(18,4)
+    // storage cast keeps a decimal column, not a scaled integer.
+    val rounds = filesMatching("""DECIMAL\(28, ?10\)|DecimalType\(28, ?10\)""").filterNot(_ == "graft/Norm.scala")
+    assert(rounds == Seq("graft/ops/Scans.scala"), s"round through Norm.money / d4 / d6 (and Sql twins): $rounds")
+    val splits = filesMatching("""doc_id"?\)? % 5 (=!=|===|<>|=) 0""").filter(_ == "graft/ops/LlmPipeline.scala")
+    assert(splits.size == 4, s"split train / held-out through LlmPipeline.lmSplit and its Sql twin: $splits")
   }
 
   test("every scratchDir call site passes its own literal tag") {

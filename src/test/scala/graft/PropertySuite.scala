@@ -137,9 +137,12 @@ class PropertySuite extends AnyFunSuite {
   test("moneySum is bit-exact across partition counts (decimal summation)") {
     val li = Tables.lineitem(s, TestSpark.sf)
     def total(parts: Int) = li.repartition(parts)
-      .agg(Norm.moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("t"))
-      .collect().head.getLong(0)
-    assert(total(1) == total(13), "decimal sum varied with partitioning")
+      .agg(Norm.moneySum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))),
+        Norm.d6Sum(col("l_extendedprice") / (col("l_quantity") + lit(7.0))))
+      .collect().head
+    val (one, many) = (total(1), total(13))
+    assert(one.getLong(0) == many.getLong(0), "moneySum varied with partitioning")
+    assert(one.getLong(1) == many.getLong(1), "d6Sum varied with partitioning")
   }
 
   test("greedy first-fit fold: budget, tightness, and order preservation on random inputs") {
@@ -636,6 +639,23 @@ class PropertySuite extends AnyFunSuite {
       if (top == 1) assert(!got.values.exists(_ == Seq(1L)), "a tie must go to the lower cid")
       else assert(got.values.count(_ == Seq(0L, 1L)) > 0 && !got.values.exists(_ == Seq(1L, 2L)),
         "tied centroids are kept together, the lower cid first")
+    }
+  }
+
+  test("Norm.floorMicro / floorBp == math.floor(k·x).toLong: floored before the cast, which DuckDB rounds") {
+    // A bare CAST(1e6·x AS BIGINT) truncates in Spark but rounds in DuckDB,
+    // so the builders floor first; on Spark they must equal a plain floor
+    // at every sign, on either side of each unit, and at the BIGINT range
+    // the fixtures reach.
+    val sp = s; import sp.implicits._
+    val edges = Seq(-0.5e-6, -1.5e-6, math.log(0.5), 0.0, -0.0, 1e9, -1e9) ++
+      Seq(1e-6, 3e-6, -2e-6, 1e-4, -7e-4, 0.25, -0.25).flatMap(x => Seq(math.nextUp(x), math.nextDown(x)))
+    val xs = edges ++ samples(Gen.chooseNum(-1e3, 1e3), 200)
+    val got = xs.zipWithIndex.toDF("x", "i")
+      .select(col("i"), expr(Norm.floorMicro("x")), expr(Norm.floorBp("x")))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    xs.zipWithIndex.foreach { case (x, i) =>
+      assert(got(i) == (math.floor(1000000 * x).toLong, math.floor(10000 * x).toLong), s"x=$x")
     }
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.storage.StorageLevel
 
 /** Every scale decision the ops make from input size, in one place. Each
   * decision reads one stat, [[bytes]] / file count of a fixture table, so
@@ -135,4 +136,10 @@ object Gates {
     * natural partitioning. */
   def smallCorpus(s: SparkSession, d: String): Boolean =
     bytes(s, d, "documents") < (2L << 20)
+
+  /** Storage level of a corpus-linear checkpoint (graph_pagerank_fixed's
+    * edge block, ts_downsample_triangle's bucketed points):
+    * MEMORY_AND_DISK on a [[smallCorpus]], DISK_ONLY above it. */
+  def corpusLevel(s: SparkSession, d: String): StorageLevel =
+    if (smallCorpus(s, d)) StorageLevel.MEMORY_AND_DISK else StorageLevel.DISK_ONLY
 }

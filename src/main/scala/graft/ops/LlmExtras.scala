@@ -808,21 +808,17 @@ object LlmExtras {
       // nests iteration k−1 inside k — measured 3.5 s with the tree
       // recomputed 3×, the top bench line; 3 edge-scans collapse to 1).
       // Same per-iteration lineage truncation as Scale.connectedComponents.
-      // Gates.smallCorpus picks the edge block's storage level and
-      // whether the edge frame coalesces to a handful of partitions.
-      // Node-sized frames (degree map, per-iteration rank) carry broadcast
-      // hints gated by Gates.NodeCap.
+      // Gates.smallCorpus picks the edge block's storage level
+      // (Gates.corpusLevel) and whether the edge frame coalesces to a
+      // handful of partitions. Node-sized frames (degree map,
+      // per-iteration rank) carry broadcast hints gated by Gates.NodeCap.
       val cb = Gates.bytes(s, d, "documents")
-      val smallTier = Gates.smallCorpus(s, d)
-      val edgeLevel = if (smallTier)
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      else org.apache.spark.storage.StorageLevel.DISK_ONLY
-      val wedges = (if (smallTier)
+      val wedges = (if (Gates.smallCorpus(s, d))
           edges.coalesce(math.max(2, s.sparkContext.defaultParallelism / 8))
         else edges).join(
         Gates.broadcastUnder(edges.groupBy("src").agg(count(lit(1)).as("deg")),
           cb, Gates.NodeCap), "src")
-        .localCheckpoint(true, edgeLevel)
+        .localCheckpoint(true, Gates.corpusLevel(s, d))
       val deg = wedges.select("src", "deg").distinct()
       val nodes = documents(s, d).select(col("doc_id"))
       var r = nodes.withColumn("r", lit(1000000L))

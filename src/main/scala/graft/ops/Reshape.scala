@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Norm._
 import graft.Tables._
+import graft.Gates
 
 /** Reshaping / format-conversion ETL family: pivot, unpivot, calendar
   * gap-fill, date formatting, schema'd JSON parsing, base64/hex codecs.
@@ -53,11 +54,13 @@ object Reshape {
       // the scan+rebalance+span-join subtree (ProfileOp: two 0.4 s wall /
       // ~12 s taskSum 32-task jobs doing the same work). One lazy
       // localCheckpoint materializes the 6-narrow-column corpus-linear
-      // frame once; at scale this halves the corpus reads of the op.
+      // frame once; at scale this halves the corpus reads of the op. The
+      // block is corpus-linear, so Gates.corpusLevel keeps it out of the
+      // unified pool above the small-corpus tier.
       val bk = pts.join(broadcast(span), "event_type")
         .withColumn("bucket", expr("(t - t0) * 32 div (t1 - t0 + 1)"))
         .withColumn("tr", col("t") - col("t0"))
-        .localCheckpoint(false)
+        .localCheckpoint(false, Gates.corpusLevel(s, d))
       val wA = Window.partitionBy("event_type").orderBy("bucket")
       val ctx = bk.groupBy("event_type", "bucket")
         .agg(count(lit(1)).as("n"), sum("tr").as("st"), sum("v").as("sv"))

@@ -443,10 +443,8 @@ object Scans {
     // Compression is storage-layout only, so the oracle queries the
     // original snappy parquet — a hash match proves losslessness.
     "scan_zstd_roundtrip" -> ((s, d) => {
-      val path = scratchDir(d, "zstd")
-      orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .write.mode("overwrite").option("compression", "zstd").parquet(path)
-      s.read.parquet(path)
+      parquetRoundTrip(s, orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice"),
+          scratchDir(d, "zstd"), "compression" -> "zstd")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), moneySum(col("o_totalprice")).as("total"))
         .orderBy("o_orderstatus")
@@ -494,14 +492,12 @@ object Scans {
     // is NOT the unbounded-group hazard; sort_array makes the array
     // content deterministic.
     "sink_nested_parquet" -> ((s, d) => {
-      val path = scratchDir(d, "nestedsink")
-      orders(s, d)
+      val nested = orders(s, d)
         .select(col("o_custkey"),
           struct(col("o_orderkey"), money(col("o_totalprice")).as("cents")).as("o"))
         .groupBy("o_custkey")
         .agg(sort_array(collect_list(col("o"))).as("orders"))
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      parquetRoundTrip(s, nested, scratchDir(d, "nestedsink"))
         .select(col("o_custkey"), explode(col("orders")).as("o"))
         .agg(count(lit(1)).as("n_orders"),
           countDistinct("o_custkey").as("n_custs"),
@@ -517,12 +513,10 @@ object Scans {
     // encoding roundtrips exactly. (Output stays BIGINT — the engine-wide
     // no-DECIMAL-in-results rule is about hashing, not storage.)
     "sink_decimal_roundtrip" -> ((s, d) => {
-      val path = scratchDir(d, "decsink")
-      orders(s, d)
+      val dec = orders(s, d)
         .select(col("o_orderkey"),
           expr("CAST(ROUND(CAST(o_totalprice AS DECIMAL(28,10)), 4) AS DECIMAL(18,4))").as("dec"))
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      parquetRoundTrip(s, dec, scratchDir(d, "decsink"))
         .select(expr("CAST(dec * 10000 AS BIGINT)").as("d4c"))
         .agg(count(lit(1)).as("n"), sum("d4c").as("sum_d4"),
           min("d4c").as("min_d4"), max("d4c").as("max_d4"))
@@ -537,20 +531,18 @@ object Scans {
     // bloom-written file is lossless and the probe path returns exactly
     // the base-table rows.
     "sink_parquet_bloom" -> ((s, d) => {
-      val path = scratchDir(d, "bloomsink")
-      orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey"), money(col("o_totalprice")).as("cents"))
-        .write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#o_custkey", "true")
-        .option("parquet.bloom.filter.expected.ndv#o_custkey", "200000")
-        // at fixture scale the key column would dictionary-encode fully and
-        // parquet then OMITS the bloom filter (the dictionary is already an
-        // exact membership test); disable dictionary for the key column so
-        // the written file carries the bloom filter a 100 TB key column
-        // (dictionary-infeasible) would carry — asserted in Round7Suite
-        .option("parquet.enable.dictionary#o_custkey", "false")
-        .parquet(path)
-      s.read.parquet(path)
+      parquetRoundTrip(s,
+          orders(s, d)
+            .select(col("o_orderkey"), col("o_custkey"), money(col("o_totalprice")).as("cents")),
+          scratchDir(d, "bloomsink"),
+          "parquet.bloom.filter.enabled#o_custkey" -> "true",
+          "parquet.bloom.filter.expected.ndv#o_custkey" -> "200000",
+          // at fixture scale the key column would dictionary-encode fully and
+          // parquet then OMITS the bloom filter (the dictionary is already an
+          // exact membership test); disable dictionary for the key column so
+          // the written file carries the bloom filter a 100 TB key column
+          // (dictionary-infeasible) would carry — asserted in Round7Suite
+          "parquet.enable.dictionary#o_custkey" -> "false")
         .filter(col("o_custkey").isin(42, 77))
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"))
@@ -558,12 +550,9 @@ object Scans {
     }),
 
     "sink_compacted" -> ((s, d) => {
-      val small = scratchDir(d, "smallfiles")
-      val packed = scratchDir(d, "compacted")
       val ev = events(s, d).select("event_id", "user_id", "event_type", "value")
-      ev.repartition(64, col("user_id")).write.mode("overwrite").parquet(small)
-      s.read.parquet(small).repartition(4).write.mode("overwrite").parquet(packed)
-      s.read.parquet(packed)
+      val small = parquetRoundTrip(s, ev.repartition(64, col("user_id")), scratchDir(d, "smallfiles"))
+      parquetRoundTrip(s, small.repartition(4), scratchDir(d, "compacted"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), moneySum(col("value")).as("total_value"))
         .orderBy("event_type")
@@ -623,7 +612,6 @@ object Scans {
     // keyspace at EVERY scale (a "+1e6" offset would collide with real
     // custkeys once the table passes 1M rows and silently double-count).
     "sink_upsert" -> ((s, d) => {
-      val path = scratchDir(d, "upsert")
       val b = customer(s, d)
         .select(col("c_custkey").as("b_k"), money(col("c_acctbal")).as("b_bal"))
       val u = customer(s, d).filter(col("c_custkey") % 10 === 0)
@@ -631,14 +619,13 @@ object Scans {
           (money(col("c_acctbal")) + 10000L).as("u_bal"))
         .unionAll(customer(s, d).filter(col("c_custkey") % 100 === 0)
           .select((-col("c_custkey") - 1L).as("u_k"), lit(0L).as("u_bal")))
-      b.join(u, col("b_k") === col("u_k"), "full_outer")
+      val merged = b.join(u, col("b_k") === col("u_k"), "full_outer")
         .select(coalesce(col("u_k"), col("b_k")).as("c_custkey"),
           coalesce(col("u_bal"), col("b_bal")).as("bal_cents"),
           when(col("b_k").isNull, "inserted")
             .when(col("u_k").isNull, "kept")
             .otherwise("updated").as("action"))
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      parquetRoundTrip(s, merged, scratchDir(d, "upsert"))
         .groupBy("action")
         .agg(count(lit(1)).as("n"), sum("bal_cents").as("bal_cents_sum"))
         .orderBy("action")
@@ -656,7 +643,6 @@ object Scans {
     // compaction job of a CDC ingest (changelog-sized shuffle, one window
     // pass, partitioned write).
     "sink_cdc_apply" -> ((s, d) => {
-      val path = scratchDir(d, "cdc")
       val base = customer(s, d)
         .select(col("c_custkey").as("k"), col("c_nationkey").as("nk"),
           money(col("c_acctbal")).as("bal"))
@@ -668,14 +654,13 @@ object Scans {
         .unionAll(base.filter(col("k") % 13 === 0)
           .select(col("k"), col("nk"), lit(0L).as("bal"),
             lit("D").as("op"), lit(3L).as("seq")))
-      log
+      val state = log
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy("k")
             .orderBy(col("seq").desc)))
         .filter(col("rn") === 1 && col("op") =!= "D")
         .select("k", "nk", "bal", "op")
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      parquetRoundTrip(s, state, scratchDir(d, "cdc"))
         .groupBy("nk")
         .agg(count(lit(1)).as("n_rows"), sum("bal").as("bal_cents"),
           sum(when(col("op") === "U", 1L).otherwise(0L)).as("n_updated"))
@@ -737,12 +722,10 @@ object Scans {
     // bytes a time-ranged query reads. File-range disjointness is asserted
     // in Round6Suite via _metadata; the oracle proves the rewrite lossless.
     "sink_sorted_layout" -> ((s, d) => {
-      val path = scratchDir(d, "sorted")
-      lineitem(s, d).select("l_orderkey", "l_shipdate", "l_quantity")
+      val sorted = lineitem(s, d).select("l_orderkey", "l_shipdate", "l_quantity")
         .repartitionByRange(8, col("l_shipdate"))
         .sortWithinPartitions("l_shipdate")
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      parquetRoundTrip(s, sorted, scratchDir(d, "sorted"))
         .filter(col("l_shipdate") >= lit("2000-01-01").cast("timestamp_ntz"))
         .groupBy(date_trunc("year", col("l_shipdate")).cast("date").as("ship_year"))
         .agg(count(lit(1)).as("n"), moneySum(col("l_quantity")).as("qty_sum"))
@@ -765,19 +748,17 @@ object Scans {
     // Round9Suite via _metadata. At 100 TB the layout decides the bytes
     // read; z-order is the right default when TWO filter dims matter.
     "sink_zorder_layout" -> ((s, d) => {
-      val path = scratchDir(d, "zorder")
       def morton(di: String) = (0 until 8).map { b =>
         s"((xb $di ${1L << b}) % 2) * ${1L << (2 * b)} + ((yb $di ${1L << b}) % 2) * ${1L << (2 * b + 1)}"
       }.mkString(" + ")
-      orders(s, d)
+      val zordered = orders(s, d)
         .select(col("o_orderkey"), money(col("o_totalprice")).as("price_c"),
           (col("o_custkey") % 256).as("xb"),
           expr("datediff(CAST(o_orderdate AS DATE), DATE '1992-01-01') % 256").as("yb"))
         .withColumn("z", expr(morton("div")))
         .repartitionByRange(8, col("z"))
         .sortWithinPartitions("z")
-        .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      parquetRoundTrip(s, zordered, scratchDir(d, "zorder"))
         .filter(col("xb").between(64, 95) && col("yb").between(128, 159))
         .groupBy(expr("xb div 8").as("x_t"), expr("yb div 8").as("y_t"))
         .agg(count(lit(1)).as("n"), sum("price_c").as("price_sum"),

@@ -12,6 +12,16 @@ package object ops {
   def scratchDir(d: String, tag: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_$tag${Math.abs(d.hashCode)}"
 
+  /** Writes `written` to parquet at `path` (overwrite, unpartitioned, with
+    * the writer `options`) and reads it back declaring the schema it just
+    * wrote, which skips parquet's schema-inference job. Not for read-backs
+    * whose subject is inference or partition discovery. */
+  def parquetRoundTrip(s: SparkSession, written: DataFrame, path: String,
+                       options: (String, String)*): DataFrame = {
+    written.write.mode("overwrite").options(options.toMap).parquet(path)
+    s.read.schema(written.schema).parquet(path)
+  }
+
   /** Builds a frame over temp views of `s`: binds each (name, frame) as a
     * view under a fresh unique name, calls `build` with name → view name,
     * and drops the views when it returns or throws. `sql()` and `table()`

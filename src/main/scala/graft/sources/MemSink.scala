@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCatalog, TableChange, TableCapability}
 import org.apache.spark.sql.connector.catalog.functions.{AggregateFunction, BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
@@ -46,9 +46,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * row count: task memory is O(1) (rows stream to disk as written) and
   * commit-message size is O(1) (Round12Suite writes a corpus-sized
   * frame through the staged path and asserts both).
-  * Values are deep-copied to JVM-native types at write time (UTF8String
-  * buffers are reused by Spark between `write(row)` calls — storing the
-  * raw row would alias dead memory).
+  * Rows are encoded at write time ([[GraftMemCodec]]), which copies
+  * their values out of the InternalRow (UTF8String buffers are reused by
+  * Spark between `write(row)` calls — storing the raw row would alias
+  * dead memory).
   */
 class GraftMemCatalog extends TableCatalog with FunctionCatalog {
   private var catalogName: String = _
@@ -76,7 +77,7 @@ class GraftMemCatalog extends TableCatalog with FunctionCatalog {
     schema.fields.foreach { f =>
       require(GraftMemStore.supported(f.dataType),
         s"${f.name}: ${f.dataType.simpleString} outside the supported codec " +
-          "(long/int/double/string/boolean) — widen GraftMemStore.supported + the shared codec arms together")
+          "(long/int/double/string/boolean) — widen GraftMemCodec.Types and its encode/decode arms together")
       // r12 review fix: the scan resolves these names to synthesized
       // metadata sentinels BEFORE the data schema — a stored column with
       // either name would silently read the constant, so refuse it here.
@@ -172,25 +173,25 @@ class GraftSumSqFunction extends AggregateFunction[java.lang.Long, java.lang.Lon
 }
 
 /** JVM-singleton backing store: table key → (schema, committed rows).
-  * Rows are immutable snapshots; `publish` swaps the whole array in one
-  * reference write, so readers never observe a half-committed table. */
+  * Rows are kept encoded ([[GraftMemBlock]]s in the [[GraftMemCodec]]
+  * layout): a commit publishes the blocks its tasks staged without
+  * decoding them, and a scan slices them into its partitions. Snapshots
+  * are immutable; `publish` swaps the whole block list in one reference
+  * write, so readers never observe a half-committed table. */
 object GraftMemStore {
-  private case class State(schema: StructType, rows: Array[Array[Any]],
+  private case class State(schema: StructType, blocks: Vector[GraftMemBlock],
                            props: Map[String, String] = Map.empty,
                            gen: Long = 0L)
   private val tables = new ConcurrentHashMap[String, State]()
 
-  def supported(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | DoubleType | StringType | BooleanType => true
-    case _ => false
-  }
+  def supported(dt: DataType): Boolean = GraftMemCodec.Types.contains(dt)
   def create(key: String, schema: StructType,
              props: Map[String, String] = Map.empty): Unit = {
     // A (re)created table starts a fresh epoch history — the ledger
     // guards replays WITHIN a query's lifetime, not across table
     // generations.
     epochs.remove(key)
-    tables.put(key, State(schema, Array.empty, props))
+    tables.put(key, State(schema, Vector.empty, props))
   }
   def props(key: String): Map[String, String] =
     Option(tables.get(key)).map(_.props).getOrElse(Map.empty)
@@ -200,23 +201,31 @@ object GraftMemStore {
     tables.keySet().asScala.filter(_.startsWith(catalog + "."))
       .map(_.stripPrefix(catalog + ".")).toArray.sorted
   def schema(key: String): StructType = tables.get(key).schema
-  def rows(key: String): Array[Array[Any]] = tables.get(key).rows
-  /** ONE atomic (schema, rows) snapshot (r11 advice): scan planning must
+  /** The committed rows, decoded to JVM values (strings as `String`). */
+  def rows(key: String): Array[Array[Any]] = {
+    val st = tables.get(key)
+    val codec = GraftMemCodec(st.schema)
+    st.blocks.toArray.flatMap(codec.values)
+  }
+  /** ONE atomic (schema, blocks) snapshot (r11 advice): scan planning must
     * not read schema and rows through two separate map lookups — a
     * concurrent createOrReplace between them could pair the new schema
     * with the old rows (mis-mapped fieldIndex) or NPE on a dropped table.
     * State is immutable, so the single get IS the snapshot. */
-  def snapshot(key: String): (StructType, Array[Array[Any]]) = {
+  def snapshot(key: String): (StructType, Vector[GraftMemBlock]) = {
     val st = tables.get(key)
     if (st == null)
       throw new NoSuchTableException(Identifier.of(Array.empty, key))
-    (st.schema, st.rows)
+    (st.schema, st.blocks)
   }
   def publish(key: String, schema: StructType, rows: Array[Array[Any]],
               truncate: Boolean): Unit =
+    publishBlocks(key, schema, Seq(GraftMemCodec(schema).block(rows)), truncate)
+  def publishBlocks(key: String, schema: StructType, blocks: Seq[GraftMemBlock],
+                    truncate: Boolean): Unit =
     tables.compute(key, (_, prev) => {
-      val base = if (truncate || prev == null) Array.empty[Array[Any]] else prev.rows
-      State(schema, base ++ rows, if (prev == null) Map.empty else prev.props,
+      val base = if (truncate || prev == null) Vector.empty else prev.blocks
+      State(schema, base ++ blocks.filter(_.nRows > 0), if (prev == null) Map.empty else prev.props,
         if (prev == null) 1L else prev.gen + 1L)
     })
   /** Snapshot generation — bumped by every publish/applyDelta. The
@@ -235,7 +244,9 @@ object GraftMemStore {
     * second MERGE) invalidates the positions, so the apply FAILS the
     * commit instead of corrupting rows or silently losing the
     * concurrent write. Optimistic concurrency: the same conflict-abort
-    * contract real table formats give row-level plans. */
+    * contract real table formats give row-level plans. Kept rows are
+    * copied as encoded bytes; only updated and inserted rows are
+    * encoded. */
   def applyDelta(key: String, expectedGen: Long,
                  deleted: java.util.HashSet[Long],
                  updated: java.util.HashMap[Long, Array[Any]],
@@ -247,11 +258,22 @@ object GraftMemStore {
         throw new java.util.ConcurrentModificationException(
           s"$key changed (gen ${prev.gen} != scanned $expectedGen) since the row-level " +
             "scan planned — positional delta apply aborted; re-run the statement")
-      val base = prev.rows
-      val next = base.indices.iterator.filterNot(i => deleted.contains(i.toLong))
-        .map(i => Option(updated.get(i.toLong)).getOrElse(base(i)))
-        .toArray ++ inserts
-      State(prev.schema, next, prev.props, prev.gen + 1L)
+      val codec = GraftMemCodec(prev.schema)
+      val out = new GraftMemBuffer
+      var pos = 0L
+      prev.blocks.foreach { b =>
+        var r = 0
+        while (r < b.nRows) {
+          if (!deleted.contains(pos)) {
+            val u = updated.get(pos)
+            if (u == null) out.putBytes(b.bytes, b.starts(r), b.starts(r + 1) - b.starts(r))
+            else codec.encode(u, out)
+          }
+          pos += 1; r += 1
+        }
+      }
+      inserts.foreach(codec.encode(_, out))
+      State(prev.schema, Vector(out.block(0)).filter(_.nRows > 0), prev.props, prev.gen + 1L)
     })
     ()
   }
@@ -444,11 +466,12 @@ class GraftMemDeltaBatchWrite(key: String, scannedGen: Long) extends DeltaBatchW
     val deleted = new java.util.HashSet[Long]()
     val updated = new java.util.HashMap[Long, Array[Any]]()
     val inserts = Array.newBuilder[Array[Any]]
+    // an entry is one changelog row: (op, rowpos, table columns…)
     entries.foreach { e =>
       e(0).asInstanceOf[String] match {
         case "D" => deleted.add(e(1).asInstanceOf[Long]); ()
-        case "U" => updated.put(e(1).asInstanceOf[Long], e(2).asInstanceOf[Array[Any]]); ()
-        case "I" => inserts += e(2).asInstanceOf[Array[Any]]
+        case "U" => updated.put(e(1).asInstanceOf[Long], e.drop(2)); ()
+        case "I" => inserts += e.drop(2)
       }
     }
     GraftMemStore.applyDelta(key, scannedGen, deleted, updated, inserts.result())
@@ -460,21 +483,33 @@ class GraftMemDeltaBatchWrite(key: String, scannedGen: Long) extends DeltaBatchW
 }
 
 class GraftMemDeltaWriterFactory(schema: StructType) extends DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val types = schema.fields.map(_.dataType)
+  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
-      private val staged = new GraftMemStagedFile
+      private val staged = new GraftMemStagedFile(GraftMemCodec.changelog(schema))
+      // each entry is encoded as the changelog row (op, rowpos) ++ row
+      private val head = new GenericInternalRow(2)
+      private val noRow = new GenericInternalRow(schema.length)
+      private val entry = new JoinedRow(head, noRow)
+      private def emit(op: UTF8String, rowpos: Any, row: InternalRow): Unit = {
+        head.update(0, op); head.update(1, rowpos)
+        staged.emit(entry.withRight(row))
+      }
       override def delete(meta: InternalRow, id: InternalRow): Unit =
-        staged.emit(Array[Any]("D", id.getLong(0), null))
+        emit(GraftMemDeltaWriterFactory.D, id.getLong(0), noRow)
       override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit =
-        staged.emit(Array[Any]("U", id.getLong(0), GraftMemCodec.copyVals(types, row)))
+        emit(GraftMemDeltaWriterFactory.U, id.getLong(0), row)
       override def insert(row: InternalRow): Unit =
-        staged.emit(Array[Any]("I", null, GraftMemCodec.copyVals(types, row)))
+        emit(GraftMemDeltaWriterFactory.I, null, row)
       override def commit(): WriterCommitMessage = staged.manifest(partitionId)
       override def abort(): Unit = staged.abort()
       override def close(): Unit = ()
     }
-  }
+}
+
+private object GraftMemDeltaWriterFactory {
+  val D: UTF8String = UTF8String.fromString("D")
+  val U: UTF8String = UTF8String.fromString("U")
+  val I: UTF8String = UTF8String.fromString("I")
 }
 
 // ---------------------------------------------------------------- write
@@ -575,7 +610,7 @@ private[graft] object GraftMemWriteAudit {
 case class GraftMemStagedCommit(partitionId: Int, path: String, nRows: Long)
     extends WriterCommitMessage
 
-/** Staging-file codec: each task streams its deep-copied rows to one
+/** Staging-file transport: each task streams its encoded rows to one
   * file under the staging root (java.io.tmpdir — the local stand-in for
   * the HDFS/S3 staging prefix a durable sink would use; in local mode
   * tasks and driver genuinely share it, which is the same visibility
@@ -583,11 +618,12 @@ case class GraftMemStagedCommit(partitionId: Int, path: String, nRows: Long)
   * of this transport: GraftMemStore itself is a JVM-singleton map, so a
   * multi-JVM cluster could never read these tables in the first place —
   * a durable port swaps BOTH the store and this root for shared
-  * storage. Task memory stays O(1): rows append to the stream as they
-  * arrive, never buffered whole. Speculative twins write DIFFERENT
-  * files (uuid-named); only the attempt Spark's commit coordinator
-  * admits reaches the driver commit — the loser's abort deletes its
-  * own file. */
+  * storage. Task memory stays O(1): rows append to the stream in
+  * [[GraftMemStagedFile.BlockBytes]] blocks as they arrive, never
+  * buffered whole. Speculative twins write DIFFERENT files
+  * (uuid-named); only the attempt Spark's commit coordinator admits
+  * reaches the driver commit — the loser's abort deletes its own file.
+  * A file is the writer's codec header followed by its rows. */
 private[graft] object GraftMemStaging {
   private val root = {
     val r = java.nio.file.Paths.get(
@@ -597,88 +633,273 @@ private[graft] object GraftMemStaging {
   }
   def newPath(): String =
     root.resolve(java.util.UUID.randomUUID().toString + ".bin").toString
-  def read(path: String, nRows: Long): Array[Array[Any]] = {
+  /** The codec in the file's header and its `nRows` rows as one block. */
+  private def load(path: String, nRows: Long): (GraftMemCodec, GraftMemBlock) = {
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    val codec = GraftMemCodec.fromHeader(bytes)
+    (codec, GraftMemBlock.of(bytes, codec.headerBytes, bytes.length, nRows))
+  }
+  /** The staged rows, decoded to JVM values. */
+  def read(path: String, nRows: Long): Array[Array[Any]] =
     // a zero-row task stages no file at all — its manifest is pure form
-    if (nRows == 0L) return Array.empty
-    val in = new java.io.ObjectInputStream(new java.io.BufferedInputStream(
-      new java.io.FileInputStream(path)))
-    try Array.fill(nRows.toInt)(in.readObject().asInstanceOf[Array[Any]])
-    finally in.close()
-  }
-  /** Decode many staged files CONCURRENTLY and concatenate in the
-    * caller-given (partitionId-sorted) order (r13: the commit's
-    * single-threaded `flatMap(read)` was the dominant serial term of a
-    * corpus-sized epoch — each staged file is independent, so the only
-    * order that matters is assembly order, which the per-file arrays
-    * preserve exactly). Thread count is bounded; a single file skips
-    * the pool entirely. */
-  def readAll(ms: Array[GraftMemStagedCommit]): Array[Array[Any]] = {
-    if (ms.isEmpty) return Array.empty
-    if (ms.length == 1) return read(ms(0).path, ms(0).nRows)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, ms.length))
-    try {
-      val futures = ms.map(m =>
-        pool.submit(new java.util.concurrent.Callable[Array[Array[Any]]] {
-          override def call(): Array[Array[Any]] = read(m.path, m.nRows)
-        }))
-      futures.flatMap(_.get())
-    } finally pool.shutdown()
-  }
+    if (nRows == 0L) Array.empty
+    else { val (codec, block) = load(path, nRows); codec.values(block) }
+  /** The staged rows of `ms` as blocks in the caller's (partitionId)
+    * order, for a table of `codec`'s types. No row is decoded: the commit
+    * publishes the bytes the tasks encoded. */
+  def blocks(ms: Array[GraftMemStagedCommit], codec: GraftMemCodec): Seq[GraftMemBlock] =
+    ms.toSeq.filter(_.nRows > 0L).map { m =>
+      val (staged, block) = load(m.path, m.nRows)
+      if (!staged.types.sameElements(codec.types))
+        throw new IllegalStateException(s"${m.path} holds ${staged.types.mkString(",")} rows, " +
+          s"the table ${codec.types.mkString(",")}")
+      block
+    }
   def delete(path: String): Unit = {
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path)); ()
   }
 }
 
-/** The ONE deep-copy codec switch (the "codec arms" the createTable
-  * error message references) shared by the data and delta writers:
-  * InternalRow (and its UTF8String fields) may be a reused buffer owned
-  * by the upstream operator, so values are copied to JVM-native types. */
-private[sources] object GraftMemCodec {
-  def copyVals(types: Array[DataType], row: InternalRow): Array[Any] = {
-    val vals = new Array[Any](types.length)
+/** The binary row codec of graft mem tables, typed by the table schema
+  * (the "codec arms" the createTable error message references). A row is
+  *   [int32 body length][null bitmap, ⌈n/8⌉ bytes][each non-null value]
+  * with values in field order: long and double 8 bytes (double as raw
+  * bits, so NaN payloads and -0.0 survive), int 4, boolean 1, string an
+  * int32 byte count and its UTF-8 bytes. Native byte order: the bytes
+  * never leave the JVM that wrote them. Tasks encode each row once,
+  * straight from the InternalRow; the store keeps the bytes, a scan
+  * slices them into its partitions, and the reader decodes straight to
+  * InternalRow, its strings pointing into the partition's bytes. */
+private[graft] final class GraftMemCodec(val types: Array[DataType]) {
+  import GraftMemCodec._
+  import org.apache.spark.unsafe.Platform
+  import Platform.BYTE_ARRAY_OFFSET
+  private val n = types.length
+  private val kinds = types.map(Types.indexOf(_))
+  require(!kinds.contains(-1), s"unsupported codec type in ${types.mkString(",")}")
+  private val nullBytes = (n + 7) / 8
+
+  /** Header of a staged file: the field count and each field's kind. */
+  def headerBytes: Int = 4 + n
+  def header(out: GraftMemBuffer): Unit = {
+    out.putInt(n)
+    kinds.foreach(k => out.putByte(k.toByte))
+  }
+
+  /** Appends `row`, read through its typed getters, to `out`. */
+  def encode(row: InternalRow, out: GraftMemBuffer): Unit = {
+    val start = out.reserve(4 + nullBytes)
     var i = 0
-    while (i < types.length) {
-      vals(i) = if (row.isNullAt(i)) null else types(i) match {
-        case LongType => row.getLong(i)
-        case IntegerType => row.getInt(i)
-        case DoubleType => row.getDouble(i)
-        case BooleanType => row.getBoolean(i)
-        case StringType => row.getUTF8String(i).toString
-        case dt => throw new IllegalStateException(s"unsupported codec type $dt")
+    while (i < n) {
+      if (row.isNullAt(i)) out.setBit(start + 4, i)
+      else (kinds(i): @annotation.switch) match {
+        case LongKind => out.putLong(row.getLong(i))
+        case IntKind => out.putInt(row.getInt(i))
+        case DoubleKind => out.putDouble(row.getDouble(i))
+        case BooleanKind => out.putByte(if (row.getBoolean(i)) 1 else 0)
+        case StringKind => out.putUTF8(row.getUTF8String(i))
       }
       i += 1
     }
-    vals
+    out.putIntAt(start, out.size - start - 4)
+  }
+  /** Appends a row of JVM values (strings as `String`). */
+  def encode(vals: Array[Any], out: GraftMemBuffer): Unit =
+    encode(new GenericInternalRow(vals.map {
+      case v: String => UTF8String.fromString(v)
+      case v => v
+    }), out)
+  def block(rows: Array[Array[Any]]): GraftMemBlock = {
+    val out = new GraftMemBuffer
+    rows.foreach(encode(_, out))
+    out.block(0)
+  }
+
+  /** Decodes the row at `off` of `b` into `out`: stored field i lands in
+    * slot `slots(i)`, or nowhere when that is negative; null fields leave
+    * their slot untouched. Returns the offset past the row. */
+  def decode(b: Array[Byte], off: Int, slots: Array[Int], out: InternalRow): Int = {
+    val base = BYTE_ARRAY_OFFSET + off + 4
+    var p = off + 4 + nullBytes
+    var i = 0
+    while (i < n) {
+      if ((Platform.getByte(b, base + (i >> 3)) & (1 << (i & 7))) == 0) {
+        val slot = slots(i)
+        val at = BYTE_ARRAY_OFFSET + p
+        (kinds(i): @annotation.switch) match {
+          case LongKind => if (slot >= 0) out.setLong(slot, Platform.getLong(b, at)); p += 8
+          case IntKind => if (slot >= 0) out.setInt(slot, Platform.getInt(b, at)); p += 4
+          case DoubleKind => if (slot >= 0) out.setDouble(slot, Platform.getDouble(b, at)); p += 8
+          case BooleanKind => if (slot >= 0) out.setBoolean(slot, Platform.getByte(b, at) != 0); p += 1
+          case StringKind =>
+            val len = Platform.getInt(b, at)
+            if (slot >= 0) out.update(slot, UTF8String.fromAddress(b, at + 4, len))
+            p += 4 + len
+        }
+      }
+      i += 1
+    }
+    off + 4 + Platform.getInt(b, BYTE_ARRAY_OFFSET + off)
+  }
+  /** Every row of `block`, decoded to JVM values (strings as `String`). */
+  def values(block: GraftMemBlock): Array[Array[Any]] = {
+    val slots = Array.range(0, n)
+    Array.tabulate(block.nRows) { r =>
+      val row = new GenericInternalRow(n)
+      decode(block.bytes, block.starts(r), slots, row)
+      row.values.map {
+        case v: UTF8String => v.toString
+        case v => v
+      }
+    }
   }
 }
 
-/** Shared task-side staging stream (r12 review cleanup — one
-  * implementation for the data and delta writers): entries stream to
-  * the staging file as they arrive (task memory O(1); the stream's
-  * back-reference table is reset per entry so it cannot pin every
-  * row), the stream opens lazily so a task that writes nothing stages
-  * nothing, and abort deletes the file. */
-private[sources] final class GraftMemStagedFile {
+private[graft] object GraftMemCodec {
+  /** The supported column types; a type's index is its kind code. */
+  val Types: Array[DataType] = Array(LongType, IntegerType, DoubleType, BooleanType, StringType)
+  private final val LongKind = 0
+  private final val IntKind = 1
+  private final val DoubleKind = 2
+  private final val BooleanKind = 3
+  private final val StringKind = 4
+
+  def apply(schema: StructType): GraftMemCodec = new GraftMemCodec(schema.fields.map(_.dataType))
+  /** A delta changelog entry: (op "D"/"U"/"I", rowpos or null) ++ the
+    * table row (all null for a delete). */
+  def changelog(schema: StructType): GraftMemCodec =
+    new GraftMemCodec(Array[DataType](StringType, LongType) ++ schema.fields.map(_.dataType))
+  def fromHeader(b: Array[Byte]): GraftMemCodec = {
+    val in = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.nativeOrder)
+    val n = in.getInt
+    require(n >= 0 && b.length >= 4 + n, s"corrupt staged-file header (field count $n)")
+    new GraftMemCodec(Array.tabulate(n)(i => Types(b(4 + i).toInt)))
+  }
+  /** One field of `row` copied to a JVM value (the layout audit's view). */
+  def value(dt: DataType, row: InternalRow, i: Int): Any =
+    if (row.isNullAt(i)) null else dt match {
+      case LongType => row.getLong(i)
+      case IntegerType => row.getInt(i)
+      case DoubleType => row.getDouble(i)
+      case BooleanType => row.getBoolean(i)
+      case StringType => row.getUTF8String(i).toString
+      case other => throw new IllegalStateException(s"unsupported codec type $other")
+    }
+}
+
+/** Encoded rows: row r spans `bytes[starts(r), starts(r + 1))`. */
+private[graft] final class GraftMemBlock(val bytes: Array[Byte], val starts: Array[Int]) {
+  def nRows: Int = starts.length - 1
+}
+
+private[graft] object GraftMemBlock {
+  import org.apache.spark.unsafe.Platform
+  /** The rows laid end to end in `bytes[from, to)`, found by hopping their
+    * length prefixes. A count other than `expect` (when given) or a row
+    * running past `to` fails loudly: the file was cut short. */
+  def of(bytes: Array[Byte], from: Int, to: Int, expect: Long = -1L): GraftMemBlock = {
+    def next(off: Int): Int = {
+      val end = off + 4 + Platform.getInt(bytes, Platform.BYTE_ARRAY_OFFSET + off)
+      if (off + 4 > to || end > to || end < off + 4)
+        throw new IllegalStateException(s"encoded row at byte $off runs past $to")
+      end
+    }
+    var count = 0
+    var off = from
+    while (off < to) { off = next(off); count += 1 }
+    if (expect >= 0L && count != expect)
+      throw new IllegalStateException(s"expected $expect encoded rows, found $count")
+    val starts = new Array[Int](count + 1)
+    starts(0) = from
+    var r = 0
+    while (r < count) { starts(r + 1) = next(starts(r)); r += 1 }
+    new GraftMemBlock(bytes, starts)
+  }
+  /** Rows `[from, until)` of `blocks` laid end to end, as one array. */
+  def slice(blocks: Seq[GraftMemBlock], from: Long, until: Long): Array[Byte] = {
+    val pieces = Array.newBuilder[(GraftMemBlock, Int, Int)]
+    var first = 0L
+    blocks.foreach { b =>
+      val lo = math.max(from, first); val hi = math.min(until, first + b.nRows)
+      if (hi > lo) pieces += ((b, b.starts((lo - first).toInt), b.starts((hi - first).toInt)))
+      first += b.nRows
+    }
+    val ps = pieces.result()
+    val out = new Array[Byte](ps.map { case (_, a, z) => z - a }.sum)
+    var at = 0
+    ps.foreach { case (b, a, z) => System.arraycopy(b.bytes, a, out, at, z - a); at += z - a }
+    out
+  }
+}
+
+/** A growable byte buffer with the codec's native-order writes. */
+private[graft] final class GraftMemBuffer {
+  import org.apache.spark.unsafe.Platform
+  import Platform.BYTE_ARRAY_OFFSET
+  private var bytes = new Array[Byte](GraftMemStagedFile.BlockBytes + 1024)
+  private var len = 0
+  def size: Int = len
+  private def grow(k: Int): Unit =
+    if (len + k > bytes.length)
+      bytes = java.util.Arrays.copyOf(bytes, math.max(bytes.length * 2, len + k))
+  /** Appends `k` zero bytes; returns where they start. */
+  def reserve(k: Int): Int = {
+    grow(k); java.util.Arrays.fill(bytes, len, len + k, 0.toByte)
+    len += k; len - k
+  }
+  def setBit(at: Int, i: Int): Unit = bytes(at + (i >> 3)) = (bytes(at + (i >> 3)) | (1 << (i & 7))).toByte
+  def putByte(v: Byte): Unit = { grow(1); bytes(len) = v; len += 1 }
+  def putInt(v: Int): Unit = { grow(4); Platform.putInt(bytes, BYTE_ARRAY_OFFSET + len, v); len += 4 }
+  def putIntAt(at: Int, v: Int): Unit = Platform.putInt(bytes, BYTE_ARRAY_OFFSET + at, v)
+  def putLong(v: Long): Unit = { grow(8); Platform.putLong(bytes, BYTE_ARRAY_OFFSET + len, v); len += 8 }
+  def putDouble(v: Double): Unit = { grow(8); Platform.putDouble(bytes, BYTE_ARRAY_OFFSET + len, v); len += 8 }
+  def putUTF8(v: UTF8String): Unit = {
+    val k = v.numBytes
+    putInt(k); grow(k)
+    v.writeToMemory(bytes, BYTE_ARRAY_OFFSET + len); len += k
+  }
+  def putBytes(src: Array[Byte], from: Int, k: Int): Unit = {
+    grow(k); System.arraycopy(src, from, bytes, len, k); len += k
+  }
+  /** The rows written from offset `from` on, as a block over a copy. */
+  def block(from: Int): GraftMemBlock =
+    GraftMemBlock.of(java.util.Arrays.copyOfRange(bytes, from, len), 0, len - from)
+  /** Writes the buffered bytes to `out` and empties the buffer. */
+  def writeTo(out: java.io.OutputStream): Unit = { out.write(bytes, 0, len); len = 0 }
+}
+
+/** Shared task-side staging stream (one implementation for the data and
+  * delta writers): entries are encoded into a buffer that goes to the
+  * staging file a block at a time (task memory O(1)), the stream opens
+  * lazily so a task that writes nothing stages nothing, and abort
+  * deletes the file. */
+private[sources] final class GraftMemStagedFile(codec: GraftMemCodec) {
   private var path: String = _
-  private var out: java.io.ObjectOutputStream = _
+  private var out: java.io.FileOutputStream = _
+  private val buf = new GraftMemBuffer
   private var n = 0L
-  def emit(entry: Array[Any]): Unit = {
+  def emit(row: InternalRow): Unit = {
     if (out == null) {
       path = GraftMemStaging.newPath()
-      out = new java.io.ObjectOutputStream(new java.io.BufferedOutputStream(
-        new java.io.FileOutputStream(path)))
+      out = new java.io.FileOutputStream(path)
+      codec.header(buf)
     }
-    out.writeObject(entry); out.reset(); n += 1
+    codec.encode(row, buf); n += 1
+    if (buf.size >= GraftMemStagedFile.BlockBytes) buf.writeTo(out)
   }
   def manifest(partitionId: Int): GraftMemStagedCommit = {
-    if (out != null) out.close()
+    if (out != null) { buf.writeTo(out); out.close() }
     GraftMemStagedCommit(partitionId,
       if (path == null) GraftMemStaging.newPath() else path, n)
   }
   def abort(): Unit = {
     if (out != null) { out.close(); GraftMemStaging.delete(path) }
   }
+}
+
+private[graft] object GraftMemStagedFile {
+  /** Bytes a task buffers before writing them to its staging file. */
+  val BlockBytes: Int = 64 << 10
 }
 
 class GraftMemBatchWrite(key: String, schema: StructType, truncateFirst: Boolean,
@@ -693,8 +914,8 @@ class GraftMemBatchWrite(key: String, schema: StructType, truncateFirst: Boolean
     * table in one reference write, then deletes the staging files. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val ms = messages.collect { case m: GraftMemStagedCommit => m }.sortBy(_.partitionId)
-    val rows = GraftMemStaging.readAll(ms)
-    GraftMemStore.publish(key, schema, rows, truncateFirst)
+    val blocks = GraftMemStaging.blocks(ms, GraftMemCodec(schema))
+    GraftMemStore.publishBlocks(key, schema, blocks, truncateFirst)
     ms.foreach(m => GraftMemStaging.delete(m.path))
   }
   /** Nothing was published; aborting deletes the staged files so a
@@ -736,8 +957,8 @@ class GraftMemStreamingWrite(key: String, schema: StructType,
     val ms = messages.collect { case m: GraftMemStagedCommit => m }.sortBy(_.partitionId)
     val token = s"$queryId#$epochId"
     if (!GraftMemStore.epochCommitted(key, token)) {
-      val rows = GraftMemStaging.readAll(ms)
-      GraftMemStore.publish(key, schema, rows, truncate = truncateEachEpoch)
+      val blocks = GraftMemStaging.blocks(ms, GraftMemCodec(schema))
+      GraftMemStore.publishBlocks(key, schema, blocks, truncate = truncateEachEpoch)
       GraftMemStore.beginEpoch(key, token)
     }
     ms.foreach(m => GraftMemStaging.delete(m.path))
@@ -756,7 +977,7 @@ class GraftMemWriterFactory(schema: StructType,
       // File-backed staging (r12): rows STREAM to the task's staging file
       // as they arrive (GraftMemStagedFile — task memory O(1), O(1)
       // manifest message, abort deletes the file).
-      private val staged = new GraftMemStagedFile
+      private val staged = new GraftMemStagedFile(GraftMemCodec(schema))
       // Layout audit (r13, distribution/ordering writes only): O(1) state
       // per row — the previous ordering value and a capped cluster-key
       // set; overflow past the cap records None rather than growing.
@@ -778,21 +999,21 @@ class GraftMemWriterFactory(schema: StructType,
         case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
       }
       override def write(row: InternalRow): Unit = {
-        val vals = GraftMemCodec.copyVals(types, row)
         audit.foreach { a =>
           a.sortIdx.foreach { i =>
-            if (n > 0L && cmpVals(prevSort, vals(i)) > 0) sortedSoFar = false
-            prevSort = vals(i)
+            val v = GraftMemCodec.value(types(i), row, i)
+            if (n > 0L && cmpVals(prevSort, v) > 0) sortedSoFar = false
+            prevSort = v
           }
           a.clusterIdx.foreach { i =>
             if (!clusterOverflow) {
-              clusterKeys += vals(i)
+              clusterKeys += GraftMemCodec.value(types(i), row, i)
               if (clusterKeys.size > 64) { clusterOverflow = true; clusterKeys = null }
             }
           }
           n += 1L
         }
-        staged.emit(vals)
+        staged.emit(row)
       }
       override def commit(): WriterCommitMessage = {
         audit.foreach(a => GraftMemWriteAudit.record(a.key, partitionId,
@@ -821,77 +1042,91 @@ class GraftMemScan(key: String, required: StructType) extends Scan with Batch {
   override def description(): String =
     s"GraftMemScan $key ReadSchema: ${required.fieldNames.mkString("struct<", ",", ">")}"
   /** Snapshot the committed rows at PLANNING time (repeatable reads even
-    * if a concurrent write republishes) and chunk them into up to 4
-    * partitions. Each InputPartition CARRIES its chunk — self-contained
-    * and serializable to real executors; only viable because this store
+    * if a concurrent write republishes) and slice them into partitions.
+    * Each InputPartition CARRIES its slice as encoded bytes, copied out
+    * of the store's blocks without decoding — self-contained and
+    * serializable to real executors; only viable because this store
     * holds bounded dims (see class doc). Column pruning projects inside
     * the reader, so a 1-column read of a 5-column table materializes one
     * value per row. */
   override def planInputPartitions(): Array[InputPartition] = {
     // One atomic snapshot for BOTH schema and rows (r11 advice): the
     // fieldIndex mapping below must be computed against the exact
-    // generation of the table the row chunks come from. The metadata
+    // generation of the table the row slices come from. The metadata
     // columns are index sentinels, not stored per row: -1 = `_group`
     // (the reader synthesizes the group ordinal — 0, one-group table),
-    // -2 = `_rowpos` (the chunk's start offset + local index — the
+    // -2 = `_rowpos` (the slice's start offset + local index — the
     // snapshot-stable row id delta operations key on).
-    val (schema, rows) = GraftMemStore.snapshot(key)
+    val (schema, blocks) = GraftMemStore.snapshot(key)
     val idx = required.fieldNames.map {
       case "_group" => -1
       case "_rowpos" => -2
       case n => schema.fieldIndex(n)
     }
+    val types = schema.fields.map(_.dataType)
+    val n = blocks.iterator.map(_.nRows.toLong).sum
     // Slice count scales with the snapshot (r13: the fixed `min(4, n)`
     // made every readback of a corpus-sized table a 4-task scan — 2.5M
-    // rows per task at sf10, each chunk serialized into its task binary;
-    // the census readback alone cost 25 s of stream_dsv2_sink's 69 s
-    // sf10 point). Target ~256k rows per slice, capped at 64: small
-    // tables keep the old 4-way shape, corpus-sized ones parallelize
-    // across the executor pool and each task binary stays ~MBs.
-    val slices = math.max(math.min(4, rows.length),
-      math.min(64, rows.length / 262144))
+    // rows per task at sf10; the census readback alone cost 25 s of
+    // stream_dsv2_sink's 69 s sf10 point). Target ~256k rows per slice,
+    // capped at 64: small tables keep the 4-way shape, corpus-sized ones
+    // parallelize across the executor pool and each task binary stays
+    // ~MBs.
+    val slices = math.max(math.min(4L, n), math.min(64L, n / 262144)).toInt
     (0 until slices).flatMap { i =>
-      val a = rows.length * i / slices
-      val b = rows.length * (i + 1) / slices
-      if (b > a) Some(GraftMemPartition(rows.slice(a, b), idx, a.toLong)) else None
+      val a = n * i / slices
+      val b = n * (i + 1) / slices
+      if (b > a) Some(GraftMemPartition(types, GraftMemBlock.slice(blocks, a, b),
+        (b - a).toInt, idx, a))
+      else None
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftMemReaderFactory(required)
 }
 
-case class GraftMemPartition(rows: Array[Array[Any]], columns: Array[Int],
-                             startPos: Long = 0L)
+/** One scan slice: `nRows` rows encoded with the table's `types`, and the
+  * stored field (or metadata sentinel) behind each output column. */
+case class GraftMemPartition(types: Array[DataType], bytes: Array[Byte], nRows: Int,
+                             columns: Array[Int], startPos: Long = 0L)
     extends InputPartition
 
 class GraftMemReaderFactory(required: StructType) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GraftMemPartition]
-    val types = required.fields.map(_.dataType)
+    val codec = new GraftMemCodec(p.types)
+    // the output slot of each stored field (-1: not read)
+    val slots = Array.fill(p.types.length)(-1)
+    p.columns.zipWithIndex.foreach { case (ci, c) =>
+      if (ci >= 0) {
+        require(slots(ci) < 0, s"stored column $ci read twice by ${required.simpleString}")
+        slots(ci) = c
+      }
+    }
     new PartitionReader[InternalRow] {
       private var i = -1
-      override def next(): Boolean = { i += 1; i < p.rows.length }
-      override def get(): InternalRow = {
-        val src = p.rows(i)
-        val out = new GenericInternalRow(p.columns.length)
+      private var off = 0
+      private var row: GenericInternalRow = _
+      override def next(): Boolean = {
+        i += 1
+        if (i >= p.nRows) return false
+        row = new GenericInternalRow(p.columns.length)
+        off = codec.decode(p.bytes, off, slots, row)
         var c = 0
         while (c < p.columns.length) {
           // Metadata sentinels (not stored): -1 = _group (ordinal 0, the
           // single replacement group this snapshot store forms), -2 =
-          // _rowpos (snapshot-stable row id = chunk start + local index).
-          val v = p.columns(c) match {
-            case -1 => 0L
-            case -2 => p.startPos + i
-            case ci => src(ci)
+          // _rowpos (snapshot-stable row id = slice start + local index).
+          p.columns(c) match {
+            case -1 => row.setLong(c, 0L)
+            case -2 => row.setLong(c, p.startPos + i)
+            case _ =>
           }
-          out.update(c, types(c) match {
-            case StringType if v != null => UTF8String.fromString(v.asInstanceOf[String])
-            case _ => v
-          })
           c += 1
         }
-        out
+        true
       }
+      override def get(): InternalRow = row
       override def close(): Unit = ()
     }
   }

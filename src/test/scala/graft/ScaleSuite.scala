@@ -270,4 +270,27 @@ class ScaleSuite extends AnyFunSuite {
     assert(small > packed, s"compaction did not reduce file count ($small -> $packed)")
     assert(packed == 4, s"expected 4 compacted files, got $packed")
   }
+
+  test("ts_downsample_triangle: the bucketed-points checkpoint goes DISK_ONLY above the small-corpus tier") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.storage.StorageLevel
+    // Gates.smallCorpus reads only the byte size of documents.parquet, so
+    // the real events table beside a 3 MiB documents stand-in puts the op
+    // above the tier without a corpus-sized fixture.
+    val big = java.nio.file.Files.createTempDirectory("graft_corpus_tier")
+    try {
+      java.nio.file.Files.copy(java.nio.file.Paths.get(d, "events.parquet"),
+        big.resolve("events.parquet"))
+      java.nio.file.Files.write(big.resolve("documents.parquet"), new Array[Byte](3 << 20))
+      def levels(dir: String): Seq[StorageLevel] =
+        SparkEntry.queries("ts_downsample_triangle")(s, dir).queryExecution.logical
+          .collect { case r: LogicalRDD => r.rdd.getStorageLevel }.distinct
+      assert(Gates.smallCorpus(s, d) && !Gates.smallCorpus(s, big.toString))
+      assert(levels(d) == Seq(StorageLevel.MEMORY_AND_DISK))
+      assert(levels(big.toString) == Seq(StorageLevel.DISK_ONLY))
+    } finally {
+      java.nio.file.Files.list(big).forEach(f => java.nio.file.Files.delete(f))
+      java.nio.file.Files.delete(big)
+    }
+  }
 }
